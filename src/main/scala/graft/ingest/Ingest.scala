@@ -11,8 +11,7 @@ import graft.model.Model
   * (reference src/ingest_order/app.py:13-92).
   *
   * All operators are pure `Column` expressions / declarative DataFrame
-  * transforms: they stay inside whole-stage codegen, push down through
-  * Catalyst untouched, and run identically in batch and streaming plans.
+  * transforms (no UDFs) and run identically in batch and streaming plans.
   * Nothing here shuffles — the whole ingest edge is a narrow map stage,
   * which is exactly what you want in front of 100 TB: validation and
   * key-derivation cost scales linearly with input and never repartitions.
@@ -33,9 +32,11 @@ object Ingest {
   def parseOrders(raw: DataFrame, jsonCol: String): DataFrame = {
     val schemaWithCorrupt = Model.orderEventSchema.add("_corrupt_record", StringType)
     raw
+      // a Generate: Catalyst pushes no filter on its output below it, so
+      // a caller's filter and select read `order` and parse once per row
       .withColumn("order",
-        from_json(col(jsonCol), schemaWithCorrupt,
-          Map("columnNameOfCorruptRecord" -> "_corrupt_record")))
+        explode(array(from_json(col(jsonCol), schemaWithCorrupt,
+          Map("columnNameOfCorruptRecord" -> "_corrupt_record")))))
       .withColumn("parse_ok",
         col("order").isNotNull && col("order._corrupt_record").isNull)
   }
@@ -53,7 +54,9 @@ object Ingest {
   // ---------------------------------------------------------------------
   // V2 — per-item validation (reference src/ingest_order/app.py:85-90):
   // every item has product_id and an int quantity > 0. Expressed with the
-  // `forall` higher-order function — codegen'd, no UDF.
+  // `forall` higher-order function — no UDF, but interpreted: ArrayForAll
+  // has no codegen in Spark 4.1 and evaluates its input per row, which is
+  // why parseOrders hands it a generated column rather than the parse.
   // ---------------------------------------------------------------------
   def validItems(items: Column): Column =
     forall(items, i =>

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 
 import graft.ingest.Ingest
 import graft.model.Model
@@ -123,39 +124,72 @@ object CheckoutStream {
         .filter(st => st.isDirectory && st.getPath.getName.startsWith("v"))
         .map(_.getPath.getName.drop(1).toLong).sorted
 
-    def initialize(seed: DataFrame): Unit =
-      seed.write.mode("overwrite").parquet(s"$dir/v0")
+    // every version has the table's declared schema, so reads skip
+    // parquet schema inference (one footer-reading job per read)
+    private def read(version: Long): DataFrame =
+      spark.read.schema(InventoryTable.Schema).parquet(s"$dir/v$version")
 
-    def current(): DataFrame =
-      spark.read.parquet(s"$dir/v${versions.last}")
+    def initialize(seed: DataFrame): Unit =
+      seed.select(
+        col("product_id").cast(StringType).as("product_id"),
+        col("stock").cast(IntegerType).as("stock"))
+        .write.mode("overwrite").parquet(s"$dir/v0")
+
+    def current(): DataFrame = read(versions.last)
 
     /** Apply one micro-batch transactionally: admit orders against the
-      * version PRECEDING this batch, persist the decremented inventory
-      * as version batchId+1. Keying the version by batchId (instead of
-      * "latest + 1") makes the write idempotent under Structured
-      * Streaming's micro-batch retry: a retried batch re-reads the SAME
-      * pre-batch version it read the first time and overwrites the same
-      * target directory, so a failure between write and checkpoint
-      * commit never double-decrements stock. Versions align with batch
-      * ids: initialize() writes v0, batch b writes v(b+1). */
-    def applyBatch(lines: DataFrame, batchId: Long): DataFrame = {
-      val inv = spark.read.parquet(s"$dir/v$batchId")
-      // no checkpoint needed: the new version is written to a fresh
-      // directory, so the verdict lineage (reading the pre-batch version)
-      // stays valid for the caller's downstream writes
-      val verdicts = admitOrders(lines, inv)
-      val processedDemand = lines
-        .join(verdicts.filter(col("status") === Model.StatusProcessed), Seq("order_id"))
-        .groupBy(col("product_id"))
-        .agg(sum(col("quantity")).as("demand"))
-      val next = inv
-        .join(processedDemand, Seq("product_id"), "left")
-        .select(
-          col("product_id"),
-          (col("stock") - coalesce(col("demand"), lit(0L))).cast("int").as("stock"))
-      next.write.mode("overwrite").parquet(s"$dir/v${batchId + 1}")
-      verdicts
-    }
+      * latest version at or before `batchId`, persist the decremented
+      * inventory as version batchId+1. A batch without lines skips
+      * admission and writes no version, so versions are sparse:
+      * initialize() writes v0, a batch b with lines writes v(b+1), and
+      * batch b reads the latest version <= b. Keying the written version
+      * by batchId (instead of "latest + 1") makes the write idempotent
+      * under Structured Streaming's micro-batch retry: only batch b
+      * writes v(b+1) and no later batch runs before b commits, so a
+      * retried batch re-reads the SAME pre-batch version it read the
+      * first time and overwrites the same target directory — a failure
+      * between write and checkpoint commit never double-decrements
+      * stock.
+      *
+      * Pass `lines` materialized (the streaming driver local-checkpoints
+      * them): they are read by the emptiness probe, admission and the
+      * demand join. */
+    def applyBatch(lines: DataFrame, batchId: Long): DataFrame =
+      if (!InventoryTable.hasRows(lines)) InventoryTable.noVerdicts(spark)
+      else {
+        val inv = read(versions.takeWhile(_ <= batchId).last)
+        // materialized once: the demand join below and the caller's
+        // verdict write both read it, so the admission window runs once;
+        // the new version goes to a fresh directory, so the pre-batch
+        // version this lineage read stays valid
+        val verdicts = admitOrders(lines, inv).localCheckpoint()
+        val processedDemand = lines
+          .join(verdicts.filter(col("status") === Model.StatusProcessed), Seq("order_id"))
+          .groupBy(col("product_id"))
+          .agg(sum(col("quantity")).as("demand"))
+        val next = inv
+          .join(processedDemand, Seq("product_id"), "left")
+          .select(
+            col("product_id"),
+            (col("stock") - coalesce(col("demand"), lit(0L))).cast("int").as("stock"))
+        next.write.mode("overwrite").parquet(s"$dir/v${batchId + 1}")
+        verdicts
+      }
+  }
+
+  object InventoryTable {
+    private val Schema: StructType = StructType(Seq(
+      StructField("product_id", StringType), StructField("stock", IntegerType)))
+
+    /** One single-stage job reading at most one row per partition
+      * (`Dataset.isEmpty` takes a job per widening round to find none). */
+    private def hasRows(df: DataFrame): Boolean =
+      df.rdd.mapPartitions(rows => Iterator.single(rows.hasNext)).fold(false)(_ || _)
+
+    /** The (order_id, status) verdicts of a batch without lines. */
+    private def noVerdicts(spark: SparkSession): DataFrame =
+      spark.createDataFrame(java.util.List.of[Row](), StructType(Seq(
+        StructField("order_id", StringType), StructField("status", StringType, nullable = false))))
   }
 
   /** Wire the full streaming pipeline: valid orders → watermarked dedup →
@@ -172,12 +206,16 @@ object CheckoutStream {
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        // materialized once: every action on `batch` would re-run the
+        // upstream dedup state operator (load, update and commit the same
+        // state version again), so admission reads the checkpoint instead
         val lines = batch
           .select(col("order_id"), col("customer_id"), explode(col("items")).as("item"))
           .select(
             col("order_id"), col("customer_id"),
             col("item.product_id").as("product_id"),
             col("item.quantity").cast("long").as("quantity"))
+          .localCheckpoint()
         val verdicts = inventory.applyBatch(lines, batchId)
         // E2 projection on the success path; FAILED is recorded too (A4).
         // Per-batch partition dir + overwrite (not a blind append) keeps

@@ -76,6 +76,32 @@ class CheckoutSpec extends SparkSpec {
     assert(after2 === 45)
   }
 
+  test("InventoryTable: a batch without lines writes no version; later batches and retries read the latest before them") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-inv-sparse").toString
+    val inv = new CheckoutStream.InventoryTable(spark, dir)
+    inv.initialize(seedInventory)
+    def versionDirs = new java.io.File(dir).list().filter(_.startsWith("v")).sorted.toSeq
+    // batch 0 writes v1: prod-105 5 -> 2
+    inv.applyBatch(lines(("o-1", "prod-105", 3)), batchId = 0)
+    assert(versionDirs === Seq("v0", "v1"))
+    // batch 1 has no lines: no verdicts, no v2
+    assert(inv.applyBatch(lines(), batchId = 1).count() === 0)
+    assert(versionDirs === Seq("v0", "v1"))
+    // batch 2 admits against v1, the latest version <= 2 (against v0
+    // both orders would pass, against its own v3 both would fail)
+    val b2 = lines(("o-2", "prod-105", 2), ("o-3", "prod-105", 1))
+    val first = statusOf(inv.applyBatch(b2, batchId = 2))
+    assert(first === Map("o-2" -> Model.StatusProcessed, "o-3" -> Model.StatusFailed))
+    assert(versionDirs === Seq("v0", "v1", "v3"))
+    val v3 = inv.current().collect().toSet
+    assert(v3.find(_.getString(0) == "prod-105").map(_.getInt(1)) === Some(0))
+    // batch 2 RETRIED with v3 present: same pre-batch version, same
+    // verdicts, same v3
+    assert(statusOf(inv.applyBatch(b2, batchId = 2)) === first)
+    assert(versionDirs === Seq("v0", "v1", "v3"))
+    assert(inv.current().collect().toSet === v3)
+  }
+
   test("A3 dedupFirstBy keeps the first delivery per key and is idempotent") {
     val df = Seq((1L, "a", 10L), (1L, "a", 20L), (2L, "b", 30L)).toDF("k", "t", "seq")
     val once = Checkout.dedupFirstBy(df, Seq("k", "t"), "seq")

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.JsonToStructs
 import org.apache.spark.sql.functions._
 
 import graft.ingest.Ingest
@@ -38,6 +39,33 @@ class IngestSpec extends SparkSpec {
     assert(valid.count() === 1)
     val rej = rejected.collect()
     assert(rej.length === 1 && rej(0).getAs[String]("reason") === "invalid_items")
+  }
+
+  /** `from_json` expressions in the executed plan: each one parses every
+    * row that reaches its operator. */
+  private def jsonParses(df: org.apache.spark.sql.DataFrame): Int =
+    df.queryExecution.executedPlan
+      .collect { case p => p.expressions.map(_.collect { case j: JsonToStructs => j }.size).sum }
+      .sum
+
+  test("P1: from_json runs once per row under a caller's filter and the valid/rejected split") {
+    // a file scan, not a local Seq: the optimizer would fold a filter
+    // over a local relation into constants and leave nothing to count
+    val dir = java.nio.file.Files.createTempDirectory("graft-parse-once").toString
+    rawDf(validJson, """{not json""").coalesce(1).write.mode("overwrite").text(dir)
+    val raw = spark.read.text(dir).toDF("body")
+    // the ingest composition a streaming caller builds on parseOrders:
+    // validity filter, then a field select
+    val parsed = Ingest.parseOrders(raw, "body")
+    val composed = parsed
+      .filter(parsed("parse_ok") && Ingest.validOrder(parsed("order")) &&
+        Ingest.validItems(parsed("order.items")))
+      .select(col("order.order_id"), col("order.items"),
+        col("order.timestamp").cast("timestamp").as("event_time"))
+    val (valid, rejected) = CheckoutStream.parseOrderStream(raw, "body")
+    for ((name, df) <- Seq("composed" -> composed, "valid" -> valid, "rejected" -> rejected))
+      assert(jsonParses(df) === 1, s"$name:\n${df.queryExecution.executedPlan}")
+    assert(composed.collect().map(_.getString(0)).toSeq === Seq("o-1"))
   }
 
   test("K1: same payload => same key; different payload => different key; UUID shape") {

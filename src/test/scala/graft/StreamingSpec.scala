@@ -2,10 +2,13 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
+import graft.ingest.Ingest
 import graft.model.Model
 import graft.streaming.{CheckoutStream, Sinks}
 
@@ -545,6 +548,112 @@ class StreamingSpec extends SparkSpec {
     assert(verdicts.count() === 2)
     // both batches decremented the same inventory table serially
     assert(inv.current().collect()(0).getAs[Int]("stock") === 8)
+  }
+
+  private def order(id: String, product: String, qty: Int, ts: String) =
+    s"""{"order_id":"$id","customer_id":"c-$id","items":[{"product_id":"$product","quantity":$qty}],"timestamp":"$ts"}"""
+
+  private def enqueue(queue: String, file: String, msgs: String*): Unit =
+    Files.write(java.nio.file.Paths.get(queue, file), msgs.mkString("\n").getBytes)
+
+  /** The watermarked v1 pipeline over a JSON-lines queue, drained with
+    * AvailableNow: parse/validate keeping the event time, key dedup
+    * within a 1-minute watermark, InventoryTable admission, verdict sink.
+    * The watermark's advance makes a no-data batch follow the data. */
+  private def drainV1(queue: String, inv: CheckoutStream.InventoryTable, base: String): Unit = {
+    val parsed = Ingest.parseOrders(spark.readStream.text(queue), "value")
+    val orders = parsed
+      .filter(parsed("parse_ok") && Ingest.validOrder(parsed("order")) &&
+        Ingest.validItems(parsed("order.items")))
+      .select(col("order.order_id").as("order_id"), col("order.customer_id").as("customer_id"),
+        col("order.items").as("items"), col("order.timestamp").cast("timestamp").as("event_time"))
+    CheckoutStream.start(CheckoutStream.dedupStream(orders, "event_time", "1 minute"),
+      inv, s"$base/verdicts", s"$base/ckpt").start().awaitTermination()
+  }
+
+  /** Runs `body` and counts, per micro-batch id, the completed stages that
+    * ran a state store (the `streaming.sql.batchId` job property names
+    * the batch of every job a streaming query runs). */
+  private def stateStageRuns(body: => Unit): Map[Long, Int] = {
+    import org.apache.spark.scheduler._
+    val batchOf = scala.collection.concurrent.TrieMap.empty[Int, Long]
+    val ran = new java.util.concurrent.ConcurrentLinkedQueue[Int]
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        props.flatMap(p => Option(p.getProperty("streaming.sql.batchId")))
+          .foreach(b => e.stageIds.foreach(batchOf.put(_, b.toLong)))
+        if (props.exists(_.getProperty("graft.test.marker") != null)) drained.countDown()
+      }
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (e.stageInfo.rddInfos.exists(_.name.contains("StateStore"))) ran.add(e.stageInfo.stageId)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      // the bus delivers events in order: once a marker job's start
+      // arrives, every event of `body` has arrived before it
+      spark.sparkContext.setLocalProperty("graft.test.marker", "1")
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setLocalProperty("graft.test.marker", null)
+      assert(drained.await(30, java.util.concurrent.TimeUnit.SECONDS))
+    } finally spark.sparkContext.removeSparkListener(listener)
+    ran.asScala.toSeq.flatMap(batchOf.get).groupBy(identity).map { case (b, ss) => b -> ss.size }
+  }
+
+  private def inventoryVersions(dir: String): Seq[String] =
+    new java.io.File(dir).list().filter(_.startsWith("v")).sortBy(_.drop(1).toLong).toSeq
+
+  private def statuses(verdicts: String): Seq[(String, String)] =
+    spark.read.parquet(verdicts).select($"order_id", $"status").as[(String, String)].collect().toSeq.sorted
+
+  private def stockOf(inv: CheckoutStream.InventoryTable): Map[String, Int] =
+    inv.current().as[(String, Int)].collect().toMap
+
+  test("v1 checkout: the dedup state operator runs once per micro-batch; the no-data batch writes no inventory version") {
+    val base = tmp("graft-v1-once")
+    val queue = s"$base/queue"
+    Files.createDirectories(java.nio.file.Paths.get(queue))
+    enqueue(queue, "f1.jsonl",
+      order("o-1", "prod-101", 2, "2026-02-13T10:00:00Z"),
+      order("o-2", "prod-105", 9, "2026-02-13T10:00:01Z"), // more than the stock: FAILED
+      order("o-1", "prod-101", 2, "2026-02-13T10:00:05Z"), // redelivery: dropped
+      "{not json")
+    val inv = new CheckoutStream.InventoryTable(spark, s"$base/inv")
+    inv.initialize(Seq(("prod-101", 50), ("prod-105", 5)).toDF("product_id", "stock"))
+    val runs = stateStageRuns(drainV1(queue, inv, base))
+    // batch 0 carries the orders, batch 1 is the watermark's no-data batch
+    assert(runs === Map(0L -> 1, 1L -> 1))
+    assert(inventoryVersions(s"$base/inv") === Seq("v0", "v1"))
+    // the no-data batch still commits its (empty) verdict partition
+    assert(new java.io.File(s"$base/verdicts/batch_id=1/_SUCCESS").exists())
+    assert(statuses(s"$base/verdicts") ===
+      Seq("o-1" -> Model.StatusProcessed, "o-2" -> Model.StatusFailed))
+    assert(stockOf(inv) === Map("prod-101" -> 48, "prod-105" -> 5))
+  }
+
+  test("v1 checkout resumes from its checkpoint across a no-data batch: dedup state restored, sparse versions chained") {
+    val base = tmp("graft-v1-resume")
+    val queue = s"$base/queue"
+    Files.createDirectories(java.nio.file.Paths.get(queue))
+    val inv = new CheckoutStream.InventoryTable(spark, s"$base/inv")
+    inv.initialize(Seq(("prod-101", 50), ("prod-105", 5)).toDF("product_id", "stock"))
+    // FIRST run: batch 0 admits o-1 and writes v1; batch 1 has no data
+    enqueue(queue, "f1.jsonl", order("o-1", "prod-101", 2, "2026-02-13T10:00:00Z"))
+    drainV1(queue, inv, base)
+    assert(inventoryVersions(s"$base/inv") === Seq("v0", "v1"))
+    // SECOND run, same checkpoint: o-1's redelivery meets the restored
+    // dedup state; o-3 is admitted by batch 2 against v1, the latest
+    // version before it (v0 would leave prod-101 at 50)
+    enqueue(queue, "f2.jsonl",
+      order("o-1", "prod-101", 2, "2026-02-13T10:00:30Z"),
+      order("o-3", "prod-105", 5, "2026-02-13T10:00:40Z"))
+    drainV1(queue, inv, base)
+    assert(inventoryVersions(s"$base/inv") === Seq("v0", "v1", "v3"))
+    assert(statuses(s"$base/verdicts") ===
+      Seq("o-1" -> Model.StatusProcessed, "o-3" -> Model.StatusProcessed))
+    assert(stockOf(inv) === Map("prod-101" -> 48, "prod-105" -> 0))
   }
 
   test("dropDuplicatesWithinWatermark evicts state; late re-duplicates re-admit") {
