@@ -5,25 +5,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // ObjectHashAggregateExec falls back to SORT-BASED aggregation at
-      // 128 distinct keys per partition (the default is sized for huge
-      // per-key state like collect_list) — BoundedTopK's per-group
-      // state is O(k), so the map is the cheap part; without this the
-      // partial top-k silently degrades into the full-partition sort
-      // it exists to avoid (measured 260x at the x10 kNN edge build)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", (1 << 22).toString)
-      // ContextCleaner only reclaims shuffle files/broadcasts when the
-      // driver GCs; with a large heap that never happens inside a bench
-      // session (default periodicGC is 30min), so state from earlier
-      // queries piles up and slows later ones
-      .config("spark.cleaner.periodicGC.interval", "60s")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build(Session.cores)
     // One-time session warmup (codegen compiler, parquet reader classes,
     // shuffle infra) so the first measured query doesn't absorb it.
     // Warmup failure (e.g. a dataset dir without region.parquet) must not

@@ -1,28 +1,32 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Single-query bench harness: `runMain graft.BenchOne <name> [sfDir]` —
-  * isolates one registered query in a fresh JVM for plan/perf work. */
+  * isolates one registered query in a fresh JVM for plan/perf work and
+  * prints its work counters and, for stream_* queries, each
+  * micro-batch's durationMs split (`STREAMPROBE batch=` lines). */
 object BenchOne {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // ObjectHashAggregateExec falls back to SORT-BASED aggregation at
-      // 128 distinct keys per partition (the default is sized for huge
-      // per-key state like collect_list) — BoundedTopK's per-group
-      // state is O(k), so the map is the cheap part; without this the
-      // partial top-k silently degrades into the full-partition sort
-      // it exists to avoid (measured 260x at the x10 kNN edge build)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", (1 << 22).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build(Session.cores)
+    // every micro-batch's durationMs split, the layer the streaming
+    // family's per-batch fixed costs live in (only stream_* queries
+    // start streaming queries, so only they print these lines)
+    spark.streams.addListener(new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
+        val p = e.progress
+        val d = p.durationMs
+        println(s"STREAMPROBE batch=${p.batchId} rows=${p.numInputRows} " +
+          s"trigger=${d.get("triggerExecution")} plan=${d.get("queryPlanning")} " +
+          s"getBatch=${d.get("getBatch")} latestOffset=${d.get("latestOffset")} " +
+          s"wal=${d.get("walCommit")} commit=${d.get("commitOffsets")} " +
+          s"addBatch=${d.get("addBatch")}")
+      }
+    })
     val fn = SparkEntry.queries(name)
     // optional integer arg (any position ≥ 2): extra warm repetitions —
     // box-noise protocol: median of several in-JVM warm samples beats

@@ -2,7 +2,6 @@ package graft
 
 import java.io.{File, PrintWriter}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dump formatted physical plans for the headline queries → docs/PLANS.md
@@ -71,11 +70,8 @@ object PlanAudit {
 
   def main(args: Array[String]): Unit = {
     val d = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // 8: the width docs/PLANS.md was generated at
+    val spark = Session.build(8)
     val out = new PrintWriter(new File("docs/PLANS.md"))
     out.println("# Physical plan audit (generated by graft.PlanAudit)\n")
     out.println("Checks per plan: filters/projections reach the parquet scan ")

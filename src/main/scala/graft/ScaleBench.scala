@@ -134,22 +134,7 @@ object ScaleBench {
     val factor = if (args.length > 1) args(1).toInt else 10
     val synthDir = if (args.length > 2) args(2)
       else java.nio.file.Files.createTempDirectory("graft-scale").toString
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // ObjectHashAggregateExec falls back to SORT-BASED aggregation at
-      // 128 distinct keys per partition (the default is sized for huge
-      // per-key state like collect_list) — BoundedTopK's per-group
-      // state is O(k), so the map is the cheap part; without this the
-      // partial top-k silently degrades into the full-partition sort
-      // it exists to avoid (measured 260x at the x10 kNN edge build)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", (1 << 22).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.cleaner.periodicGC.interval", "60s")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build(Session.cores)
 
     synthesize(spark, baseDir, synthDir, factor)
 

@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 import graft.ingest.Ingest
 import graft.notify.Notify
 import graft.ops.{Dedup, EventWindows, Sampling, Similarity, TextOps}
+import graft.plans.GraftExtensions.withRules
 import graft.process.Checkout
 import graft.queries.StarQueries
 import graft.sources.Tables
@@ -547,14 +548,12 @@ object SparkEntry {
     // materializes while the rule is active
     "rel_fuzzy_join_auto" -> ((s, d) => {
       val (dirty, clean) = fuzzyNameParts(s, d)
-      val prev = s.experimental.extraOptimizations
-      s.experimental.extraOptimizations = prev :+ graft.plans.FuzzyJoinRule()
-      val pairs = try {
+      val pairs = withRules(s, graft.plans.FuzzyJoinRule()) {
         dirty.join(clean, levenshtein(col("dname"), col("cname")) <= 1)
           .select(col("dirty_key"), col("clean_key"),
             levenshtein(col("dname"), col("cname")).as("dist"))
           .localCheckpoint()
-      } finally s.experimental.extraOptimizations = prev
+      }
       pairs.orderBy(col("dirty_key"), col("clean_key"))
     }),
 
@@ -601,13 +600,11 @@ object SparkEntry {
         s.read.parquet(s"$base/mv").queryExecution.analyzed,
         Set("l_returnflag", "l_linestatus"),
         Map("l_quantity" -> "pre_qty"), "pre_cnt")
-      val prev = s.experimental.extraOptimizations
-      s.experimental.extraOptimizations = prev :+ rule
-      val out = try {
+      val out = withRules(s, rule) {
         fact.groupBy(col("l_returnflag"))
           .agg(sum(col("l_quantity")).as("sum_qty"), count(lit(1)).as("n_rows"))
           .localCheckpoint()
-      } finally s.experimental.extraOptimizations = prev
+      }
       out.orderBy(col("l_returnflag"))
     }),
 
@@ -2941,16 +2938,13 @@ object SparkEntry {
       val traffic = ev.filter(col("event_type").isin("click", "view"))
         .select(col("event_id").as("hit_id"),
           unix_micros(col("ts")).as("hit_us"), col("value"))
-      val prev = s.experimental.extraOptimizations
-      s.experimental.extraOptimizations =
-        prev :+ graft.plans.BinnedRangeJoinRule(tenMinUs)
-      val hits = try {
+      val hits = withRules(s, graft.plans.BinnedRangeJoinRule(tenMinUs)) {
         traffic
           .join(errs, col("hit_us") >= col("win_s") && col("hit_us") <= col("win_e"))
           .groupBy(col("err_id"))
           .agg(count(lit(1)).as("n_hits"), round(sum(col("value")), 2).as("total_value"))
           .localCheckpoint()
-      } finally s.experimental.extraOptimizations = prev
+      }
       errs.select(col("err_id"))
         .join(hits, Seq("err_id"), "left")
         .select(col("err_id"),
@@ -4945,24 +4939,21 @@ object SparkEntry {
     * restore. */
   private def withSaltRule(s: SparkSession, requireFire: Boolean = true)(
       build: => DataFrame): DataFrame = {
-    val prev = s.experimental.extraOptimizations
     val prevThresh = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    s.experimental.extraOptimizations = prev :+ graft.plans.SaltJoinRule(s)
-    try {
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val joined = build
-      // requireFire=false when the rule's own size guard CORRECTLY
-      // vetoes at the caller's scale (dim bytes × salts > fact bytes
-      // on a tiny fact) — the oracle still certifies result
-      // invariance; only the fired-plan assertion is scale-gated
-      if (requireFire)
-        require(joined.queryExecution.optimizedPlan.toString.contains("graft_salt_f"),
-          "SaltJoinRule must fire: this row certifies the REWRITTEN " +
-            "plan's results, not the plain one's")
-      joined.localCheckpoint()
-    } finally {
-      s.experimental.extraOptimizations = prev
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)
+    withRules(s, graft.plans.SaltJoinRule(s)) {
+      try {
+        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        val joined = build
+        // requireFire=false when the rule's own size guard CORRECTLY
+        // vetoes at the caller's scale (dim bytes × salts > fact bytes
+        // on a tiny fact) — the oracle still certifies result
+        // invariance; only the fired-plan assertion is scale-gated
+        if (requireFire)
+          require(joined.queryExecution.optimizedPlan.toString.contains("graft_salt_f"),
+            "SaltJoinRule must fire: this row certifies the REWRITTEN " +
+              "plan's results, not the plain one's")
+        joined.localCheckpoint()
+      } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)
     }
   }
 

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,25 +10,7 @@ object Verify {
       case Array(a, b)    => (a, b, "")
       case Array(a, b, p) => (a, b, p)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // ObjectHashAggregateExec falls back to SORT-BASED aggregation at
-      // 128 distinct keys per partition (the default is sized for huge
-      // per-key state like collect_list) — BoundedTopK's per-group
-      // state is O(k), so the map is the cheap part; without this the
-      // partial top-k silently degrades into the full-partition sort
-      // it exists to avoid (measured 260x at the x10 kNN edge build)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", (1 << 22).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      // shuffle files/broadcasts are only reclaimed on driver GC; keep
-      // the cleaner draining across the 50+ queries of one session
-      // (see docs/BENCH_NOTES.md)
-      .config("spark.cleaner.periodicGC.interval", "60s")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build(Session.cores)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(_._1.startsWith(prefix)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

@@ -1,12 +1,15 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 
 /** Session-build-time injection point for graft's planner extensions —
   * the `SparkSessionExtensions` path for deployments that configure
   * `spark.sql.extensions=graft.plans.GraftExtensions` (or call
   * `.withExtensions(new GraftExtensions)` on the builder) instead of
-  * mutating `experimental.extraOptimizations` at runtime the way the
+  * mutating `experimental.extraOptimizations` at runtime
+  * ([[GraftExtensions.withRules]]) the way the
   * `events_range_join_auto` oracle query does. Both paths install the
   * same rule; the runtime path exists because the driver owns the
   * session in this harness, the config path because that is how a real
@@ -56,4 +59,15 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
 object GraftExtensions {
   val BinWidthKey = "spark.graft.rangeJoin.binWidth"
+
+  /** The runtime path: append `rules` to the session's
+    * `experimental.extraOptimizations` for the duration of `body` and
+    * restore the previous list however `body` exits. The rules only
+    * see plans optimized inside `body`, so callers materialize there
+    * (e.g. `localCheckpoint`). */
+  def withRules[T](s: SparkSession, rules: Rule[LogicalPlan]*)(body: => T): T = {
+    val saved = s.experimental.extraOptimizations
+    s.experimental.extraOptimizations = saved ++ rules
+    try body finally s.experimental.extraOptimizations = saved
+  }
 }

@@ -5,24 +5,32 @@ package graft.streaming
   * serially each pays a scheduler round-trip while the cluster sits in
   * the previous job's tail. Callers pass actions that are mutually
   * independent — disjoint output dirs, inputs already materialized —
-  * and this runs them from a small pool, rethrowing the first failure
-  * so the batch (and the stream checkpoint that only commits after
-  * foreachBatch returns) still fails atomically. */
+  * and this runs them from a small pool, waits for EVERY action, then
+  * rethrows the first failure, so the batch (and the stream checkpoint
+  * that only commits after foreachBatch returns) still fails atomically
+  * and no sibling write is still running when the caller sees it. */
 object Overlap {
 
-  /** Run every action, wait for all, propagate the first failure. */
+  /** Run every action and wait for all of them; if any failed, rethrow
+    * the first failure (in action order) with the others attached via
+    * `addSuppressed`. The pool is per call: actions may nest calls. */
   def awaitAll(actions: Seq[() => Unit]): Unit = {
     if (actions.size <= 1) { actions.foreach(_.apply()); return }
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.min(4, actions.size))
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    try
-      scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(
-          actions.map(a => scala.concurrent.Future(a()))),
-        scala.concurrent.duration.Duration.Inf)
+    val failures = try
+      actions
+        .map(a => pool.submit(new java.util.concurrent.Callable[Unit] {
+          def call(): Unit = a()
+        }))
+        .flatMap { f =>
+          try { f.get(); None }
+          catch { case e: java.util.concurrent.ExecutionException => Some(e.getCause) }
+        }
     finally pool.shutdown()
-    ()
+    failures.headOption.foreach { first =>
+      failures.tail.filter(_ ne first).foreach(first.addSuppressed)
+      throw first
+    }
   }
 }

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Dedup, Similarity, TextOps}
+import graft.plans.GraftExtensions.withRules
 
 /** LLM-pipeline operator specs: text analysis, dedup, similarity. */
 class OpsSpec extends SparkSpec {
@@ -431,82 +432,79 @@ class OpsSpec extends SparkSpec {
     // rewritten-vs-rewritten — vacuous)
     val plainExpected = shape(factT).collect().toSet
     val leftExpected = leftShape(factT).collect().toSet
-    val prev = spark.experimental.extraOptimizations
     val prevT = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.experimental.extraOptimizations = prev :+ SaltJoinRule(spark)
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val auto = shape(factT)
-      assert(fired(auto), "declared-hot key + non-broadcastable dim must fire")
-      assert(auto.collect().toSet === plainExpected,
-        "the rewrite must be invisible in the result")
-      // row level too: multiplicity is exact, not just aggregate-exact
-      val rows = factT.join(dim, Seq("k"))
-      assert(fired(rows) && rows.count() === 12000)
-      // FACT-PRESERVING left join fires (r18, SaltBench-measured) and
-      // stays invisible, including the null-extended unmatched rows —
-      // every preserved fact row keeps exactly ONE salt
-      val leftAuto = leftShape(factT)
-      assert(fired(leftAuto), "fact-preserving left join must fire")
-      assert(leftAuto.collect().toSet === leftExpected)
-      assert(factT.join(dimHalf, Seq("k"), "left_outer").count() === 12000)
-      // the preserved side must be the FACT: a dim-preserved left (or
-      // its mirrored right) would emit `salts` null-extended copies
-      assert(!fired(dimHalf.join(factT, Seq("k"), "left_outer")))
-      assert(!fired(factT.join(dimHalf, Seq("k"), "right_outer")))
-      assert(fired(dimHalf.join(factT, Seq("k"), "right_outer")),
-        "right-outer with the fact on the preserved RIGHT fires")
-      assert(!fired(factT.join(dimHalf, Seq("k"), "full_outer")))
-      // COMPOSITE key (r18): u undeclared — the k map alone bounds the
-      // composite hot mass, the rewrite fires and stays 1:1
-      val comp = factT.join(dimC, Seq("k", "u"))
-      assert(fired(comp), "composite key with one declared column must fire")
-      assert(comp.count() === 12000)
-      // ... but a DECLARED-uniform column vetoes: count(k=7 ∧ u=x) ≤
-      // count(u=x) ≈ n/13 — no composite hot key exists
-      assert(!fired(factTv.join(dimC, Seq("k", "u"))),
-        "the tightest declared bound (u: not hot) must veto the rewrite")
-      // no statistic (undeclared map) -> no rewrite
-      assert(!fired(spark.read.format("graft-segment").load(s"$base/undecl")
-        .join(dim, Seq("k"))))
-      // residual non-equality conjunct -> untouched (the multiplicity
-      // argument only covers the pure equi-join shape)
-      assert(!fired(factT.join(dim,
-        factT("k") === dim("k") && factT("v") > dim("b"))))
-      // a multiplicity-CHANGING node between scan and join must bail:
-      // post-aggregate every key appears exactly once — zero skew —
-      // so the raw scan's hot-key statistic no longer describes the
-      // join input and salting would replicate the dim for nothing.
-      // A FILTER in between only shrinks per-key mass (the statistic
-      // stays an upper bound — the composite-bound doctrine) and fires
-      assert(!fired(factT.groupBy($"k").agg(sum($"v").as("v2"))
-        .join(dim, Seq("k"))),
-        "an aggregate between scan and join must bail")
-      assert(fired(factT.filter($"v" >= 0).join(dim, Seq("k"))),
-        "a filter between scan and join preserves the upper bound")
-      // kill switch — and its TOLERANT parse: a malformed value must
-      // degrade to the default, never fail planning (r17 ADVICE)
-      spark.conf.set(SaltJoinRule.EnabledKey, "false")
-      try assert(!fired(shape(factT)))
-      finally spark.conf.unset(SaltJoinRule.EnabledKey)
-      // the standard disable spellings all disable — ignoring "0"
-      // would silently invert explicit disable intent
-      Seq("0", "off", "FALSE", "no").foreach { v =>
-        spark.conf.set(SaltJoinRule.EnabledKey, v)
-        try assert(!fired(shape(factT)), s"'$v' must disable")
+    withRules(spark, SaltJoinRule(spark)) {
+      try {
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        val auto = shape(factT)
+        assert(fired(auto), "declared-hot key + non-broadcastable dim must fire")
+        assert(auto.collect().toSet === plainExpected,
+          "the rewrite must be invisible in the result")
+        // row level too: multiplicity is exact, not just aggregate-exact
+        val rows = factT.join(dim, Seq("k"))
+        assert(fired(rows) && rows.count() === 12000)
+        // FACT-PRESERVING left join fires (r18, SaltBench-measured) and
+        // stays invisible, including the null-extended unmatched rows —
+        // every preserved fact row keeps exactly ONE salt
+        val leftAuto = leftShape(factT)
+        assert(fired(leftAuto), "fact-preserving left join must fire")
+        assert(leftAuto.collect().toSet === leftExpected)
+        assert(factT.join(dimHalf, Seq("k"), "left_outer").count() === 12000)
+        // the preserved side must be the FACT: a dim-preserved left (or
+        // its mirrored right) would emit `salts` null-extended copies
+        assert(!fired(dimHalf.join(factT, Seq("k"), "left_outer")))
+        assert(!fired(factT.join(dimHalf, Seq("k"), "right_outer")))
+        assert(fired(dimHalf.join(factT, Seq("k"), "right_outer")),
+          "right-outer with the fact on the preserved RIGHT fires")
+        assert(!fired(factT.join(dimHalf, Seq("k"), "full_outer")))
+        // COMPOSITE key (r18): u undeclared — the k map alone bounds the
+        // composite hot mass, the rewrite fires and stays 1:1
+        val comp = factT.join(dimC, Seq("k", "u"))
+        assert(fired(comp), "composite key with one declared column must fire")
+        assert(comp.count() === 12000)
+        // ... but a DECLARED-uniform column vetoes: count(k=7 ∧ u=x) ≤
+        // count(u=x) ≈ n/13 — no composite hot key exists
+        assert(!fired(factTv.join(dimC, Seq("k", "u"))),
+          "the tightest declared bound (u: not hot) must veto the rewrite")
+        // no statistic (undeclared map) -> no rewrite
+        assert(!fired(spark.read.format("graft-segment").load(s"$base/undecl")
+          .join(dim, Seq("k"))))
+        // residual non-equality conjunct -> untouched (the multiplicity
+        // argument only covers the pure equi-join shape)
+        assert(!fired(factT.join(dim,
+          factT("k") === dim("k") && factT("v") > dim("b"))))
+        // a multiplicity-CHANGING node between scan and join must bail:
+        // post-aggregate every key appears exactly once — zero skew —
+        // so the raw scan's hot-key statistic no longer describes the
+        // join input and salting would replicate the dim for nothing.
+        // A FILTER in between only shrinks per-key mass (the statistic
+        // stays an upper bound — the composite-bound doctrine) and fires
+        assert(!fired(factT.groupBy($"k").agg(sum($"v").as("v2"))
+          .join(dim, Seq("k"))),
+          "an aggregate between scan and join must bail")
+        assert(fired(factT.filter($"v" >= 0).join(dim, Seq("k"))),
+          "a filter between scan and join preserves the upper bound")
+        // kill switch — and its TOLERANT parse: a malformed value must
+        // degrade to the default, never fail planning (r17 ADVICE)
+        spark.conf.set(SaltJoinRule.EnabledKey, "false")
+        try assert(!fired(shape(factT)))
         finally spark.conf.unset(SaltJoinRule.EnabledKey)
-      }
-      spark.conf.set(SaltJoinRule.EnabledKey, "not-a-boolean")
-      try assert(fired(shape(factT)),
-        "a malformed kill-switch value degrades to enabled")
-      finally spark.conf.unset(SaltJoinRule.EnabledKey)
-      // broadcast-eligible dim -> no rewrite (BHJ has no fact shuffle;
-      // SaltBench measured broadcast strictly dominating)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevT)
-      assert(!fired(shape(factT)), "broadcastable dim must stay unsalted")
-    } finally {
-      spark.experimental.extraOptimizations = prev
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevT)
+        // the standard disable spellings all disable — ignoring "0"
+        // would silently invert explicit disable intent
+        Seq("0", "off", "FALSE", "no").foreach { v =>
+          spark.conf.set(SaltJoinRule.EnabledKey, v)
+          try assert(!fired(shape(factT)), s"'$v' must disable")
+          finally spark.conf.unset(SaltJoinRule.EnabledKey)
+        }
+        spark.conf.set(SaltJoinRule.EnabledKey, "not-a-boolean")
+        try assert(fired(shape(factT)),
+          "a malformed kill-switch value degrades to enabled")
+        finally spark.conf.unset(SaltJoinRule.EnabledKey)
+        // broadcast-eligible dim -> no rewrite (BHJ has no fact shuffle;
+        // SaltBench measured broadcast strictly dominating)
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevT)
+        assert(!fired(shape(factT)), "broadcastable dim must stay unsalted")
+      } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevT)
     }
   }
 
@@ -529,26 +527,25 @@ class OpsSpec extends SparkSpec {
     spark.sql(s"INSERT INTO $cat.db.fact SELECT k, v FROM graft_saltcat_src")
     spark.range(0, 13).select($"id".as("k"), ($"id" % 3).as("b"))
       .createOrReplaceTempView("graft_saltcat_dim")
-    val prev = spark.experimental.extraOptimizations
     val prevT = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.experimental.extraOptimizations = prev :+ SaltJoinRule(spark)
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val q = spark.sql(s"SELECT b, count(*) AS n, sum(v) AS s " +
-        s"FROM $cat.db.fact JOIN graft_saltcat_dim USING (k) GROUP BY b")
-      assert(q.queryExecution.optimizedPlan.toString.contains("graft_salt_f"),
-        "the rule must serve SQL users through the catalog table path")
-      assert(q.count() === 3)
-      // row multiplicity is exact through the SQL face too
-      assert(spark.sql(s"SELECT * FROM $cat.db.fact " +
-        "JOIN graft_saltcat_dim USING (k)").count() === 12000)
-    } finally {
-      spark.experimental.extraOptimizations = prev
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevT)
-      // drop the test-local catalog from the shared session — later
-      // tests must not inherit a live catalog over a temp warehouse
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
+    withRules(spark, SaltJoinRule(spark)) {
+      try {
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        val q = spark.sql(s"SELECT b, count(*) AS n, sum(v) AS s " +
+          s"FROM $cat.db.fact JOIN graft_saltcat_dim USING (k) GROUP BY b")
+        assert(q.queryExecution.optimizedPlan.toString.contains("graft_salt_f"),
+          "the rule must serve SQL users through the catalog table path")
+        assert(q.count() === 3)
+        // row multiplicity is exact through the SQL face too
+        assert(spark.sql(s"SELECT * FROM $cat.db.fact " +
+          "JOIN graft_saltcat_dim USING (k)").count() === 12000)
+      } finally {
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevT)
+        // drop the test-local catalog from the shared session — later
+        // tests must not inherit a live catalog over a temp warehouse
+        spark.conf.unset(s"spark.sql.catalog.$cat")
+        spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
+      }
     }
   }
 
@@ -951,9 +948,7 @@ class OpsSpec extends SparkSpec {
     val rule = graft.plans.MvRewriteRule(roots(fact.queryExecution.analyzed),
       spark.read.parquet(s"$base/mv").queryExecution.analyzed,
       Set("g1", "g2"), Map("x" -> "pre_x"), "pre_cnt")
-    val prev = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = prev :+ rule
-    try {
+    withRules(spark, rule) {
       val q = fact.groupBy($"g1").agg(sum($"x").as("sx"), count(lit(1)).as("n"))
       val optRoots = roots(q.queryExecution.optimizedPlan)
       assert(optRoots.exists(_.contains("/mv")), s"plan must scan the MV: $optRoots")
@@ -967,7 +962,7 @@ class OpsSpec extends SparkSpec {
       // a measure the MV does not carry → untouched
       val foreign = fact.groupBy($"g1").agg(sum($"y"))
       assert(roots(foreign.queryExecution.optimizedPlan).exists(_.contains("/fact")))
-    } finally spark.experimental.extraOptimizations = prev
+    }
   }
 
   test("GraftExtensions wires the range-join rule with the configured bin width") {
@@ -1010,9 +1005,7 @@ class OpsSpec extends SparkSpec {
     val rawPlan = rawJoin().queryExecution.executedPlan.toString
     assert(rawPlan.contains("BroadcastNestedLoopJoin"), // what users get today
       s"expected the raw BETWEEN join to nested-loop, got:\n$rawPlan")
-    val prev = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = prev :+ graft.plans.BinnedRangeJoinRule(10L)
-    try {
+    withRules(spark, graft.plans.BinnedRangeJoinRule(10L)) {
       val rewritten = rawJoin()
       val plan = rewritten.queryExecution.executedPlan.toString
       assert(!plan.contains("BroadcastNestedLoopJoin") && !plan.contains("CartesianProduct"),
@@ -1020,7 +1013,7 @@ class OpsSpec extends SparkSpec {
       assert(plan.contains("Generate"), s"expected the interval explode, got:\n$plan")
       val got = rewritten.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(got === baseline) // rewrite is semantics-preserving
-    } finally spark.experimental.extraOptimizations = prev
+    }
   }
 
   test("FuzzyJoinRule rewrites a raw levenshtein join; multiplicity preserved") {
@@ -1045,9 +1038,7 @@ class OpsSpec extends SparkSpec {
     def join2() = lefts
       .join(rights, levenshtein($"lname", $"rname") <= 2).select($"lk", $"rk")
     val base2 = multiset(join2()) // k=2 ground truth, rule NOT active
-    val prev = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = prev :+ graft.plans.FuzzyJoinRule()
-    try {
+    withRules(spark, graft.plans.FuzzyJoinRule()) {
       val rewritten = rawJoin()
       val plan = rewritten.queryExecution.executedPlan.toString
       assert(!plan.contains("BroadcastNestedLoopJoin") && !plan.contains("CartesianProduct"),
@@ -1056,7 +1047,7 @@ class OpsSpec extends SparkSpec {
       assert(multiset(rewritten) === baseline)
       // k=2 threshold routes through the two-deletion neighborhood
       assert(multiset(join2()) === base2)
-    } finally spark.experimental.extraOptimizations = prev
+    }
   }
 
   test("GraftExtensions end-to-end: injected rules converge in the fixed-point batch") {

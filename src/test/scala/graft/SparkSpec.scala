@@ -10,15 +10,8 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** Always 4 threads, never `Session.cores`: the suite's figures are
+    * pinned at 4 shuffle partitions whatever box runs it. */
+  val cores = 4
+  lazy val session: SparkSession = Session.build(cores)
 }
