@@ -44,7 +44,7 @@ object Bench {
     // costs as their own artifact fields, so the timed certificates
     // measure consumption steady-state
     val fixtures =
-      try SparkEntry.warmFixtures(spark, sfDir)
+      try graft.certs.Fixtures.warmFixtures(spark, sfDir)
       catch { case scala.util.control.NonFatal(_) => Seq.empty[(String, Double)] }
     fixtures.foreach { case (n, t) =>
       println(f"[graft] fixture $n built in $t%.2f s") }
@@ -64,9 +64,6 @@ object Bench {
     val probes = scala.collection.mutable.ArrayBuffer.empty[(Double, Double)]
     val offsets = scala.collection.mutable.ArrayBuffer.empty[Double]
     val suite = SparkEntry.queries.toSeq.sortBy(_._1)
-    // queries is a def building the whole registry Map: resolve ONCE,
-    // not per timed run
-    val registry = suite.toMap
     val midIdx = suite.size / 2
     var calibSparkMid = -1.0
     val suiteStart = System.nanoTime()
@@ -80,7 +77,7 @@ object Bench {
     def timedRun(name: String): (Double, Option[String]) = {
       val t0 = System.nanoTime()
       val err =
-        try { registry(name)(spark, sfDir).count(); None }
+        try { SparkEntry.queries(name)(spark, sfDir).count(); None }
         // NonFatal only: an OOM/VM error means every later timing would
         // run in a poisoned JVM — a failed RUN reports more faithfully
         // than a plausible-looking garbage artifact

@@ -31,6 +31,26 @@ object Session {
     "spark.cleaner.periodicGC.interval" -> "60s",
     "spark.ui.enabled" -> "false")
 
+  /** The RocksDB state-store provider conf the keyed-state streams run
+    * under, as one [[withConfs]] entry. */
+  val RocksDbStateStore: (String, String) =
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** Runs `body` with each `key -> value` set on `s`, then restores each
+    * key's prior value, or unsets a key that was unset, however `body`
+    * exits. */
+  def withConfs[T](s: SparkSession, confs: (String, String)*)(body: => T): T = {
+    val prior = confs.map { case (k, _) => k -> s.conf.getOption(k) }
+    try {
+      confs.foreach { case (k, v) => s.conf.set(k, v) }
+      body
+    } finally prior.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
+  }
+
   /** `local[cores]` with [[confs]] and log level WARN. A second call in
     * the same JVM returns the running session. */
   def build(cores: Int): SparkSession = {

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor, TimeMode, TimerValues, Trigger, TTLConfig}
+import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig}
 import org.apache.spark.sql.types.StructType
 
 /** Per-key token-bucket rate limiting as keyed streaming state — the
@@ -74,31 +74,16 @@ object RateLimit {
       capMs: Long,
       costMs: Long): Unit = {
     import spark.implicits._
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      spark.conf.set("spark.sql.shuffle.partitions", "8")
-      val q = spark.readStream.schema(schema)
+    graft.Session.withConfs(spark, graft.Session.RocksDbStateStore,
+        "spark.sql.shuffle.partitions" -> "8") {
+      Drain.toParquet(spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(s"$inDir/*")
         .select(col("event_id"), col("user_id"), col("ts"))
         .as[Req]
         .groupByKey(_.user_id)
-        .transformWithState(new Processor(capMs, costMs), TimeMode.None(), OutputMode.Append())
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(Trigger.AvailableNow())
-        .format("parquet").option("path", outDir)
-        .start()
-      q.awaitTermination()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+        .transformWithState(new Processor(capMs, costMs), TimeMode.None(), OutputMode.Append()),
+        outDir, checkpoint)
     }
   }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, OutputMode, StatefulProcessor, TimeMode, TimerValues, Trigger, TTLConfig}
+import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig}
 import org.apache.spark.sql.types.StructType
 
 /** Event-time TIMER state: abandoned-checkout detection. A start
@@ -111,20 +111,16 @@ object TimeoutExpiry {
       completeType: String,
       timeoutMs: Long): Unit = {
     import spark.implicits._
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      // size the store count to the key space (150 users here), not
-      // the session default — idle stores bill open/commit per batch
-      spark.conf.set("spark.sql.shuffle.partitions", "8")
+    // size the store count to the key space (150 users here), not
+    // the session default — idle stores bill open/commit per batch
+    graft.Session.withConfs(spark, graft.Session.RocksDbStateStore,
+        "spark.sql.shuffle.partitions" -> "8") {
       // NO pre-stateful event_type filter: Catalyst pushes such a
       // predicate BELOW the EventTimeWatermark node (it doesn't touch
       // the ts column), which would drop the watermark-advancing
       // sentinel rows before their timestamps register — the
       // processor ignores foreign event types itself instead
-      val q = spark.readStream.schema(schema)
+      Drain.toParquet(spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(s"$inDir/*")
         .withWatermark("ts", "30 minutes")
@@ -133,19 +129,8 @@ object TimeoutExpiry {
         .groupByKey(_.user_id)
         .transformWithState(
           new Processor(startType, completeType, timeoutMs),
-          TimeMode.EventTime(), OutputMode.Append())
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(Trigger.AvailableNow())
-        .format("parquet").option("path", outDir)
-        .start()
-      q.awaitTermination()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+          TimeMode.EventTime(), OutputMode.Append()),
+        outDir, checkpoint)
     }
   }
 }

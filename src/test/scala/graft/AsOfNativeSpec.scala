@@ -164,25 +164,24 @@ class AsOfNativeSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-asof-bkt")
     val left = (1 to 400).map(i => (s"u${i % 23}", i.toLong, s"l$i")).toDF("k", "t", "lv")
     val right = (1 to 250).map(i => (s"u${i % 23}", (i * 3).toLong, s"r$i")).toDF("k", "t", "rv")
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val bl = graft.sources.Bucketing.writeBucketed(left, s"$dir/l", "spec_asof_l", "k", 4)
-      val br = graft.sources.Bucketing.writeBucketed(right, s"$dir/r", "spec_asof_r", "k", 4)
-      val native = AsOfJoinNative.asofJoinBackward(bl, br, "k", "t", Seq("rv"))
-      val shuffles = native.queryExecution.executedPlan.collect {
-        case e: ShuffleExchangeExec => e
+      Session.withConfs(spark, "spark.sql.adaptive.enabled" -> "false") {
+        val bl = graft.sources.Bucketing.writeBucketed(left, s"$dir/l", "spec_asof_l", "k", 4)
+        val br = graft.sources.Bucketing.writeBucketed(right, s"$dir/r", "spec_asof_r", "k", 4)
+        val native = AsOfJoinNative.asofJoinBackward(bl, br, "k", "t", Seq("rv"))
+        val shuffles = native.queryExecution.executedPlan.collect {
+          case e: ShuffleExchangeExec => e
+        }
+        // the SortMergeJoin privilege extended to as-of: the bucket
+        // layout satisfies both ClusteredDistributions, so the plan
+        // needs only in-partition sorts, never an exchange
+        assert(shuffles.isEmpty,
+          s"expected exchange-free bucketed as-of, got:\n${native.queryExecution.executedPlan}")
+        val plain = graft.ops.AsOf.asofJoinBackward(left, right, "k", "t", Seq("rv"))
+          .orderBy(col("k"), col("t"), col("lv")).collect().toSeq
+        assert(native.orderBy(col("k"), col("t"), col("lv")).collect().toSeq == plain)
       }
-      // the SortMergeJoin privilege extended to as-of: the bucket
-      // layout satisfies both ClusteredDistributions, so the plan
-      // needs only in-partition sorts, never an exchange
-      assert(shuffles.isEmpty,
-        s"expected exchange-free bucketed as-of, got:\n${native.queryExecution.executedPlan}")
-      val plain = graft.ops.AsOf.asofJoinBackward(left, right, "k", "t", Seq("rv"))
-        .orderBy(col("k"), col("t"), col("lv")).collect().toSeq
-      assert(native.orderBy(col("k"), col("t"), col("lv")).collect().toSeq == plain)
     } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
       graft.sources.Bucketing.drop(spark, "spec_asof_l")
       graft.sources.Bucketing.drop(spark, "spec_asof_r")
       import scala.jdk.CollectionConverters._

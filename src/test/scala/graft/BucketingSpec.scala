@@ -15,29 +15,26 @@ class BucketingSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-bkt-spec")
     val left  = (1 to 200).map(i => (i.toLong, s"l$i")).toDF("k", "lv")
     val right = (1 to 200).map(i => (i.toLong % 50, s"r$i")).toDF("k", "rv")
-    val prevBroadcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
     // force a sort-merge join and a concrete (non-adaptive) plan so the
     // exchange assertion reads the real physical operators
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val bl = Bucketing.writeBucketed(left, s"$dir/l", "spec_bkt_l", "k", 4)
-      val br = Bucketing.writeBucketed(right, s"$dir/r", "spec_bkt_r", "k", 4)
-      val joined = bl.join(br, Seq("k"))
-      val shuffles = joined.queryExecution.executedPlan.collect {
-        case e: ShuffleExchangeExec => e
+      Session.withConfs(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+          "spark.sql.adaptive.enabled" -> "false") {
+        val bl = Bucketing.writeBucketed(left, s"$dir/l", "spec_bkt_l", "k", 4)
+        val br = Bucketing.writeBucketed(right, s"$dir/r", "spec_bkt_r", "k", 4)
+        val joined = bl.join(br, Seq("k"))
+        val shuffles = joined.queryExecution.executedPlan.collect {
+          case e: ShuffleExchangeExec => e
+        }
+        assert(shuffles.isEmpty,
+          s"expected an exchange-free co-located join, got:\n${joined.queryExecution.executedPlan}")
+        // the layout must be invisible in the result
+        val plain = left.join(right, Seq("k"))
+        assert(joined.count() === plain.count())
+        assert(joined.agg(sum(length($"rv"))).head.getLong(0) ===
+          plain.agg(sum(length($"rv"))).head.getLong(0))
       }
-      assert(shuffles.isEmpty,
-        s"expected an exchange-free co-located join, got:\n${joined.queryExecution.executedPlan}")
-      // the layout must be invisible in the result
-      val plain = left.join(right, Seq("k"))
-      assert(joined.count() === plain.count())
-      assert(joined.agg(sum(length($"rv"))).head.getLong(0) ===
-        plain.agg(sum(length($"rv"))).head.getLong(0))
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBroadcast)
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
       Bucketing.drop(spark, "spec_bkt_l")
       Bucketing.drop(spark, "spec_bkt_r")
       import scala.jdk.CollectionConverters._
@@ -70,25 +67,24 @@ class BucketingSpec extends SparkSpec {
 
   test("point filter on the bucket key prunes the scan to a single bucket") {
     val dir = java.nio.file.Files.createTempDirectory("graft-bkt-prune")
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val df = (1 to 400).map(i => (i.toLong % 40, i)).toDF("k", "v")
-      val b = Bucketing.writeBucketed(df, s"$dir/t", "spec_bkt_prune", "k", 8)
-      val point = b.filter($"k" === 7L)
-      val scans = point.queryExecution.executedPlan.collect {
-        case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+      Session.withConfs(spark, "spark.sql.adaptive.enabled" -> "false") {
+        val df = (1 to 400).map(i => (i.toLong % 40, i)).toDF("k", "v")
+        val b = Bucketing.writeBucketed(df, s"$dir/t", "spec_bkt_prune", "k", 8)
+        val point = b.filter($"k" === 7L)
+        val scans = point.queryExecution.executedPlan.collect {
+          case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+        }
+        assert(scans.nonEmpty)
+        // the equality predicate restricts the scan to the one bucket
+        // that can hold k=7 — 1/numBuckets of the files at any scale
+        val bucketSet = scans.head.optionalBucketSet
+        assert(bucketSet.isDefined, "expected bucket pruning to engage")
+        assert(bucketSet.get.cardinality() === 1,
+          s"expected exactly one surviving bucket, got ${bucketSet.get.cardinality()}")
+        assert(point.count() === 10)
       }
-      assert(scans.nonEmpty)
-      // the equality predicate restricts the scan to the one bucket
-      // that can hold k=7 — 1/numBuckets of the files at any scale
-      val bucketSet = scans.head.optionalBucketSet
-      assert(bucketSet.isDefined, "expected bucket pruning to engage")
-      assert(bucketSet.get.cardinality() === 1,
-        s"expected exactly one surviving bucket, got ${bucketSet.get.cardinality()}")
-      assert(point.count() === 10)
     } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
       Bucketing.drop(spark, "spec_bkt_prune")
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.walk(dir).iterator().asScala.toSeq
@@ -164,20 +160,19 @@ class BucketingSpec extends SparkSpec {
 
   test("bucketed groupBy on the bucket key aggregates without an exchange") {
     val dir = java.nio.file.Files.createTempDirectory("graft-bkt-agg")
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val df = (1 to 300).map(i => (i.toLong % 30, i)).toDF("k", "v")
-      val b = Bucketing.writeBucketed(df, s"$dir/t", "spec_bkt_agg", "k", 4)
-      val agg = b.groupBy($"k").agg(sum($"v").as("s"))
-      val shuffles = agg.queryExecution.executedPlan.collect {
-        case e: ShuffleExchangeExec => e
+      Session.withConfs(spark, "spark.sql.adaptive.enabled" -> "false") {
+        val df = (1 to 300).map(i => (i.toLong % 30, i)).toDF("k", "v")
+        val b = Bucketing.writeBucketed(df, s"$dir/t", "spec_bkt_agg", "k", 4)
+        val agg = b.groupBy($"k").agg(sum($"v").as("s"))
+        val shuffles = agg.queryExecution.executedPlan.collect {
+          case e: ShuffleExchangeExec => e
+        }
+        assert(shuffles.isEmpty,
+          s"expected an exchange-free bucketed aggregate, got:\n${agg.queryExecution.executedPlan}")
+        assert(agg.count() === 30)
       }
-      assert(shuffles.isEmpty,
-        s"expected an exchange-free bucketed aggregate, got:\n${agg.queryExecution.executedPlan}")
-      assert(agg.count() === 30)
     } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
       Bucketing.drop(spark, "spec_bkt_agg")
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.walk(dir).iterator().asScala.toSeq

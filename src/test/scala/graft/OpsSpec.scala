@@ -432,10 +432,8 @@ class OpsSpec extends SparkSpec {
     // rewritten-vs-rewritten — vacuous)
     val plainExpected = shape(factT).collect().toSet
     val leftExpected = leftShape(factT).collect().toSet
-    val prevT = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     withRules(spark, SaltJoinRule(spark)) {
-      try {
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      Session.withConfs(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
         val auto = shape(factT)
         assert(fired(auto), "declared-hot key + non-broadcastable dim must fire")
         assert(auto.collect().toSet === plainExpected,
@@ -500,11 +498,10 @@ class OpsSpec extends SparkSpec {
         try assert(fired(shape(factT)),
           "a malformed kill-switch value degrades to enabled")
         finally spark.conf.unset(SaltJoinRule.EnabledKey)
-        // broadcast-eligible dim -> no rewrite (BHJ has no fact shuffle;
-        // SaltBench measured broadcast strictly dominating)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevT)
-        assert(!fired(shape(factT)), "broadcastable dim must stay unsalted")
-      } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevT)
+      }
+      // broadcast-eligible dim -> no rewrite (BHJ has no fact shuffle;
+      // SaltBench measured broadcast strictly dominating)
+      assert(!fired(shape(factT)), "broadcastable dim must stay unsalted")
     }
   }
 
@@ -527,20 +524,19 @@ class OpsSpec extends SparkSpec {
     spark.sql(s"INSERT INTO $cat.db.fact SELECT k, v FROM graft_saltcat_src")
     spark.range(0, 13).select($"id".as("k"), ($"id" % 3).as("b"))
       .createOrReplaceTempView("graft_saltcat_dim")
-    val prevT = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     withRules(spark, SaltJoinRule(spark)) {
       try {
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        val q = spark.sql(s"SELECT b, count(*) AS n, sum(v) AS s " +
-          s"FROM $cat.db.fact JOIN graft_saltcat_dim USING (k) GROUP BY b")
-        assert(q.queryExecution.optimizedPlan.toString.contains("graft_salt_f"),
-          "the rule must serve SQL users through the catalog table path")
-        assert(q.count() === 3)
-        // row multiplicity is exact through the SQL face too
-        assert(spark.sql(s"SELECT * FROM $cat.db.fact " +
-          "JOIN graft_saltcat_dim USING (k)").count() === 12000)
+        Session.withConfs(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+          val q = spark.sql(s"SELECT b, count(*) AS n, sum(v) AS s " +
+            s"FROM $cat.db.fact JOIN graft_saltcat_dim USING (k) GROUP BY b")
+          assert(q.queryExecution.optimizedPlan.toString.contains("graft_salt_f"),
+            "the rule must serve SQL users through the catalog table path")
+          assert(q.count() === 3)
+          // row multiplicity is exact through the SQL face too
+          assert(spark.sql(s"SELECT * FROM $cat.db.fact " +
+            "JOIN graft_saltcat_dim USING (k)").count() === 12000)
+        }
       } finally {
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevT)
         // drop the test-local catalog from the shared session — later
         // tests must not inherit a live catalog over a temp warehouse
         spark.conf.unset(s"spark.sql.catalog.$cat")
@@ -969,9 +965,7 @@ class OpsSpec extends SparkSpec {
     import org.apache.spark.sql.graftbridge.ExtensionsBridge
     val ext = new org.apache.spark.sql.SparkSessionExtensions
     new graft.plans.GraftExtensions().apply(ext)
-    val prev = spark.conf.getOption(graft.plans.GraftExtensions.BinWidthKey)
-    try {
-      spark.conf.set(graft.plans.GraftExtensions.BinWidthKey, "12345")
+    Session.withConfs(spark, graft.plans.GraftExtensions.BinWidthKey -> "12345") {
       val rules = ExtensionsBridge.optimizerRules(ext, spark)
       assert(rules.collect {
         case graft.plans.BinnedRangeJoinRule(w) => w
@@ -986,9 +980,6 @@ class OpsSpec extends SparkSpec {
           case graft.plans.BinnedRangeJoinRule(w) => w
         } === Seq(3600L * 1000 * 1000), s"binWidth='$bad'")
       }
-    } finally prev match {
-      case Some(v) => spark.conf.set(graft.plans.GraftExtensions.BinWidthKey, v)
-      case None => spark.conf.unset(graft.plans.GraftExtensions.BinWidthKey)
     }
   }
 

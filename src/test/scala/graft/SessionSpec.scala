@@ -21,4 +21,26 @@ class SessionSpec extends SparkSpec {
     assert(again eq spark)
     assertCertified(again)
   }
+
+  test("withConfs restores a set key and unsets an unset key, also when the body throws") {
+    val (set, unset) = ("spark.graft.test.withconfs.set", "spark.graft.test.withconfs.unset")
+    def assertRestored(): Unit = {
+      assert(spark.conf.get(set) === "before")
+      assert(spark.conf.getOption(unset) === None)
+    }
+    spark.conf.set(set, "before")
+    try {
+      val inside = Session.withConfs(spark, set -> "inside", unset -> "inside") {
+        (spark.conf.get(set), spark.conf.get(unset))
+      }
+      assert(inside === (("inside", "inside")))
+      assertRestored()
+      intercept[IllegalStateException] {
+        Session.withConfs(spark, set -> "inside", unset -> "inside") {
+          throw new IllegalStateException("body fails")
+        }
+      }
+      assertRestored()
+    } finally spark.conf.unset(set)
+  }
 }

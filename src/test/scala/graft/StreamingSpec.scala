@@ -69,10 +69,7 @@ class StreamingSpec extends SparkSpec {
   test("A2 v2: transformWithState keyed inventory reserves per product with RocksDB state") {
     import graft.streaming.InventoryProcessor._
     implicit val sq = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    Session.withConfs(spark, Session.RocksDbStateStore) {
       val mem = MemoryStream[LineRequest]
       val requests = mem.toDS().groupByKey(_.product_id)
       val seed = Seq(ProductStock("prod-101", 50), ProductStock("prod-105", 5))
@@ -92,21 +89,13 @@ class StreamingSpec extends SparkSpec {
         .map(r => r.getAs[String]("order_id") -> r.getAs[Boolean]("granted")).toMap
       q.stop()
       assert(rows === Map("o-1" -> true, "o-2" -> true, "o-3" -> false))
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
   test("A2 v2 phase 2: failed orders compensate through the queue hop; conservation holds") {
     import graft.streaming.InventoryProcessor._
     implicit val sq = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    Session.withConfs(spark, Session.RocksDbStateStore) {
       val mem = MemoryStream[LineRequest]
       val seed = Seq(ProductStock("A", 10), ProductStock("B", 0)).toDS().groupByKey(_.product_id)
       val verdicts = graft.streaming.InventoryProcessor.reserve(
@@ -132,11 +121,6 @@ class StreamingSpec extends SparkSpec {
       val o3 = spark.table("saga_out").as[LineVerdict].collect().filter(_.order_id == "o-3")
       q.stop()
       assert(o3.map(_.granted).toSeq === Seq(true))
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -144,10 +128,7 @@ class StreamingSpec extends SparkSpec {
     import graft.streaming.InventoryProcessor._
     import graft.streaming.SagaLoop
     val base = tmp("graft-sagaloop")
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    Session.withConfs(spark, Session.RocksDbStateStore) {
       // same contention shape as StreamingSpec's in-query saga test:
       // o-1 takes A:8; o-2 gets A:2 (exhausting A) but B:1 denied ->
       // o-2 FAILED, its granted A:2 must come back as a credit
@@ -175,11 +156,6 @@ class StreamingSpec extends SparkSpec {
       val netByProduct = verdicts.filter(_.granted)
         .groupBy(_.product_id).view.mapValues(_.map(_.quantity).sum).toMap
       assert(netByProduct === Map("A" -> 8L)) // 8 (o-1) + 2 (o-2) - 2 (credit)
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
