@@ -691,17 +691,9 @@ object StreamCerts {
           orders.filter(pred).coalesce(1).write.parquet(s"$base/in/$n"))
         })
       val (_, metrics) = graft.streaming.Metrics.observe(s) {
-        val q = s.readStream.schema(orders.schema)
-          .option("maxFilesPerTrigger", 1).parquet(s"$base/in/*")
-          .writeStream
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation", s"$base/ckpt")
-          .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-            b.write.mode("overwrite").parquet(s"$base/out/batch_$id")
-            ()
-          }
-          .start()
-        q.awaitTermination()
+        Drain.eachBatch(Drain.files(s, orders.schema, s"$base/in"), s"$base/ckpt") {
+          (b, id) => b.write.mode("overwrite").parquet(s"$base/out/batch_$id")
+        }
       }
       metrics.frame(s).filter(col("input_rows") > 0)
         .select(col("input_rows")).orderBy(col("input_rows"))
@@ -1098,19 +1090,11 @@ object StreamCerts {
       stageOrdered(Seq(0, 1).map(i => s"$base/in/g$i" -> (() =>
         media.filter(col("media_id") % 2 === i)
           .coalesce(1).write.parquet(s"$base/in/g$i"))))
-      val q = s.readStream.schema(media.schema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$base/in/*")
-        .writeStream
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", s"$base/ckpt")
-        .foreachBatch { (b: DataFrame, batchId: Long) =>
-          graft.multimodal.Multimodal
-            .decodeImageStats(b.as[graft.multimodal.Multimodal.MediaRecord])
-            .toDF().write.mode("overwrite").parquet(s"$base/out/batch_$batchId")
-          ()
-        }
-        .start()
-      q.awaitTermination()
+      Drain.eachBatch(Drain.files(s, media.schema, s"$base/in"), s"$base/ckpt") { (b, batchId) =>
+        graft.multimodal.Multimodal
+          .decodeImageStats(b.as[graft.multimodal.Multimodal.MediaRecord])
+          .toDF().write.mode("overwrite").parquet(s"$base/out/batch_$batchId")
+      }
       s.read.option("recursiveFileLookup", "true").parquet(s"$base/out")
         .orderBy(col("media_id"))
     },

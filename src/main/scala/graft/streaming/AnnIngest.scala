@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 /** Streaming ANN index maintenance: arriving vector batches are
@@ -35,37 +34,24 @@ object AnnIngest {
       indexDir: String,
       checkpoint: String,
       nSub: Int,
-      dsub: Int): Int = {
-    val batches = new java.util.concurrent.atomic.AtomicInteger(0)
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$inDir/*")
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        val ss = batch.sparkSession
-        val cents = ss.read.parquet(s"$indexDir/centroids")
-        val books = ss.read.parquet(s"$indexDir/codebooks")
-        // the assignment and code writes are independent (both read
-        // the stored model + the batch, disjoint dirs) — overlap them,
-        // guide §2.6
-        Overlap.awaitAll(Seq(
-          () => graft.ops.Ivf.assign(batch, cents)
-            .select(col("vec_id"), col("centroid_id"))
-            .write.mode("overwrite")
-            .parquet(s"$indexDir/assignments_inc/batch_$batchId"),
-          () => graft.ops.Pq.assignCodes(graft.ops.Pq.subVectors(batch, nSub, dsub), books)
-            .select(col("vec_id"), col("m"), col("code"))
-            .write.mode("overwrite")
-            .parquet(s"$indexDir/codes_inc/batch_$batchId")))
-        batches.incrementAndGet()
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    batches.get()
-  }
+      dsub: Int): Int =
+    Drain.eachBatch(Drain.files(spark, schema, inDir), checkpoint) { (batch, batchId) =>
+      val ss = batch.sparkSession
+      val cents = ss.read.parquet(s"$indexDir/centroids")
+      val books = ss.read.parquet(s"$indexDir/codebooks")
+      // the assignment and code writes are independent (both read
+      // the stored model + the batch, disjoint dirs) — overlap them,
+      // guide §2.6
+      Overlap.awaitAll(Seq(
+        () => graft.ops.Ivf.assign(batch, cents)
+          .select(col("vec_id"), col("centroid_id"))
+          .write.mode("overwrite")
+          .parquet(s"$indexDir/assignments_inc/batch_$batchId"),
+        () => graft.ops.Pq.assignCodes(graft.ops.Pq.subVectors(batch, nSub, dsub), books)
+          .select(col("vec_id"), col("m"), col("code"))
+          .write.mode("overwrite")
+          .parquet(s"$indexDir/codes_inc/batch_$batchId")))
+    }
 
   /** Fold the staged increments into the main index tables (append
     * once, then drop the staging dirs). No-op when nothing staged. */

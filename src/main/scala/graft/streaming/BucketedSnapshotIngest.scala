@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 /** Key-bucketed snapshot-state streaming driver: the incremental form
@@ -21,14 +20,12 @@ import org.apache.spark.sql.types.StructType
   * `nBuckets` is the knob that trades write amplification (fewer,
   * bigger buckets) against small-file count (more, smaller ones).
   *
-  * The exactly-once contract is [[SnapshotIngest]]'s, applied per
-  * bucket: a batch merges into the newest snapshot STRICTLY before its
-  * own batchId (a retried batch touches the same buckets — the bucket
-  * function is deterministic in the batch's keys — and ignores its
-  * failed attempt's output), and pruning keeps each bucket's immediate
-  * predecessor because the stream checkpoint commits only after
-  * foreachBatch returns. Discovery runs through the path's FileSystem
-  * ([[StateDirs]]): correct on HDFS/S3, not just local disk.
+  * Each touched bucket folds through [[SnapshotIngest.foldBatch]] on
+  * its own `bucket_N` dir, so the exactly-once contract is
+  * [[SnapshotIngest]]'s, applied per bucket: a retried batch touches
+  * the same buckets (the bucket function is deterministic in the
+  * batch's keys) and each reads the newest snapshot strictly before
+  * its batchId, ignoring its failed attempt's output.
   *
   * The driver-side loop is over touched BUCKET IDS — at most
   * `nBuckets` elements (a configuration constant), never data-sized;
@@ -52,54 +49,30 @@ object BucketedSnapshotIngest {
       merge: (Option[DataFrame], DataFrame) => DataFrame): Int = {
     require(nBuckets > 0, s"nBuckets must be positive, got $nBuckets")
     StateDirs.ensure(spark.sparkContext.hadoopConfiguration, stateDir)
-    val batches = new java.util.concurrent.atomic.AtomicInteger(0)
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$inDir/*")
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        val ss = batch.sparkSession
-        val conf = ss.sparkContext.hadoopConfiguration
-        // materialize the bucketed batch once — each touched bucket's
-        // merge filters it instead of re-reading the source
-        val bucketed = batch
-          .withColumn("__bucket", pmod(hash(keys.map(col): _*), lit(nBuckets)))
-          .localCheckpoint()
-        // bounded driver data: at most nBuckets ids, never row-scaled
-        val touched = bucketed.select(col("__bucket")).distinct()
-          .collect().map(_.getInt(0)).sorted
-        // overlap the per-bucket merge jobs (guide §2.6): buckets are
-        // disjoint by construction (a key lives in exactly one bucket;
-        // each writes/prunes only its own dir), so the merges are
-        // independent Spark jobs — run serially they cost one
-        // scheduler round-trip EACH per batch, which at tiny bucket
-        // sizes IS the batch cost. A small pool keeps 4 in flight so
-        // the next bucket's tasks back-fill the previous one's tail;
-        // any failure propagates and fails the batch (retry contract
-        // unchanged — state reads are strictly-before-batchId).
-        Overlap.awaitAll(touched.toSeq.map { b => () => {
-          val bucketDir = s"$stateDir/bucket_$b"
-          val snaps = StateDirs.list(conf, bucketDir, "state_", batchId)
-          val prior = snaps.sortBy(_._1).lastOption
-            .map { case (_, p) => ss.read.parquet(p) }
-          val part = bucketed.filter(col("__bucket") === b).drop("__bucket")
-          merge(prior, part)
-            .write.mode("overwrite").parquet(s"$bucketDir/state_$batchId")
-          // prune all but this bucket's immediate predecessor (chains
-          // have gaps — a bucket advances only when touched)
-          val keep = snaps.map(_._1).maxOption
-          snaps.filterNot(s => keep.contains(s._1))
-            .foreach { case (_, p) => StateDirs.delete(conf, p) }
-        }})
-        org.apache.spark.sql.graftbridge.RddBridge.freeCheckpoint(bucketed)
-        batches.incrementAndGet()
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    batches.get()
+    Drain.eachBatch(Drain.files(spark, schema, inDir), checkpoint) { (batch, batchId) =>
+      // materialize the bucketed batch once — each touched bucket's
+      // merge filters it instead of re-reading the source
+      val bucketed = batch
+        .withColumn("__bucket", pmod(hash(keys.map(col): _*), lit(nBuckets)))
+        .localCheckpoint()
+      // bounded driver data: at most nBuckets ids, never row-scaled
+      val touched = bucketed.select(col("__bucket")).distinct()
+        .collect().map(_.getInt(0)).sorted
+      // overlap the per-bucket merge jobs (guide §2.6): buckets are
+      // disjoint by construction (a key lives in exactly one bucket;
+      // each writes/prunes only its own dir), so the merges are
+      // independent Spark jobs — run serially they cost one
+      // scheduler round-trip EACH per batch, which at tiny bucket
+      // sizes IS the batch cost. A small pool keeps 4 in flight so
+      // the next bucket's tasks back-fill the previous one's tail;
+      // any failure propagates and fails the batch (retry contract
+      // unchanged — state reads are strictly-before-batchId).
+      Overlap.awaitAll(touched.toSeq.map { b => () =>
+        SnapshotIngest.foldBatch(s"$stateDir/bucket_$b")(merge)(
+          bucketed.filter(col("__bucket") === b).drop("__bucket"), batchId)
+      })
+      org.apache.spark.sql.graftbridge.RddBridge.freeCheckpoint(bucketed)
+    }
   }
 
   /** The queryable state: the union of every bucket's newest snapshot. */
@@ -114,8 +87,7 @@ object BucketedSnapshotIngest {
     val conf = spark.sparkContext.hadoopConfiguration
     StateDirs.list(conf, stateDir, "bucket_", Long.MaxValue)
       .flatMap { case (_, bucketDir) =>
-        StateDirs.list(conf, bucketDir, "state_", Long.MaxValue)
-          .sortBy(_._1).lastOption.map(_._2)
+        SnapshotIngest.newestSnapshot(conf, bucketDir, Long.MaxValue)
       }
   }
 }

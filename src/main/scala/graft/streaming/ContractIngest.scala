@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 /** Data-contract enforcement at the ingest edge: every micro-batch is
@@ -42,33 +41,21 @@ object ContractIngest {
       checkpoint: String,
       checks: Seq[(String, Column)]): Int = {
     require(checks.nonEmpty, "need at least one contract check")
-    val batches = new java.util.concurrent.atomic.AtomicInteger(0)
     val reason = checks.foldLeft(lit(null).cast("string")) {
       case (acc, (name, pred)) => coalesce(acc, when(!pred, name))
     }
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$inDir/*")
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        val tagged = batch.withColumn("quarantine_reason", reason)
-          .localCheckpoint()
-        // the admitted and quarantine writes are independent once
-        // tagged is materialized (disjoint dirs) — overlap them,
-        // guide §2.6
-        Overlap.awaitAll(Seq(
-          () => tagged.filter(col("quarantine_reason").isNull).drop("quarantine_reason")
-            .write.mode("overwrite").parquet(s"$outDir/batch_$batchId"),
-          () => tagged.filter(col("quarantine_reason").isNotNull)
-            .write.mode("overwrite").parquet(s"$quarantineDir/batch_$batchId")))
-        org.apache.spark.sql.graftbridge.RddBridge.freeCheckpoint(tagged)
-        batches.incrementAndGet()
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    batches.get()
+    Drain.eachBatch(Drain.files(spark, schema, inDir), checkpoint) { (batch, batchId) =>
+      val tagged = batch.withColumn("quarantine_reason", reason)
+        .localCheckpoint()
+      // the admitted and quarantine writes are independent once
+      // tagged is materialized (disjoint dirs) — overlap them,
+      // guide §2.6
+      Overlap.awaitAll(Seq(
+        () => tagged.filter(col("quarantine_reason").isNull).drop("quarantine_reason")
+          .write.mode("overwrite").parquet(s"$outDir/batch_$batchId"),
+        () => tagged.filter(col("quarantine_reason").isNotNull)
+          .write.mode("overwrite").parquet(s"$quarantineDir/batch_$batchId")))
+      org.apache.spark.sql.graftbridge.RddBridge.freeCheckpoint(tagged)
+    }
   }
 }

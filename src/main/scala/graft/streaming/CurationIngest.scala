@@ -1,9 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 /** Streaming incremental curation: [[graft.ops.Curation]]'s recipe as
@@ -17,10 +15,14 @@ import org.apache.spark.sql.types.StructType
   *    final corpus distribution, so production streams run a
   *    calibrated constant (or a model score — [[graft.ops.Classifier]])
   *    and recalibrate out of band.
-  *  - No split/decontamination stage: a benchmark set is a static
-  *    artifact; streaming admission would just anti-join each batch
-  *    against its (precomputed) gram set — the batch op already
-  *    certifies that join shape.
+  *  - Split routing and decontamination are optional (`split`,
+  *    `benchGrams`): a benchmark set is a static artifact, so
+  *    decontamination is one anti-join of each batch against its
+  *    precomputed gram set and adds no state.
+  *
+  * The admission stages are the standalone drivers' own steps:
+  * [[DedupIngest.fresh]] for exact dedup and [[NearDupIngest.rejected]]
+  * for near-dup rejection, over one shared `stateDir`.
   *
   * Admission is closed-form despite the statefulness (the
   * [[NearDupIngest]] discipline): with input files in ascending
@@ -48,6 +50,16 @@ import org.apache.spark.sql.types.StructType
   */
 object CurationIngest {
 
+  /** The fixed quality threshold: a document is admitted only if its
+    * [[graft.ops.TextOps.qualityScores]] score is at least this. The
+    * stream and [[bootstrapState]] share it, so a seeded state is the
+    * one the stream would have built. */
+  val minScore: Int = 2
+
+  /** The shingle size of the benchmark-gram artifact `benchGrams`
+    * passed to [[run]]. */
+  val decontamN: Int = 5
+
   /** Drain `inDir` with AvailableNow semantics, writing admitted docs
     * to `outDir/batch_N`. Returns the micro-batch count.
     *
@@ -66,119 +78,74 @@ object CurationIngest {
       outDir: String,
       stateDir: String,
       checkpoint: String,
-      minScore: Int = 2,
-      bands: Int = 4,
       split: Option[(Double, String)] = None,
-      benchGrams: Option[org.apache.spark.sql.DataFrame] = None,
-      decontamN: Int = 5): Int = {
+      benchGrams: Option[DataFrame] = None): Int = {
     StateDirs.ensure(spark.sparkContext.hadoopConfiguration, stateDir)
-    val batches = new java.util.concurrent.atomic.AtomicInteger(0)
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$inDir/*")
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        val ss = batch.sparkSession
-        val conf = ss.sparkContext.hadoopConfiguration
-
-        // stage 0: route only the train side through curation
-        // (map-only deterministic hash predicate, no lookup)
-        val routed = split match {
-          case Some((frac, salt)) => batch.filter(
-            graft.ops.Sampling.bucketHash(col("doc_id"), salt) <
-              lit(graft.ops.Sampling.hexThreshold(frac)))
-          case None => batch
-        }
-        // stage 1: fixed-threshold quality gate (stateless, map-only)
-        val scored = routed.join(
-          graft.ops.TextOps.qualityScores(routed)
-            .filter(col("quality_score") >= minScore).select(col("doc_id")),
-          Seq("doc_id"), "left_semi")
-
-        // stage 2: exact-dedup admission — in-batch digest keeper,
-        // then anti-join against digests from batches strictly before
-        val keeper = Window.partitionBy(col("content_hash")).orderBy(col("doc_id"))
-        val inBatch = scored
-          .withColumn("content_hash", md5(col("text")))
-          .withColumn("__rn", row_number().over(keeper))
-          .filter(col("__rn") === 1).drop("__rn")
-        val seenDirs = StateDirs.list(conf, stateDir, "seen_", batchId).map(_._2)
-        val exactFresh0 =
-          if (seenDirs.isEmpty) inBatch
-          else inBatch.join(
-            ss.read.schema(DedupIngest.stateSchema).parquet(seenDirs: _*),
-            Seq("content_hash"), "left_anti")
-        // one materialization: three consumers below (sigs, output,
-        // state) must not re-run the quality+digest chain each
-        val exactFresh = exactFresh0.localCheckpoint()
-
-        // stage 3: near-dup admission over exact survivors. One
-        // materialization (r19): FOUR consumers below (state probe,
-        // bucket-min aggregate, in-batch reject join, claim write)
-        // each re-ran the shingle+md5 MinHash chain over the batch
-        // text — the dominant per-batch compute, paid 4x per trigger.
-        val sigs = graft.ops.Dedup.minhashSignatures(exactFresh, bands)
-          .localCheckpoint()
-        val claimedDirs = StateDirs.list(conf, stateDir, "claimed_", batchId).map(_._2)
-        val rejectedByState =
-          if (claimedDirs.isEmpty) sigs.limit(0).select(col("doc_id"))
-          else sigs.join(
-            ss.read.schema(NearDupIngest.stateSchema).parquet(claimedDirs: _*),
-            Seq("band", "signature"), "left_semi").select(col("doc_id"))
-        val bucketMin = sigs.groupBy(col("band"), col("signature"))
-          .agg(min(col("doc_id")).as("min_doc"))
-        val rejectedInBatch = sigs.join(bucketMin, Seq("band", "signature"))
-          .filter(col("min_doc") < col("doc_id")).select(col("doc_id"))
-        val rejected = rejectedByState.union(rejectedInBatch).distinct()
-
-        val admitted0 = exactFresh.drop("content_hash")
-          .join(rejected, Seq("doc_id"), "left_anti")
-        // stage 4: benchmark decontamination — static gram artifact,
-        // one stateless equi-join per batch. When the branch is taken,
-        // `admitted` feeds BOTH the contamination probe and the final
-        // anti-join — cut it once so the reject-union chain is not
-        // re-run per consumer (r19, same reasoning as `sigs` above).
-        val admitted = benchGrams match {
-          case Some(_) => admitted0.localCheckpoint()
-          case None => admitted0
-        }
-        val clean = benchGrams match {
-          case Some(bg) =>
-            val contaminated = graft.ops.TextOps
-              .shinglePostings(admitted, decontamN)
-              .join(bg.select(col("shingle")), Seq("shingle"), "left_semi")
-              .select(col("doc_id")).distinct()
-            admitted.join(contaminated, Seq("doc_id"), "left_anti")
-          case None => admitted
-        }
-        // the three writes (output, seen-digest state, bucket-claim
-        // state) are mutually independent once exactFresh and sigs are
-        // materialized — each reads only checkpointed blocks and writes
-        // its own batchId-keyed overwrite dir. Overlap them (guide
-        // §2.6, the BucketedSnapshotIngest discipline): serially each
-        // write is its own scheduler round-trip per batch. The retry
-        // contract is untouched — state reads are strictly-before-
-        // batchId and the stream checkpoint commits only after ALL
-        // three complete (Await below); claims derive from the batch
-        // input, so a retry rewrites byte-identical state.
-        Overlap.awaitAll(Seq(
-          () => clean.write.mode("overwrite").parquet(s"$outDir/batch_$batchId"),
-          () => exactFresh.select(col("content_hash")).distinct()
-            .write.mode("overwrite").parquet(s"$stateDir/seen_$batchId"),
-          () => sigs.select(col("band"), col("signature")).distinct()
-            .write.mode("overwrite").parquet(s"$stateDir/claimed_$batchId")))
-        if (benchGrams.isDefined)
-          org.apache.spark.sql.graftbridge.RddBridge.freeCheckpoint(admitted)
-        org.apache.spark.sql.graftbridge.RddBridge.freeCheckpoint(sigs)
-        org.apache.spark.sql.graftbridge.RddBridge.freeCheckpoint(exactFresh)
-        batches.incrementAndGet()
-        ()
+    Drain.eachBatch(Drain.files(spark, schema, inDir), checkpoint) { (batch, batchId) =>
+      // stage 0: route only the train side through curation
+      // (map-only deterministic hash predicate, no lookup)
+      val routed = split match {
+        case Some((frac, salt)) => batch.filter(
+          graft.ops.Sampling.bucketHash(col("doc_id"), salt) <
+            lit(graft.ops.Sampling.hexThreshold(frac)))
+        case None => batch
       }
-      .start()
-    q.awaitTermination()
-    batches.get()
+      // stage 1: fixed-threshold quality gate (stateless, map-only),
+      // then stage 2: exact-dedup admission against digests from
+      // batches strictly before. One materialization: three consumers
+      // below (sigs, output, state) must not re-run the quality+digest
+      // chain each
+      val exactFresh = DedupIngest.fresh(qualityPass(routed), stateDir, batchId)
+        .localCheckpoint()
+
+      // stage 3: near-dup admission over exact survivors. One
+      // materialization (r19): FOUR consumers below (state probe,
+      // bucket-min aggregate, in-batch reject join, claim write)
+      // each re-ran the shingle+md5 MinHash chain over the batch
+      // text — the dominant per-batch compute, paid 4x per trigger.
+      val sigs = graft.ops.Dedup.minhashSignatures(exactFresh, NearDupIngest.bands)
+        .localCheckpoint()
+      val admitted0 = exactFresh.drop("content_hash")
+        .join(NearDupIngest.rejected(sigs, stateDir, batchId), Seq("doc_id"), "left_anti")
+      // stage 4: benchmark decontamination — static gram artifact,
+      // one stateless equi-join per batch. When the branch is taken,
+      // `admitted` feeds BOTH the contamination probe and the final
+      // anti-join — cut it once so the reject-union chain is not
+      // re-run per consumer (r19, same reasoning as `sigs` above).
+      val admitted = benchGrams match {
+        case Some(_) => admitted0.localCheckpoint()
+        case None => admitted0
+      }
+      val clean = benchGrams match {
+        case Some(bg) =>
+          val contaminated = graft.ops.TextOps
+            .shinglePostings(admitted, decontamN)
+            .join(bg.select(col("shingle")), Seq("shingle"), "left_semi")
+            .select(col("doc_id")).distinct()
+          admitted.join(contaminated, Seq("doc_id"), "left_anti")
+        case None => admitted
+      }
+      // the three writes (output, seen-digest state, bucket-claim
+      // state) are mutually independent once exactFresh and sigs are
+      // materialized — each reads only checkpointed blocks and writes
+      // its own batchId-keyed overwrite dir. Overlap them (guide
+      // §2.6, the BucketedSnapshotIngest discipline): serially each
+      // write is its own scheduler round-trip per batch. The retry
+      // contract is untouched — state reads are strictly-before-
+      // batchId and the stream checkpoint commits only after ALL
+      // three complete (Await below); claims derive from the batch
+      // input, so a retry rewrites byte-identical state.
+      Overlap.awaitAll(Seq(
+        () => clean.write.mode("overwrite").parquet(s"$outDir/batch_$batchId"),
+        () => exactFresh.select(col("content_hash")).distinct()
+          .write.mode("overwrite").parquet(s"$stateDir/seen_$batchId"),
+        () => sigs.select(col("band"), col("signature")).distinct()
+          .write.mode("overwrite").parquet(s"$stateDir/claimed_$batchId")))
+      if (benchGrams.isDefined)
+        org.apache.spark.sql.graftbridge.RddBridge.freeCheckpoint(admitted)
+      org.apache.spark.sql.graftbridge.RddBridge.freeCheckpoint(sigs)
+      org.apache.spark.sql.graftbridge.RddBridge.freeCheckpoint(exactFresh)
+    }
   }
 
   /** Fold both state families' per-batch dirs into one each — after N
@@ -204,28 +171,24 @@ object CurationIngest {
   def bootstrapState(
       spark: SparkSession,
       stateDir: String,
-      corpus: org.apache.spark.sql.DataFrame,
-      minScore: Int = 2,
-      bands: Int = 4): Unit = {
+      corpus: DataFrame): Unit = {
     StateDirs.ensure(spark.sparkContext.hadoopConfiguration, stateDir)
-    val scored = corpus.join(
-      graft.ops.TextOps.qualityScores(corpus)
-        .filter(col("quality_score") >= minScore).select(col("doc_id")),
-      Seq("doc_id"), "left_semi")
-    val keeper = Window.partitionBy(col("content_hash")).orderBy(col("doc_id"))
-    val exact = scored
-      .withColumn("content_hash", md5(col("text")))
-      .withColumn("__rn", row_number().over(keeper))
-      .filter(col("__rn") === 1).drop("__rn")
-      .localCheckpoint()
+    val exact = DedupIngest.firstPerDigest(qualityPass(corpus)).localCheckpoint()
     // both state writes read only the checkpointed `exact` blocks and
     // go to disjoint dirs — overlap them (guide §2.6)
     Overlap.awaitAll(Seq(
       () => exact.select(col("content_hash")).distinct()
         .write.mode("overwrite").parquet(s"$stateDir/seen_-1"),
-      () => graft.ops.Dedup.minhashSignatures(exact, bands)
+      () => graft.ops.Dedup.minhashSignatures(exact, NearDupIngest.bands)
         .select(col("band"), col("signature")).distinct()
         .write.mode("overwrite").parquet(s"$stateDir/claimed_-1")))
     org.apache.spark.sql.graftbridge.RddBridge.freeCheckpoint(exact)
   }
+
+  /** The docs whose quality score reaches [[minScore]]. */
+  private def qualityPass(docs: DataFrame): DataFrame =
+    docs.join(
+      graft.ops.TextOps.qualityScores(docs)
+        .filter(col("quality_score") >= minScore).select(col("doc_id")),
+      Seq("doc_id"), "left_semi")
 }

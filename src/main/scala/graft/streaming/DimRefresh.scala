@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 /** Stream-side dimension ENRICHMENT with per-micro-batch dimension
@@ -33,20 +32,10 @@ object DimRefresh {
       outDir: String,
       checkpoint: String,
       key: String): Unit = {
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$inDir/*")
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        val ss = batch.sparkSession
-        val dim = ss.read.parquet(s"$dimDir/v$batchId")
-        batch.join(dim, Seq(key))
-          .write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    Drain.eachBatch(Drain.files(spark, schema, inDir), checkpoint) { (batch, batchId) =>
+      val dim = batch.sparkSession.read.parquet(s"$dimDir/v$batchId")
+      batch.join(dim, Seq(key))
+        .write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
+    }
   }
 }

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 
 /** Streaming NEAR-dup admission: the online form of MinHash-LSH
@@ -42,6 +41,12 @@ object NearDupIngest {
     StructField("band", IntegerType, nullable = false),
     StructField("signature", StringType, nullable = false)))
 
+  /** LSH bands per document, one (band, signature) claim each. Every
+    * producer and consumer of claims — this driver, [[CurationIngest]]
+    * and its bootstrap — uses this one value, so every band that state
+    * holds claims for is a band the probe checks, and vice versa. */
+  val bands: Int = 4
+
   /** Drain `inDir` with AvailableNow semantics, admitting near-dup-
     * novel documents to `outDir/batch_N`. Input files must partition
     * the stream in ascending doc_id order for the closed-form
@@ -52,66 +57,49 @@ object NearDupIngest {
       inDir: String,
       outDir: String,
       stateDir: String,
-      checkpoint: String,
-      bands: Int = 4): Int = {
+      checkpoint: String): Int = {
     StateDirs.ensure(spark.sparkContext.hadoopConfiguration, stateDir)
-    val batches = new java.util.concurrent.atomic.AtomicInteger(0)
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$inDir/*")
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        val ss = batch.sparkSession
-        // one materialization (r19): the state probe, the bucket-min
-        // aggregate, the in-batch reject join and the claim write each
-        // re-ran the shingle+md5 MinHash chain over the batch text —
-        // the dominant per-batch compute, paid 4x per trigger
-        val sigs = graft.ops.Dedup.minhashSignatures(batch, bands)
-          .localCheckpoint()
-        // claims from batches strictly BEFORE this one (retry safety:
-        // a failed attempt's own claimed_N must not reject its redo)
-        val claimedDirs = listStateDirs(
-          ss.sparkContext.hadoopConfiguration, stateDir, batchId)
-        val rejectedByState =
-          if (claimedDirs.isEmpty) sigs.limit(0).select(col("doc_id"))
-          else sigs.join(
-            ss.read.schema(stateSchema).parquet(claimedDirs: _*),
-            Seq("band", "signature"), "left_semi").select(col("doc_id"))
-        // intra-batch: the lowest doc_id in each bucket claims it
-        val bucketMin = sigs.groupBy(col("band"), col("signature"))
-          .agg(min(col("doc_id")).as("min_doc"))
-        val rejectedInBatch = sigs.join(bucketMin, Seq("band", "signature"))
-          .filter(col("min_doc") < col("doc_id")).select(col("doc_id"))
-        val rejected = rejectedByState.union(rejectedInBatch).distinct()
-        // output and claim writes are independent once sigs is
-        // materialized (disjoint batchId-keyed dirs; claims derive
-        // from the batch input, so a retry rewrites identical state) —
-        // overlap them, guide §2.6, the CurationIngest discipline;
-        // the checkpoint commits only after both complete
-        Overlap.awaitAll(Seq(
-          () => batch.join(rejected, Seq("doc_id"), "left_anti")
-            .write.mode("overwrite").parquet(s"$outDir/batch_$batchId"),
-          () => sigs.select(col("band"), col("signature")).distinct()
-            .write.mode("overwrite").parquet(s"$stateDir/claimed_$batchId")))
-        org.apache.spark.sql.graftbridge.RddBridge.freeCheckpoint(sigs)
-        batches.incrementAndGet()
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    batches.get()
+    Drain.eachBatch(Drain.files(spark, schema, inDir), checkpoint) { (batch, batchId) =>
+      // one materialization (r19): the state probe, the bucket-min
+      // aggregate, the in-batch reject join and the claim write each
+      // re-ran the shingle+md5 MinHash chain over the batch text —
+      // the dominant per-batch compute, paid 4x per trigger
+      val sigs = graft.ops.Dedup.minhashSignatures(batch, bands)
+        .localCheckpoint()
+      val nearDups = rejected(sigs, stateDir, batchId)
+      // output and claim writes are independent once sigs is
+      // materialized (disjoint batchId-keyed dirs; claims derive
+      // from the batch input, so a retry rewrites identical state) —
+      // overlap them, guide §2.6, the CurationIngest discipline;
+      // the checkpoint commits only after both complete
+      Overlap.awaitAll(Seq(
+        () => batch.join(nearDups, Seq("doc_id"), "left_anti")
+          .write.mode("overwrite").parquet(s"$outDir/batch_$batchId"),
+        () => sigs.select(col("band"), col("signature")).distinct()
+          .write.mode("overwrite").parquet(s"$stateDir/claimed_$batchId")))
+      org.apache.spark.sql.graftbridge.RddBridge.freeCheckpoint(sigs)
+    }
+  }
+
+  /** The distinct `doc_id`s of `sigs` (band signatures of one batch)
+    * that are near-dups: a bucket claimed in a batch strictly BEFORE
+    * `batchId` (retry safety: a failed attempt's own `claimed_N` must
+    * not reject its redo), or held in this batch by a lower doc_id. */
+  def rejected(sigs: DataFrame, stateDir: String, batchId: Long): DataFrame = {
+    val rejectedByState = StateDirs
+      .readBefore(sigs.sparkSession, stateDir, "claimed_", stateSchema, batchId)
+      .fold(sigs.limit(0).select(col("doc_id")))(claimed =>
+        sigs.join(claimed, Seq("band", "signature"), "left_semi").select(col("doc_id")))
+    // intra-batch: the lowest doc_id in each bucket claims it
+    val bucketMin = sigs.groupBy(col("band"), col("signature"))
+      .agg(min(col("doc_id")).as("min_doc"))
+    val rejectedInBatch = sigs.join(bucketMin, Seq("band", "signature"))
+      .filter(col("min_doc") < col("doc_id")).select(col("doc_id"))
+    rejectedByState.union(rejectedInBatch).distinct()
   }
 
   /** Fold the per-batch claim dirs into one ([[StateDirs.compactPrefix]]
     * — claims are a set, the probe is a semi-join). */
   def compactState(spark: SparkSession, stateDir: String): Int =
     StateDirs.compactPrefix(spark, stateDir, "claimed_", stateSchema)
-
-  private def listStateDirs(
-      conf: org.apache.hadoop.conf.Configuration,
-      stateDir: String,
-      beforeBatch: Long): Seq[String] =
-    StateDirs.list(conf, stateDir, "claimed_", beforeBatch).map(_._2)
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 /** ST2/S4 end-to-end: at-least-once redelivery with per-record attempt
@@ -53,11 +52,8 @@ object RetryLoop {
     // maxAttempts+1 passes always drain; the flag just exits earlier
     while (!drained && pass <= maxAttempts) {
       val retried = new java.util.concurrent.atomic.AtomicBoolean(false)
-      val q = spark.readStream.schema(schema).parquet(s"$inDir/*")
-        .writeStream
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
+      Drain.eachBatch(spark.readStream.schema(schema).parquet(s"$inDir/*"),
+        checkpoint) { (batch, batchId) =>
           val attempted = batch.withColumn("attempts", col("attempts") + 1)
           val failed = attempted.filter(isPoison)
           val retry = failed.filter(col("attempts") < maxAttempts)
@@ -74,10 +70,7 @@ object RetryLoop {
               retried.set(true)
               retry.write.mode("overwrite").parquet(s"$inDir/retry_$batchId")
             }))
-          ()
         }
-        .start()
-      q.awaitTermination()
       drained = !retried.get
       pass += 1
     }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, KeyValueGroupedDataset, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.streaming.InventoryProcessor.{LineRequest, LineVerdict, ProductStock}
 
@@ -47,6 +46,9 @@ import graft.streaming.InventoryProcessor.{LineRequest, LineVerdict, ProductStoc
   */
 object SagaLoop {
 
+  /** Safety bound on passes: a fully-seeded queue drains in 2. */
+  private val maxPasses = 4
+
   /** Drive AvailableNow passes until the saga quiesces (a pass that
     * enqueues no credits ends the loop). `inDir` holds one parquet dir
     * per enqueue: seed dirs from the caller, `credits_<batchId>` dirs
@@ -56,8 +58,7 @@ object SagaLoop {
       inDir: String,
       verdictsDir: String,
       checkpoint: String,
-      seed: Dataset[ProductStock],
-      maxPasses: Int = 4): Int = {
+      seed: Dataset[ProductStock]): Int = {
     import spark.implicits._
     val reqSchema = org.apache.spark.sql.Encoders.product[LineRequest].schema
     var pass = 0
@@ -67,12 +68,9 @@ object SagaLoop {
       val requests: KeyValueGroupedDataset[String, LineRequest] =
         spark.readStream.schema(reqSchema).parquet(s"$inDir/*")
           .as[LineRequest].groupByKey(_.product_id)
-      val q = InventoryProcessor
-        .reserve(requests, seed.groupByKey(_.product_id))
-        .writeStream
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch { (batch: Dataset[LineVerdict], batchId: Long) =>
+      Drain.eachBatch(
+        InventoryProcessor.reserve(requests, seed.groupByKey(_.product_id)),
+        checkpoint) { (batch: Dataset[LineVerdict], batchId: Long) =>
           // the verdict batch feeds two sinks; materialize once so the
           // stateful lineage is not re-executed for the credits branch
           val verdicts = batch.localCheckpoint()
@@ -91,8 +89,6 @@ object SagaLoop {
             }))
           ()
         }
-        .start()
-      q.awaitTermination()
       drained = !credited.get
       pass += 1
     }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 /** Streaming snapshot state ON the graft-segment table format — the
@@ -44,33 +43,21 @@ object SegmentStateIngest {
       inDir: String,
       stateTable: String,
       checkpoint: String,
-      appId: String)(merge: (Option[DataFrame], DataFrame) => DataFrame): Int = {
-    var batches = 0
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(s"$inDir/*")
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val s = batch.sparkSession
-        val fs = graft.sources.segment.SegmentLog.fs(
-          stateTable, s.sessionState.newHadoopConf())
-        val prior = graft.sources.segment.SegmentLog.read(fs, stateTable)
-          .filter(_.segments.nonEmpty)
-          .map(_ => s.read.format("graft-segment").load(stateTable))
-        val merged = merge(prior, batch)
-        // one transactional overwrite per epoch: replayed ids no-op
-        merged.localCheckpoint(true) // pin BEFORE the truncating write
-          .write.format("graft-segment")
-          .option("txnAppId", appId).option("txnVersion", id.toString)
-          .mode("overwrite").save(stateTable)
-        batches += 1
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    batches
-  }
+      appId: String)(merge: (Option[DataFrame], DataFrame) => DataFrame): Int =
+    Drain.eachBatch(Drain.files(spark, schema, inDir), checkpoint) { (batch, id) =>
+      val s = batch.sparkSession
+      val fs = graft.sources.segment.SegmentLog.fs(
+        stateTable, s.sessionState.newHadoopConf())
+      val prior = graft.sources.segment.SegmentLog.read(fs, stateTable)
+        .filter(_.segments.nonEmpty)
+        .map(_ => s.read.format("graft-segment").load(stateTable))
+      val merged = merge(prior, batch)
+      // one transactional overwrite per epoch: replayed ids no-op
+      merged.localCheckpoint(true) // pin BEFORE the truncating write
+        .write.format("graft-segment")
+        .option("txnAppId", appId).option("txnVersion", id.toString)
+        .mode("overwrite").save(stateTable)
+    }
 
   /** The queryable view: simply the live table. */
   def finalState(spark: SparkSession, stateTable: String): DataFrame =

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 /** Generic snapshot-state streaming driver: each micro-batch folds into
@@ -12,10 +11,10 @@ import org.apache.spark.sql.types.StructType
   *  - a batch reads the newest snapshot STRICTLY before its own
   *    batchId, so a retried batch ignores its failed attempt's output
   *    (exactly-once merges, same contract as DedupIngest's seen dirs);
-  *  - superseded snapshots are pruned KEEPING the immediate
-  *    predecessor — the checkpoint commits after foreachBatch returns,
-  *    and a crash before the commit replays exactly this batch, which
-  *    must still find state_{N-1};
+  *  - superseded snapshots are pruned KEEPING the predecessor (the
+  *    newest snapshot below the batch) — the checkpoint commits after
+  *    foreachBatch returns, and a crash before the commit replays
+  *    exactly this batch, which must still find it;
   *  - [[finalState]] reads the newest snapshot: after a normal drain
   *    that is the last committed batch's view; after a crash-before-
   *    commit it is content-identical to what the replay rewrites.
@@ -31,43 +30,30 @@ object SnapshotIngest {
       inDir: String,
       stateDir: String,
       checkpoint: String)(
-      merge: (Option[DataFrame], DataFrame) => DataFrame): Int = {
-    StateDirs.ensure(spark.sparkContext.hadoopConfiguration, stateDir)
-    val batches = new java.util.concurrent.atomic.AtomicInteger(0)
-    val fold = foldBatch(stateDir)(merge)
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$inDir/*")
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        fold(batch, batchId)
-        batches.incrementAndGet()
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    batches.get()
-  }
+      merge: (Option[DataFrame], DataFrame) => DataFrame): Int =
+    Drain.eachBatch(Drain.files(spark, schema, inDir), checkpoint)(
+      foldBatch(stateDir)(merge))
 
   /** The per-batch snapshot fold as a plain `foreachBatch` function —
     * the building block [[run]] drives, reusable by any writeStream
-    * (e.g. [[Sinks.upsertSink]]): read the newest snapshot strictly
-    * before this batchId, merge, write `state_batchId`, prune keeping
-    * the immediate predecessor. */
+    * (e.g. [[Sinks.upsertSink]]) and by each bucket of
+    * [[BucketedSnapshotIngest]]: read the newest snapshot strictly
+    * before this batchId, merge, write `state_batchId`, then delete
+    * every older snapshot except that predecessor. The predecessor is
+    * the newest snapshot below batchId, which need not be
+    * `state_{batchId-1}`: in a chain with gaps (a bucket advances only
+    * when a batch touches it) it is older, and a replay of this batch
+    * must still find it. */
   def foldBatch(stateDir: String)(
       merge: (Option[DataFrame], DataFrame) => DataFrame): (DataFrame, Long) => Unit =
     (batch, batchId) => {
       val ss = batch.sparkSession
       val conf = ss.sparkContext.hadoopConfiguration
       StateDirs.ensure(conf, stateDir)
-      val prior = newestSnapshot(conf, stateDir, batchId).map(ss.read.parquet(_))
-      merge(prior, batch)
+      val snaps = StateDirs.list(conf, stateDir, "state_", batchId).sortBy(_._1)
+      merge(snaps.lastOption.map { case (_, p) => ss.read.parquet(p) }, batch)
         .write.mode("overwrite").parquet(s"$stateDir/state_$batchId")
-      StateDirs.list(conf, stateDir, "state_", batchId - 1)
-        .foreach { case (_, p) => StateDirs.delete(conf, p) }
-      ()
+      snaps.dropRight(1).foreach { case (_, p) => StateDirs.delete(conf, p) }
     }
 
   /** The newest snapshot — the queryable state. */
@@ -79,7 +65,7 @@ object SnapshotIngest {
   /** Newest `state_k` with k strictly below `beforeBatch` — discovered
     * through the path's own FileSystem ([[StateDirs]]), so the
     * exactly-once contract holds on non-local stores too. */
-  private def newestSnapshot(
+  private[streaming] def newestSnapshot(
       conf: org.apache.hadoop.conf.Configuration,
       stateDir: String,
       beforeBatch: Long): Option[String] =

@@ -2,13 +2,17 @@ package graft.streaming
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
-/** Hadoop-FS state-directory discovery shared by the snapshot-state
-  * streaming drivers ([[SnapshotIngest]], [[DedupIngest]],
-  * [[NearDupIngest]]).
+/** Hadoop-FS state-directory discovery shared by the state-dir
+  * streaming drivers: the snapshot chains of [[SnapshotIngest]] (and,
+  * through its fold, [[BucketedSnapshotIngest]]), the digest and claim
+  * sets of [[DedupIngest]], [[NearDupIngest]] and [[CurationIngest]],
+  * and the staged increments of [[AnnIngest]].
   *
   * These drivers' exactly-once merge contract hinges on each batch
-  * SEEING the prior batches' state dirs ("newest strictly before my
+  * SEEING the prior batches' state dirs ("strictly before my
   * batchId"). A `java.io.File` listing sees only the driver-local
   * filesystem: on HDFS/S3/abfs it silently returns nothing, every
   * batch believes it is the first, and the contract breaks with no
@@ -42,6 +46,22 @@ object StateDirs {
       }
   }
 
+  /** The union of the `prefix`-keyed dirs under `stateDir` whose key
+    * is strictly below `beforeBatch`, read with `schema`; `None` when
+    * there are none. Reading only earlier batches' dirs is the retry
+    * contract: a failed attempt's own dir (keyed `beforeBatch`) must
+    * not filter its replay. */
+  def readBefore(
+      spark: SparkSession,
+      stateDir: String,
+      prefix: String,
+      schema: StructType,
+      beforeBatch: Long): Option[DataFrame] = {
+    val dirs = list(spark.sparkContext.hadoopConfiguration, stateDir, prefix, beforeBatch)
+    if (dirs.isEmpty) None
+    else Some(spark.read.schema(schema).parquet(dirs.map(_._2): _*))
+  }
+
   /** mkdir -p through the path's FileSystem (idempotent). */
   def ensure(conf: Configuration, stateDir: String): Unit = {
     val p = new Path(stateDir)
@@ -68,10 +88,10 @@ object StateDirs {
     * already holds — harmless, next compaction sweeps them. Returns
     * the number of dirs folded away. */
   def compactPrefix(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       stateDir: String,
       prefix: String,
-      schema: org.apache.spark.sql.types.StructType): Int = {
+      schema: StructType): Int = {
     val conf = spark.sparkContext.hadoopConfiguration
     val keyed = list(conf, stateDir, prefix, Long.MaxValue)
     if (keyed.size <= 1) 0

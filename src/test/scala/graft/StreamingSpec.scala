@@ -344,14 +344,26 @@ class StreamingSpec extends SparkSpec {
   test("bucketed CDC state: a batch rewrites only touched buckets; equals batch apply") {
     import graft.streaming.{BucketedSnapshotIngest, CdcIngest}
     val base = tmp("graft-cdc-bucketed")
+    def bucketOf(k: Long): Int = spark.range(1)
+      .select(pmod(hash(lit(k)), lit(8)).as("b")).collect()(0).getInt(0)
+    val b3 = bucketOf(3L)
+    // a key batch 0 touches in a bucket batch 1 does not
+    val kGap = (0L until 16L).find(k => bucketOf(k) != b3).get
+    val bGap = bucketOf(kGap)
     // batch 0 inserts keys 0..15 (touches many buckets); batch 1
     // updates/deletes ONLY key 3 — with 8 buckets, exactly one bucket
-    // may advance to state_1
+    // may advance to state_1; batch 2 updates only kGap, so bGap's
+    // chain jumps from state_0 to state_2
     val schema = Seq((0L, 1L, "I", 0L)).toDF("k", "seq", "op", "v").schema
-    (0L until 16L).map(k => (k, 1L, "I", k * 10))
-      .toDF("k", "seq", "op", "v").coalesce(1).write.parquet(s"$base/in/g0")
-    Seq((3L, 2L, "U", 999L), (3L, 3L, "D", 0L))
-      .toDF("k", "seq", "op", "v").coalesce(1).write.parquet(s"$base/in/g1")
+    val now = System.currentTimeMillis()
+    Seq((0L until 16L).map(k => (k, 1L, "I", k * 10)),
+      Seq((3L, 2L, "U", 999L), (3L, 3L, "D", 0L)),
+      Seq((kGap, 4L, "U", 777L))
+    ).zipWithIndex.foreach { case (rows, i) =>
+      rows.toDF("k", "seq", "op", "v").coalesce(1).write.parquet(s"$base/in/g$i")
+      new java.io.File(s"$base/in/g$i").listFiles()
+        .foreach(_.setLastModified(now - 60000 + i * 10000))
+    }
     CdcIngest.runBucketed(spark, schema,
       s"$base/in", s"$base/state", s"$base/ckpt", Seq("k"), "seq", "op", nBuckets = 8)
     // write-set assertion: only key 3's bucket carries a state_1 chain
@@ -361,17 +373,21 @@ class StreamingSpec extends SparkSpec {
     val advanced = heads.filter(_.endsWith("state_1"))
     assert(advanced.size === 1,
       s"batch 1 touched one key but rewrote ${advanced.size} buckets:\n${heads.mkString("\n")}")
+    // a chain with a gap keeps its predecessor: batch 2's prune in bGap
+    // must not treat state_1 (which bGap never had) as the predecessor
+    val gapDirs = new java.io.File(s"$base/state/bucket_$bGap").listFiles()
+      .filter(_.isDirectory).map(_.getName).sorted.toSeq
+    assert(gapDirs === Seq("state_0", "state_2"))
     // semantics: final table == newest-seq-wins minus tombstones
     val got = CdcIngest.finalTableBucketed(spark, s"$base/state", "op")
       .select($"k", $"v").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val want = (0L until 16L).filterNot(_ == 3L).map(k => k -> k * 10).toMap
-    assert(got === want) // key 3 deleted at seq 3, others untouched
+    val want = (0L until 16L).filterNot(_ == 3L).map(k => k -> k * 10).toMap +
+      (kGap -> 777L)
+    assert(got === want) // key 3 deleted at seq 3, kGap updated at seq 4
     // retry contract: a failed first attempt left a poisoned state_0 in
     // key 3's bucket and died before the checkpoint committed; the
     // replayed batch 0 reads newest STRICTLY before 0 (nothing) and
     // must overwrite the poison, never merge with it
-    val b3 = spark.range(1)
-      .select(pmod(hash(lit(3L)), lit(8)).as("b")).collect()(0).getInt(0)
     Seq((3L, 99L, "I", -1L)).toDF("k", "seq", "op", "v")
       .write.parquet(s"$base/state2/bucket_$b3/state_0")
     CdcIngest.runBucketed(spark, schema,
@@ -900,6 +916,30 @@ class StreamingSpec extends SparkSpec {
     CurationIngest.run(spark, f0.schema,
       s"$base/in", s"$base/out", s"$base/state", s"$base/ckpt")
     assert(admitted() === Seq(12L, 21L))
+  }
+
+  test("curation ingest retry: a failed attempt's own seen_N and claimed_N cannot starve the batch") {
+    import graft.streaming.CurationIngest
+    def good(id: Long, k: Long) =
+      (id, s"the uu$k fox and dd$k dog the ww$k walk of qq$k field " +
+        s"the tt$k stars in bb$k light to pp$k night is zz$k again")
+    val base = tmp("graft-cur-retry")
+    val f0 = Seq(good(1, 1), good(2, 2)).toDF("doc_id", "text")
+    f0.coalesce(1).write.parquet(s"$base/in/f0")
+    // a first attempt wrote both state families for batch 0 and died
+    // pre-commit: the redo of batch 0 must see neither, or its own
+    // digests and claims would reject every document
+    f0.select(md5($"text").as("content_hash"))
+      .write.parquet(s"$base/state/seen_0")
+    graft.ops.Dedup.minhashSignatures(f0, 4)
+      .select($"band", $"signature").distinct()
+      .write.parquet(s"$base/state/claimed_0")
+    CurationIngest.run(spark, f0.schema,
+      s"$base/in", s"$base/out", s"$base/state", s"$base/ckpt")
+    val admitted = spark.read.option("recursiveFileLookup", "true")
+      .parquet(s"$base/out").select($"doc_id")
+      .collect().map(_.getLong(0)).sorted.toSeq
+    assert(admitted === Seq(1L, 2L))
   }
 
   test("queue adapters: file transport feeds the certified parser; Kafka names its runtime dep") {
