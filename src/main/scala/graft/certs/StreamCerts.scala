@@ -615,8 +615,7 @@ object StreamCerts {
       stageOrdered(Seq(0, 1, 2).map(i => s"$base/in/f$i" -> (() =>
         ev.filter(pmod(col("event_id"), lit(3)) === i)
           .coalesce(1).write.parquet(s"$base/in/f$i"))))
-      val q = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$base/in/*")
+      val q = Drain.files(s, ev.schema, s"$base/in")
         .writeStream.format("graft-segment")
         .option("path", dir).option("checkpointLocation", s"$base/ckpt")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
@@ -738,8 +737,7 @@ object StreamCerts {
           .coalesce(1).write.parquet(s"$base/in/f2"))))
       val schema = s.read.parquet(s"$base/in/f0").schema
       val (_, metrics) = graft.streaming.Metrics.observe(s) {
-        Drain.toParquet(s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(s"$base/in/*")
+        Drain.toParquet(Drain.files(s, schema, s"$base/in")
           .withWatermark("ts", "1 hour")
           .groupBy(window(col("ts"), "1 hour"), col("event_type"))
           .agg(count(lit(1)).as("n_events")),

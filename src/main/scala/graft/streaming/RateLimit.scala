@@ -76,9 +76,7 @@ object RateLimit {
     import spark.implicits._
     graft.Session.withConfs(spark, graft.Session.RocksDbStateStore,
         "spark.sql.shuffle.partitions" -> "8") {
-      Drain.toParquet(spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(s"$inDir/*")
+      Drain.toParquet(Drain.files(spark, schema, inDir)
         .select(col("event_id"), col("user_id"), col("ts"))
         .as[Req]
         .groupByKey(_.user_id)

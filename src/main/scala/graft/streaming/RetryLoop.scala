@@ -31,11 +31,11 @@ import org.apache.spark.sql.types.StructType
   */
 object RetryLoop {
 
-  /** Drive AvailableNow passes until the queue drains (a pass that
-    * re-enqueues nothing ends the loop). `inDir` holds one parquet dir
-    * per enqueue (seed dirs from the caller, `retry_<batchId>` dirs from
-    * the loop — NO `=` in the name, so no partition-column inference);
-    * the source reads a one-level glob under inDir. `isPoison` marks records whose
+  /** Drive the queue as one query until it drains (a trigger that finds
+    * no new file ends it). `inDir` holds one parquet dir per enqueue
+    * (seed dirs from the caller, `retry_<batchId>` dirs from the loop —
+    * NO `=` in the name, so no partition-column inference); the source
+    * reads a one-level glob under inDir. `isPoison` marks records whose
     * processing fails every delivery. Returns the number of passes. */
   def run(
       spark: SparkSession,
@@ -45,35 +45,21 @@ object RetryLoop {
       dlqDir: String,
       checkpoint: String,
       isPoison: Column,
-      maxAttempts: Int = 3): Int = {
-    var pass = 0
-    var drained = false
+      maxAttempts: Int = 3): Int =
     // hard bound: a poison record is gone after maxAttempts passes, so
-    // maxAttempts+1 passes always drain; the flag just exits earlier
-    while (!drained && pass <= maxAttempts) {
-      val retried = new java.util.concurrent.atomic.AtomicBoolean(false)
-      Drain.eachBatch(spark.readStream.schema(schema).parquet(s"$inDir/*"),
-        checkpoint) { (batch, batchId) =>
-          val attempted = batch.withColumn("attempts", col("attempts") + 1)
-          val failed = attempted.filter(isPoison)
-          val retry = failed.filter(col("attempts") < maxAttempts)
-          // delivered/DLQ/retry partition the batch into disjoint dirs
-          // — overlap the three independent actions (guide §2.6); the
-          // retry arm keeps its emptiness probe so a drained pass
-          // still writes no stray re-enqueue dir
-          Overlap.awaitAll(Seq(
-            () => attempted.filter(!isPoison)
-              .write.mode("overwrite").parquet(s"$deliveredDir/batch_$batchId"),
-            () => failed.filter(col("attempts") >= maxAttempts)
-              .write.mode("overwrite").parquet(s"$dlqDir/batch_$batchId"),
-            () => if (!retry.isEmpty) {
-              retried.set(true)
-              retry.write.mode("overwrite").parquet(s"$inDir/retry_$batchId")
-            }))
-        }
-      drained = !retried.get
-      pass += 1
-    }
-    pass
-  }
+    // maxAttempts+1 passes always drain
+    Drain.untilQuiet(spark.readStream.schema(schema).parquet(s"$inDir/*"),
+      checkpoint, maxAttempts + 1) { (batch, batchId) =>
+        val attempted = batch.withColumn("attempts", col("attempts") + 1)
+        val failed = attempted.filter(isPoison)
+        // delivered/DLQ/retry partition the batch into disjoint dirs
+        // — overlap the three independent actions (guide §2.6)
+        Overlap.awaitAll(Seq(
+          () => attempted.filter(!isPoison)
+            .write.mode("overwrite").parquet(s"$deliveredDir/batch_$batchId"),
+          () => failed.filter(col("attempts") >= maxAttempts)
+            .write.mode("overwrite").parquet(s"$dlqDir/batch_$batchId"),
+          () => Drain.enqueue(failed.filter(col("attempts") < maxAttempts),
+            s"$inDir/retry_$batchId")))
+      }
 }

@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, KeyValueGroupedDataset, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.functions.col
 
 import graft.streaming.InventoryProcessor.{LineRequest, LineVerdict, ProductStock}
 
@@ -14,31 +15,32 @@ import graft.streaming.InventoryProcessor.{LineRequest, LineVerdict, ProductStoc
   * group verdicts by order, and re-enqueue compensating +quantity
   * credits for any order with a denied line. Here the credit hop is a
   * file re-enqueue into the SAME request queue the reserve stream
-  * reads — each pass is one AvailableNow run over everything enqueued
-  * so far (AvailableNow latches its file snapshot at query start, so
-  * credits written mid-pass are picked up by the next pass, not the
-  * current one).
+  * reads, and the saga is ONE query ([[Drain.untilQuiet]]): each pass
+  * is a micro-batch over the files enqueued since the last, so it is
+  * planned once and its RocksDB state stays loaded between passes.
   *
   * Pass anatomy (foreachBatch, all idempotent under micro-batch retry
   * via batchId-keyed overwrite dirs, same pattern as [[RetryLoop]]):
-  *  - line verdicts append to `verdictsDir/batch_<id>`;
-  *  - compensating credits for newly-FAILED orders (negate every
-  *    granted line) re-enqueue as `inDir/credits_<id>`.
+  *  - line verdicts go straight from the stateful lineage to
+  *    `verdictsDir/batch_<id>`, counting denied request lines on the way;
+  *  - only if some were denied, compensating credits for newly-FAILED
+  *    orders (negate every granted line) are computed from that dir and
+  *    re-enqueue as `inDir/credits_<id>` (no dir when there are none).
   *
   * Termination is structural, not heuristic: credits carry negative
   * quantities, the processor always grants them, and
   * [[InventoryProcessor.orderVerdicts]] excludes them from order
   * verdicts — so a credits-only pass can never produce new FAILED
   * orders, and the pass after it enqueues nothing. A fully-seeded queue
-  * drains in 2 passes; `maxPasses` is a safety bound only.
+  * drains in 2 passes; a run still not quiet after `maxPasses` fails.
   *
-  * Keyed state (RocksDB) persists across passes through the shared
-  * checkpoint; the initial stock seed applies only on the first batch
-  * of a fresh checkpoint (restarts restore state instead of re-seeding
-  * — conservation would break otherwise, and the spec checks it).
+  * Keyed state (RocksDB) persists across runs through the checkpoint;
+  * the initial stock seed applies only on the first batch of a fresh
+  * checkpoint (restarts restore state instead of re-seeding —
+  * conservation would break otherwise, and the spec checks it).
   *
   * Determinism note: one pass = one micro-batch (the file source with
-  * no maxFilesPerTrigger reads its whole snapshot as a single batch),
+  * no maxFilesPerTrigger reads every new file as a single batch),
   * so within a pass each product serves credits first, then requests
   * in lexicographic order_id order ([[InventoryProcessor.Processor]]).
   * Callers who want greedy-by-numeric-order semantics must zero-pad
@@ -49,10 +51,9 @@ object SagaLoop {
   /** Safety bound on passes: a fully-seeded queue drains in 2. */
   private val maxPasses = 4
 
-  /** Drive AvailableNow passes until the saga quiesces (a pass that
-    * enqueues no credits ends the loop). `inDir` holds one parquet dir
-    * per enqueue: seed dirs from the caller, `credits_<batchId>` dirs
-    * from the loop. Returns the number of passes run. */
+  /** Drive the saga as one query until it quiesces. `inDir` holds one
+    * parquet dir per enqueue: seed dirs from the caller,
+    * `credits_<batchId>` dirs from the loop. Returns the passes run. */
   def run(
       spark: SparkSession,
       inDir: String,
@@ -60,38 +61,20 @@ object SagaLoop {
       checkpoint: String,
       seed: Dataset[ProductStock]): Int = {
     import spark.implicits._
-    val reqSchema = org.apache.spark.sql.Encoders.product[LineRequest].schema
-    var pass = 0
-    var drained = false
-    while (!drained && pass < maxPasses) {
-      val credited = new java.util.concurrent.atomic.AtomicBoolean(false)
-      val requests: KeyValueGroupedDataset[String, LineRequest] =
-        spark.readStream.schema(reqSchema).parquet(s"$inDir/*")
-          .as[LineRequest].groupByKey(_.product_id)
-      Drain.eachBatch(
-        InventoryProcessor.reserve(requests, seed.groupByKey(_.product_id)),
-        checkpoint) { (batch: Dataset[LineVerdict], batchId: Long) =>
-          // the verdict batch feeds two sinks; materialize once so the
-          // stateful lineage is not re-executed for the credits branch
-          val verdicts = batch.localCheckpoint()
-          // verdict and credit writes are independent once verdicts is
-          // materialized (disjoint dirs) — overlap them, guide §2.6;
-          // the credits arm keeps its emptiness probe so a quiesced
-          // pass still enqueues nothing
-          val credits = InventoryProcessor.compensations(verdicts)
-          Overlap.awaitAll(Seq(
-            () => verdicts.toDF().write.mode("overwrite")
-              .parquet(s"$verdictsDir/batch_$batchId"),
-            () => if (!credits.isEmpty) {
-              credited.set(true)
-              credits.toDF().write.mode("overwrite")
-                .parquet(s"$inDir/credits_$batchId")
-            }))
-          ()
+    val requests = spark.readStream.schema(Encoders.product[LineRequest].schema)
+      .parquet(s"$inDir/*").as[LineRequest].groupByKey(_.product_id)
+    Drain.untilQuiet(
+      InventoryProcessor.reserve(requests, seed.groupByKey(_.product_id)),
+      checkpoint, maxPasses) { (batch: Dataset[LineVerdict], batchId: Long) =>
+        val out = s"$verdictsDir/batch_$batchId"
+        val denied = Drain.writeCounting(batch.toDF(), out,
+          col("quantity") >= 0 && !col("granted"))
+        // no denied line, no failed order: a credits-only pass ends here
+        if (denied > 0) {
+          val verdicts = spark.read.schema(batch.schema).parquet(out).as[LineVerdict]
+          Drain.enqueue(InventoryProcessor.compensations(verdicts).toDF(),
+            s"$inDir/credits_$batchId")
         }
-      drained = !credited.get
-      pass += 1
-    }
-    pass
+      }
   }
 }

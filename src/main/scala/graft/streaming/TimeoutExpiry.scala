@@ -120,9 +120,7 @@ object TimeoutExpiry {
       // the ts column), which would drop the watermark-advancing
       // sentinel rows before their timestamps register — the
       // processor ignores foreign event types itself instead
-      Drain.toParquet(spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(s"$inDir/*")
+      Drain.toParquet(Drain.files(spark, schema, inDir)
         .withWatermark("ts", "30 minutes")
         .select(col("event_id"), col("user_id"), col("event_type"), col("ts"))
         .as[FunnelEvent]

@@ -129,15 +129,8 @@ class StreamingSpec extends SparkSpec {
     import graft.streaming.SagaLoop
     val base = tmp("graft-sagaloop")
     Session.withConfs(spark, Session.RocksDbStateStore) {
-      // same contention shape as StreamingSpec's in-query saga test:
-      // o-1 takes A:8; o-2 gets A:2 (exhausting A) but B:1 denied ->
-      // o-2 FAILED, its granted A:2 must come back as a credit
-      Seq(
-        LineRequest("o-1", "A", 8),
-        LineRequest("o-2", "A", 2),
-        LineRequest("o-2", "B", 1)).toDS()
-        .coalesce(1).write.parquet(s"$base/in/seed")
-      val seed = Seq(ProductStock("A", 10), ProductStock("B", 0)).toDS()
+      // same contention shape as StreamingSpec's in-query saga test
+      val seed = contendedSaga(base)
       val passes = SagaLoop.run(
         spark, s"$base/in", s"$base/verdicts", s"$base/ckpt", seed)
       assert(passes === 2) // pass 1 emits the credit, pass 2 drains it
@@ -159,6 +152,121 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  /** Enqueues the contended saga seed (o-1 takes A:8; o-2 gets A:2 but
+    * B:1 is denied, so o-2 fails and its A:2 comes back as a credit)
+    * under `base/in` and returns its stock. */
+  private def contendedSaga(base: String) = {
+    import graft.streaming.InventoryProcessor._
+    Seq(
+      LineRequest("o-1", "A", 8),
+      LineRequest("o-2", "A", 2),
+      LineRequest("o-2", "B", 1)).toDS()
+      .coalesce(1).write.parquet(s"$base/in/seed")
+    Seq(ProductStock("A", 10), ProductStock("B", 0)).toDS()
+  }
+
+  test("SagaLoop: one streaming query per saga; the credits-only pass is one Spark job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import graft.streaming.{Metrics, SagaLoop}
+    val base = tmp("graft-saga-jobs")
+    val starts = new java.util.concurrent.atomic.AtomicInteger
+    val startCounter = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = {
+        starts.incrementAndGet(); ()
+      }
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    }
+    // batch id of every job a micro-batch runs; a marker job run after
+    // the saga tells when the listener bus has delivered all of them
+    val marker = "graft.spec.marker"
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val jobBatches = new java.util.concurrent.ConcurrentLinkedQueue[Long]
+    val jobCounter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        if (props.exists(_.getProperty(marker) != null)) markerSeen.countDown()
+        else props.flatMap(p => Option(p.getProperty("streaming.sql.batchId")))
+          .foreach(b => jobBatches.add(b.toLong))
+      }
+    }
+    Session.withConfs(spark, Session.RocksDbStateStore) {
+      val seed = contendedSaga(base)
+      spark.streams.addListener(startCounter)
+      spark.sparkContext.addSparkListener(jobCounter)
+      try {
+        // observe returns once every query started inside has delivered
+        // its terminated event, so startCounter has seen every start
+        val (passes, _) = Metrics.observe(spark) {
+          SagaLoop.run(spark, s"$base/in", s"$base/verdicts", s"$base/ckpt", seed)
+        }
+        assert(passes === 2)
+        spark.sparkContext.setLocalProperty(marker, "1")
+        try spark.sparkContext.parallelize(Seq(1), 1).count()
+        finally spark.sparkContext.setLocalProperty(marker, null)
+        assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      } finally {
+        spark.sparkContext.removeSparkListener(jobCounter)
+        spark.streams.removeListener(startCounter)
+      }
+    }
+    // (query starts, jobs of the credits-only batch 1): both passes ran
+    // as micro-batches of one query, not as two query runs re-planning
+    // and restoring state in between, and the credits-only pass denies
+    // nothing, so its verdict write is its only job
+    assert((starts.get, jobBatches.asScala.count(_ == 1L)) === ((1, 1)))
+  }
+
+  test("SagaLoop: a rerun resumes from the checkpoint; state is seed minus PROCESSED demand") {
+    import graft.streaming.InventoryProcessor._
+    import graft.streaming.SagaLoop
+    val base = tmp("graft-saga-resume")
+    val stock = Map("A" -> 10L, "B" -> 0L)
+    def verdicts() = spark.read.option("recursiveFileLookup", "true")
+      .parquet(s"$base/verdicts").as[LineVerdict].collect().toSeq
+    def stateStock() = spark.read.format("statestore").option("path", s"$base/ckpt")
+      .option("stateVarName", "stock").load()
+      .select($"key".getField("value"), $"value".getField("value")).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    // the stock left once every PROCESSED order's lines are served and
+    // every FAILED order's grants are credited back
+    def expectedStock(vs: Seq[LineVerdict]) = {
+      val requests = vs.filter(_.quantity >= 0)
+      val processed = requests.groupBy(_.order_id).collect {
+        case (id, ls) if ls.forall(_.granted) => id }.toSet
+      stock.map { case (p, s) =>
+        p -> (s - requests.filter(l => l.product_id == p && processed(l.order_id))
+          .map(_.quantity).sum) }
+    }
+    def credited() = new java.io.File(s"$base/in").list().count(_.startsWith("credits_"))
+    Session.withConfs(spark, Session.RocksDbStateStore) {
+      val seed = contendedSaga(base)
+      def run() = SagaLoop.run(spark, s"$base/in", s"$base/verdicts", s"$base/ckpt", seed)
+      assert(run() === 2)
+      val first = verdicts()
+      assert(stateStock() === Map("A" -> 2L, "B" -> 0L))
+      assert(stateStock() === expectedStock(first))
+      // a drained checkpoint has nothing left to serve
+      assert(run() === 0)
+      assert(verdicts().sortBy(_.toString) === first.sortBy(_.toString))
+      assert(stateStock() === Map("A" -> 2L, "B" -> 0L))
+      // new orders meet the restored stock (A:2 left), not a re-seeded
+      // A:10: o-3 takes the last 2, o-4's single line is denied, and an
+      // order with nothing granted enqueues no credits dir
+      Seq(LineRequest("o-3", "A", 2), LineRequest("o-4", "A", 1)).toDS()
+        .coalesce(1).write.parquet(s"$base/in/seed2")
+      assert(run() === 1)
+      val second = verdicts()
+      assert(second.filter(_.order_id >= "o-3").sortBy(_.order_id) === Seq(
+        LineVerdict("o-3", "A", 2, granted = true),
+        LineVerdict("o-4", "A", 1, granted = false)))
+      assert(credited() === 1) // only the first run's credits_0
+      assert(stateStock() === Map("A" -> 0L, "B" -> 0L))
+      assert(stateStock() === expectedStock(second))
+    }
+  }
+
   test("ST2/S4 end-to-end: poison rows redeliver, accumulate attempts, divert to DLQ") {
     import graft.streaming.RetryLoop
     val base = tmp("graft-retry")
@@ -176,6 +284,21 @@ class StreamingSpec extends SparkSpec {
       .parquet(s"$base/dlq")
       .select($"key", $"attempts").collect().map(r => r.getString(0) -> r.getInt(1)).toMap
     assert(dead === Map("poison-1" -> 3)) // attempt count accumulated across redeliveries
+  }
+
+  test("RetryLoop: only passes with retries enqueue a retry dir; a rerun is a no-op") {
+    import graft.streaming.RetryLoop
+    val base = tmp("graft-retry-dirs")
+    val queue = Seq(("ok-1", false, 0), ("poison-1", true, 0)).toDF("key", "poison", "attempts")
+    queue.write.parquet(s"$base/in/seed")
+    def run() = RetryLoop.run(spark, queue.schema, s"$base/in",
+      s"$base/delivered", s"$base/dlq", s"$base/ckpt", $"poison", maxAttempts = 3)
+    assert(run() === 3)
+    // batches 0 and 1 re-enqueue the poison row; batch 2 dead-letters it
+    // and enqueues nothing, which is what lets the query go quiet
+    assert(new java.io.File(s"$base/in").list().sorted.toSeq === Seq("retry_0", "retry_1", "seed"))
+    assert(run() === 0)
+    assert(new java.io.File(s"$base/dlq").list().count(_.startsWith("batch_")) === 3)
   }
 
   test("streaming dedup ingest admits content once across micro-batches") {
