@@ -5,7 +5,8 @@ import org.apache.spark.sql.SparkSession
 /** The one SparkSession factory: every harness (`Bench`, `BenchOne`,
   * `Verify`, `ScaleBench`, `PlanAudit`) and the test suite's
   * `SparkSpec` build through [[build]], so the sessions that get timed
-  * and tested carry exactly the confs `Verify` certifies. */
+  * and tested carry exactly the confs `Verify` certifies, graft's
+  * planner extensions included. */
 object Session {
 
   /** Worker threads for the harnesses: the deployment's
@@ -29,7 +30,11 @@ object Session {
     // from earlier queries piles up and slows later ones
     // (see docs/BENCH_NOTES.md)
     "spark.cleaner.periodicGC.interval" -> "60s",
-    "spark.ui.enabled" -> "false")
+    "spark.ui.enabled" -> "false",
+    // graft's planner rules, strategy and SQL functions, installed the
+    // way a deployment installs them: the rules run inside the
+    // fixed-point Operator Optimization batch of every query
+    "spark.sql.extensions" -> classOf[graft.plans.GraftExtensions].getName)
 
   /** The RocksDB state-store provider conf the keyed-state streams run
     * under, as one [[withConfs]] entry. */

@@ -61,13 +61,10 @@ object EmbCerts {
         "FROM q CROSS JOIN c WHERE vec_id <> q_id) " +
         "SELECT q_id, vec_id, sim, CAST(row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id) AS INT) AS rank " +
         "FROM s QUALIFY row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id) <= 10 ORDER BY q_id, rank")),
-    // the SAME top-k written as SQL TEXT through the injected
-    // cosine_similarity function (FunctionBridge registers it on the
-    // extension-less driver session) — third bit-identical path over
+    // the SAME top-k written as SQL TEXT through the cosine_similarity
+    // function GraftExtensions injects — third bit-identical path over
     // one oracle: HOF fold, native Column API, and SQL surface
     Cert("emb_cosine_sql", (s, d) => {
-      org.apache.spark.sql.graftbridge.FunctionBridge.registerFunction(
-        s, graft.functions.VectorExpressions.cosineFunction)
       Tables.embeddings(s, d).createOrReplaceTempView("emb_sql_corpus")
       embQueries(s, d).createOrReplaceTempView("emb_sql_queries")
       s.sql(

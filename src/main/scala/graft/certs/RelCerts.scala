@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 
 import graft.certs.Fixtures.withTempDir
 import graft.ops.EventWindows
-import graft.plans.GraftExtensions.withRules
 import graft.queries.StarQueries
 import graft.sources.Tables
 
@@ -838,19 +837,15 @@ object RelCerts {
       // must reproduce exactly (same perturbation, same threshold)
       fuzzyJoinSql),
     // the SAME match written the natural way (raw levenshtein theta
-    // join) with FuzzyJoinRule injected: the optimizer rewrites the
-    // nested-loop join to the variant equi-join and the result must
-    // stay identical (same oracle as rel_fuzzy_join). localCheckpoint
-    // materializes while the rule is active
+    // join): the session's FuzzyJoinRule rewrites the nested-loop join
+    // to the variant equi-join and the result must stay identical
+    // (same oracle as rel_fuzzy_join)
     Cert("rel_fuzzy_join_auto", (s, d) => {
       val (dirty, clean) = fuzzyNameParts(s, d)
-      val pairs = withRules(s, graft.plans.FuzzyJoinRule()) {
-        dirty.join(clean, levenshtein(col("dname"), col("cname")) <= 1)
-          .select(col("dirty_key"), col("clean_key"),
-            levenshtein(col("dname"), col("cname")).as("dist"))
-          .localCheckpoint()
-      }
-      pairs.orderBy(col("dirty_key"), col("clean_key"))
+      dirty.join(clean, levenshtein(col("dname"), col("cname")) <= 1)
+        .select(col("dirty_key"), col("clean_key"),
+          levenshtein(col("dname"), col("cname")).as("dist"))
+        .orderBy(col("dirty_key"), col("clean_key"))
     },
       // the rule-rewritten theta join must land on the identical result
       fuzzyJoinSql),
@@ -888,7 +883,7 @@ object RelCerts {
         "FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag")),
     // materialized-view routing: the SAME aggregate written against
     // the FACT table, answered from the IncrView-maintainable
-    // pre-aggregate by the injected MvRewriteRule — the fact scan
+    // pre-aggregate by MvRewriteRule.serve — the fact scan
     // never happens (spec asserts the plan; this row certifies the
     // results are indistinguishable)
     Cert("rel_mv_rewrite_auto", (s, d) => withTempDir("graft-mv") { base =>
@@ -907,12 +902,9 @@ object RelCerts {
         s.read.parquet(s"$base/mv").queryExecution.analyzed,
         Set("l_returnflag", "l_linestatus"),
         Map("l_quantity" -> "pre_qty"), "pre_cnt")
-      val out = withRules(s, rule) {
-        fact.groupBy(col("l_returnflag"))
-          .agg(sum(col("l_quantity")).as("sum_qty"), count(lit(1)).as("n_rows"))
-          .localCheckpoint()
-      }
-      out.orderBy(col("l_returnflag"))
+      rule.serve(fact.groupBy(col("l_returnflag"))
+          .agg(sum(col("l_quantity")).as("sum_qty"), count(lit(1)).as("n_rows")))
+        .orderBy(col("l_returnflag"))
     },
       // the MV-routed aggregate must be indistinguishable from the
       // fact-table aggregate (sum/count are partition-decomposable;
@@ -1303,12 +1295,11 @@ object RelCerts {
         "round(COALESCE(sum(p.value), 0), 2) AS total_value " +
         "FROM e LEFT JOIN p ON p.pu BETWEEN e.win_s AND e.win_e " +
         "GROUP BY e.err_id ORDER BY err_id")),
-    // the SAME query written the natural way (raw BETWEEN join) with the
-    // Catalyst rule injected via experimental.extraOptimizations: the
-    // optimizer rewrites the nested-loop join to the binned plan and the
-    // result must stay identical (same oracle as events_range_join).
-    // localCheckpoint materializes while the rule is active — the rule
-    // list is restored before this function returns
+    // the SAME query written the natural way (raw BETWEEN join): the
+    // session's BinnedRangeJoinRule rewrites the nested-loop join to the
+    // binned plan and the result must stay identical (same oracle as
+    // events_range_join). The 10-minute bin width is this query's own
+    // conf, so localCheckpoint materializes while it is set
     Cert("events_range_join_auto", (s, d) => {
       val ev = Tables.events(s, d)
       val tenMinUs = 600L * 1000 * 1000
@@ -1319,7 +1310,8 @@ object RelCerts {
       val traffic = ev.filter(col("event_type").isin("click", "view"))
         .select(col("event_id").as("hit_id"),
           unix_micros(col("ts")).as("hit_us"), col("value"))
-      val hits = withRules(s, graft.plans.BinnedRangeJoinRule(tenMinUs)) {
+      val hits = Session.withConfs(s,
+          graft.plans.BinnedRangeJoinRule.BinWidthKey -> tenMinUs.toString) {
         traffic
           .join(errs, col("hit_us") >= col("win_s") && col("hit_us") <= col("win_e"))
           .groupBy(col("err_id"))
@@ -1361,31 +1353,27 @@ object RelCerts {
     (dirty, clean)
   }
 
-  /** Shared scaffold of the rel_join_autosalt_* certificates: install
-    * [[graft.plans.SaltJoinRule]] plus a non-broadcastable-dim
-    * threshold for the duration of `build` (-1 simulates the big dim
-    * this rule exists for — a broadcastable one is guarded out: BHJ
-    * has no fact shuffle, measured dominant), REQUIRE the built plan
-    * to be the rewritten one (the row must certify the rule's output,
-    * never the plain join), and materialize it before both settings
-    * restore. */
+  /** Shared scaffold of the rel_join_autosalt_* certificates: set a
+    * non-broadcastable-dim threshold for the duration of `build` (-1
+    * simulates the big dim the session's [[graft.plans.SaltJoinRule]]
+    * exists for — a broadcastable one is guarded out: BHJ has no fact
+    * shuffle, measured dominant), REQUIRE the built plan to be the
+    * rewritten one (the row must certify the rule's output, never the
+    * plain join), and materialize it before the threshold restores. */
   private def withSaltRule(s: SparkSession, requireFire: Boolean = true)(
-      build: => DataFrame): DataFrame = {
-    withRules(s, graft.plans.SaltJoinRule(s)) {
-      Session.withConfs(s, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
-        val joined = build
-        // requireFire=false when the rule's own size guard CORRECTLY
-        // vetoes at the caller's scale (dim bytes × salts > fact bytes
-        // on a tiny fact) — the oracle still certifies result
-        // invariance; only the fired-plan assertion is scale-gated
-        if (requireFire)
-          require(joined.queryExecution.optimizedPlan.toString.contains("graft_salt_f"),
-            "SaltJoinRule must fire: this row certifies the REWRITTEN " +
-              "plan's results, not the plain one's")
-        joined.localCheckpoint()
-      }
+      build: => DataFrame): DataFrame =
+    Session.withConfs(s, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      val joined = build
+      // requireFire=false when the rule's own size guard CORRECTLY
+      // vetoes at the caller's scale (dim bytes × salts > fact bytes
+      // on a tiny fact) — the oracle still certifies result
+      // invariance; only the fired-plan assertion is scale-gated
+      if (requireFire)
+        require(joined.queryExecution.optimizedPlan.toString.contains("graft_salt_f"),
+          "SaltJoinRule must fire: this row certifies the REWRITTEN " +
+            "plan's results, not the plain one's")
+      joined.localCheckpoint()
     }
-  }
 
   /** min-|Δt| nearest as-of (ties: earlier right, then larger id via
     * the pre-dedup) — shared by the composed two-window formulation

@@ -365,12 +365,10 @@ object TextCerts {
         "SELECT lang, CAST(count(*) AS BIGINT) AS n_shingles, " +
         "CAST(count(DISTINCT shingle) AS BIGINT) AS n_distinct " +
         "FROM sh GROUP BY lang ORDER BY lang")),
-    // ... and the generator's SQL surface: registered like
+    // ... and the generator's SQL surface: injected like
     // cosine_similarity, `LATERAL VIEW`-free SELECT-position generator
     // in plain SQL — same oracle as the Column-API path
     Cert("text_shingle_sql", (s, d) => {
-      org.apache.spark.sql.graftbridge.FunctionBridge.registerFunction(
-        s, graft.functions.ShingleGenerator.shinglesFunction)
       Tables.documents(s, d).createOrReplaceTempView("shingle_sql_docs")
       s.sql(
         """SELECT lang, CAST(count(*) AS BIGINT) AS n_shingles,

@@ -123,7 +123,7 @@ object HllDistinct {
     ColumnBridge.column(
       HllDistinct(ColumnBridge.expression(c), p).toAggregateExpression())
 
-  /** SQL registration triple for FunctionBridge / GraftExtensions:
+  /** SQL registration triple GraftExtensions injects:
     * `SELECT hll_distinct(word)`, `hll_distinct(word, 11)`. */
   val sqlFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
     new FunctionIdentifier("hll_distinct"),

@@ -84,9 +84,9 @@ object ShingleGenerator {
         org.apache.spark.sql.graftbridge.ColumnBridge.expression(text), n))
 
   /** SQL surface: `SELECT shingles(text, 5) ...` plans the same
-    * generator — registered via GraftExtensions.injectFunction or
-    * FunctionBridge, the cosine_similarity split. The width must be a
-    * foldable integer literal (it shapes the operator). */
+    * generator — injected by GraftExtensions like cosine_similarity.
+    * The width must be a foldable integer literal (it shapes the
+    * operator). */
   val shinglesFunction: (
       org.apache.spark.sql.catalyst.FunctionIdentifier,
       org.apache.spark.sql.catalyst.expressions.ExpressionInfo,

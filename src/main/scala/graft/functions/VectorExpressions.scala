@@ -90,9 +90,8 @@ object VectorExpressions {
       CosineSimilarityExpr(ColumnBridge.expression(a), ColumnBridge.expression(b)))
 
   /** SQL-surface descriptor for the same expression, so `SELECT
-    * cosine_similarity(a, b)` works in plain SQL text — injectable at
-    * session build (GraftExtensions) or registered at runtime
-    * (graftbridge.FunctionBridge). The builder IS the expression
+    * cosine_similarity(a, b)` works in plain SQL text — injected at
+    * session build by GraftExtensions. The builder IS the expression
     * constructor: SQL callers get the identical fused codegen. */
   val cosineFunction: (
       org.apache.spark.sql.catalyst.FunctionIdentifier,

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute, A
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning}
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.graftbridge.PlanBridge
 
 /** The whole-operator extension rung: a NATIVE as-of join — custom
@@ -64,10 +64,8 @@ case class AsOfJoinPlan(
     copy(left = newLeft, right = newRight)
 }
 
-/** Plans [[AsOfJoinPlan]] as [[AsOfJoinExec]]. Registered either at
-  * runtime (`spark.experimental.extraStrategies`) or at session build
-  * via [[GraftExtensions]] — the same two installation paths as the
-  * optimizer rules. */
+/** Plans [[AsOfJoinPlan]] as [[AsOfJoinExec]]; [[GraftExtensions]]
+  * injects it at session build, beside the optimizer rules. */
 object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case AsOfJoinPlan(l, r, lks, rks, lt, rt, payload, carried, nearest) =>
@@ -213,7 +211,9 @@ case class AsOfJoinExec(
 
 /** User-facing constructor for the native path — same signature and
   * semantics as [[graft.ops.AsOf.asofJoinBackward]] (certified
-  * bit-identical by the shared DuckDB `ASOF JOIN` oracle). */
+  * bit-identical by the shared DuckDB `ASOF JOIN` oracle). The plan
+  * needs [[AsOfJoinStrategy]], so the session must carry
+  * [[GraftExtensions]]. */
 object AsOfJoinNative {
   def asofJoinBackward(
       leftDf: DataFrame,
@@ -264,7 +264,6 @@ object AsOfJoinNative {
       nearest: Boolean): DataFrame = {
     require(keys.nonEmpty, "as-of needs at least one key column")
     val spark = leftDf.sparkSession
-    install(spark)
     val lPlan = leftDf.queryExecution.analyzed
     // both sides typically derive from the SAME scan (self-as-of on
     // events), so the right child's attributes share exprIds with the
@@ -292,11 +291,4 @@ object AsOfJoinNative {
       AsOfJoinPlan(lPlan, rPlan, lks, keys.map(rAttr), lt, rAttr(time), payload,
         carried, nearest))
   }
-
-  /** Idempotently register the strategy on the session (runtime path;
-    * the build-time path is [[GraftExtensions]]). */
-  def install(spark: SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
 }

@@ -1,5 +1,6 @@
 package graft.plans
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -13,15 +14,18 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
   * BroadcastNestedLoopJoin.
   *
   * This is the repo's demonstration of the planner-extension mechanism
-  * (SURVEY §4): a `Rule[LogicalPlan]` injectable either per-session via
-  * `spark.experimental.extraOptimizations` (runtime, used by the
-  * `events_range_join_auto` oracle query) or at session build via
-  * `SparkSessionExtensions.injectOptimizerRule` — no fork, no session
+  * (SURVEY §4): a `Rule[LogicalPlan]` that [[GraftExtensions]] injects
+  * at session build (`spark.sql.extensions`) — no fork, no session
   * subclass. The DataFrame-level operator remains the primary API; the
   * rule exists because the *pattern* (inequality-only join) is what
   * users actually write, and the 100 TB failure mode (nested-loop scan
   * once the interval side outgrows a broadcast) hides until production
   * scale.
+  *
+  * The bin width W is read from `spark.graft.rangeJoin.binWidth` (bins
+  * in the point column's own units, default 1 h in micros) each time
+  * the rule runs, so one query can set its own width with
+  * `Session.withConfs` around its materialization.
   *
   * Rewrite (point side P, interval side I, bin width W):
   * {{{
@@ -47,9 +51,18 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
   * back into the join condition inside the fixed-point Operator
   * Optimization batch; everything else is left alone.
   */
-case class BinnedRangeJoinRule(binWidth: Long)
+case class BinnedRangeJoinRule(session: SparkSession)
     extends Rule[LogicalPlan] with JoinRewriteGuard {
-  require(binWidth > 0, s"binWidth must be positive, got $binWidth")
+
+  /** The configured width. Tolerant parse (the SaltJoinRule kill-switch
+    * doctrine): a malformed or non-positive value degrades to the
+    * default instead of throwing out of the optimizer, which would fail
+    * every query in the session. */
+  private def binWidth: Long =
+    session.conf.getOption(BinnedRangeJoinRule.BinWidthKey)
+      .flatMap(v => scala.util.Try(v.trim.toLong).toOption)
+      .filter(_ > 0)
+      .getOrElse(BinnedRangeJoinRule.DefaultBinWidth)
 
   private val integral = Set[org.apache.spark.sql.types.DataType](
     ByteType, ShortType, IntegerType, LongType)
@@ -122,4 +135,9 @@ case class BinnedRangeJoinRule(binWidth: Long)
     } yield (p1, s, e, pointIsLeft)
     candidates.headOption
   }
+}
+
+object BinnedRangeJoinRule {
+  val BinWidthKey = "spark.graft.rangeJoin.binWidth"
+  val DefaultBinWidth: Long = 3600L * 1000 * 1000
 }

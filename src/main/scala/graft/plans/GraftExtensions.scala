@@ -1,47 +1,31 @@
 package graft.plans
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.SparkSessionExtensions
 
-/** Session-build-time injection point for graft's planner extensions —
-  * the `SparkSessionExtensions` path for deployments that configure
-  * `spark.sql.extensions=graft.plans.GraftExtensions` (or call
-  * `.withExtensions(new GraftExtensions)` on the builder) instead of
-  * mutating `experimental.extraOptimizations` at runtime
-  * ([[GraftExtensions.withRules]]) the way the
-  * `events_range_join_auto` oracle query does. Both paths install the
-  * same rule; the runtime path exists because the driver owns the
-  * session in this harness, the config path because that is how a real
-  * cluster ships a library's rules.
+/** graft's planner extensions, installed once at session build with
+  * `spark.sql.extensions=graft.plans.GraftExtensions` — the path a
+  * deployment ships a library's rules on, and the one `Session.build`
+  * takes, so the session that is certified, timed and tested is the
+  * deployed one. The optimizer rules run inside Spark's fixed-point
+  * Operator Optimization batch; each one bails unless its pattern
+  * matches ([[JoinRewriteGuard]] keeps the join rewrites from
+  * re-matching their own output).
   *
-  * The bin width comes from `spark.graft.rangeJoin.binWidth` (bins in
-  * the point column's own units, default 1 h in micros), read once when
-  * the session builds its optimizer — per-query tuning goes through the
-  * runtime `extraOptimizations` path instead.
+  * Two confs tune them per query, read each time the rule runs:
+  * `spark.graft.rangeJoin.binWidth` ([[BinnedRangeJoinRule]]) and
+  * `spark.graft.saltJoin.enabled` ([[SaltJoinRule]]).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectOptimizerRule { session =>
-      // tolerant parse (the SaltJoinRule kill-switch doctrine): a
-      // malformed or non-positive width degrades to the default
-      // instead of throwing inside the optimizer build, which would
-      // fail every query in the session
-      BinnedRangeJoinRule(
-        session.conf.getOption(GraftExtensions.BinWidthKey)
-          .flatMap(v => scala.util.Try(v.trim.toLong).toOption)
-          .filter(_ > 0)
-          .getOrElse(3600L * 1000 * 1000))
-    }
+    ext.injectOptimizerRule(session => BinnedRangeJoinRule(session))
     // the edit-distance theta-join rewrite needs no tuning knob: the
     // threshold k is read from the query's own literal
     ext.injectOptimizerRule(_ => FuzzyJoinRule())
     // manifest-statistic salting for shuffle joins on declared-hot
-    // keys (fan-out derived at plan time; disable with
-    // spark.graft.saltJoin.enabled=false)
+    // keys (fan-out derived at plan time)
     ext.injectOptimizerRule(session => SaltJoinRule(session))
     // the whole-operator rung: plans AsOfJoinPlan as the merge-sweep
-    // AsOfJoinExec (runtime counterpart: AsOfJoinNative.install)
+    // AsOfJoinExec
     ext.injectPlannerStrategy(_ => AsOfJoinStrategy)
     // SQL surface for the fused native cosine: SELECT
     // cosine_similarity(a, b) plans the same codegen'd expression the
@@ -54,20 +38,5 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction(graft.functions.KmvDistinct.sqlFunction)
     ext.injectFunction(graft.functions.TopFreq.sqlFunction)
     ext.injectFunction(graft.functions.HistQuantiles.sqlFunction)
-  }
-}
-
-object GraftExtensions {
-  val BinWidthKey = "spark.graft.rangeJoin.binWidth"
-
-  /** The runtime path: append `rules` to the session's
-    * `experimental.extraOptimizations` for the duration of `body` and
-    * restore the previous list however `body` exits. The rules only
-    * see plans optimized inside `body`, so callers materialize there
-    * (e.g. `localCheckpoint`). */
-  def withRules[T](s: SparkSession, rules: Rule[LogicalPlan]*)(body: => T): T = {
-    val saved = s.experimental.extraOptimizations
-    s.experimental.extraOptimizations = saved ++ rules
-    try body finally s.experimental.extraOptimizations = saved
   }
 }

@@ -1,10 +1,12 @@
 package graft.plans
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 /** Catalyst optimizer rule: answer aggregates from a MATERIALIZED
   * VIEW. A query shaped
@@ -31,9 +33,9 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * to the old ids), so parent operators resolve untouched. The
   * rewritten child scans the MV's path, which the fact-path guard no
   * longer matches — the rule cannot re-fire on its own output (the
-  * [[JoinRewriteGuard]] convergence discipline). Fires only under
-  * `experimental.extraOptimizations` / GraftExtensions like the other
-  * graft rules.
+  * [[JoinRewriteGuard]] convergence discipline). The rule carries ONE
+  * view's definition, so it is not a session rule: [[serve]] applies
+  * it to one query's analyzed plan.
   *
   * Freshness is the maintenance contract, not the rule's: serve only
   * MVs [[graft.ops.IncrView]] keeps current (the usual staleness
@@ -93,4 +95,9 @@ case class MvRewriteRule(
         Aggregate(newGroup, rewritten.map(_.get), mvPlan)
       } else agg
   }
+
+  /** `query` answered from the MV where its aggregate is servable,
+    * unchanged otherwise. */
+  def serve(query: DataFrame): DataFrame =
+    PlanBridge.ofRows(query.sparkSession, apply(query.queryExecution.analyzed))
 }

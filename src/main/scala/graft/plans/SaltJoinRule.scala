@@ -193,8 +193,8 @@ case class SaltJoinRule(session: SparkSession) extends Rule[LogicalPlan]
           if r.table.isInstanceOf[GraftSegmentTable] &&
             keys.forall(r.outputSet.contains) && !timeTraveled(r.options) =>
         r.table.asInstanceOf[GraftSegmentTable]
-      // the experimental.extraOptimizations path runs AFTER V2 scan
-      // pushdown has turned the relation into a ScanRelation
+      // a rule run after V2 scan pushdown sees the relation as a
+      // ScanRelation
       case r: DataSourceV2ScanRelation
           if r.relation.table.isInstanceOf[GraftSegmentTable] &&
             keys.forall(r.outputSet.contains) && !timeTraveled(r.relation.options) =>

@@ -14,4 +14,10 @@ object PlanBridge {
   def ofRows(session: SparkSession, plan: LogicalPlan): DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       session.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** Blocks until every event posted so far has reached its listeners
+    * (the bus is asynchronous), e.g. before reading what a
+    * `QueryExecutionListener` collected. */
+  def awaitListeners(session: SparkSession): Unit =
+    session.sparkContext.listenerBus.waitUntilEmpty()
 }

@@ -3,11 +3,11 @@ package graft
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
-import graft.plans.{AsOfJoinExec, AsOfJoinNative, AsOfJoinStrategy, GraftExtensions}
+import graft.plans.{AsOfJoinExec, AsOfJoinNative, AsOfJoinStrategy}
 
 /** The native as-of join (custom LogicalPlan + SparkStrategy +
   * merge-sweep SparkPlan) — semantics against the composed window
-  * formulation, plan shape, and both installation paths. */
+  * formulation, plan shape, and the session-build installation. */
 class AsOfNativeSpec extends SparkSpec {
 
   private def mk() = {
@@ -84,11 +84,12 @@ class AsOfNativeSpec extends SparkSpec {
   }
 
   test("build-time extensions path installs the strategy") {
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
-    new GraftExtensions().apply(ext)
-    val strategies =
-      org.apache.spark.sql.graftbridge.ExtensionsBridge.plannerStrategies(ext, spark)
-    assert(strategies.contains(AsOfJoinStrategy))
+    // the session's planner carries the strategy GraftExtensions
+    // injected; nothing is registered at runtime
+    assert(spark.experimental.extraStrategies.isEmpty)
+    val planner = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.planner
+    assert(planner.extraPlanningStrategies.contains(AsOfJoinStrategy))
   }
 
   test("pre-partitioned children (mismatched counts, range-on-time) still co-partition") {

@@ -3,11 +3,17 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Dedup, Similarity, TextOps}
-import graft.plans.GraftExtensions.withRules
+import graft.plans.{BinnedRangeJoinRule, FuzzyJoinRule}
 
 /** LLM-pipeline operator specs: text analysis, dedup, similarity. */
 class OpsSpec extends SparkSpec {
   import spark.implicits._
+
+  /** `body` planned without `rule`: the session carries every graft
+    * rule, so a test's plain-plan reference excludes the one under
+    * test by name. */
+  private def withoutRule[T](rule: Class[_])(body: => T): T =
+    Session.withConfs(spark, "spark.sql.optimizer.excludedRules" -> rule.getName)(body)
 
   private def docs(rows: (Long, String)*) =
     rows.toDF("doc_id", "text").withColumn("lang", lit("en"))
@@ -426,87 +432,85 @@ class OpsSpec extends SparkSpec {
       t.join(dimHalf, Seq("k"), "left_outer")
         .groupBy(coalesce($"b".cast("string"), lit("miss")).as("g"))
         .agg(count(lit(1)).as("n"), sum($"v").as("s"))
-    // expected results collected BEFORE the rule is installed (the
-    // session is shared: a lazy plan first materialized inside the
-    // try would be rewritten too, making the invisibility comparison
-    // rewritten-vs-rewritten — vacuous)
-    val plainExpected = shape(factT).collect().toSet
-    val leftExpected = leftShape(factT).collect().toSet
-    withRules(spark, SaltJoinRule(spark)) {
-      Session.withConfs(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
-        val auto = shape(factT)
-        assert(fired(auto), "declared-hot key + non-broadcastable dim must fire")
-        assert(auto.collect().toSet === plainExpected,
-          "the rewrite must be invisible in the result")
-        // row level too: multiplicity is exact, not just aggregate-exact
-        val rows = factT.join(dim, Seq("k"))
-        assert(fired(rows) && rows.count() === 12000)
-        // FACT-PRESERVING left join fires (r18, SaltBench-measured) and
-        // stays invisible, including the null-extended unmatched rows —
-        // every preserved fact row keeps exactly ONE salt
-        val leftAuto = leftShape(factT)
-        assert(fired(leftAuto), "fact-preserving left join must fire")
-        assert(leftAuto.collect().toSet === leftExpected)
-        assert(factT.join(dimHalf, Seq("k"), "left_outer").count() === 12000)
-        // the preserved side must be the FACT: a dim-preserved left (or
-        // its mirrored right) would emit `salts` null-extended copies
-        assert(!fired(dimHalf.join(factT, Seq("k"), "left_outer")))
-        assert(!fired(factT.join(dimHalf, Seq("k"), "right_outer")))
-        assert(fired(dimHalf.join(factT, Seq("k"), "right_outer")),
-          "right-outer with the fact on the preserved RIGHT fires")
-        assert(!fired(factT.join(dimHalf, Seq("k"), "full_outer")))
-        // COMPOSITE key (r18): u undeclared — the k map alone bounds the
-        // composite hot mass, the rewrite fires and stays 1:1
-        val comp = factT.join(dimC, Seq("k", "u"))
-        assert(fired(comp), "composite key with one declared column must fire")
-        assert(comp.count() === 12000)
-        // ... but a DECLARED-uniform column vetoes: count(k=7 ∧ u=x) ≤
-        // count(u=x) ≈ n/13 — no composite hot key exists
-        assert(!fired(factTv.join(dimC, Seq("k", "u"))),
-          "the tightest declared bound (u: not hot) must veto the rewrite")
-        // no statistic (undeclared map) -> no rewrite
-        assert(!fired(spark.read.format("graft-segment").load(s"$base/undecl")
-          .join(dim, Seq("k"))))
-        // residual non-equality conjunct -> untouched (the multiplicity
-        // argument only covers the pure equi-join shape)
-        assert(!fired(factT.join(dim,
-          factT("k") === dim("k") && factT("v") > dim("b"))))
-        // a multiplicity-CHANGING node between scan and join must bail:
-        // post-aggregate every key appears exactly once — zero skew —
-        // so the raw scan's hot-key statistic no longer describes the
-        // join input and salting would replicate the dim for nothing.
-        // A FILTER in between only shrinks per-key mass (the statistic
-        // stays an upper bound — the composite-bound doctrine) and fires
-        assert(!fired(factT.groupBy($"k").agg(sum($"v").as("v2"))
-          .join(dim, Seq("k"))),
-          "an aggregate between scan and join must bail")
-        assert(fired(factT.filter($"v" >= 0).join(dim, Seq("k"))),
-          "a filter between scan and join preserves the upper bound")
-        // kill switch — and its TOLERANT parse: a malformed value must
-        // degrade to the default, never fail planning (r17 ADVICE)
-        spark.conf.set(SaltJoinRule.EnabledKey, "false")
-        try assert(!fired(shape(factT)))
-        finally spark.conf.unset(SaltJoinRule.EnabledKey)
-        // the standard disable spellings all disable — ignoring "0"
-        // would silently invert explicit disable intent
-        Seq("0", "off", "FALSE", "no").foreach { v =>
-          spark.conf.set(SaltJoinRule.EnabledKey, v)
-          try assert(!fired(shape(factT)), s"'$v' must disable")
-          finally spark.conf.unset(SaltJoinRule.EnabledKey)
-        }
-        spark.conf.set(SaltJoinRule.EnabledKey, "not-a-boolean")
-        try assert(fired(shape(factT)),
-          "a malformed kill-switch value degrades to enabled")
+    // expected results collected with the rule excluded (the session
+    // carries it: a reference planned with it would be rewritten too,
+    // making the invisibility comparison rewritten-vs-rewritten —
+    // vacuous)
+    val (plainExpected, leftExpected) = withoutRule(classOf[SaltJoinRule]) {
+      (shape(factT).collect().toSet, leftShape(factT).collect().toSet)
+    }
+    Session.withConfs(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      val auto = shape(factT)
+      assert(fired(auto), "declared-hot key + non-broadcastable dim must fire")
+      assert(auto.collect().toSet === plainExpected,
+        "the rewrite must be invisible in the result")
+      // row level too: multiplicity is exact, not just aggregate-exact
+      val rows = factT.join(dim, Seq("k"))
+      assert(fired(rows) && rows.count() === 12000)
+      // FACT-PRESERVING left join fires (r18, SaltBench-measured) and
+      // stays invisible, including the null-extended unmatched rows —
+      // every preserved fact row keeps exactly ONE salt
+      val leftAuto = leftShape(factT)
+      assert(fired(leftAuto), "fact-preserving left join must fire")
+      assert(leftAuto.collect().toSet === leftExpected)
+      assert(factT.join(dimHalf, Seq("k"), "left_outer").count() === 12000)
+      // the preserved side must be the FACT: a dim-preserved left (or
+      // its mirrored right) would emit `salts` null-extended copies
+      assert(!fired(dimHalf.join(factT, Seq("k"), "left_outer")))
+      assert(!fired(factT.join(dimHalf, Seq("k"), "right_outer")))
+      assert(fired(dimHalf.join(factT, Seq("k"), "right_outer")),
+        "right-outer with the fact on the preserved RIGHT fires")
+      assert(!fired(factT.join(dimHalf, Seq("k"), "full_outer")))
+      // COMPOSITE key (r18): u undeclared — the k map alone bounds the
+      // composite hot mass, the rewrite fires and stays 1:1
+      val comp = factT.join(dimC, Seq("k", "u"))
+      assert(fired(comp), "composite key with one declared column must fire")
+      assert(comp.count() === 12000)
+      // ... but a DECLARED-uniform column vetoes: count(k=7 ∧ u=x) ≤
+      // count(u=x) ≈ n/13 — no composite hot key exists
+      assert(!fired(factTv.join(dimC, Seq("k", "u"))),
+        "the tightest declared bound (u: not hot) must veto the rewrite")
+      // no statistic (undeclared map) -> no rewrite
+      assert(!fired(spark.read.format("graft-segment").load(s"$base/undecl")
+        .join(dim, Seq("k"))))
+      // residual non-equality conjunct -> untouched (the multiplicity
+      // argument only covers the pure equi-join shape)
+      assert(!fired(factT.join(dim,
+        factT("k") === dim("k") && factT("v") > dim("b"))))
+      // a multiplicity-CHANGING node between scan and join must bail:
+      // post-aggregate every key appears exactly once — zero skew —
+      // so the raw scan's hot-key statistic no longer describes the
+      // join input and salting would replicate the dim for nothing.
+      // A FILTER in between only shrinks per-key mass (the statistic
+      // stays an upper bound — the composite-bound doctrine) and fires
+      assert(!fired(factT.groupBy($"k").agg(sum($"v").as("v2"))
+        .join(dim, Seq("k"))),
+        "an aggregate between scan and join must bail")
+      assert(fired(factT.filter($"v" >= 0).join(dim, Seq("k"))),
+        "a filter between scan and join preserves the upper bound")
+      // kill switch — and its TOLERANT parse: a malformed value must
+      // degrade to the default, never fail planning (r17 ADVICE)
+      spark.conf.set(SaltJoinRule.EnabledKey, "false")
+      try assert(!fired(shape(factT)))
+      finally spark.conf.unset(SaltJoinRule.EnabledKey)
+      // the standard disable spellings all disable — ignoring "0"
+      // would silently invert explicit disable intent
+      Seq("0", "off", "FALSE", "no").foreach { v =>
+        spark.conf.set(SaltJoinRule.EnabledKey, v)
+        try assert(!fired(shape(factT)), s"'$v' must disable")
         finally spark.conf.unset(SaltJoinRule.EnabledKey)
       }
-      // broadcast-eligible dim -> no rewrite (BHJ has no fact shuffle;
-      // SaltBench measured broadcast strictly dominating)
-      assert(!fired(shape(factT)), "broadcastable dim must stay unsalted")
+      spark.conf.set(SaltJoinRule.EnabledKey, "not-a-boolean")
+      try assert(fired(shape(factT)),
+        "a malformed kill-switch value degrades to enabled")
+      finally spark.conf.unset(SaltJoinRule.EnabledKey)
     }
+    // broadcast-eligible dim -> no rewrite (BHJ has no fact shuffle;
+    // SaltBench measured broadcast strictly dominating)
+    assert(!fired(shape(factT)), "broadcastable dim must stay unsalted")
   }
 
   test("SaltJoinRule fires through the catalog SQL face (histFor table property)") {
-    import graft.plans.SaltJoinRule
     // the certificates exercise path-based loads; a SQL user reaches
     // the same statistic through a CATALOG-managed table — the rule
     // must fire there too (same GraftSegmentTable instance underneath)
@@ -524,24 +528,22 @@ class OpsSpec extends SparkSpec {
     spark.sql(s"INSERT INTO $cat.db.fact SELECT k, v FROM graft_saltcat_src")
     spark.range(0, 13).select($"id".as("k"), ($"id" % 3).as("b"))
       .createOrReplaceTempView("graft_saltcat_dim")
-    withRules(spark, SaltJoinRule(spark)) {
-      try {
-        Session.withConfs(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
-          val q = spark.sql(s"SELECT b, count(*) AS n, sum(v) AS s " +
-            s"FROM $cat.db.fact JOIN graft_saltcat_dim USING (k) GROUP BY b")
-          assert(q.queryExecution.optimizedPlan.toString.contains("graft_salt_f"),
-            "the rule must serve SQL users through the catalog table path")
-          assert(q.count() === 3)
-          // row multiplicity is exact through the SQL face too
-          assert(spark.sql(s"SELECT * FROM $cat.db.fact " +
-            "JOIN graft_saltcat_dim USING (k)").count() === 12000)
-        }
-      } finally {
-        // drop the test-local catalog from the shared session — later
-        // tests must not inherit a live catalog over a temp warehouse
-        spark.conf.unset(s"spark.sql.catalog.$cat")
-        spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
+    try {
+      Session.withConfs(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+        val q = spark.sql(s"SELECT b, count(*) AS n, sum(v) AS s " +
+          s"FROM $cat.db.fact JOIN graft_saltcat_dim USING (k) GROUP BY b")
+        assert(q.queryExecution.optimizedPlan.toString.contains("graft_salt_f"),
+          "the rule must serve SQL users through the catalog table path")
+        assert(q.count() === 3)
+        // row multiplicity is exact through the SQL face too
+        assert(spark.sql(s"SELECT * FROM $cat.db.fact " +
+          "JOIN graft_saltcat_dim USING (k)").count() === 12000)
       }
+    } finally {
+      // drop the test-local catalog from the shared session — later
+      // tests must not inherit a live catalog over a temp warehouse
+      spark.conf.unset(s"spark.sql.catalog.$cat")
+      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
     }
   }
 
@@ -944,41 +946,43 @@ class OpsSpec extends SparkSpec {
     val rule = graft.plans.MvRewriteRule(roots(fact.queryExecution.analyzed),
       spark.read.parquet(s"$base/mv").queryExecution.analyzed,
       Set("g1", "g2"), Map("x" -> "pre_x"), "pre_cnt")
-    withRules(spark, rule) {
-      val q = fact.groupBy($"g1").agg(sum($"x").as("sx"), count(lit(1)).as("n"))
-      val optRoots = roots(q.queryExecution.optimizedPlan)
-      assert(optRoots.exists(_.contains("/mv")), s"plan must scan the MV: $optRoots")
-      assert(!optRoots.exists(_.contains("/fact")), s"fact scan must be gone: $optRoots")
-      // ...and the routed answer is the raw answer
-      val r = q.collect().map(x => x.getString(0) -> ((x.getDouble(1), x.getLong(2)))).toMap
-      assert(r === Map("a" -> ((3.0, 2L)), "b" -> ((12.0, 2L))))
-      // a filter the MV cannot see → untouched
-      val filtered = fact.filter($"x" > 1.0).groupBy($"g1").agg(sum($"x"))
-      assert(roots(filtered.queryExecution.optimizedPlan).exists(_.contains("/fact")))
-      // a measure the MV does not carry → untouched
-      val foreign = fact.groupBy($"g1").agg(sum($"y"))
-      assert(roots(foreign.queryExecution.optimizedPlan).exists(_.contains("/fact")))
-    }
+    val q = rule.serve(fact.groupBy($"g1").agg(sum($"x").as("sx"), count(lit(1)).as("n")))
+    val optRoots = roots(q.queryExecution.optimizedPlan)
+    assert(optRoots.exists(_.contains("/mv")), s"plan must scan the MV: $optRoots")
+    assert(!optRoots.exists(_.contains("/fact")), s"fact scan must be gone: $optRoots")
+    // ...and the routed answer is the raw answer
+    val r = q.collect().map(x => x.getString(0) -> ((x.getDouble(1), x.getLong(2)))).toMap
+    assert(r === Map("a" -> ((3.0, 2L)), "b" -> ((12.0, 2L))))
+    // a filter the MV cannot see → untouched
+    val filtered = rule.serve(fact.filter($"x" > 1.0).groupBy($"g1").agg(sum($"x")))
+    assert(roots(filtered.queryExecution.optimizedPlan).exists(_.contains("/fact")))
+    // a measure the MV does not carry → untouched
+    val foreign = rule.serve(fact.groupBy($"g1").agg(sum($"y")))
+    assert(roots(foreign.queryExecution.optimizedPlan).exists(_.contains("/fact")))
   }
 
   test("GraftExtensions wires the range-join rule with the configured bin width") {
-    import org.apache.spark.sql.graftbridge.ExtensionsBridge
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
-    new graft.plans.GraftExtensions().apply(ext)
-    Session.withConfs(spark, graft.plans.GraftExtensions.BinWidthKey -> "12345") {
-      val rules = ExtensionsBridge.optimizerRules(ext, spark)
-      assert(rules.collect {
-        case graft.plans.BinnedRangeJoinRule(w) => w
-      } === Seq(12345L))
-      assert(rules.exists(_.isInstanceOf[graft.plans.FuzzyJoinRule]))
+    import org.apache.spark.sql.catalyst.expressions.{IntegralDivide, Literal}
+    // Range-backed sides: a Project over a LocalRelation would be
+    // folded away, and the bin expression with it
+    val points = spark.range(0, 3).select(($"id" * 5).as("p"))
+    val intervals = spark.range(0, 2).select(($"id" + 5).as("s"), ($"id" + 10).as("e"))
+    // the width the session's rule binned with, read off the rewritten plan
+    def widths(): Seq[Long] = points.join(intervals, $"p" >= $"s" && $"p" <= $"e")
+      .queryExecution.optimizedPlan.flatMap(_.expressions).flatMap(_.collect {
+        case d: IntegralDivide => d.right
+      }).collect { case Literal(w: Long, _) => w }.distinct
+    Session.withConfs(spark, BinnedRangeJoinRule.BinWidthKey -> "12345") {
+      assert(widths() === Seq(12345L))
+      val names = Seq("spark engine").toDF("name")
+      assert(names.as("l").join(names.as("r"), levenshtein($"l.name", $"r.name") <= 1)
+        .queryExecution.optimizedPlan.toString.contains("graft_l_var"))
       // a malformed or non-positive width must degrade to the default
-      // (1 h in micros), never throw inside the optimizer build — the
+      // (1 h in micros), never throw inside the optimizer — the
       // kill-switch doctrine: a bad conf value may not fail planning
       for (bad <- Seq("1h", "", "-5", "0")) {
-        spark.conf.set(graft.plans.GraftExtensions.BinWidthKey, bad)
-        assert(ExtensionsBridge.optimizerRules(ext, spark).collect {
-          case graft.plans.BinnedRangeJoinRule(w) => w
-        } === Seq(3600L * 1000 * 1000), s"binWidth='$bad'")
+        spark.conf.set(BinnedRangeJoinRule.BinWidthKey, bad)
+        assert(widths() === Seq(3600L * 1000 * 1000), s"binWidth='$bad'")
       }
     }
   }
@@ -992,11 +996,13 @@ class OpsSpec extends SparkSpec {
     def rawJoin() = points
       .join(intervals, $"p" >= $"s" && $"p" <= $"e")
       .select($"pid", $"iid")
-    val baseline = rawJoin().collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val rawPlan = rawJoin().queryExecution.executedPlan.toString
+    val (baseline, rawPlan) = withoutRule(classOf[BinnedRangeJoinRule]) {
+      (rawJoin().collect().map(r => (r.getLong(0), r.getLong(1))).toSet,
+        rawJoin().queryExecution.executedPlan.toString)
+    }
     assert(rawPlan.contains("BroadcastNestedLoopJoin"), // what users get today
       s"expected the raw BETWEEN join to nested-loop, got:\n$rawPlan")
-    withRules(spark, graft.plans.BinnedRangeJoinRule(10L)) {
+    Session.withConfs(spark, BinnedRangeJoinRule.BinWidthKey -> "10") {
       val rewritten = rawJoin()
       val plan = rewritten.queryExecution.executedPlan.toString
       assert(!plan.contains("BroadcastNestedLoopJoin") && !plan.contains("CartesianProduct"),
@@ -1021,24 +1027,23 @@ class OpsSpec extends SparkSpec {
     def multiset(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).groupBy(identity)
         .view.mapValues(_.length).toMap
-    val baseline = multiset(rawJoin())
-    assert(baseline((20L, 1L)) === 2) // the duplicate row really doubles
-    val rawPlan = rawJoin().queryExecution.executedPlan.toString
-    assert(rawPlan.contains("BroadcastNestedLoopJoin"),
-      s"expected the raw levenshtein join to nested-loop, got:\n$rawPlan")
     def join2() = lefts
       .join(rights, levenshtein($"lname", $"rname") <= 2).select($"lk", $"rk")
-    val base2 = multiset(join2()) // k=2 ground truth, rule NOT active
-    withRules(spark, graft.plans.FuzzyJoinRule()) {
-      val rewritten = rawJoin()
-      val plan = rewritten.queryExecution.executedPlan.toString
-      assert(!plan.contains("BroadcastNestedLoopJoin") && !plan.contains("CartesianProduct"),
-        s"expected the rule to remove the nested loop, got:\n$plan")
-      assert(plan.contains("Generate"), s"expected the variant explode, got:\n$plan")
-      assert(multiset(rewritten) === baseline)
-      // k=2 threshold routes through the two-deletion neighborhood
-      assert(multiset(join2()) === base2)
+    // k=1 and k=2 ground truth, rule excluded
+    val (baseline, rawPlan, base2) = withoutRule(classOf[FuzzyJoinRule]) {
+      (multiset(rawJoin()), rawJoin().queryExecution.executedPlan.toString, multiset(join2()))
     }
+    assert(baseline((20L, 1L)) === 2) // the duplicate row really doubles
+    assert(rawPlan.contains("BroadcastNestedLoopJoin"),
+      s"expected the raw levenshtein join to nested-loop, got:\n$rawPlan")
+    val rewritten = rawJoin()
+    val plan = rewritten.queryExecution.executedPlan.toString
+    assert(!plan.contains("BroadcastNestedLoopJoin") && !plan.contains("CartesianProduct"),
+      s"expected the rule to remove the nested loop, got:\n$plan")
+    assert(plan.contains("Generate"), s"expected the variant explode, got:\n$plan")
+    assert(multiset(rewritten) === baseline)
+    // k=2 threshold routes through the two-deletion neighborhood
+    assert(multiset(join2()) === base2)
   }
 
   test("GraftExtensions end-to-end: injected rules converge in the fixed-point batch") {
@@ -1046,45 +1051,42 @@ class OpsSpec extends SparkSpec {
     // Operator Optimization batch, interleaved with PushDownPredicates —
     // the interleaving that re-fired the unguarded rules forever (each
     // iteration pushed the residual theta conjunct back into the new
-    // join's condition, re-matching the pattern). This runs the REAL
-    // injection path on a second session sharing the test SparkContext.
-    import org.apache.spark.sql.graftbridge.SessionBridge
-    val s2 = SessionBridge.withExtensions(spark, new graft.plans.GraftExtensions().apply(_))
-    s2.conf.set("spark.sql.shuffle.partitions", "4")
-    s2.conf.set(graft.plans.GraftExtensions.BinWidthKey, "10")
-    import s2.implicits._
-    val lefts = Seq((10L, "spark enginx"), (15L, "postgres"), (20L, "spark engine"))
-      .toDF("lk", "lname")
-    val rights = Seq((1L, "spark engine"), (2L, "flink runner")).toDF("rk", "rname")
-    val fuzzy = lefts.join(rights, levenshtein($"lname", $"rname") <= 1)
-      .select($"lk", $"rk")
-    val fPlan = fuzzy.queryExecution.executedPlan.toString
-    assert(!fPlan.contains("BroadcastNestedLoopJoin"),
-      s"expected the injected FuzzyJoinRule to fire, got:\n$fPlan")
-    assert(fuzzy.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ===
-      Set((10L, 1L), (20L, 1L)))
-    // fired exactly ONCE: one variant explode per side, no nested pileup
-    val generates = fuzzy.queryExecution.optimizedPlan.collect {
-      case g: org.apache.spark.sql.catalyst.plans.logical.Generate => g
+    // join's condition, re-matching the pattern). The test session
+    // installs them that way, as every Session.build does.
+    Session.withConfs(spark, BinnedRangeJoinRule.BinWidthKey -> "10") {
+      val lefts = Seq((10L, "spark enginx"), (15L, "postgres"), (20L, "spark engine"))
+        .toDF("lk", "lname")
+      val rights = Seq((1L, "spark engine"), (2L, "flink runner")).toDF("rk", "rname")
+      val fuzzy = lefts.join(rights, levenshtein($"lname", $"rname") <= 1)
+        .select($"lk", $"rk")
+      val fPlan = fuzzy.queryExecution.executedPlan.toString
+      assert(!fPlan.contains("BroadcastNestedLoopJoin"),
+        s"expected the injected FuzzyJoinRule to fire, got:\n$fPlan")
+      assert(fuzzy.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ===
+        Set((10L, 1L), (20L, 1L)))
+      // fired exactly ONCE: one variant explode per side, no nested pileup
+      val generates = fuzzy.queryExecution.optimizedPlan.collect {
+        case g: org.apache.spark.sql.catalyst.plans.logical.Generate => g
+      }
+      assert(generates.size === 2,
+        s"expected exactly one rewrite (2 Generates), got ${generates.size}")
+      val points = Seq((1L, 5L), (3L, 25L), (5L, -7L)).toDF("pid", "p")
+      val intervals = Seq((100L, 5L, 10L), (200L, 8L, 27L)).toDF("iid", "s", "e")
+      val ranged = points.join(intervals, $"p" >= $"s" && $"p" <= $"e")
+        .select($"pid", $"iid")
+      val rPlan = ranged.queryExecution.executedPlan.toString
+      assert(!rPlan.contains("BroadcastNestedLoopJoin"),
+        s"expected the injected BinnedRangeJoinRule to fire, got:\n$rPlan")
+      assert(ranged.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ===
+        Set((1L, 100L), (3L, 200L)))
+      // the guard: a join that already carries an equi-key is left alone
+      // (it plans as a hash join with the theta conjunct as residual)
+      val keyed = lefts.join(rights,
+        $"lk" === $"rk" && levenshtein($"lname", $"rname") <= 1)
+      val kPlan = keyed.queryExecution.optimizedPlan.toString
+      assert(!kPlan.contains("graft_l_var"), s"guard failed to bail:\n$kPlan")
+      assert(keyed.count() === 0)
     }
-    assert(generates.size === 2,
-      s"expected exactly one rewrite (2 Generates), got ${generates.size}")
-    val points = Seq((1L, 5L), (3L, 25L), (5L, -7L)).toDF("pid", "p")
-    val intervals = Seq((100L, 5L, 10L), (200L, 8L, 27L)).toDF("iid", "s", "e")
-    val ranged = points.join(intervals, $"p" >= $"s" && $"p" <= $"e")
-      .select($"pid", $"iid")
-    val rPlan = ranged.queryExecution.executedPlan.toString
-    assert(!rPlan.contains("BroadcastNestedLoopJoin"),
-      s"expected the injected BinnedRangeJoinRule to fire, got:\n$rPlan")
-    assert(ranged.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ===
-      Set((1L, 100L), (3L, 200L)))
-    // the guard: a join that already carries an equi-key is left alone
-    // (it plans as a hash join with the theta conjunct as residual)
-    val keyed = lefts.join(rights,
-      $"lk" === $"rk" && levenshtein($"lname", $"rname") <= 1)
-    val kPlan = keyed.queryExecution.optimizedPlan.toString
-    assert(!kPlan.contains("graft_l_var"), s"guard failed to bail:\n$kPlan")
-    assert(keyed.count() === 0)
   }
 
   test("containmentPairs: a doc quoted inside a longer one scores ~1 one-way") {
@@ -1551,8 +1553,6 @@ class OpsSpec extends SparkSpec {
   }
 
   test("cosine_similarity SQL function plans the same fused native expression") {
-    org.apache.spark.sql.graftbridge.FunctionBridge.registerFunction(
-      spark, graft.functions.VectorExpressions.cosineFunction)
     val df = Seq(
       (1L, Array(2f, 0f, 0f), Array(2f, 0f, 0f)), // exact norms → sim exactly 1.0
       (2L, Array(1f, 0f, 0f), Array(0f, 1f, 0f)),

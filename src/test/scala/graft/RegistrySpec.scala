@@ -26,4 +26,15 @@ class RegistrySpec extends AnyFunSuite {
     val e = intercept[IllegalArgumentException](Cert.index(Seq(c, c.copy(oracleSql = "SELECT 2"))))
     assert(e.getMessage.contains("dup_name"))
   }
+
+  test("plans/fingerprints.json holds one fingerprint per certificate") {
+    // PlanAudit writes one `"name": {...}` line per query; a new
+    // certificate without a fingerprint (or a stale one) fails here
+    val line = "^\"([^\"]+)\": \\{".r
+    val src = scala.io.Source.fromFile(PlanAudit.Out)
+    val names = try src.getLines().flatMap(l => line.findPrefixMatchOf(l).map(_.group(1))).toList
+      finally src.close()
+    assert(names.size === names.distinct.size)
+    assert(names.toSet === SparkEntry.queries.keySet)
+  }
 }

@@ -43,4 +43,33 @@ class SessionSpec extends SparkSpec {
       assertRestored()
     } finally spark.conf.unset(set)
   }
+
+  test("the test session plans with graft's extensions") {
+    import spark.implicits._
+    // nothing is installed at runtime: every rule, strategy and
+    // function below comes from spark.sql.extensions at session build
+    assert(spark.experimental.extraOptimizations.isEmpty)
+    assert(spark.experimental.extraStrategies.isEmpty)
+    val points = Seq((1L, 5L), (2L, 25L)).toDF("pid", "p")
+    val intervals = Seq((100L, 5L, 10L)).toDF("iid", "s", "e")
+    val ranged = points.join(intervals, $"p".between($"s", $"e"))
+    val plan = ranged.queryExecution.executedPlan.toString
+    assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
+    assert(ranged.select($"pid", $"iid").as[(Long, Long)].collect().toSeq === Seq((1L, 100L)))
+    Seq((1L, Array(1f, 0f), "a b c d e f", "x")).toDF("id", "v", "text", "word")
+      .createOrReplaceTempView("graft_extensions_probe")
+    val row = spark.sql(
+      "SELECT cosine_similarity(v, v), " +
+        "(SELECT count(*) FROM (SELECT shingles(text, 5) FROM graft_extensions_probe)), " +
+        "(SELECT hll_distinct(word) FROM graft_extensions_probe) " +
+        "FROM graft_extensions_probe").head()
+    assert(row.getDouble(0) === 1.0 && row.getLong(1) === 2L && row.getDouble(2) > 0.0)
+    val left = Seq(("u1", 10L)).toDF("k", "t")
+    val right = Seq(("u1", 5L, "r")).toDF("k", "t", "rv")
+    val asof = graft.plans.AsOfJoinNative.asofJoinBackward(left, right, "k", "t", Seq("rv"))
+    assert(asof.queryExecution.sparkPlan.collect {
+      case e: graft.plans.AsOfJoinExec => e
+    }.size === 1)
+    assert(asof.select($"asof_rv").as[String].collect().toSeq === Seq("r"))
+  }
 }

@@ -51,8 +51,6 @@ class SketchAggSpec extends SparkSpec {
   }
 
   test("SQL registration: SELECT hll_distinct(word) matches the Column API") {
-    org.apache.spark.sql.graftbridge.FunctionBridge.registerFunction(
-      spark, HllDistinct.sqlFunction)
     val df = words(10000, 2)
     df.createOrReplaceTempView("hll_words")
     val viaSql = spark.sql(
@@ -160,9 +158,6 @@ class SketchAggSpec extends SparkSpec {
   }
 
   test("SQL registration: kmv_distinct / top_freq / hist_quantiles resolve and agree") {
-    Seq(graft.functions.KmvDistinct.sqlFunction, graft.functions.TopFreq.sqlFunction,
-      graft.functions.HistQuantiles.sqlFunction).foreach(
-      org.apache.spark.sql.graftbridge.FunctionBridge.registerFunction(spark, _))
     val df = words(8000, 2)
     df.createOrReplaceTempView("sketch_sql_words")
     val kmv = spark.sql(
