@@ -61,6 +61,8 @@ object Bench {
     // never a plausible time — but offset reconstruction from
     // cumsum(t) must not lose the seconds the failure consumed)
     val errWall = scala.collection.mutable.LinkedHashMap.empty[String, Double]
+    // each query's work counters, as a JSON object (first samples only)
+    val counters = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val probes = scala.collection.mutable.ArrayBuffer.empty[(Double, Double)]
     val offsets = scala.collection.mutable.ArrayBuffer.empty[Double]
     val suite = SparkEntry.queries.toSeq.sortBy(_._1)
@@ -71,19 +73,27 @@ object Bench {
     var qIdx = 0
     // ONE measure-and-hygiene block for the suite loop AND the repeat
     // pass — a divergence here would make the two windows measure
-    // under different session-state regimes. Returns (elapsed, error):
-    // elapsed is real even on failure (the repeat window's wall cost
-    // must conserve), the CALLER decides how a failure rides.
-    def timedRun(name: String): (Double, Option[String]) = {
-      val t0 = System.nanoTime()
-      val err =
-        try { SparkEntry.queries(name)(spark, sfDir).count(); None }
-        // NonFatal only: an OOM/VM error means every later timing would
-        // run in a poisoned JVM — a failed RUN reports more faithfully
-        // than a plausible-looking garbage artifact
-        catch { case scala.util.control.NonFatal(e) =>
-          Some(sanitizeForJson(e.toString)) }
-      val dt = (System.nanoTime() - t0) / 1e9
+    // under different session-state regimes. Returns (elapsed, error,
+    // counters): elapsed is real even on failure (the repeat window's
+    // wall cost must conserve) and excludes the listener-bus barrier
+    // that completes the counters; the CALLER decides how a failure
+    // rides. Failed counters cost the query its counters, not the run.
+    def timedRun(name: String): (Double, Option[String], Option[String]) = {
+      var timed: (Double, Option[String]) = (0.0, Some("the query did not run"))
+      val work =
+        try Some(WorkCounters.observe(spark) {
+          val t0 = System.nanoTime()
+          val err =
+            try { SparkEntry.queries(name)(spark, sfDir).count(); None }
+            // NonFatal only: an OOM/VM error means every later timing would
+            // run in a poisoned JVM — a failed RUN reports more faithfully
+            // than a plausible-looking garbage artifact
+            catch { case scala.util.control.NonFatal(e) =>
+              Some(sanitizeForJson(e.toString)) }
+          timed = ((System.nanoTime() - t0) / 1e9, err)
+        }._2)
+        catch { case scala.util.control.NonFatal(_) => None }
+      val (dt, err) = timed
       // per-query session hygiene: drop any cached RDDs/tables a query
       // left behind so back-to-back timings measure the query, not
       // accumulated session state
@@ -95,7 +105,7 @@ object Bench {
       if ((System.nanoTime() - lastGc) / 1e9 > 20.0) {
         System.gc(); lastGc = System.nanoTime()
       }
-      (dt, err)
+      (dt, err, work.map(countersJson))
     }
     val results = suite.map {
       case (name, _) =>
@@ -113,7 +123,8 @@ object Bench {
         offsets += (System.nanoTime() - suiteStart) / 1e9
         // a failed query must not look like a fast one: record -1 and
         // the error, never a normal-looking wall time
-        val (dt, err) = timedRun(name)
+        val (dt, err, work) = timedRun(name)
+        work.foreach(counters += name -> _)
         err.foreach { m => errors += name -> m.take(200); errWall += name -> dt }
         name -> (if (err.isEmpty) dt else -1.0)
     }
@@ -150,7 +161,7 @@ object Bench {
       .sortBy(-_._2).take(RepeatDriftExtra).map(_._1)
     val repeats = (slowestNames ++ driftedNames)
       .map { name =>
-        val (dt, err) = timedRun(name)
+        val (dt, err, _) = timedRun(name)
         // wall conserves even on failure: repeats_sec is the window's
         // COST, and decode's wall-conserving totals add it back
         repeatSpent += dt
@@ -192,8 +203,10 @@ object Bench {
     // line's errt field, or the two artifacts of one run disagree
     val errwFull = errWall.map { case (k, v) => s"\"" + k + "\":" + f3(v) }
       .mkString("{", ",", "}")
+    val countersFull = counters.map { case (k, v) => s"\"" + k + "\":" + v }
+      .mkString("{", ",", "}")
     val fullJson =
-      s"""{"metric":"total","value":$total,"unit":"sec",$calib,"queries":$qsFull,"offsets":$offFull,"probes":$probesFull,"repeats":$rptFull,"errors":$errsFull,"err_wall":$errwFull,"sf":"${sanitizeForJson(sfDir)}"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec",$calib,"queries":$qsFull,"offsets":$offFull,"probes":$probesFull,"repeats":$rptFull,"errors":$errsFull,"err_wall":$errwFull,"counters":$countersFull,"sf":"${sanitizeForJson(sfDir)}"}"""
     val nameIdx = suite.map(_._1).zipWithIndex.toMap
     val json = renderCompact(results, probes.toSeq,
       Seq(calibSpark, calibSparkMid, calibSparkEnd),
@@ -329,6 +342,18 @@ object Bench {
       // measures what the capture window actually sees
       else if (c > '\u007e') '?'
       else c)
+
+  /** One query's `counters` entry in target/bench.json: the totals and,
+    * if it ran micro-batches, each `durationMs` phase summed over them.
+    * No key ends in `_sec`, which `tools/decode_bench.py` reads as calib. */
+  private[graft] def countersJson(w: WorkCounters): String = {
+    val t = w.totals
+    val split = if (t.batches == 0) "" else w.durationMs.toSeq.sorted
+      .map { case (k, v) => s"\"$k\":$v" }.mkString(""","duration_ms":{""", ",", "}")
+    s"""{"jobs":${t.jobs},"stages":${t.stages},"tasks":${t.tasks},""" +
+      s""""shuffle_read_bytes":${t.shuffleReadBytes},"shuffle_write_bytes":${t.shuffleWriteBytes},""" +
+      s""""input_records":${t.inputRecords},"spill_bytes":${t.spillBytes},"batches":${t.batches}$split}"""
+  }
 
   private def renderTotal(results: Seq[(String, Double)]): String =
     f3(results.map(_._2).filter(_ >= 0).sum)

@@ -2,22 +2,18 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import scala.collection.mutable
-
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-import org.apache.spark.sql.graftbridge.PlanBridge
-import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Per-query physical-plan fingerprints → `plans/fingerprints.json`:
   * `runMain graft.PlanAudit [sfDir]` (default: the sf0.01 dataset).
   *
   * Every certified query runs (sorted by name) in one session of
-  * [[Cores]] threads: its build, then a `noop` write of its result. A
-  * `QueryExecutionListener` sees every SQL execution those run — the
-  * final write, and the `localCheckpoint`s, counts and writes inside
-  * the build — and the query's fingerprint counts the executed
+  * [[Cores]] threads: its build, then a `noop` write of its result.
+  * [[WorkCounters.observe]] collects the plan of every SQL execution
+  * those run — the final write, and the `localCheckpoint`s, counts and
+  * writes inside the build — and the query's fingerprint counts the executed
   * physical nodes over all of them, subqueries included:
   * `executions`, then one entry per node class
   * (`ShuffleExchangeExec(HashPartitioning)` names its partitioning).
@@ -45,22 +41,15 @@ object PlanAudit extends AdaptiveSparkPlanHelper {
     val d = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val spark = Session.build(Cores)
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    val seen = mutable.ArrayBuffer.empty[SparkPlan]
-    spark.listenerManager.register(new QueryExecutionListener {
-      private def add(qe: QueryExecution): Unit = seen.synchronized(seen += qe.executedPlan)
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = add(qe)
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = add(qe)
-    })
     val lines = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, build) =>
-      val failed =
+      val (failed, work) = WorkCounters.observe(spark) {
         try { build(spark, d).write.format("noop").mode("overwrite").save(); None }
         catch { case e: Throwable => Some(e) }
-      PlanBridge.awaitListeners(spark)
-      val plans = seen.synchronized { val ps = seen.toList; seen.clear(); ps }
+      }
       failed.foreach(e => System.err.println(s"[planaudit] $name failed: $e"))
-      val counts = plans.flatMap(p => collectWithSubqueries(p) { case n => nodeName(n) })
+      val counts = work.plans.flatMap(p => collectWithSubqueries(p) { case n => nodeName(n) })
         .groupBy(identity).view.mapValues(_.size).toSeq.sorted
-      val fields = (("executions" -> plans.size) +: failed.map(_ => "failed" -> 1).toSeq) ++ counts
+      val fields = (("executions" -> work.plans.size) +: failed.map(_ => "failed" -> 1).toSeq) ++ counts
       s"\"$name\": " + fields.map { case (k, v) => s"\"$k\": $v" }.mkString("{", ", ", "}")
     }
     Files.createDirectories(Paths.get(Out).getParent)

@@ -674,11 +674,10 @@ object StreamCerts {
       // the streaming snapshot chain lands on the identical view
       incrAggSql),
 
-    // streaming observability (SURVEY "what's missing" #1): a
-    // StreamingQueryListener accumulates per-batch (batchId,
-    // inputRows, stateRows, watermark) into a DataFrame. Under
-    // AvailableNow + maxFilesPerTrigger=1 each batch is exactly one
-    // staged file, so the multiset of per-batch input-row counts is
+    // streaming observability (SURVEY "what's missing" #1):
+    // WorkCounters records per-batch (batchId, inputRows, stateRows,
+    // watermark) as a DataFrame. Under AvailableNow +
+    // maxFilesPerTrigger=1 each batch is exactly one staged file, so the multiset of per-batch input-row counts is
     // deterministic regardless of which order the source lists the
     // files — certified by sorting on the distinct-by-construction
     // counts (10% / 30% / 60% splits)
@@ -689,7 +688,7 @@ object StreamCerts {
         .map { case (n, pred) => s"$base/in/$n" -> (() =>
           orders.filter(pred).coalesce(1).write.parquet(s"$base/in/$n"))
         })
-      val (_, metrics) = graft.streaming.Metrics.observe(s) {
+      val (_, metrics) = WorkCounters.observe(s) {
         Drain.eachBatch(Drain.files(s, orders.schema, s"$base/in"), s"$base/ckpt") {
           (b, id) => b.write.mode("overwrite").parquet(s"$base/out/batch_$id")
         }
@@ -736,7 +735,7 @@ object StreamCerts {
         s"$base/in/f2" -> (() => ev.filter(col("event_id") % 10 === 0)
           .coalesce(1).write.parquet(s"$base/in/f2"))))
       val schema = s.read.parquet(s"$base/in/f0").schema
-      val (_, metrics) = graft.streaming.Metrics.observe(s) {
+      val (_, metrics) = WorkCounters.observe(s) {
         Drain.toParquet(Drain.files(s, schema, s"$base/in")
           .withWatermark("ts", "1 hour")
           .groupBy(window(col("ts"), "1 hour"), col("event_type"))

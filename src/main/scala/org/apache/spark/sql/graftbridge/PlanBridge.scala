@@ -15,9 +15,9 @@ object PlanBridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       session.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
-  /** Blocks until every event posted so far has reached its listeners
-    * (the bus is asynchronous), e.g. before reading what a
-    * `QueryExecutionListener` collected. */
+  /** Blocks until every event posted so far, streaming-query events
+    * included, has reached its listeners (the bus is asynchronous);
+    * throws `TimeoutException` after 60 s. */
   def awaitListeners(session: SparkSession): Unit =
-    session.sparkContext.listenerBus.waitUntilEmpty()
+    session.sparkContext.listenerBus.waitUntilEmpty(60000L)
 }

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -166,56 +164,20 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("SagaLoop: one streaming query per saga; the credits-only pass is one Spark job") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    import org.apache.spark.sql.streaming.StreamingQueryListener
-    import graft.streaming.{Metrics, SagaLoop}
+    import graft.streaming.SagaLoop
     val base = tmp("graft-saga-jobs")
-    val starts = new java.util.concurrent.atomic.AtomicInteger
-    val startCounter = new StreamingQueryListener {
-      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = {
-        starts.incrementAndGet(); ()
-      }
-      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
-      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-    }
-    // batch id of every job a micro-batch runs; a marker job run after
-    // the saga tells when the listener bus has delivered all of them
-    val marker = "graft.spec.marker"
-    val markerSeen = new java.util.concurrent.CountDownLatch(1)
-    val jobBatches = new java.util.concurrent.ConcurrentLinkedQueue[Long]
-    val jobCounter = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val props = Option(e.properties)
-        if (props.exists(_.getProperty(marker) != null)) markerSeen.countDown()
-        else props.flatMap(p => Option(p.getProperty("streaming.sql.batchId")))
-          .foreach(b => jobBatches.add(b.toLong))
-      }
-    }
-    Session.withConfs(spark, Session.RocksDbStateStore) {
+    val (passes, work) = Session.withConfs(spark, Session.RocksDbStateStore) {
       val seed = contendedSaga(base)
-      spark.streams.addListener(startCounter)
-      spark.sparkContext.addSparkListener(jobCounter)
-      try {
-        // observe returns once every query started inside has delivered
-        // its terminated event, so startCounter has seen every start
-        val (passes, _) = Metrics.observe(spark) {
-          SagaLoop.run(spark, s"$base/in", s"$base/verdicts", s"$base/ckpt", seed)
-        }
-        assert(passes === 2)
-        spark.sparkContext.setLocalProperty(marker, "1")
-        try spark.sparkContext.parallelize(Seq(1), 1).count()
-        finally spark.sparkContext.setLocalProperty(marker, null)
-        assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      } finally {
-        spark.sparkContext.removeSparkListener(jobCounter)
-        spark.streams.removeListener(startCounter)
+      WorkCounters.observe(spark) {
+        SagaLoop.run(spark, s"$base/in", s"$base/verdicts", s"$base/ckpt", seed)
       }
     }
+    assert(passes === 2)
     // (query starts, jobs of the credits-only batch 1): both passes ran
     // as micro-batches of one query, not as two query runs re-planning
     // and restoring state in between, and the credits-only pass denies
     // nothing, so its verdict write is its only job
-    assert((starts.get, jobBatches.asScala.count(_ == 1L)) === ((1, 1)))
+    assert((work.queryStarts, work.jobs.count(_.contains(1L))) === ((1, 1)))
   }
 
   test("SagaLoop: a rerun resumes from the checkpoint; state is seed minus PROCESSED demand") {
@@ -420,48 +382,6 @@ class StreamingSpec extends SparkSpec {
     val table = SnapshotIngest.finalState(spark, s"$base/table")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
     assert(table === Set((1L, "a", 10L), (2L, "b2", 21L), (3L, "c", 30L)))
-  }
-
-  test("Metrics listener: per-batch input rows across retry passes; state rows and watermark") {
-    import graft.streaming.{Metrics, RetryLoop}
-    val base = tmp("graft-metrics-spec")
-    val queue = Seq(("ok-1", false, 0), ("poison-1", true, 0))
-      .toDF("key", "bad", "attempts")
-    queue.coalesce(1).write.parquet(s"$base/in/seed")
-    val (passes, m) = Metrics.observe(spark) {
-      RetryLoop.run(spark, queue.schema, s"$base/in",
-        s"$base/delivered", s"$base/dlq", s"$base/ckpt", $"bad", maxAttempts = 3)
-    }
-    assert(passes === 3)
-    val f = m.frame(spark).filter($"input_rows" > 0)
-    // pass 1 sees the 2-row seed; the poison re-enqueues burn 2 more
-    // batches before the DLQ divert. NOTE numInputRows is rows READ in
-    // the trigger: foreachBatch bodies that run several actions rescan
-    // the source per action, so the counts are upper bounds there —
-    // the per-batch EXACT counts are certified by the single-action
-    // stream_metrics_counts oracle query instead
-    assert(f.count() === 3)
-    assert(f.select($"batch_id").collect().map(_.getLong(0)).sorted.toSeq
-      === Seq(0L, 1L, 2L))
-    // a stateful watermarked aggregation surfaces state size + watermark
-    val ev = Seq(
-      (1L, "2024-01-01 00:10:00"), (2L, "2024-01-01 00:20:00"),
-      (3L, "2024-01-01 02:30:00")).toDF("id", "ts_s")
-      .withColumn("ts", to_timestamp($"ts_s")).drop("ts_s")
-    ev.coalesce(1).write.parquet(s"$base/ev_in/g0")
-    val (_, m2) = Metrics.observe(spark) {
-      val q = spark.readStream.schema(ev.schema).parquet(s"$base/ev_in/*")
-        .withWatermark("ts", "10 minutes")
-        .groupBy(window($"ts", "1 hour")).count()
-        .writeStream.outputMode("update")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", s"$base/ev_ckpt")
-        .format("noop").start()
-      q.awaitTermination()
-    }
-    val f2 = m2.frame(spark)
-    assert(f2.agg(max($"state_rows")).head().getLong(0) === 2) // two live windows
-    assert(f2.filter($"watermark" =!= "").count() >= 1)
   }
 
   test("bucketed CDC state: a batch rewrites only touched buckets; equals batch apply") {
@@ -687,35 +607,10 @@ class StreamingSpec extends SparkSpec {
   }
 
   /** Runs `body` and counts, per micro-batch id, the completed stages that
-    * ran a state store (the `streaming.sql.batchId` job property names
-    * the batch of every job a streaming query runs). */
-  private def stateStageRuns(body: => Unit): Map[Long, Int] = {
-    import org.apache.spark.scheduler._
-    val batchOf = scala.collection.concurrent.TrieMap.empty[Int, Long]
-    val ran = new java.util.concurrent.ConcurrentLinkedQueue[Int]
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val props = Option(e.properties)
-        props.flatMap(p => Option(p.getProperty("streaming.sql.batchId")))
-          .foreach(b => e.stageIds.foreach(batchOf.put(_, b.toLong)))
-        if (props.exists(_.getProperty("graft.test.marker") != null)) drained.countDown()
-      }
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-        if (e.stageInfo.rddInfos.exists(_.name.contains("StateStore"))) ran.add(e.stageInfo.stageId)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      // the bus delivers events in order: once a marker job's start
-      // arrives, every event of `body` has arrived before it
-      spark.sparkContext.setLocalProperty("graft.test.marker", "1")
-      try spark.sparkContext.parallelize(Seq(1), 1).count()
-      finally spark.sparkContext.setLocalProperty("graft.test.marker", null)
-      assert(drained.await(30, java.util.concurrent.TimeUnit.SECONDS))
-    } finally spark.sparkContext.removeSparkListener(listener)
-    ran.asScala.toSeq.flatMap(batchOf.get).groupBy(identity).map { case (b, ss) => b -> ss.size }
-  }
+    * ran a state store. */
+  private def stateStageRuns(body: => Unit): Map[Long, Int] =
+    WorkCounters.observe(spark)(body)._2.stages.filter(_.stateStore).flatMap(_.batchId)
+      .groupBy(identity).map { case (b, ss) => b -> ss.size }
 
   private def inventoryVersions(dir: String): Seq[String] =
     new java.io.File(dir).list().filter(_.startsWith("v")).sortBy(_.drop(1).toLong).toSeq

@@ -3,7 +3,7 @@
 round's adjudication starts from it), so its format matrix is pinned
 here: the r18 compact line (cpu/spk/rpt/errt), the r16-r17 compact
 line (probes pairs), the pre-r16 named tail, the full-precision
-target/bench.json shape, offset reconstruction (incl. errored-wall
+target/bench.json shape (with and without its `counters` object), offset reconstruction (incl. errored-wall
 conservation and post-suite tagging), wall-conserving totals, and the
 repeat labels. Run: python3 tools/test_decode_bench.py (exit 0 = pass).
 
@@ -153,6 +153,26 @@ def main():
     check("full-precision: err_wall reaches the wall-conserving total",
           abs(decode_bench._wall_total(r) - (12.5 + 2.0 + 33.0)) < 1e-6,
           f"got {decode_bench._wall_total(r)}")
+
+    # a target/bench.json that carries per-query work counters decodes
+    # to the same times and calib as one without: the counters sit in
+    # one nested object, never as top-level *_sec keys
+    full = json.load(open(fp))
+    full["counters"] = {
+        "a_q": {"jobs": 3, "stages": 5, "tasks": 20,
+                "shuffle_read_bytes": 100, "shuffle_write_bytes": 100,
+                "input_records": 7, "spill_bytes": 0, "batches": 2,
+                "duration_ms": {"addBatch": 40, "triggerExecution": 90}},
+        "b_q": {"jobs": 1, "stages": 1, "tasks": 4,
+                "shuffle_read_bytes": 0, "shuffle_write_bytes": 0,
+                "input_records": 7, "spill_bytes": 0, "batches": 0}}
+    fcp = os.path.join(tmp, "full_counters.json")
+    json.dump(full, open(fcp, "w"))
+    rc = decode_bench.load_round(fcp, cp)
+    check("full-precision: counters change neither times nor calib",
+          rc["times"] == r["times"] and rc["calib"] == r["calib"] and
+          rc["repeats"] == r["repeats"],
+          f"times {rc['times']} calib {rc['calib']}")
 
     # --- show_vs repeat labels ---
     (bp, cp), names = r18_round(tmp)
