@@ -31,6 +31,10 @@ object Session {
     // (see docs/BENCH_NOTES.md)
     "spark.cleaner.periodicGC.interval" -> "60s",
     "spark.ui.enabled" -> "false",
+    // `events.ts` ships as parquet TIMESTAMP(NANOS) in some testdata
+    // generations, which Spark's reader rejects unless it reads the
+    // nanos as raw longs; `sources.Tables.events` converts them
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     // graft's planner rules, strategy and SQL functions, installed the
     // way a deployment installs them: the rules run inside the
     // fixed-point Operator Optimization batch of every query

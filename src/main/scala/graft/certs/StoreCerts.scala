@@ -11,6 +11,7 @@ import graft.certs.TextCerts.{bm25TopkSql, bm25TopkSqlOver, mixShares, mixShares
 import graft.ops.Sampling
 import graft.queries.StarQueries
 import graft.sources.Tables
+import graft.sources.segment.GraftCatalog.withCatalog
 
 /** Storage certificates: layouts, table maintenance, CDC, privacy
   * transforms and the graft-segment table format. */
@@ -365,16 +366,7 @@ object StoreCerts {
     // (exchange-free plan asserted in GraftCatalogSpec; this row
     // certifies the aligned join's RESULTS against the plain oracle)
     Cert("store_segment_spj_join", (s, d) => withTempDir("graft-spj") { base =>
-      // a FRESH catalog name per invocation: Spark instantiates catalog
-      // plugins once per name, so re-running in one session (bench
-      // warm-up, scale probes) must not reuse a stale warehouse
-      val cat = s"graft_spj_${segCatalogSeq.incrementAndGet()}"
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.segment.GraftCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", s"$base/wh")
-      val olds = Seq("spark.sql.sources.v2.bucketing.enabled",
-        "spark.sql.autoBroadcastJoinThreshold").map(k => k -> s.conf.getOption(k))
-      try {
+      withCatalog(s, s"$base/wh") { cat =>
         s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.db")
         Tables.orders(s, d).createOrReplaceTempView("graft_spj_orders_src")
         Tables.customer(s, d).createOrReplaceTempView("graft_spj_customer_src")
@@ -386,16 +378,15 @@ object StoreCerts {
           "PARTITIONED BY (bucket(8, c_custkey))")
         s.sql(s"INSERT INTO $cat.db.c SELECT c_custkey, c_mktsegment " +
           "FROM graft_spj_customer_src")
-        s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        s.sql(
-          s"""SELECT c.c_mktsegment, count(*) AS n_orders, sum(o.cents) AS sum_cents
-            |FROM $cat.db.o o JOIN $cat.db.c c ON o.o_custkey = c.c_custkey
-            |GROUP BY c.c_mktsegment ORDER BY c.c_mktsegment""".stripMargin)
-          .localCheckpoint(true)
-      } finally olds.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
+        Session.withConfs(s,
+            "spark.sql.sources.v2.bucketing.enabled" -> "true",
+            "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+          s.sql(
+            s"""SELECT c.c_mktsegment, count(*) AS n_orders, sum(o.cents) AS sum_cents
+              |FROM $cat.db.o o JOIN $cat.db.c c ON o.o_custkey = c.c_custkey
+              |GROUP BY c.c_mktsegment ORDER BY c.c_mktsegment""".stripMargin)
+            .localCheckpoint(true)
+        }
       }
     },
       // the exchange-free bucket-aligned join must equal the plain join
@@ -611,28 +602,26 @@ object StoreCerts {
     // by reference, one manifest commit swaps the rest. Oracle = the
     // three-branch relational reconstruction over the same inputs
     Cert("store_segment_merge", (s, d) => withTempDir("graft-segmrg") { base =>
-      val cat = s"graft_mrg_${segCatalogSeq.incrementAndGet()}"
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.segment.GraftCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", s"$base/wh")
-      s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.db")
-      Tables.orders(s, d).createOrReplaceTempView("graft_mrg_orders_src")
-      s.sql(s"CREATE TABLE $cat.db.t (k BIGINT, cents BIGINT) " +
-        "TBLPROPERTIES ('clusterBy'='k', 'numPartitions'='8')")
-      s.sql(s"INSERT INTO $cat.db.t SELECT o_orderkey, " +
-        "CAST(round(o_totalprice * 100, 0) AS BIGINT) FROM graft_mrg_orders_src " +
-        "WHERE o_orderkey % 3 = 0")
-      s.sql("CREATE OR REPLACE TEMP VIEW graft_mrg_delta AS " +
-        "SELECT o_orderkey AS k, CAST(round(o_totalprice * 100, 0) AS BIGINT) + 11 AS cents, " +
-        "CASE WHEN o_orderkey % 4 = 0 THEN 'D' ELSE 'U' END AS op " +
-        "FROM graft_mrg_orders_src WHERE o_orderkey % 2 = 0")
-      s.sql(
-        s"""MERGE INTO $cat.db.t t USING graft_mrg_delta s ON t.k = s.k
-          |WHEN MATCHED AND s.op = 'D' THEN DELETE
-          |WHEN MATCHED THEN UPDATE SET cents = s.cents
-          |WHEN NOT MATCHED AND s.op <> 'D' THEN INSERT (k, cents) VALUES (s.k, s.cents)
-          |""".stripMargin)
-      s.sql(s"SELECT k, cents FROM $cat.db.t ORDER BY k").localCheckpoint(true)
+      withCatalog(s, s"$base/wh") { cat =>
+        s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.db")
+        Tables.orders(s, d).createOrReplaceTempView("graft_mrg_orders_src")
+        s.sql(s"CREATE TABLE $cat.db.t (k BIGINT, cents BIGINT) " +
+          "TBLPROPERTIES ('clusterBy'='k', 'numPartitions'='8')")
+        s.sql(s"INSERT INTO $cat.db.t SELECT o_orderkey, " +
+          "CAST(round(o_totalprice * 100, 0) AS BIGINT) FROM graft_mrg_orders_src " +
+          "WHERE o_orderkey % 3 = 0")
+        s.sql("CREATE OR REPLACE TEMP VIEW graft_mrg_delta AS " +
+          "SELECT o_orderkey AS k, CAST(round(o_totalprice * 100, 0) AS BIGINT) + 11 AS cents, " +
+          "CASE WHEN o_orderkey % 4 = 0 THEN 'D' ELSE 'U' END AS op " +
+          "FROM graft_mrg_orders_src WHERE o_orderkey % 2 = 0")
+        s.sql(
+          s"""MERGE INTO $cat.db.t t USING graft_mrg_delta s ON t.k = s.k
+            |WHEN MATCHED AND s.op = 'D' THEN DELETE
+            |WHEN MATCHED THEN UPDATE SET cents = s.cents
+            |WHEN NOT MATCHED AND s.op <> 'D' THEN INSERT (k, cents) VALUES (s.k, s.cents)
+            |""".stripMargin)
+        s.sql(s"SELECT k, cents FROM $cat.db.t ORDER BY k").localCheckpoint(true)
+      }
     },
       // MERGE ≡ unmatched-target ∪ updated-matches ∪ inserted-source
       ("WITH t AS (SELECT o_orderkey AS k, CAST(round(o_totalprice * 100, 0) AS BIGINT) AS cents " +
@@ -1268,25 +1257,23 @@ object StoreCerts {
     // the oracle states. Nothing in this query touches the Scala
     // maintenance API directly
     Cert("store_segment_call", (s, d) => withTempDir("graft-segcall") { base =>
-      val cat = s"graft_call_${segCatalogSeq.incrementAndGet()}"
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.segment.GraftCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", s"$base/wh")
-      s.sql(s"CREATE NAMESPACE $cat.db")
-      s.sql(s"CREATE TABLE $cat.db.t (k BIGINT, cents BIGINT) " +
-        "TBLPROPERTIES ('clusterBy'='k', 'numPartitions'='4')")
-      Tables.orders(s, d).createOrReplaceTempView("graft_call_orders")
-      def ins(r: Int): Unit = s.sql(s"INSERT INTO $cat.db.t " +
-        "SELECT o_orderkey, CAST(round(o_totalprice * 100, 0) AS BIGINT) " +
-        s"FROM graft_call_orders WHERE o_orderkey % 3 = $r")
-      ins(0); ins(1)                                      // v1, v2
-      s.sql(s"CALL $cat.system.compact('db.t', 'k', 2)")  // v3
-      ins(2)                                              // v4
-      // commit_ts projected away — the E4 exclusion (see
-      // store_segment_history); the spec certifies the timestamp face
-      s.sql(s"CALL $cat.system.history('db.t')")
-        .select("version", "kind", "n_segments", "n_rows")
-        .orderBy(col("version"))
+      withCatalog(s, s"$base/wh") { cat =>
+        s.sql(s"CREATE NAMESPACE $cat.db")
+        s.sql(s"CREATE TABLE $cat.db.t (k BIGINT, cents BIGINT) " +
+          "TBLPROPERTIES ('clusterBy'='k', 'numPartitions'='4')")
+        Tables.orders(s, d).createOrReplaceTempView("graft_call_orders")
+        def ins(r: Int): Unit = s.sql(s"INSERT INTO $cat.db.t " +
+          "SELECT o_orderkey, CAST(round(o_totalprice * 100, 0) AS BIGINT) " +
+          s"FROM graft_call_orders WHERE o_orderkey % 3 = $r")
+        ins(0); ins(1)                                      // v1, v2
+        s.sql(s"CALL $cat.system.compact('db.t', 'k', 2)")  // v3
+        ins(2)                                              // v4
+        // commit_ts projected away — the E4 exclusion (see
+        // store_segment_history); the spec certifies the timestamp face
+        s.sql(s"CALL $cat.system.history('db.t')")
+          .select("version", "kind", "n_segments", "n_rows")
+          .orderBy(col("version"))
+      }
     },
       ("WITH src AS (SELECT o_orderkey AS k FROM orders), " +
         "n0 AS (SELECT count(*) AS c FROM src WHERE k % 3 = 0), " +
@@ -1311,39 +1298,37 @@ object StoreCerts {
     // source rows, so a wrong bound reduce, null count, canonical
     // render, sketch estimate or byte sum shows up as a cell diff
     Cert("store_segment_stats", (s, d) => withTempDir("graft-segstats") { base =>
-      val cat = s"graft_stats_${segCatalogSeq.incrementAndGet()}"
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.segment.GraftCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", s"$base/wh")
-      s.sql(s"CREATE NAMESPACE $cat.db")
-      s.sql(s"CREATE TABLE $cat.db.t (doc_id BIGINT, lang STRING, d DATE, " +
-        // meta.title: dotted STRING len_sum/len_max ride the nested
-        // collectors (r16 certifies the avgLen path through structs —
-        // the byte-weighted row-width input for nested text)
-        "ts TIMESTAMP, name STRING, blob BINARY, meta STRUCT<title: STRING>) " +
-        // histFor rides along (r15): hist_ndv serves the frequency
-        // map's EXACT distinct count for declared columns, NULL for
-        // the rest — the oracle recomputes it as count(DISTINCT ...).
-        // Only modulo-BOUNDED columns are declared: ts is injective
-        // (distinct = row count), so its per-segment map would poison
-        // past the cap at larger sf and the oracle's count(DISTINCT)
-        // would diverge — d's <=900 and name's <=50 distinct hold at
-        // ANY scale, which is the cap doctrine this certificate exists
-        // to certify (name also covers the r16 STRING arm reaching
-        // hist_ndv; its NULLs stay out of both map and COUNT DISTINCT)
-        "TBLPROPERTIES ('ndvFor'='lang', 'histFor'='d,name', " +
-        "'clusterBy'='doc_id', 'numPartitions'='4')")
-      Tables.documents(s, d).createOrReplaceTempView("graft_stats_docs")
-      s.sql(s"INSERT INTO $cat.db.t SELECT doc_id, lang, " +
-        "date_add(DATE'2020-01-01', CAST(doc_id % 900 AS INT)), " +
-        "timestamp_micros(doc_id * 1000000 + doc_id % 777), " +
-        "CASE WHEN doc_id % 97 = 0 THEN NULL " +
-        "ELSE concat('n', lpad(CAST(doc_id % 50 AS STRING), 4, '0')) END, " +
-        "encode(concat('b', CAST(doc_id % 10 AS STRING)), 'utf-8'), " +
-        "named_struct('title', CASE WHEN doc_id % 11 = 0 THEN NULL " +
-        "ELSE repeat('y', CAST(doc_id % 5 AS INT)) END) " +
-        "FROM graft_stats_docs")
-      s.sql(s"CALL $cat.system.stats('db.t')").orderBy(col("col_name"))
+      withCatalog(s, s"$base/wh") { cat =>
+        s.sql(s"CREATE NAMESPACE $cat.db")
+        s.sql(s"CREATE TABLE $cat.db.t (doc_id BIGINT, lang STRING, d DATE, " +
+          // meta.title: dotted STRING len_sum/len_max ride the nested
+          // collectors (r16 certifies the avgLen path through structs —
+          // the byte-weighted row-width input for nested text)
+          "ts TIMESTAMP, name STRING, blob BINARY, meta STRUCT<title: STRING>) " +
+          // histFor rides along (r15): hist_ndv serves the frequency
+          // map's EXACT distinct count for declared columns, NULL for
+          // the rest — the oracle recomputes it as count(DISTINCT ...).
+          // Only modulo-BOUNDED columns are declared: ts is injective
+          // (distinct = row count), so its per-segment map would poison
+          // past the cap at larger sf and the oracle's count(DISTINCT)
+          // would diverge — d's <=900 and name's <=50 distinct hold at
+          // ANY scale, which is the cap doctrine this certificate exists
+          // to certify (name also covers the r16 STRING arm reaching
+          // hist_ndv; its NULLs stay out of both map and COUNT DISTINCT)
+          "TBLPROPERTIES ('ndvFor'='lang', 'histFor'='d,name', " +
+          "'clusterBy'='doc_id', 'numPartitions'='4')")
+        Tables.documents(s, d).createOrReplaceTempView("graft_stats_docs")
+        s.sql(s"INSERT INTO $cat.db.t SELECT doc_id, lang, " +
+          "date_add(DATE'2020-01-01', CAST(doc_id % 900 AS INT)), " +
+          "timestamp_micros(doc_id * 1000000 + doc_id % 777), " +
+          "CASE WHEN doc_id % 97 = 0 THEN NULL " +
+          "ELSE concat('n', lpad(CAST(doc_id % 50 AS STRING), 4, '0')) END, " +
+          "encode(concat('b', CAST(doc_id % 10 AS STRING)), 'utf-8'), " +
+          "named_struct('title', CASE WHEN doc_id % 11 = 0 THEN NULL " +
+          "ELSE repeat('y', CAST(doc_id % 5 AS INT)) END) " +
+          "FROM graft_stats_docs")
+        s.sql(s"CALL $cat.system.stats('db.t')").orderBy(col("col_name"))
+      }
     },
       // every stats cell recomputed from the source rows: bounds are
       // true min/max (ISO date / epoch-micros renders match the
@@ -1403,35 +1388,33 @@ object StoreCerts {
     // from the source rows — the map is EXACT within the caps, so this
     // replay certifies collection, merge and the commit pre-merge
     Cert("store_segment_hist", (s, d) => withTempDir("graft-seghist") { base =>
-      val cat = s"graft_hist_${segCatalogSeq.incrementAndGet()}"
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.segment.GraftCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", s"$base/wh")
-      s.sql(s"CREATE NAMESPACE $cat.db")
-      s.sql(s"CREATE TABLE $cat.db.t (doc_id BIGINT, bucket INT, d DATE, " +
-        "ts TIMESTAMP, money DECIMAL(12,2), meta STRUCT<code: INT>, " +
-        // the STRING arm (r16): engine-local maps, value = the string
-        // itself in UTF-8 byte order; <=29 distinct at ANY scale (the
-        // cap doctrine), served in value_str beside the long canonicals
-        "tag STRING) " +
-        "TBLPROPERTIES ('histFor'='bucket,d,money,ts,meta.code,tag', " +
-        "'clusterBy'='doc_id', 'numPartitions'='4')")
-      Tables.documents(s, d).createOrReplaceTempView("graft_hist_docs")
-      // two INSERTs: the second exercises the append-only pre-merge
-      // fast path (merged-at-commit ≡ merge-of-per-segment either way)
-      Seq("= 0", "<> 0").foreach { pred =>
-        s.sql(s"INSERT INTO $cat.db.t SELECT doc_id, " +
-          "CAST(doc_id % 37 AS INT), " +
-          "date_add(DATE'2021-06-01', CAST(doc_id % 45 AS INT)), " +
-          "timestamp_micros((doc_id % 23) * 1000000), " +
-          // DECIMAL rides as its UNSCALED long: (doc_id%50)*100 + 25
-          "CAST(doc_id % 50 AS DECIMAL(10,2)) + CAST(0.25 AS DECIMAL(3,2)), " +
-          "named_struct('code', CAST(doc_id % 11 AS INT)), " +
-          "concat('t', lpad(CAST(doc_id % 29 AS STRING), 2, '0')) " +
-          s"FROM graft_hist_docs WHERE doc_id % 2 $pred")
+      withCatalog(s, s"$base/wh") { cat =>
+        s.sql(s"CREATE NAMESPACE $cat.db")
+        s.sql(s"CREATE TABLE $cat.db.t (doc_id BIGINT, bucket INT, d DATE, " +
+          "ts TIMESTAMP, money DECIMAL(12,2), meta STRUCT<code: INT>, " +
+          // the STRING arm (r16): engine-local maps, value = the string
+          // itself in UTF-8 byte order; <=29 distinct at ANY scale (the
+          // cap doctrine), served in value_str beside the long canonicals
+          "tag STRING) " +
+          "TBLPROPERTIES ('histFor'='bucket,d,money,ts,meta.code,tag', " +
+          "'clusterBy'='doc_id', 'numPartitions'='4')")
+        Tables.documents(s, d).createOrReplaceTempView("graft_hist_docs")
+        // two INSERTs: the second exercises the append-only pre-merge
+        // fast path (merged-at-commit ≡ merge-of-per-segment either way)
+        Seq("= 0", "<> 0").foreach { pred =>
+          s.sql(s"INSERT INTO $cat.db.t SELECT doc_id, " +
+            "CAST(doc_id % 37 AS INT), " +
+            "date_add(DATE'2021-06-01', CAST(doc_id % 45 AS INT)), " +
+            "timestamp_micros((doc_id % 23) * 1000000), " +
+            // DECIMAL rides as its UNSCALED long: (doc_id%50)*100 + 25
+            "CAST(doc_id % 50 AS DECIMAL(10,2)) + CAST(0.25 AS DECIMAL(3,2)), " +
+            "named_struct('code', CAST(doc_id % 11 AS INT)), " +
+            "concat('t', lpad(CAST(doc_id % 29 AS STRING), 2, '0')) " +
+            s"FROM graft_hist_docs WHERE doc_id % 2 $pred")
+        }
+        s.sql(s"CALL $cat.system.histogram('db.t')")
+          .orderBy(col("col_name"), col("value"), col("value_str"))
       }
-      s.sql(s"CALL $cat.system.histogram('db.t')")
-        .orderBy(col("col_name"), col("value"), col("value_str"))
     },
       // every (column, value, count) of the manifest frequency maps
       // recomputed from the source rows: values are the long canonicals —
@@ -1460,22 +1443,20 @@ object StoreCerts {
     // oracle replays the FULL corpus (the pre-delete truth the maps
     // hold) with exact = false
     Cert("store_segment_hist_dv", (s, d) => withTempDir("graft-seghistdv") { base =>
-      val cat = s"graft_histdv_${segCatalogSeq.incrementAndGet()}"
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.segment.GraftCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", s"$base/wh")
-      s.sql(s"CREATE NAMESPACE $cat.db")
-      s.sql(s"CREATE TABLE $cat.db.t (doc_id BIGINT, bucket INT, tag STRING) " +
-        "TBLPROPERTIES ('histFor'='bucket,tag', " +
-        "'clusterBy'='doc_id', 'numPartitions'='4')")
-      Tables.documents(s, d).createOrReplaceTempView("graft_histdv_docs")
-      s.sql(s"INSERT INTO $cat.db.t SELECT doc_id, " +
-        "CAST(doc_id % 19 AS INT), " +
-        "concat('t', lpad(CAST(doc_id % 23 AS STRING), 2, '0')) " +
-        "FROM graft_histdv_docs")
-      s.sql(s"CALL $cat.system.delete_mark('db.t', 'doc_id % 3 = 0')").collect()
-      s.sql(s"CALL $cat.system.histogram('db.t')")
-        .orderBy(col("col_name"), col("value"), col("value_str"))
+      withCatalog(s, s"$base/wh") { cat =>
+        s.sql(s"CREATE NAMESPACE $cat.db")
+        s.sql(s"CREATE TABLE $cat.db.t (doc_id BIGINT, bucket INT, tag STRING) " +
+          "TBLPROPERTIES ('histFor'='bucket,tag', " +
+          "'clusterBy'='doc_id', 'numPartitions'='4')")
+        Tables.documents(s, d).createOrReplaceTempView("graft_histdv_docs")
+        s.sql(s"INSERT INTO $cat.db.t SELECT doc_id, " +
+          "CAST(doc_id % 19 AS INT), " +
+          "concat('t', lpad(CAST(doc_id % 23 AS STRING), 2, '0')) " +
+          "FROM graft_histdv_docs")
+        s.sql(s"CALL $cat.system.delete_mark('db.t', 'doc_id % 3 = 0')").collect()
+        s.sql(s"CALL $cat.system.histogram('db.t')")
+          .orderBy(col("col_name"), col("value"), col("value_str"))
+      }
     },
       // the DV annotation: delete_mark leaves rows dv'd (not rewritten),
       // the maps keep the PRE-delete mass, and exact = false says so —
@@ -1496,27 +1477,25 @@ object StoreCerts {
     // statistic exists for) and one uniform decimal (unscaled-long
     // canonical)
     Cert("store_segment_quantiles", (s, d) => withTempDir("graft-segq") { base =>
-      val cat = s"graft_quant_${segCatalogSeq.incrementAndGet()}"
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.segment.GraftCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", s"$base/wh")
-      s.sql(s"CREATE NAMESPACE $cat.db")
-      s.sql(s"CREATE TABLE $cat.db.t (doc_id BIGINT, bucket INT, " +
-        "money DECIMAL(12,2), " +
-        // the STRING arm: 80%-hot tag — the byte-order discrete
-        // quantile (= DuckDB's default binary collation ORDER BY)
-        "tag STRING) " +
-        "TBLPROPERTIES ('histFor'='bucket,money,tag', " +
-        "'clusterBy'='doc_id', 'numPartitions'='4')")
-      Tables.documents(s, d).createOrReplaceTempView("graft_quant_docs")
-      s.sql(s"INSERT INTO $cat.db.t SELECT doc_id, " +
-        "CASE WHEN doc_id % 4 < 3 THEN 7 ELSE CAST(doc_id % 37 AS INT) END, " +
-        "CAST(doc_id % 50 AS DECIMAL(10,2)) + CAST(0.25 AS DECIMAL(3,2)), " +
-        "CASE WHEN doc_id % 5 < 4 THEN 'hot' " +
-        "ELSE concat('c', lpad(CAST(doc_id % 13 AS STRING), 2, '0')) END " +
-        "FROM graft_quant_docs")
-      s.sql(s"CALL $cat.system.quantiles('db.t', '0.1,0.5,0.9,0.99')")
-        .orderBy(col("col_name"), col("q"))
+      withCatalog(s, s"$base/wh") { cat =>
+        s.sql(s"CREATE NAMESPACE $cat.db")
+        s.sql(s"CREATE TABLE $cat.db.t (doc_id BIGINT, bucket INT, " +
+          "money DECIMAL(12,2), " +
+          // the STRING arm: 80%-hot tag — the byte-order discrete
+          // quantile (= DuckDB's default binary collation ORDER BY)
+          "tag STRING) " +
+          "TBLPROPERTIES ('histFor'='bucket,money,tag', " +
+          "'clusterBy'='doc_id', 'numPartitions'='4')")
+        Tables.documents(s, d).createOrReplaceTempView("graft_quant_docs")
+        s.sql(s"INSERT INTO $cat.db.t SELECT doc_id, " +
+          "CASE WHEN doc_id % 4 < 3 THEN 7 ELSE CAST(doc_id % 37 AS INT) END, " +
+          "CAST(doc_id % 50 AS DECIMAL(10,2)) + CAST(0.25 AS DECIMAL(3,2)), " +
+          "CASE WHEN doc_id % 5 < 4 THEN 'hot' " +
+          "ELSE concat('c', lpad(CAST(doc_id % 13 AS STRING), 2, '0')) END " +
+          "FROM graft_quant_docs")
+        s.sql(s"CALL $cat.system.quantiles('db.t', '0.1,0.5,0.9,0.99')")
+          .orderBy(col("col_name"), col("q"))
+      }
     },
       // the same discrete rule — value at row ceil(q×N) in value order —
       // replayed as a windowed cumulative sum over the source rows
@@ -1548,31 +1527,29 @@ object StoreCerts {
     // same arithmetic — ceil(hottest count / target), clamped —
     // computed from the source rows the manifest maps equal
     Cert("store_segment_salts", (s, d) => withTempDir("graft-segsalts") { base =>
-      val cat = s"graft_salts_${segCatalogSeq.incrementAndGet()}"
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.segment.GraftCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", s"$base/wh")
-      s.sql(s"CREATE NAMESPACE $cat.db")
-      s.sql(s"CREATE TABLE $cat.db.t (k BIGINT, tag STRING) " +
-        "TBLPROPERTIES ('histFor'='k,tag', " +
-        "'clusterBy'='k', 'numPartitions'='4')")
-      Tables.documents(s, d).createOrReplaceTempView("graft_salts_docs")
-      s.sql(s"INSERT INTO $cat.db.t SELECT " +
-        "CASE WHEN doc_id % 4 < 3 THEN 7 ELSE doc_id % 97 END, " +
-        "CASE WHEN doc_id % 5 < 4 THEN 'hot' " +
-        "ELSE concat('c', lpad(CAST(doc_id % 13 AS STRING), 2, '0')) END " +
-        "FROM graft_salts_docs")
-      // the composite arm (r18) runs at a DIFFERENT target (30) so
-      // min(ceil(hot_k/30), ceil(hot_tag/30)) cannot coincide with
-      // either single-column arm's value at 50 — the oracle's min
-      // replay genuinely discriminates; the fourth arm includes an
-      // undeclared column, which contributes no bound (not a veto)
-      (Seq(("k", 50), ("tag", 50), ("k,tag", 30), ("k,nodecl", 50)).map {
-        case (c, target) =>
-          s.sql(s"CALL $cat.system.salts('db.t', '$c', $target)")
-            .select(lit(c).as("col_name"), col("salts"), col("derived"),
-              col("exact"))
-      }).reduce(_.unionByName(_)).orderBy(col("col_name"))
+      withCatalog(s, s"$base/wh") { cat =>
+        s.sql(s"CREATE NAMESPACE $cat.db")
+        s.sql(s"CREATE TABLE $cat.db.t (k BIGINT, tag STRING) " +
+          "TBLPROPERTIES ('histFor'='k,tag', " +
+          "'clusterBy'='k', 'numPartitions'='4')")
+        Tables.documents(s, d).createOrReplaceTempView("graft_salts_docs")
+        s.sql(s"INSERT INTO $cat.db.t SELECT " +
+          "CASE WHEN doc_id % 4 < 3 THEN 7 ELSE doc_id % 97 END, " +
+          "CASE WHEN doc_id % 5 < 4 THEN 'hot' " +
+          "ELSE concat('c', lpad(CAST(doc_id % 13 AS STRING), 2, '0')) END " +
+          "FROM graft_salts_docs")
+        // the composite arm (r18) runs at a DIFFERENT target (30) so
+        // min(ceil(hot_k/30), ceil(hot_tag/30)) cannot coincide with
+        // either single-column arm's value at 50 — the oracle's min
+        // replay genuinely discriminates; the fourth arm includes an
+        // undeclared column, which contributes no bound (not a veto)
+        (Seq(("k", 50), ("tag", 50), ("k,tag", 30), ("k,nodecl", 50)).map {
+          case (c, target) =>
+            s.sql(s"CALL $cat.system.salts('db.t', '$c', $target)")
+              .select(lit(c).as("col_name"), col("salts"), col("derived"),
+                col("exact"))
+        }).reduce(_.unionByName(_)).orderBy(col("col_name"))
+      }
     },
       // the derived fan-out replayed from source rows: the manifest maps
       // are the exact GROUP BY, so the hottest count is too
@@ -1605,32 +1582,30 @@ object StoreCerts {
     // certifies the honesty path (NULL, never a uniform-assumption
     // guess). At 100 TB the alternative is running the join to size it
     Cert("store_join_estimate", (s, d) => withTempDir("graft-jest") { base =>
-      val cat = s"graft_jest_${segCatalogSeq.incrementAndGet()}"
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.segment.GraftCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", s"$base/wh")
-      s.sql(s"CREATE NAMESPACE $cat.db")
-      s.sql(s"CREATE TABLE $cat.db.a (k BIGINT, tag STRING, u BIGINT) " +
-        "TBLPROPERTIES ('histFor'='k,tag')")
-      s.sql(s"CREATE TABLE $cat.db.b (k BIGINT, tag STRING, u BIGINT) " +
-        "TBLPROPERTIES ('histFor'='k,tag')")
-      Tables.documents(s, d).createOrReplaceTempView("graft_jest_docs")
-      s.sql(s"INSERT INTO $cat.db.a SELECT " +
-        "CASE WHEN doc_id % 4 < 3 THEN 7 ELSE doc_id % 97 END, " +
-        "CASE WHEN doc_id % 5 < 4 THEN 'hot' " +
-        "ELSE concat('c', lpad(CAST(doc_id % 13 AS STRING), 2, '0')) END, " +
-        "doc_id FROM graft_jest_docs")
-      s.sql(s"INSERT INTO $cat.db.b SELECT doc_id % 13, " +
-        "CASE WHEN doc_id % 3 = 0 THEN 'hot' " +
-        "ELSE concat('c', lpad(CAST(doc_id % 20 AS STRING), 2, '0')) END, " +
-        "doc_id FROM graft_jest_docs")
-      Seq(("k_long", "k", "k"), ("tag_str", "tag", "tag"),
-          ("undeclared", "u", "u")).map { case (probe, colA, colB) =>
-          s.sql(s"CALL $cat.system.join_estimate('db.a', '$colA', 'db.b', '$colB')")
-            .select(lit(probe).as("probe"), col("n_rows"), col("derived"),
-              col("exact"))
-        }
-        .reduce(_.unionByName(_)).orderBy(col("probe"))
+      withCatalog(s, s"$base/wh") { cat =>
+        s.sql(s"CREATE NAMESPACE $cat.db")
+        s.sql(s"CREATE TABLE $cat.db.a (k BIGINT, tag STRING, u BIGINT) " +
+          "TBLPROPERTIES ('histFor'='k,tag')")
+        s.sql(s"CREATE TABLE $cat.db.b (k BIGINT, tag STRING, u BIGINT) " +
+          "TBLPROPERTIES ('histFor'='k,tag')")
+        Tables.documents(s, d).createOrReplaceTempView("graft_jest_docs")
+        s.sql(s"INSERT INTO $cat.db.a SELECT " +
+          "CASE WHEN doc_id % 4 < 3 THEN 7 ELSE doc_id % 97 END, " +
+          "CASE WHEN doc_id % 5 < 4 THEN 'hot' " +
+          "ELSE concat('c', lpad(CAST(doc_id % 13 AS STRING), 2, '0')) END, " +
+          "doc_id FROM graft_jest_docs")
+        s.sql(s"INSERT INTO $cat.db.b SELECT doc_id % 13, " +
+          "CASE WHEN doc_id % 3 = 0 THEN 'hot' " +
+          "ELSE concat('c', lpad(CAST(doc_id % 20 AS STRING), 2, '0')) END, " +
+          "doc_id FROM graft_jest_docs")
+        Seq(("k_long", "k", "k"), ("tag_str", "tag", "tag"),
+            ("undeclared", "u", "u")).map { case (probe, colA, colB) =>
+            s.sql(s"CALL $cat.system.join_estimate('db.a', '$colA', 'db.b', '$colB')")
+              .select(lit(probe).as("probe"), col("n_rows"), col("derived"),
+                col("exact"))
+          }
+          .reduce(_.unionByName(_)).orderBy(col("probe"))
+      }
     },
       // the metadata-derived join counts replayed as the ACTUAL joins
       ("WITH a AS (SELECT CASE WHEN doc_id % 4 < 3 THEN 7 " +
@@ -1730,12 +1705,10 @@ object StoreCerts {
             .otherwise(concat(lit("s"), col("doc_id") % 7)).as("src"))
         .write.format("graft-segment").option("histFor", "src")
         .mode("append").save(dir)
-      val cat = s"graft_mixr_${segCatalogSeq.incrementAndGet()}"
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.segment.GraftCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", s"$base/wh")
-      s.sql(s"CALL $cat.system.mixture_rates('$dir', 'src', 0.5)")
-        .orderBy(col("value"))
+      withCatalog(s, s"$base/wh") { cat =>
+        s.sql(s"CALL $cat.system.mixture_rates('$dir', 'src', 0.5)")
+          .orderBy(col("value"))
+      }
     },
       // the CALL face's rates replayed over the exact GROUP BY
       ("WITH docs AS (SELECT CASE WHEN doc_id % 4 < 3 THEN 'web' " +
@@ -1792,24 +1765,22 @@ object StoreCerts {
     // the table holds exactly the rows that satisfy the constraint.
     // The oracle replays the surviving inserts' closed form
     Cert("store_segment_check_constraint", (s, d) => withTempDir("graft-segck") { base =>
-      val cat = s"graft_check_${segCatalogSeq.incrementAndGet()}"
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.segment.GraftCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", s"$base/wh")
-      s.sql(s"CREATE NAMESPACE $cat.db")
-      s.sql(s"CREATE TABLE $cat.db.t (k BIGINT, cents BIGINT) " +
-        "TBLPROPERTIES ('check.cents_positive'='cents > 0')")
-      Tables.orders(s, d).createOrReplaceTempView("graft_check_orders")
-      s.sql(s"INSERT INTO $cat.db.t " +
-        "SELECT o_orderkey, CAST(round(o_totalprice * 100, 0) AS BIGINT) " +
-        "FROM graft_check_orders WHERE o_orderkey % 3 = 0")
-      // the violating batch (negated prices) must fail whole: the
-      // enforcement is write-side, the commit atomic
-      val rejected = scala.util.Try(s.sql(s"INSERT INTO $cat.db.t " +
-        "SELECT o_orderkey, -CAST(round(o_totalprice * 100, 0) AS BIGINT) " +
-        "FROM graft_check_orders WHERE o_orderkey % 3 = 1")).isFailure
-      assert(rejected, "the violating INSERT must be rejected")
-      s.sql(s"SELECT k, cents FROM $cat.db.t ORDER BY k")
+      withCatalog(s, s"$base/wh") { cat =>
+        s.sql(s"CREATE NAMESPACE $cat.db")
+        s.sql(s"CREATE TABLE $cat.db.t (k BIGINT, cents BIGINT) " +
+          "TBLPROPERTIES ('check.cents_positive'='cents > 0')")
+        Tables.orders(s, d).createOrReplaceTempView("graft_check_orders")
+        s.sql(s"INSERT INTO $cat.db.t " +
+          "SELECT o_orderkey, CAST(round(o_totalprice * 100, 0) AS BIGINT) " +
+          "FROM graft_check_orders WHERE o_orderkey % 3 = 0")
+        // the violating batch (negated prices) must fail whole: the
+        // enforcement is write-side, the commit atomic
+        val rejected = scala.util.Try(s.sql(s"INSERT INTO $cat.db.t " +
+          "SELECT o_orderkey, -CAST(round(o_totalprice * 100, 0) AS BIGINT) " +
+          "FROM graft_check_orders WHERE o_orderkey % 3 = 1")).isFailure
+        assert(rejected, "the violating INSERT must be rejected")
+        s.sql(s"SELECT k, cents FROM $cat.db.t ORDER BY k")
+      }
     },
       // only the constraint-satisfying insert survives; the violating
       // batch failed whole (write-side enforcement, atomic commit)
@@ -1844,19 +1815,17 @@ object StoreCerts {
     // AS SELECT swaps the definition. The oracle replays the final
     // SELECT's closed form
     Cert("store_segment_ctas", (s, d) => withTempDir("graft-segctas") { base =>
-      val cat = s"graft_ctas_${segCatalogSeq.incrementAndGet()}"
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.segment.GraftCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", s"$base/wh")
-      s.sql(s"CREATE NAMESPACE $cat.db")
-      Tables.orders(s, d).createOrReplaceTempView("graft_ctas_orders")
-      s.sql(s"CREATE TABLE $cat.db.t TBLPROPERTIES ('clusterBy'='k', 'numPartitions'='8') " +
-        "AS SELECT o_orderkey AS k, CAST(round(o_totalprice * 100, 0) AS BIGINT) AS cents " +
-        "FROM graft_ctas_orders")
-      s.sql(s"REPLACE TABLE $cat.db.t " +
-        "AS SELECT o_orderkey AS k, CAST(round(o_totalprice * 100, 0) AS BIGINT) AS cents " +
-        "FROM graft_ctas_orders WHERE o_orderkey % 3 = 0")
-      s.sql(s"SELECT k, cents FROM $cat.db.t ORDER BY k")
+      withCatalog(s, s"$base/wh") { cat =>
+        s.sql(s"CREATE NAMESPACE $cat.db")
+        Tables.orders(s, d).createOrReplaceTempView("graft_ctas_orders")
+        s.sql(s"CREATE TABLE $cat.db.t TBLPROPERTIES ('clusterBy'='k', 'numPartitions'='8') " +
+          "AS SELECT o_orderkey AS k, CAST(round(o_totalprice * 100, 0) AS BIGINT) AS cents " +
+          "FROM graft_ctas_orders")
+        s.sql(s"REPLACE TABLE $cat.db.t " +
+          "AS SELECT o_orderkey AS k, CAST(round(o_totalprice * 100, 0) AS BIGINT) AS cents " +
+          "FROM graft_ctas_orders WHERE o_orderkey % 3 = 0")
+        s.sql(s"SELECT k, cents FROM $cat.db.t ORDER BY k")
+      }
     },
       // the CALL-driven lifecycle's ledger: create (empty), two 4-way
       // clustered inserts, the 2-way compact, one more insert
@@ -1871,35 +1840,33 @@ object StoreCerts {
     // matched rows, never matched segments. The oracle replays the
     // whole DML sequence as closed-form SQL
     Cert("store_segment_mor_sql", (s, d) => withTempDir("graft-segmor") { base =>
-      val cat = s"graft_mor_${segCatalogSeq.incrementAndGet()}"
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.segment.GraftCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", s"$base/wh")
-      s.sql(s"CREATE NAMESPACE $cat.db")
-      s.sql(s"CREATE TABLE $cat.db.t (k BIGINT, cents BIGINT) " +
-        "TBLPROPERTIES ('clusterBy'='k', 'numPartitions'='8', 'rowLevelMode'='mor')")
-      Tables.orders(s, d).createOrReplaceTempView("graft_mor_orders")
-      s.sql(s"INSERT INTO $cat.db.t " +
-        "SELECT o_orderkey, CAST(round(o_totalprice * 100, 0) AS BIGINT) " +
-        "FROM graft_mor_orders")
-      s.sql(s"DELETE FROM $cat.db.t WHERE k % 7 = 0")
-      s.sql(s"UPDATE $cat.db.t SET cents = cents + 3 WHERE k % 5 = 0")
-      s.sql(s"MERGE INTO $cat.db.t t USING " +
-        "(SELECT o_orderkey AS k, CAST(-1 AS BIGINT) AS cents " +
-        "FROM graft_mor_orders WHERE o_orderkey % 11 = 0) s ON t.k = s.k " +
-        "WHEN MATCHED THEN UPDATE SET cents = s.cents " +
-        "WHEN NOT MATCHED THEN INSERT (k, cents) VALUES (s.k, s.cents)")
-      // the third MERGE face: NOT MATCHED BY SOURCE acts on TARGET
-      // rows the source lacks — the full sync shape (matched update +
-      // conditional by-source delete/update in clause order), still
-      // cost ∝ matched rows through the same delta write
-      s.sql(s"MERGE INTO $cat.db.t t USING " +
-        "(SELECT o_orderkey AS k FROM graft_mor_orders " +
-        "WHERE o_orderkey % 13 = 0) s ON t.k = s.k " +
-        "WHEN MATCHED THEN UPDATE SET cents = t.cents + 1000 " +
-        "WHEN NOT MATCHED BY SOURCE AND t.k % 17 = 0 THEN DELETE " +
-        "WHEN NOT MATCHED BY SOURCE AND t.k % 19 = 0 THEN UPDATE SET cents = 0")
-      s.sql(s"SELECT k, cents FROM $cat.db.t ORDER BY k")
+      withCatalog(s, s"$base/wh") { cat =>
+        s.sql(s"CREATE NAMESPACE $cat.db")
+        s.sql(s"CREATE TABLE $cat.db.t (k BIGINT, cents BIGINT) " +
+          "TBLPROPERTIES ('clusterBy'='k', 'numPartitions'='8', 'rowLevelMode'='mor')")
+        Tables.orders(s, d).createOrReplaceTempView("graft_mor_orders")
+        s.sql(s"INSERT INTO $cat.db.t " +
+          "SELECT o_orderkey, CAST(round(o_totalprice * 100, 0) AS BIGINT) " +
+          "FROM graft_mor_orders")
+        s.sql(s"DELETE FROM $cat.db.t WHERE k % 7 = 0")
+        s.sql(s"UPDATE $cat.db.t SET cents = cents + 3 WHERE k % 5 = 0")
+        s.sql(s"MERGE INTO $cat.db.t t USING " +
+          "(SELECT o_orderkey AS k, CAST(-1 AS BIGINT) AS cents " +
+          "FROM graft_mor_orders WHERE o_orderkey % 11 = 0) s ON t.k = s.k " +
+          "WHEN MATCHED THEN UPDATE SET cents = s.cents " +
+          "WHEN NOT MATCHED THEN INSERT (k, cents) VALUES (s.k, s.cents)")
+        // the third MERGE face: NOT MATCHED BY SOURCE acts on TARGET
+        // rows the source lacks — the full sync shape (matched update +
+        // conditional by-source delete/update in clause order), still
+        // cost ∝ matched rows through the same delta write
+        s.sql(s"MERGE INTO $cat.db.t t USING " +
+          "(SELECT o_orderkey AS k FROM graft_mor_orders " +
+          "WHERE o_orderkey % 13 = 0) s ON t.k = s.k " +
+          "WHEN MATCHED THEN UPDATE SET cents = t.cents + 1000 " +
+          "WHEN NOT MATCHED BY SOURCE AND t.k % 17 = 0 THEN DELETE " +
+          "WHEN NOT MATCHED BY SOURCE AND t.k % 19 = 0 THEN UPDATE SET cents = 0")
+        s.sql(s"SELECT k, cents FROM $cat.db.t ORDER BY k")
+      }
     },
       // the whole MoR DML sequence replayed as closed-form SQL: k%11=0
       // always ends at -1 (matched update, or re-insert of a deleted
@@ -1924,22 +1891,20 @@ object StoreCerts {
     // never serves a scan through 80%-dead vectors. The oracle is the
     // closed form of the post-MERGE table
     Cert("store_segment_mor_bulk", (s, d) => withTempDir("graft-segmorbulk") { base =>
-      val cat = s"graft_morbulk_${segCatalogSeq.incrementAndGet()}"
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.segment.GraftCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", s"$base/wh")
-      s.sql(s"CREATE NAMESPACE $cat.db")
-      s.sql(s"CREATE TABLE $cat.db.t (k BIGINT, cents BIGINT) " +
-        "TBLPROPERTIES ('clusterBy'='k', 'numPartitions'='8', 'rowLevelMode'='mor')")
-      Tables.orders(s, d).createOrReplaceTempView("graft_morbulk_orders")
-      s.sql(s"INSERT INTO $cat.db.t " +
-        "SELECT o_orderkey, CAST(round(o_totalprice * 100, 0) AS BIGINT) " +
-        "FROM graft_morbulk_orders")
-      s.sql(s"MERGE INTO $cat.db.t t USING " +
-        "(SELECT o_orderkey AS k FROM graft_morbulk_orders " +
-        "WHERE o_orderkey % 5 <> 0) s ON t.k = s.k " +
-        "WHEN MATCHED THEN UPDATE SET cents = t.cents + 7")
-      s.sql(s"SELECT k, cents FROM $cat.db.t ORDER BY k")
+      withCatalog(s, s"$base/wh") { cat =>
+        s.sql(s"CREATE NAMESPACE $cat.db")
+        s.sql(s"CREATE TABLE $cat.db.t (k BIGINT, cents BIGINT) " +
+          "TBLPROPERTIES ('clusterBy'='k', 'numPartitions'='8', 'rowLevelMode'='mor')")
+        Tables.orders(s, d).createOrReplaceTempView("graft_morbulk_orders")
+        s.sql(s"INSERT INTO $cat.db.t " +
+          "SELECT o_orderkey, CAST(round(o_totalprice * 100, 0) AS BIGINT) " +
+          "FROM graft_morbulk_orders")
+        s.sql(s"MERGE INTO $cat.db.t t USING " +
+          "(SELECT o_orderkey AS k FROM graft_morbulk_orders " +
+          "WHERE o_orderkey % 5 <> 0) s ON t.k = s.k " +
+          "WHEN MATCHED THEN UPDATE SET cents = t.cents + 7")
+        s.sql(s"SELECT k, cents FROM $cat.db.t ORDER BY k")
+      }
     },
       ("SELECT o_orderkey AS k, " +
         "CAST(round(o_totalprice * 100, 0) AS BIGINT) + " +
@@ -1954,43 +1919,41 @@ object StoreCerts {
     // keep pruning long-typed literals over int-written bounds. The
     // oracle replays both generations in one closed form
     Cert("store_segment_widen", (s, d) => withTempDir("graft-segwiden") { base =>
-      val cat = s"graft_widen_${segCatalogSeq.incrementAndGet()}"
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.segment.GraftCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", s"$base/wh")
-      s.sql(s"CREATE NAMESPACE $cat.db")
-      s.sql(s"CREATE TABLE $cat.db.t (k BIGINT, qty INT, price FLOAT, " +
-        "ratio INT, money DECIMAL(10,2)) " +
-        "TBLPROPERTIES ('clusterBy'='k', 'numPartitions'='4')")
-      Tables.orders(s, d).createOrReplaceTempView("graft_widen_orders")
-      s.sql(s"INSERT INTO $cat.db.t " +
-        "SELECT o_orderkey, CAST(o_orderkey % 50 AS INT), " +
-        "CAST(o_totalprice AS FLOAT), CAST(o_orderkey % 7 AS INT), " +
-        "CAST(o_orderkey % 1000 AS DECIMAL(10,2)) + CAST(0.25 AS DECIMAL(10,2)) " +
-        "FROM graft_widen_orders WHERE o_orderkey % 2 = 0")
-      s.sql(s"ALTER TABLE $cat.db.t ALTER COLUMN qty TYPE BIGINT")
-      s.sql(s"ALTER TABLE $cat.db.t ALTER COLUMN price TYPE DOUBLE")
-      // the full widening matrix: int→double and decimal precision
-      // growth (same scale) are metadata-only commits too — pre-widen
-      // compact-long decimals re-container at the grown precision,
-      // post-widen values may need the big-integer byte form
-      s.sql(s"ALTER TABLE $cat.db.t ALTER COLUMN ratio TYPE DOUBLE")
-      s.sql(s"ALTER TABLE $cat.db.t ALTER COLUMN money TYPE DECIMAL(20,2)")
-      s.sql(s"INSERT INTO $cat.db.t " +
-        "SELECT o_orderkey, CAST(o_orderkey % 50 AS BIGINT), " +
-        "CAST(CAST(o_totalprice AS FLOAT) AS DOUBLE), " +
-        "CAST(o_orderkey % 7 AS DOUBLE), " +
-        "CAST('123456789012345000.25' AS DECIMAL(20,2)) + " +
-        "CAST(o_orderkey % 1000 AS DECIMAL(20,2)) " +
-        "FROM graft_widen_orders WHERE o_orderkey % 2 = 1")
-      // the filter's BIGINT literal prunes int-written zone maps.
-      // money stays DECIMAL(20,2) IN the table (that's what exercises
-      // the big-integer codec arm) but is string-canonicalized in the
-      // OUTPUT: >18-digit decimals are byte-array-backed and the
-      // driver's hash canonicalization diverges on them (r12 lesson;
-      // see the oracle-authoring rules above oracleSql)
-      s.sql(s"SELECT k, qty, price, ratio, CAST(money AS STRING) AS money " +
-        s"FROM $cat.db.t WHERE qty >= 10 ORDER BY k")
+      withCatalog(s, s"$base/wh") { cat =>
+        s.sql(s"CREATE NAMESPACE $cat.db")
+        s.sql(s"CREATE TABLE $cat.db.t (k BIGINT, qty INT, price FLOAT, " +
+          "ratio INT, money DECIMAL(10,2)) " +
+          "TBLPROPERTIES ('clusterBy'='k', 'numPartitions'='4')")
+        Tables.orders(s, d).createOrReplaceTempView("graft_widen_orders")
+        s.sql(s"INSERT INTO $cat.db.t " +
+          "SELECT o_orderkey, CAST(o_orderkey % 50 AS INT), " +
+          "CAST(o_totalprice AS FLOAT), CAST(o_orderkey % 7 AS INT), " +
+          "CAST(o_orderkey % 1000 AS DECIMAL(10,2)) + CAST(0.25 AS DECIMAL(10,2)) " +
+          "FROM graft_widen_orders WHERE o_orderkey % 2 = 0")
+        s.sql(s"ALTER TABLE $cat.db.t ALTER COLUMN qty TYPE BIGINT")
+        s.sql(s"ALTER TABLE $cat.db.t ALTER COLUMN price TYPE DOUBLE")
+        // the full widening matrix: int→double and decimal precision
+        // growth (same scale) are metadata-only commits too — pre-widen
+        // compact-long decimals re-container at the grown precision,
+        // post-widen values may need the big-integer byte form
+        s.sql(s"ALTER TABLE $cat.db.t ALTER COLUMN ratio TYPE DOUBLE")
+        s.sql(s"ALTER TABLE $cat.db.t ALTER COLUMN money TYPE DECIMAL(20,2)")
+        s.sql(s"INSERT INTO $cat.db.t " +
+          "SELECT o_orderkey, CAST(o_orderkey % 50 AS BIGINT), " +
+          "CAST(CAST(o_totalprice AS FLOAT) AS DOUBLE), " +
+          "CAST(o_orderkey % 7 AS DOUBLE), " +
+          "CAST('123456789012345000.25' AS DECIMAL(20,2)) + " +
+          "CAST(o_orderkey % 1000 AS DECIMAL(20,2)) " +
+          "FROM graft_widen_orders WHERE o_orderkey % 2 = 1")
+        // the filter's BIGINT literal prunes int-written zone maps.
+        // money stays DECIMAL(20,2) IN the table (that's what exercises
+        // the big-integer codec arm) but is string-canonicalized in the
+        // OUTPUT: >18-digit decimals are byte-array-backed and the
+        // oracle check's hash canonicalization diverges on them (r12 lesson;
+        // see the oracle-authoring rules above oracleSql)
+        s.sql(s"SELECT k, qty, price, ratio, CAST(money AS STRING) AS money " +
+          s"FROM $cat.db.t WHERE qty >= 10 ORDER BY k")
+      }
     },
       // both generations in one closed form: pre-widen rows were written
       // int/float, post-widen rows bigint/float-rounded-double — the
@@ -2125,26 +2088,24 @@ object StoreCerts {
     // provides them explicitly correct (validated, kept) — the oracle
     // replays the expression over the whole source either way
     Cert("store_segment_generated", (s, d) => withTempDir("graft-seggen") { base =>
-      val cat = s"graft_gen_${segCatalogSeq.incrementAndGet()}"
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.segment.GraftCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", s"$base/wh")
-      s.sql(s"CREATE NAMESPACE $cat.db")
-      s.sql(s"CREATE TABLE $cat.db.t (k BIGINT, price DOUBLE, " +
-        "cents BIGINT GENERATED ALWAYS AS (CAST(round(price * 100, 0) AS BIGINT)), " +
-        "tier STRING GENERATED ALWAYS AS " +
-        "(CASE WHEN price >= 1000 THEN 'high' ELSE 'low' END)) " +
-        "TBLPROPERTIES ('clusterBy'='k', 'numPartitions'='4')")
-      Tables.orders(s, d).createOrReplaceTempView("graft_gen_orders")
-      s.sql(s"INSERT INTO $cat.db.t (k, price) " +
-        "SELECT o_orderkey, o_totalprice FROM graft_gen_orders " +
-        "WHERE o_orderkey % 2 = 0")
-      s.sql(s"INSERT INTO $cat.db.t " +
-        "SELECT o_orderkey, o_totalprice, " +
-        "CAST(round(o_totalprice * 100, 0) AS BIGINT), " +
-        "CASE WHEN o_totalprice >= 1000 THEN 'high' ELSE 'low' END " +
-        "FROM graft_gen_orders WHERE o_orderkey % 2 = 1")
-      s.sql(s"SELECT k, price, cents, tier FROM $cat.db.t ORDER BY k")
+      withCatalog(s, s"$base/wh") { cat =>
+        s.sql(s"CREATE NAMESPACE $cat.db")
+        s.sql(s"CREATE TABLE $cat.db.t (k BIGINT, price DOUBLE, " +
+          "cents BIGINT GENERATED ALWAYS AS (CAST(round(price * 100, 0) AS BIGINT)), " +
+          "tier STRING GENERATED ALWAYS AS " +
+          "(CASE WHEN price >= 1000 THEN 'high' ELSE 'low' END)) " +
+          "TBLPROPERTIES ('clusterBy'='k', 'numPartitions'='4')")
+        Tables.orders(s, d).createOrReplaceTempView("graft_gen_orders")
+        s.sql(s"INSERT INTO $cat.db.t (k, price) " +
+          "SELECT o_orderkey, o_totalprice FROM graft_gen_orders " +
+          "WHERE o_orderkey % 2 = 0")
+        s.sql(s"INSERT INTO $cat.db.t " +
+          "SELECT o_orderkey, o_totalprice, " +
+          "CAST(round(o_totalprice * 100, 0) AS BIGINT), " +
+          "CASE WHEN o_totalprice >= 1000 THEN 'high' ELSE 'low' END " +
+          "FROM graft_gen_orders WHERE o_orderkey % 2 = 1")
+        s.sql(s"SELECT k, price, cents, tier FROM $cat.db.t ORDER BY k")
+      }
     },
       // both generations replay as the expression over the whole source
       ("SELECT o_orderkey AS k, o_totalprice AS price, " +
@@ -2481,28 +2442,26 @@ object StoreCerts {
     // the future only (the SQL-standard split). The oracle replays the
     // generations in one closed form keyed by the insert boundaries
     Cert("store_segment_defaults", (s, d) => withTempDir("graft-segdef") { base =>
-      val cat = s"graft_def_${segCatalogSeq.incrementAndGet()}"
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.segment.GraftCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", s"$base/wh")
-      s.sql(s"CREATE NAMESPACE $cat.db")
-      s.sql(s"CREATE TABLE $cat.db.t (k BIGINT, cents BIGINT, " +
-        "status STRING DEFAULT 'PENDING') " +
-        "TBLPROPERTIES ('clusterBy'='k', 'numPartitions'='4')")
-      Tables.orders(s, d).createOrReplaceTempView("graft_def_orders")
-      // generation 1: status omitted -> CURRENT default fills 'PENDING'
-      s.sql(s"INSERT INTO $cat.db.t (k, cents) " +
-        "SELECT o_orderkey, CAST(round(o_totalprice * 100, 0) AS BIGINT) " +
-        "FROM graft_def_orders WHERE o_orderkey % 3 = 0")
-      // ADD COLUMN with DEFAULT: generation-1 rows read 7 with no rewrite
-      s.sql(s"ALTER TABLE $cat.db.t ADD COLUMN retries BIGINT DEFAULT 7")
-      // SET DEFAULT is future-only: later omitted statuses say 'QUEUED'
-      s.sql(s"ALTER TABLE $cat.db.t ALTER COLUMN status SET DEFAULT 'QUEUED'")
-      // generation 2: retries explicit, status defaulted to 'QUEUED'
-      s.sql(s"INSERT INTO $cat.db.t (k, cents, retries) " +
-        "SELECT o_orderkey, CAST(round(o_totalprice * 100, 0) AS BIGINT), " +
-        "o_orderkey % 5 FROM graft_def_orders WHERE o_orderkey % 3 = 1")
-      s.sql(s"SELECT k, cents, status, retries FROM $cat.db.t ORDER BY k")
+      withCatalog(s, s"$base/wh") { cat =>
+        s.sql(s"CREATE NAMESPACE $cat.db")
+        s.sql(s"CREATE TABLE $cat.db.t (k BIGINT, cents BIGINT, " +
+          "status STRING DEFAULT 'PENDING') " +
+          "TBLPROPERTIES ('clusterBy'='k', 'numPartitions'='4')")
+        Tables.orders(s, d).createOrReplaceTempView("graft_def_orders")
+        // generation 1: status omitted -> CURRENT default fills 'PENDING'
+        s.sql(s"INSERT INTO $cat.db.t (k, cents) " +
+          "SELECT o_orderkey, CAST(round(o_totalprice * 100, 0) AS BIGINT) " +
+          "FROM graft_def_orders WHERE o_orderkey % 3 = 0")
+        // ADD COLUMN with DEFAULT: generation-1 rows read 7 with no rewrite
+        s.sql(s"ALTER TABLE $cat.db.t ADD COLUMN retries BIGINT DEFAULT 7")
+        // SET DEFAULT is future-only: later omitted statuses say 'QUEUED'
+        s.sql(s"ALTER TABLE $cat.db.t ALTER COLUMN status SET DEFAULT 'QUEUED'")
+        // generation 2: retries explicit, status defaulted to 'QUEUED'
+        s.sql(s"INSERT INTO $cat.db.t (k, cents, retries) " +
+          "SELECT o_orderkey, CAST(round(o_totalprice * 100, 0) AS BIGINT), " +
+          "o_orderkey % 5 FROM graft_def_orders WHERE o_orderkey % 3 = 1")
+        s.sql(s"SELECT k, cents, status, retries FROM $cat.db.t ORDER BY k")
+      }
     },
       // generation 1 (k%3=0): status filled by the CREATE-time default,
       // retries by the ADD-time existence default; generation 2 (k%3=1):
@@ -2549,11 +2508,6 @@ object StoreCerts {
       .union(o.filter(col("k") % 21 === 0).select(col("k"), lit(4L).as("seq"),
         lit("I").as("op"), (col("cents") + 55L).as("cents")))
   }
-
-  /** Catalog plugins are instantiated once per NAME and keep their
-    * init-time warehouse; queries that mount a temp-dir catalog must
-    * mint a fresh name per invocation to stay re-runnable. */
-  private val segCatalogSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** CDC ground truth: newest op per key over the whole log, deletes
     * tombstoned — shared by the batch apply (store_cdc_apply) and the

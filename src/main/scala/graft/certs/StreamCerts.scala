@@ -1,8 +1,6 @@
 package graft
 package certs
 
-import scala.util.chaining._
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -874,22 +872,7 @@ object StreamCerts {
     // form: doc holds the min doc_id in every one of its buckets
     Cert("stream_neardup_docs", (s, d) => withTempDir("graft-neardup") { base =>
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-      val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
-      val (t1, t2) = (maxId / 3, 2 * maxId / 3)
-      val now = System.currentTimeMillis()
-      Seq(
-        ("f0", col("doc_id") <= t1, now - 60000),
-        ("f1", col("doc_id") > t1 && col("doc_id") <= t2, now - 40000),
-        ("f2", col("doc_id") > t2, now - 20000)
-      ).map { case (name, pred, mtime) => () => {
-        // independent input-fixture writes (disjoint dirs; arrival
-        // order is pinned by the explicit mtimes set after each write,
-        // not by write completion) — overlap them, guide §2.6
-        val dir = s"$base/in/$name"
-        docs.filter(pred).coalesce(1).write.parquet(dir)
-        new java.io.File(dir).listFiles().foreach(_.setLastModified(mtime))
-        ()
-      }}.pipe(graft.streaming.Overlap.awaitAll)
+      stageDocThirds(docs, base)
       graft.streaming.NearDupIngest.run(s, docs.schema,
         s"$base/in", s"$base/out", s"$base/state", s"$base/ckpt")
       s.read.option("recursiveFileLookup", "true").parquet(s"$base/out")
@@ -949,22 +932,7 @@ object StreamCerts {
     // batches — the admitted set must be independent of batching
     Cert("stream_curation_docs", (s, d) => withTempDir("graft-stream-cur") { base =>
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-      val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
-      val (t1, t2) = (maxId / 3, 2 * maxId / 3)
-      val now = System.currentTimeMillis()
-      Seq(
-        ("f0", col("doc_id") <= t1, now - 60000),
-        ("f1", col("doc_id") > t1 && col("doc_id") <= t2, now - 40000),
-        ("f2", col("doc_id") > t2, now - 20000)
-      ).map { case (name, pred, mtime) => () => {
-        // independent input-fixture writes (disjoint dirs; arrival
-        // order is pinned by the explicit mtimes set after each write,
-        // not by write completion) — overlap them, guide §2.6
-        val dir = s"$base/in/$name"
-        docs.filter(pred).coalesce(1).write.parquet(dir)
-        new java.io.File(dir).listFiles().foreach(_.setLastModified(mtime))
-        ()
-      }}.pipe(graft.streaming.Overlap.awaitAll)
+      stageDocThirds(docs, base)
       graft.streaming.CurationIngest.run(s, docs.schema,
         s"$base/in", s"$base/out", s"$base/state", s"$base/ckpt")
       s.read.option("recursiveFileLookup", "true").parquet(s"$base/out")
@@ -981,23 +949,15 @@ object StreamCerts {
       val streamed = docs.filter(col("doc_id") >= 250)
       val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
       val mid = (250 + maxId) / 2
-      val now = System.currentTimeMillis()
       // the state bootstrap (its own dirs, consumed only once the
       // stream starts) rides the same overlap pool as the two fixture
       // writes — all three are independent
-      (Seq(
-        ("f0", col("doc_id") <= mid, now - 60000),
-        ("f1", col("doc_id") > mid, now - 30000)
-      ).map { case (name, pred, mtime) => () => {
-        // overlapped like the sibling curation fixtures — order pinned
-        // by the explicit mtimes, not write completion
-        val dir = s"$base/in/$name"
-        streamed.filter(pred).coalesce(1).write.parquet(dir)
-        new java.io.File(dir).listFiles().foreach(_.setLastModified(mtime))
-        ()
-      }} :+ (() => graft.streaming.CurationIngest.bootstrapState(
-        s, s"$base/state", docs.filter(col("doc_id") < 250)))
-      ).pipe(graft.streaming.Overlap.awaitAll)
+      stageOrdered(
+        Seq(col("doc_id") <= mid, col("doc_id") > mid).zipWithIndex.map { case (pred, i) =>
+          s"$base/in/f$i" -> (() => streamed.filter(pred).coalesce(1).write.parquet(s"$base/in/f$i"))
+        },
+        unordered = Seq(() => graft.streaming.CurationIngest.bootstrapState(
+          s, s"$base/state", docs.filter(col("doc_id") < 250))))
       graft.streaming.CurationIngest.run(s, docs.schema,
         s"$base/in", s"$base/out", s"$base/state", s"$base/ckpt")
       s.read.option("recursiveFileLookup", "true").parquet(s"$base/out")
@@ -1015,30 +975,15 @@ object StreamCerts {
       val bench = docs.filter(
         Sampling.bucketHash(col("doc_id"), "cur") >=
           lit(Sampling.hexThreshold(0.8)))
-      val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
-      val (t1, t2) = (maxId / 3, 2 * maxId / 3)
-      val now = System.currentTimeMillis()
       // the static benchmark-gram artifact build is independent of the
       // input staging — it rides the same overlap pool as the three
       // fixture writes instead of running serially before them
       var benchGrams: DataFrame = null
-      (Seq(
-        ("f0", col("doc_id") <= t1, now - 60000),
-        ("f1", col("doc_id") > t1 && col("doc_id") <= t2, now - 40000),
-        ("f2", col("doc_id") > t2, now - 20000)
-      ).map { case (name, pred, mtime) => () => {
-        // independent input-fixture writes (disjoint dirs; arrival
-        // order is pinned by the explicit mtimes set after each write,
-        // not by write completion) — overlap them, guide §2.6
-        val dir = s"$base/in/$name"
-        docs.filter(pred).coalesce(1).write.parquet(dir)
-        new java.io.File(dir).listFiles().foreach(_.setLastModified(mtime))
-        ()
-      }} :+ (() => {
+      stageDocThirds(docs, base, unordered = Seq(() => {
         benchGrams = TextOps.shinglePostings(bench, 5)
           .select(col("shingle")).distinct().localCheckpoint(true)
         ()
-      })).pipe(graft.streaming.Overlap.awaitAll)
+      }))
       graft.streaming.CurationIngest.run(s, docs.schema,
         s"$base/in", s"$base/out", s"$base/state", s"$base/ckpt",
         split = Some((0.8, "cur")), benchGrams = Some(benchGrams))
@@ -1346,6 +1291,20 @@ object StreamCerts {
     stageOrdered(files.zipWithIndex.map { case (df, i) => s"$base/in/f$i" -> (() =>
       df.coalesce(1).write.parquet(s"$base/in/f$i"))
     })
+  }
+
+  /** Stages `docs` as three ascending-doc_id files `f0..f2` under
+    * `$base/in`, stamped in that arrival order, with `unordered` writes
+    * overlapped alongside. */
+  private def stageDocThirds(docs: DataFrame, base: String,
+      unordered: Seq[() => Unit] = Seq.empty): Unit = {
+    val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
+    val (t1, t2) = (maxId / 3, 2 * maxId / 3)
+    val preds = Seq(col("doc_id") <= t1, col("doc_id") > t1 && col("doc_id") <= t2,
+      col("doc_id") > t2)
+    stageOrdered(preds.zipWithIndex.map { case (pred, i) => s"$base/in/f$i" -> (() =>
+      docs.filter(pred).coalesce(1).write.parquet(s"$base/in/f$i"))
+    }, unordered)
   }
 
   /** Stages the events' clicks and purchases as two file-stream inputs

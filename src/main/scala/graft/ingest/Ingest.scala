@@ -93,17 +93,6 @@ object Ingest {
     uuidFromHex(md5(to_json(struct(customerId.as("c"), items.as("i")))))
 
   // ---------------------------------------------------------------------
-  // E1 — enrichment (reference src/ingest_order/app.py:35-40): project the
-  // event and stamp a processing-time timestamp.
-  // ---------------------------------------------------------------------
-  def enrichOrder(parsed: DataFrame): DataFrame =
-    parsed.select(
-      col("order.order_id").as("order_id"),
-      col("order.customer_id").as("customer_id"),
-      col("order.items").as("items"),
-      current_timestamp().as("ingested_at"))
-
-  // ---------------------------------------------------------------------
   // Adapters over the driver's `events` table (TESTDATA.md) — the same
   // operators applied to the generic event stream: parse the `props` JSON
   // payload, validate, key, dedup. These back the oracle-checked queries

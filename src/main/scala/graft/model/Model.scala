@@ -6,53 +6,11 @@ import org.apache.spark.sql.types._
   *
   * Derived from the reference's published event contracts
   * (reference README.md:261-288) and its DB DDL
-  * (reference db/init_schema.sql:2-24). Typed case classes give the
-  * Dataset API compile-time field checks; the StructTypes are the
+  * (reference db/init_schema.sql:2-24). The StructTypes are the
   * explicit wire schemas handed to `from_json` — schema inference is
   * never used (SURVEY.md §1.3).
   */
 object Model {
-
-  /** One order line — reference README.md:269-274. */
-  final case class Item(product_id: String, quantity: Int)
-
-  /** OrderCreated event — reference README.md:263-277, produced at
-    * reference src/ingest_order/app.py:35-47. */
-  final case class OrderEvent(
-      order_id: String,
-      customer_id: String,
-      items: Seq[Item],
-      timestamp: String)
-
-  /** OrderProcessed event — reference README.md:279-288, produced at
-    * reference src/order_processor/app.py:126-141. */
-  final case class ProcessedEvent(
-      order_id: String,
-      customer_id: String,
-      status: String,
-      processed_at: String)
-
-  /** Inventory row — reference db/init_schema.sql:2-6. */
-  final case class InventoryRow(
-      product_id: String,
-      product_name: String,
-      quantity_available: Int)
-
-  /** Orders-table row — reference db/init_schema.sql:17-24. `items` is
-    * carried as the JSON wire form (the reference stores a JSON column). */
-  final case class OrderRow(
-      order_id: String,
-      customer_id: String,
-      items: String,
-      status: String)
-
-  /** A record that failed ingest validation — the 400 path
-    * (reference src/ingest_order/app.py:23-26,64-68). */
-  final case class RejectedRecord(raw: String, reason: String)
-
-  /** Dead-letter record — a poison row plus its delivery-attempt count
-    * (reference iac/main.tf:21-24, maxReceiveCount = 3). */
-  final case class DeadLetterRecord(raw: String, attempts: Int, error: String)
 
   val itemSchema: StructType = StructType(Seq(
     StructField("product_id", StringType),
@@ -64,16 +22,9 @@ object Model {
     StructField("items", ArrayType(itemSchema)),
     StructField("timestamp", StringType)))
 
-  val processedEventSchema: StructType = StructType(Seq(
-    StructField("order_id", StringType),
-    StructField("customer_id", StringType),
-    StructField("status", StringType),
-    StructField("processed_at", StringType)))
-
   /** ENUM('PENDING','PROCESSED','FAILED') — reference db/init_schema.sql:21.
     * Spark has no enum type; values are validated with `isin` (SURVEY §1.2). */
   val StatusPending = "PENDING"
   val StatusProcessed = "PROCESSED"
   val StatusFailed = "FAILED"
-  val statusValues: Seq[String] = Seq(StatusPending, StatusProcessed, StatusFailed)
 }

@@ -11,9 +11,9 @@ import org.apache.spark.sql.SparkSessionExtensions
   * matches ([[JoinRewriteGuard]] keeps the join rewrites from
   * re-matching their own output).
   *
-  * Two confs tune them per query, read each time the rule runs:
-  * `spark.graft.rangeJoin.binWidth` ([[BinnedRangeJoinRule]]) and
-  * `spark.graft.saltJoin.enabled` ([[SaltJoinRule]]).
+  * One conf tunes them per query, read each time the rule runs:
+  * `spark.graft.rangeJoin.binWidth` ([[BinnedRangeJoinRule]]). Spark's
+  * `spark.sql.optimizer.excludedRules` turns any of the rules off.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -23,7 +23,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(_ => FuzzyJoinRule())
     // manifest-statistic salting for shuffle joins on declared-hot
     // keys (fan-out derived at plan time)
-    ext.injectOptimizerRule(session => SaltJoinRule(session))
+    ext.injectOptimizerRule(_ => SaltJoinRule())
     // the whole-operator rung: plans AsOfJoinPlan as the merge-sweep
     // AsOfJoinExec
     ext.injectPlannerStrategy(_ => AsOfJoinStrategy)

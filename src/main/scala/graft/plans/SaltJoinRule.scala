@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.{Inner, LeftOuter, RightOuter}
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -83,7 +82,8 @@ import graft.sources.segment.GraftSegmentTable
   * (explicit, because an agg rewrite cannot be hidden behind identical
   * results for non-decomposable functions).
   *
-  * Disable with `spark.graft.saltJoin.enabled=false`. Plan-time cost:
+  * Disable with Spark's own
+  * `spark.sql.optimizer.excludedRules=graft.plans.SaltJoinRule`. Plan-time cost:
   * the broadcast-eligibility precheck is stats-only; the manifest
   * lookup rides the table instance's cached read (one log read per
   * query resolution, however many fixed-point iterations re-match a
@@ -91,23 +91,10 @@ import graft.sources.segment.GraftSegmentTable
   * fail planning of a query that didn't need the rewrite. At 100 TB
   * the O(KB) read replaces a GROUP-BY sizing pass.
   */
-case class SaltJoinRule(session: SparkSession) extends Rule[LogicalPlan]
+case class SaltJoinRule() extends Rule[LogicalPlan]
     with PredicateHelper {
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    // tolerant parse (the rule's own never-fail-planning doctrine,
-    // applied to its OWN kill switch): the standard disable spellings
-    // all disable — ignoring "0"/"off"/"no" would silently INVERT an
-    // explicit disable intent — while a truly malformed value ("yes",
-    // "maybe") degrades to the default instead of throwing
-    // IllegalArgumentException out of the optimizer for every query
-    // in the session
-    val disabled = session.conf.get(SaltJoinRule.EnabledKey, "true")
-      .trim.toLowerCase match {
-      case "false" | "0" | "no" | "off" => true
-      case _ => false
-    }
-    if (disabled) return plan
+  override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transform {
       case j @ Join(left, right, jt, Some(cond), hint)
           if (jt == Inner || jt == LeftOuter || jt == RightOuter) &&
@@ -130,7 +117,6 @@ case class SaltJoinRule(session: SparkSession) extends Rule[LogicalPlan]
           case _ => j
         }
     }
-  }
 
   /** The (leftKey, rightKey) pairs when the condition is a PURE
     * conjunction of column equalities between the children; None on
@@ -282,8 +268,6 @@ case class SaltJoinRule(session: SparkSession) extends Rule[LogicalPlan]
 }
 
 object SaltJoinRule {
-  val EnabledKey = "spark.graft.saltJoin.enabled"
-
   /** The rewrite's own attribute namespace — the convergence marker:
     * any condition already referencing it is this rule's output (or a
     * user column squatting on the documented namespace, which the

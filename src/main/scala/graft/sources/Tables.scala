@@ -29,8 +29,8 @@ object Tables {
     * testdata generations, so the loader dispatches on the RESOLVED
     * type instead of assuming one:
     *  - parquet TIMESTAMP(NANOS), which Spark's reader rejects
-    *    outright → read nanos as raw longs (legacy conf, set before
-    *    the read so schema resolution sees it) and convert with
+    *    outright → read nanos as raw longs (the legacy `nanosAsLong`
+    *    conf, one of [[graft.Session.confs]]) and convert with
     *    integer division — ns epoch values exceed 2^53, so a
     *    double-precision divide would corrupt them. DuckDB truncates
     *    ns→µs the same way, keeping oracle parity.
@@ -41,7 +41,6 @@ object Tables {
     * Either way every consumer sees `ts: TIMESTAMP` with µs
     * precision. */
   def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = load(s, d, "events")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>

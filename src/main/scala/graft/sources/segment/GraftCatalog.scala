@@ -37,7 +37,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * spark.sql.catalog.graft = graft.sources.segment.GraftCatalog
   * spark.sql.catalog.graft.warehouse = /path/to/warehouse
   * }}}
-  * Identifier `graft.db.t` maps to `<warehouse>/db/t`.
+  * Identifier `graft.db.t` maps to `<warehouse>/db/t`. For a catalog
+  * that lives only for one block, use [[GraftCatalog.withCatalog]].
   *
   * 100 TB note: the catalog is metadata-only (directory resolution +
   * manifest reads); nothing here scales with data volume.
@@ -560,6 +561,25 @@ class GraftCatalog extends TableCatalog with FunctionCatalog with SupportsNamesp
   override def loadFunction(ident: Identifier): UnboundFunction =
     if (ident.name() == "bucket") GraftBucketFunction
     else throw new NoSuchFunctionException(ident)
+}
+
+object GraftCatalog {
+  private val seq = new java.util.concurrent.atomic.AtomicInteger(0)
+
+  /** Registers a [[GraftCatalog]] over `warehouse` under a fresh name
+    * `graft_<n>`, runs `body` with that name, and unsets both catalog
+    * confs however `body` exits, so the session is left as it was
+    * found. Names are never reused: Spark's `CatalogManager` caches a
+    * loaded plugin by name, so a reused name would keep serving the
+    * warehouse it was first loaded over. Frames analyzed inside the
+    * scope stay executable after it, since the cached plugin resolved
+    * their tables already. Creates no namespace. */
+  def withCatalog[T](spark: SparkSession, warehouse: String)(body: String => T): T = {
+    val name = s"graft_${seq.incrementAndGet()}"
+    graft.Session.withConfs(spark,
+      s"spark.sql.catalog.$name" -> classOf[GraftCatalog].getName,
+      s"spark.sql.catalog.$name.warehouse" -> warehouse)(body(name))
+  }
 }
 
 /** `bucket(n, key...)` — row placement under hash clustering, defined

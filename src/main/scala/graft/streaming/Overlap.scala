@@ -13,7 +13,16 @@ object Overlap {
 
   /** Run every action and wait for all of them; if any failed, rethrow
     * the first failure (in action order) with the others attached via
-    * `addSuppressed`. The pool is per call: actions may nest calls. */
+    * `addSuppressed`.
+    *
+    * The pool is per call, and that is deliberate. Actions may nest
+    * calls. And SparkContext local properties are inheritable
+    * thread-locals, cloned when a thread is created: a per-call pool's
+    * threads are created by the caller, so the overlapped jobs carry
+    * the caller's job group (which `StreamingQuery.stop` cancels), its
+    * `streaming.sql.batchId` (which [[graft.WorkCounters]] attributes
+    * jobs by) and its SQL execution id. A shared pool's threads would
+    * keep whatever properties they were first created under. */
   def awaitAll(actions: Seq[() => Unit]): Unit = {
     if (actions.size <= 1) { actions.foreach(_.apply()); return }
     val pool = java.util.concurrent.Executors.newFixedThreadPool(

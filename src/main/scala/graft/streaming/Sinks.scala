@@ -1,32 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, ForeachWriter, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Sink-side semantics: dead-letter routing (S4/ST2), at-most-once
-  * notification (S8/ST3).
-  *
-  * The reference's DLQ is SQS redrive after maxReceiveCount=3
-  * (iac/main.tf:21-24). Structured Streaming retries whole micro-batches,
-  * so per-record attempt counts are tracked explicitly: the delivery log
-  * records (key, attempt, outcome) and rows whose failures reach
-  * maxAttempts divert to the dead-letter sink instead of blocking the
-  * stream.
-  */
+/** Sink-side semantics. The certified dead-letter path is
+  * [[RetryLoop]]; this holds the upsert sink. */
 object Sinks {
-
-  /** Split a batch into (retryable, dead) given per-key attempt counts.
-    * `attempts` is the count of prior failed deliveries per key. */
-  def deadLetterSplit(
-      batch: DataFrame,
-      attempts: DataFrame, // (key, n_failures)
-      keyCol: String,
-      maxAttempts: Int = 3): (DataFrame, DataFrame) = {
-    val joined = batch.join(attempts, Seq(keyCol), "left")
-      .withColumn("n_failures", coalesce(col("n_failures"), lit(0)))
-    (joined.filter(col("n_failures") < maxAttempts).drop("n_failures"),
-      joined.filter(col("n_failures") >= maxAttempts))
-  }
 
   /** S5's optional external-DB half (SURVEY §2 S5): a generic upsert
     * (MERGE) sink for `writeStream.foreachBatch` — each batch's rows
@@ -58,15 +37,4 @@ object Sinks {
           .join(batch.select(keys.map(col): _*).distinct(), keys, "left_anti")
           .unionByName(batch)
     }
-
-  /** ST3 — the notifier deliberately swallows per-record errors
-    * (reference src/notification_sender/app.py:24-26): log-and-drop,
-    * never fail the batch. */
-  final class LogSink(format: Row => String) extends ForeachWriter[Row] {
-    override def open(partitionId: Long, epochId: Long): Boolean = true
-    override def process(row: Row): Unit =
-      try println(format(row))
-      catch { case _: Exception => () } // at-most-once: drop malformed
-    override def close(errorOrNull: Throwable): Unit = ()
-  }
 }

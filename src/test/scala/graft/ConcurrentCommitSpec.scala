@@ -5,7 +5,7 @@ import java.util.ConcurrentModificationException
 
 import org.apache.spark.sql.functions._
 
-import graft.sources.segment.{GraftMaintenance, SegmentLog}
+import graft.sources.segment.{GraftCatalog, GraftMaintenance, SegmentLog}
 
 /** Conflict-checked rebase commits on the graft-segment log: a
   * replace-style commit (compaction, merge-on-read patch, copy-on-write
@@ -154,59 +154,57 @@ class ConcurrentCommitSpec extends SparkSpec {
 
     // a catalog table so ndvFor PERSISTS — compaction rewrites then
     // re-sketch from the manifest property
-    val cat = "gccndv"
     val wh = tmp("graft-cc-ndv-wh")
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.sources.segment.GraftCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-    spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.db")
-    spark.sql(s"CREATE TABLE $cat.db.t (id BIGINT, k STRING) " +
-      "TBLPROPERTIES ('ndvFor' = 'id,k')")
-    val dir = s"$wh/db/t"
-    spark.sql(s"INSERT INTO $cat.db.t " +
-      "SELECT id, CAST(id % 5 AS STRING) FROM range(0, 400)")
-    val fs = SegmentLog.fs(dir, hconf)
+    GraftCatalog.withCatalog(spark, wh) { cat =>
+      spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.db")
+      spark.sql(s"CREATE TABLE $cat.db.t (id BIGINT, k STRING) " +
+        "TBLPROPERTIES ('ndvFor' = 'id,k')")
+      val dir = s"$wh/db/t"
+      spark.sql(s"INSERT INTO $cat.db.t " +
+        "SELECT id, CAST(id % 5 AS STRING) FROM range(0, 400)")
+      val fs = SegmentLog.fs(dir, hconf)
 
-    // two appender threads interleave the incremental fast path; the
-    // compactor forces full recomputes mid-chain (truncate-style
-    // commits); every commit re-derives against the manifest it
-    // actually raced, so the stored merge can never go stale
-    val a1 = Future {
-      (0 until 8).foreach { i =>
-        spark.sql(s"INSERT INTO $cat.db.t VALUES " +
-          s"(${1000 + i}, CAST(${1000 + i} AS STRING))")
+      // two appender threads interleave the incremental fast path; the
+      // compactor forces full recomputes mid-chain (truncate-style
+      // commits); every commit re-derives against the manifest it
+      // actually raced, so the stored merge can never go stale
+      val a1 = Future {
+        (0 until 8).foreach { i =>
+          spark.sql(s"INSERT INTO $cat.db.t VALUES " +
+            s"(${1000 + i}, CAST(${1000 + i} AS STRING))")
+        }
       }
-    }
-    val a2 = Future {
-      (0 until 8).foreach { i =>
-        spark.sql(s"INSERT INTO $cat.db.t VALUES " +
-          s"(${2000 + i}, CAST(${2000 + i} AS STRING))")
+      val a2 = Future {
+        (0 until 8).foreach { i =>
+          spark.sql(s"INSERT INTO $cat.db.t VALUES " +
+            s"(${2000 + i}, CAST(${2000 + i} AS STRING))")
+        }
       }
-    }
-    val compactor = Future {
-      (0 until 4).foreach { _ =>
-        val live = SegmentLog.read(fs, dir).map(_.segments.map(_.path)).getOrElse(Nil)
-        if (live.nonEmpty) GraftMaintenance.compactSegments(spark, dir, live)
+      val compactor = Future {
+        (0 until 4).foreach { _ =>
+          val live = SegmentLog.read(fs, dir).map(_.segments.map(_.path)).getOrElse(Nil)
+          if (live.nonEmpty) GraftMaintenance.compactSegments(spark, dir, live)
+        }
       }
-    }
-    Await.result(a1, 120.seconds)
-    Await.result(a2, 120.seconds)
-    Await.result(compactor, 120.seconds)
+      Await.result(a1, 120.seconds)
+      Await.result(a2, 120.seconds)
+      Await.result(compactor, 120.seconds)
 
-    val m = SegmentLog.read(fs, dir).get
-    for (c <- Seq("id", "k")) {
-      val recomputed = SegmentNdv.merge(
-        m.segments.map(s => SegmentNdv.decode(s.stats(c).kmv.get)))
-      assert(m.ndvMerged(c) == SegmentNdv.encode(recomputed),
-        s"table sketch for $c diverged from the per-segment merge under contention")
+      val m = SegmentLog.read(fs, dir).get
+      for (c <- Seq("id", "k")) {
+        val recomputed = SegmentNdv.merge(
+          m.segments.map(s => SegmentNdv.decode(s.stats(c).kmv.get)))
+        assert(m.ndvMerged(c) == SegmentNdv.encode(recomputed),
+          s"table sketch for $c diverged from the per-segment merge under contention")
+      }
+      // and the estimate is sane: 416 distinct ids (saturated arm),
+      // 21 distinct k (exact arm)
+      assert(math.round(SegmentNdv.estimateMerged(
+        SegmentNdv.decode(m.ndvMerged("k")))) == 21L)
+      val idNdv = math.round(SegmentNdv.estimateMerged(
+        SegmentNdv.decode(m.ndvMerged("id"))))
+      assert(idNdv > 300 && idNdv < 550, s"id NDV estimate $idNdv (true 416)")
     }
-    // and the estimate is sane: 416 distinct ids (saturated arm),
-    // 21 distinct k (exact arm)
-    assert(math.round(SegmentNdv.estimateMerged(
-      SegmentNdv.decode(m.ndvMerged("k")))) == 21L)
-    val idNdv = math.round(SegmentNdv.estimateMerged(
-      SegmentNdv.decode(m.ndvMerged("id"))))
-    assert(idNdv > 300 && idNdv < 550, s"id NDV estimate $idNdv (true 416)")
   }
 
   test("histMerged/shistMerged under contention: table maps == per-segment merge == exact GROUP BY") {
@@ -216,55 +214,53 @@ class ConcurrentCommitSpec extends SparkSpec {
       scala.concurrent.ExecutionContext.global
     import graft.sources.segment.SegmentHistogram
 
-    val cat = "gcchist"
     val wh = tmp("graft-cc-hist-wh")
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.sources.segment.GraftCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-    spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.db")
-    spark.sql(s"CREATE TABLE $cat.db.t (k INT, tag STRING) " +
-      "TBLPROPERTIES ('histFor' = 'k,tag')")
-    val dir = s"$wh/db/t"
-    spark.sql(s"INSERT INTO $cat.db.t SELECT CAST(id % 7 AS INT), " +
-      "concat('t', id % 5) FROM range(0, 400)")
-    val fs = SegmentLog.fs(dir, hconf)
+    GraftCatalog.withCatalog(spark, wh) { cat =>
+      spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.db")
+      spark.sql(s"CREATE TABLE $cat.db.t (k INT, tag STRING) " +
+        "TBLPROPERTIES ('histFor' = 'k,tag')")
+      val dir = s"$wh/db/t"
+      spark.sql(s"INSERT INTO $cat.db.t SELECT CAST(id % 7 AS INT), " +
+        "concat('t', id % 5) FROM range(0, 400)")
+      val fs = SegmentLog.fs(dir, hconf)
 
-    // both map arms ride the same incremental fast path the appenders
-    // interleave and the same full recompute the compactor forces —
-    // frequency addition must stay exact through every rebase
-    val a1 = Future {
-      (0 until 8).foreach(i => spark.sql(
-        s"INSERT INTO $cat.db.t VALUES (${i % 7}, concat('t', ${i % 5}))"))
-    }
-    val a2 = Future {
-      (0 until 8).foreach(i => spark.sql(
-        s"INSERT INTO $cat.db.t VALUES (${(i + 3) % 7}, concat('t', ${(i + 2) % 5}))"))
-    }
-    val compactor = Future {
-      (0 until 4).foreach { _ =>
-        val live = SegmentLog.read(fs, dir).map(_.segments.map(_.path)).getOrElse(Nil)
-        if (live.nonEmpty) GraftMaintenance.compactSegments(spark, dir, live)
+      // both map arms ride the same incremental fast path the appenders
+      // interleave and the same full recompute the compactor forces —
+      // frequency addition must stay exact through every rebase
+      val a1 = Future {
+        (0 until 8).foreach(i => spark.sql(
+          s"INSERT INTO $cat.db.t VALUES (${i % 7}, concat('t', ${i % 5}))"))
       }
-    }
-    Await.result(a1, 120.seconds)
-    Await.result(a2, 120.seconds)
-    Await.result(compactor, 120.seconds)
+      val a2 = Future {
+        (0 until 8).foreach(i => spark.sql(
+          s"INSERT INTO $cat.db.t VALUES (${(i + 3) % 7}, concat('t', ${(i + 2) % 5}))"))
+      }
+      val compactor = Future {
+        (0 until 4).foreach { _ =>
+          val live = SegmentLog.read(fs, dir).map(_.segments.map(_.path)).getOrElse(Nil)
+          if (live.nonEmpty) GraftMaintenance.compactSegments(spark, dir, live)
+        }
+      }
+      Await.result(a1, 120.seconds)
+      Await.result(a2, 120.seconds)
+      Await.result(compactor, 120.seconds)
 
-    val m = SegmentLog.read(fs, dir).get
-    // stored merges == from-scratch per-segment merges
-    assert(m.histMerged("k") == SegmentHistogram.encode(SegmentHistogram.merge(
-      m.segments.map(s => SegmentHistogram.decode(s.stats("k").hist.get))).get))
-    assert(m.shistMerged("tag") == SegmentHistogram.encodeStr(SegmentHistogram.mergeStr(
-      m.segments.map(s => SegmentHistogram.decodeStr(s.stats("tag").shist.get))).get))
-    // and both equal the exact GROUP BY over the final table
-    val rows = spark.sql(s"SELECT k, tag FROM $cat.db.t").collect()
-    val kTruth = rows.groupBy(_.getInt(0)).view
-      .map { case (k, rs) => k.toLong -> rs.length.toLong }.toMap
-    assert(SegmentHistogram.decode(m.histMerged("k")).toMap == kTruth)
-    val tagTruth = rows.groupBy(_.getString(1)).view
-      .map { case (t, rs) => t -> rs.length.toLong }.toMap
-    assert(SegmentHistogram.decodeStr(m.shistMerged("tag"))
-      .map { case (v, n) => v.toString -> n }.toMap == tagTruth)
-    assert(rows.length == 416)
+      val m = SegmentLog.read(fs, dir).get
+      // stored merges == from-scratch per-segment merges
+      assert(m.histMerged("k") == SegmentHistogram.encode(SegmentHistogram.merge(
+        m.segments.map(s => SegmentHistogram.decode(s.stats("k").hist.get))).get))
+      assert(m.shistMerged("tag") == SegmentHistogram.encodeStr(SegmentHistogram.mergeStr(
+        m.segments.map(s => SegmentHistogram.decodeStr(s.stats("tag").shist.get))).get))
+      // and both equal the exact GROUP BY over the final table
+      val rows = spark.sql(s"SELECT k, tag FROM $cat.db.t").collect()
+      val kTruth = rows.groupBy(_.getInt(0)).view
+        .map { case (k, rs) => k.toLong -> rs.length.toLong }.toMap
+      assert(SegmentHistogram.decode(m.histMerged("k")).toMap == kTruth)
+      val tagTruth = rows.groupBy(_.getString(1)).view
+        .map { case (t, rs) => t -> rs.length.toLong }.toMap
+      assert(SegmentHistogram.decodeStr(m.shistMerged("tag"))
+        .map { case (v, n) => v.toString -> n }.toMap == tagTruth)
+      assert(rows.length == 416)
+    }
   }
 }

@@ -332,4 +332,39 @@ class GraftCatalogSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(spark.sql("SELECT count(*) AS n FROM graft.db.np_ok")
       .collect().head.getLong(0) === 30L)
   }
+
+  test("withCatalog mints a fresh name per call and unsets its confs however the body exits") {
+    val wh = Files.createTempDirectory("graft-scoped-wh").toString
+    val before = spark.conf.getAll
+    var names = Seq.empty[String]
+    val rows = GraftCatalog.withCatalog(spark, wh) { cat =>
+      names :+= cat
+      spark.sql(s"CREATE NAMESPACE $cat.db")
+      spark.sql(s"CREATE TABLE $cat.db.t (k BIGINT)")
+      spark.sql(s"INSERT INTO $cat.db.t VALUES (1), (2)")
+      // a frame analyzed in the scope stays executable after it
+      spark.sql(s"SELECT k FROM $cat.db.t")
+    }
+    assert(spark.conf.getAll === before)
+    assert(rows.count() === 2L)
+    intercept[IllegalStateException] {
+      GraftCatalog.withCatalog(spark, wh) { cat =>
+        names :+= cat
+        assert(spark.sql(s"SELECT count(*) FROM $cat.db.t").head().getLong(0) === 2L)
+        throw new IllegalStateException("body failed")
+      }
+    }
+    assert(spark.conf.getAll === before)
+    assert(names.distinct.size === 2 && names.forall(_.startsWith("graft_")))
+  }
+
+  test("store_segment_call and store_segment_spj_join leave spark.conf as they found it") {
+    // the smallest scale listed in TESTDATA.md
+    val sf = "/root/testdata/sf0.001"
+    Seq("store_segment_call", "store_segment_spj_join").foreach { name =>
+      val before = spark.conf.getAll
+      assert(SparkEntry.queries(name)(spark, sf).collect().nonEmpty, name)
+      assert(spark.conf.getAll === before, name)
+    }
+  }
 }

@@ -488,22 +488,8 @@ class OpsSpec extends SparkSpec {
         "an aggregate between scan and join must bail")
       assert(fired(factT.filter($"v" >= 0).join(dim, Seq("k"))),
         "a filter between scan and join preserves the upper bound")
-      // kill switch — and its TOLERANT parse: a malformed value must
-      // degrade to the default, never fail planning (r17 ADVICE)
-      spark.conf.set(SaltJoinRule.EnabledKey, "false")
-      try assert(!fired(shape(factT)))
-      finally spark.conf.unset(SaltJoinRule.EnabledKey)
-      // the standard disable spellings all disable — ignoring "0"
-      // would silently invert explicit disable intent
-      Seq("0", "off", "FALSE", "no").foreach { v =>
-        spark.conf.set(SaltJoinRule.EnabledKey, v)
-        try assert(!fired(shape(factT)), s"'$v' must disable")
-        finally spark.conf.unset(SaltJoinRule.EnabledKey)
-      }
-      spark.conf.set(SaltJoinRule.EnabledKey, "not-a-boolean")
-      try assert(fired(shape(factT)),
-        "a malformed kill-switch value degrades to enabled")
-      finally spark.conf.unset(SaltJoinRule.EnabledKey)
+      // kill switch: Spark's own excludedRules drops the injected rule
+      withoutRule(classOf[SaltJoinRule])(assert(!fired(shape(factT))))
     }
     // broadcast-eligible dim -> no rewrite (BHJ has no fact shuffle;
     // SaltBench measured broadcast strictly dominating)
@@ -515,20 +501,18 @@ class OpsSpec extends SparkSpec {
     // the same statistic through a CATALOG-managed table — the rule
     // must fire there too (same GraftSegmentTable instance underneath)
     val base = java.nio.file.Files.createTempDirectory("graft-saltcat").toString
-    val cat = "graft_saltcat"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.sources.segment.GraftCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", s"$base/wh")
-    spark.sql(s"CREATE NAMESPACE $cat.db")
-    spark.sql(s"CREATE TABLE $cat.db.fact (k BIGINT, v BIGINT) " +
-      "TBLPROPERTIES ('histFor'='k')")
-    spark.range(0, 12000).select(
-      when($"id" % 4 < 3, lit(7L)).otherwise($"id" % 13).as("k"),
-      ($"id" * 3).as("v")).createOrReplaceTempView("graft_saltcat_src")
-    spark.sql(s"INSERT INTO $cat.db.fact SELECT k, v FROM graft_saltcat_src")
-    spark.range(0, 13).select($"id".as("k"), ($"id" % 3).as("b"))
-      .createOrReplaceTempView("graft_saltcat_dim")
-    try {
+    // a scoped catalog: later tests must not inherit a live catalog
+    // over a temp warehouse
+    graft.sources.segment.GraftCatalog.withCatalog(spark, s"$base/wh") { cat =>
+      spark.sql(s"CREATE NAMESPACE $cat.db")
+      spark.sql(s"CREATE TABLE $cat.db.fact (k BIGINT, v BIGINT) " +
+        "TBLPROPERTIES ('histFor'='k')")
+      spark.range(0, 12000).select(
+        when($"id" % 4 < 3, lit(7L)).otherwise($"id" % 13).as("k"),
+        ($"id" * 3).as("v")).createOrReplaceTempView("graft_saltcat_src")
+      spark.sql(s"INSERT INTO $cat.db.fact SELECT k, v FROM graft_saltcat_src")
+      spark.range(0, 13).select($"id".as("k"), ($"id" % 3).as("b"))
+        .createOrReplaceTempView("graft_saltcat_dim")
       Session.withConfs(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
         val q = spark.sql(s"SELECT b, count(*) AS n, sum(v) AS s " +
           s"FROM $cat.db.fact JOIN graft_saltcat_dim USING (k) GROUP BY b")
@@ -539,11 +523,6 @@ class OpsSpec extends SparkSpec {
         assert(spark.sql(s"SELECT * FROM $cat.db.fact " +
           "JOIN graft_saltcat_dim USING (k)").count() === 12000)
       }
-    } finally {
-      // drop the test-local catalog from the shared session — later
-      // tests must not inherit a live catalog over a temp warehouse
-      spark.conf.unset(s"spark.sql.catalog.$cat")
-      spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
     }
   }
 

@@ -1,14 +1,18 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicBoolean
 
-import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.TaskContext
 
 import graft.streaming.Overlap
 
-/** Overlap.awaitAll's failure path, Spark-free: a failed action must not
-  * leave a sibling write running behind the caller's back. */
-class OverlapSpec extends AnyFunSuite {
+/** Overlap.awaitAll: a failed action must not leave a sibling write
+  * running behind the caller's back, and every action's Spark jobs run
+  * under the caller's local properties as they are at the call. */
+class OverlapSpec extends SparkSpec {
 
   test("a failure is rethrown only after every sibling action has finished") {
     val siblingDone = new AtomicBoolean(false)
@@ -30,5 +34,29 @@ class OverlapSpec extends AnyFunSuite {
     assert(ran.get() === 6)
     Overlap.awaitAll(Seq(() => { ran.incrementAndGet(); () }))
     assert(ran.get() === 7)
+  }
+
+  test("every action's jobs carry the caller's local properties as of each call") {
+    val sc = spark.sparkContext
+    val key = "graft.test.overlap.prop"
+    // the property each of four overlapped actions' tasks ran under
+    def seenByActions(): Set[String] = {
+      val seen = new ConcurrentLinkedQueue[String]
+      Overlap.awaitAll(Seq.fill(4)(() => {
+        seen.addAll(sc.parallelize(Seq(1), 1)
+          .map(_ => Option(TaskContext.get.getLocalProperty(key)).getOrElse("unset"))
+          .collect().toSeq.asJava)
+        ()
+      }))
+      seen.asScala.toSet
+    }
+    try {
+      sc.setLocalProperty(key, "first")
+      assert(seenByActions() === Set("first"))
+      // a pool whose threads outlived the first call would still carry
+      // "first": local properties are cloned when a thread is created
+      sc.setLocalProperty(key, "second")
+      assert(seenByActions() === Set("second"))
+    } finally sc.setLocalProperty(key, null)
   }
 }

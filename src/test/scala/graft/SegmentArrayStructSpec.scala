@@ -139,45 +139,45 @@ class SegmentArrayStructSpec extends SparkSpec {
       StructType(Seq(StructField("x", IntegerType)))))))
     assert(SegmentCodec.supported(deep) && !SegmentCodec.vectorizable(deep))
     val warehouse = tmp("graft-arrst-wh")
-    spark.conf.set("spark.sql.catalog.gas", classOf[GraftCatalog].getName)
-    spark.conf.set("spark.sql.catalog.gas.warehouse", warehouse)
-    spark.sql("CREATE NAMESPACE IF NOT EXISTS gas.db")
-    spark.sql("CREATE TABLE gas.db.t (k BIGINT, " +
-      "items ARRAY<STRUCT<product_id: BIGINT, quantity: INT>>)")
-    spark.sql("INSERT INTO gas.db.t SELECT id, array(named_struct(" +
-      "'product_id', id * 10, 'quantity', CAST(id % 5 AS INT))) FROM range(0, 20)")
-    // widening an array<struct> column is not metadata-only — refused
-    // (Spark's analyzer already blocks whole-array type updates; the
-    // per-element form then reaches the catalog, which refuses nested
-    // field alters — loud either way, never a silent mis-decode)
-    val w = intercept[Exception] {
-      spark.sql("ALTER TABLE gas.db.t ALTER COLUMN items " +
-        "TYPE ARRAY<STRUCT<product_id: BIGINT, quantity: BIGINT>>")
+    GraftCatalog.withCatalog(spark, warehouse) { cat =>
+      spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.db")
+      spark.sql(s"CREATE TABLE $cat.db.t (k BIGINT, " +
+        "items ARRAY<STRUCT<product_id: BIGINT, quantity: INT>>)")
+      spark.sql(s"INSERT INTO $cat.db.t SELECT id, array(named_struct(" +
+        "'product_id', id * 10, 'quantity', CAST(id % 5 AS INT))) FROM range(0, 20)")
+      // widening an array<struct> column is not metadata-only — refused
+      // (Spark's analyzer already blocks whole-array type updates; the
+      // per-element form then reaches the catalog, which refuses nested
+      // field alters — loud either way, never a silent mis-decode)
+      val w = intercept[Exception] {
+        spark.sql(s"ALTER TABLE $cat.db.t ALTER COLUMN items " +
+          "TYPE ARRAY<STRUCT<product_id: BIGINT, quantity: BIGINT>>")
+      }
+      assert(w.getMessage.contains("CANNOT_UPDATE_FIELD") ||
+        w.getMessage.contains("cannot change column"))
+      val w2 = intercept[Exception] {
+        spark.sql(s"ALTER TABLE $cat.db.t ALTER COLUMN items.element.quantity TYPE BIGINT")
+      }
+      assert(w2.getMessage != null && w2.getMessage.nonEmpty)
+      // DEFAULT on an array<struct> column is refused with the backfill recipe
+      val d = intercept[Exception] {
+        spark.sql(s"ALTER TABLE $cat.db.t ADD COLUMN extra " +
+          "ARRAY<STRUCT<a: INT>> DEFAULT array(struct(1))")
+      }
+      def msgs(t: Throwable): Seq[String] =
+        if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
+      assert(msgs(d).exists(m => m.contains("atomic column types") ||
+        m.contains("DEFAULT")), s"got: ${msgs(d)}")
+      // and the SQL DML rewrite path (CoW UPDATE) streams the shape fine
+      spark.sql(s"UPDATE $cat.db.t SET items = array(named_struct(" +
+        "'product_id', CAST(0 AS BIGINT), 'quantity', CAST(0 AS INT))) " +
+        "WHERE k % 10 = 0")
+      val zeroed = spark.sql(
+        s"SELECT count(*) FROM $cat.db.t WHERE items[0].product_id = 0 AND k % 10 = 0")
+        .head().getLong(0)
+      assert(zeroed == 2)
+      assert(spark.sql(s"SELECT count(*) FROM $cat.db.t").head().getLong(0) == 20)
     }
-    assert(w.getMessage.contains("CANNOT_UPDATE_FIELD") ||
-      w.getMessage.contains("cannot change column"))
-    val w2 = intercept[Exception] {
-      spark.sql("ALTER TABLE gas.db.t ALTER COLUMN items.element.quantity TYPE BIGINT")
-    }
-    assert(w2.getMessage != null && w2.getMessage.nonEmpty)
-    // DEFAULT on an array<struct> column is refused with the backfill recipe
-    val d = intercept[Exception] {
-      spark.sql("ALTER TABLE gas.db.t ADD COLUMN extra " +
-        "ARRAY<STRUCT<a: INT>> DEFAULT array(struct(1))")
-    }
-    def msgs(t: Throwable): Seq[String] =
-      if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
-    assert(msgs(d).exists(m => m.contains("atomic column types") ||
-      m.contains("DEFAULT")), s"got: ${msgs(d)}")
-    // and the SQL DML rewrite path (CoW UPDATE) streams the shape fine
-    spark.sql("UPDATE gas.db.t SET items = array(named_struct(" +
-      "'product_id', CAST(0 AS BIGINT), 'quantity', CAST(0 AS INT))) " +
-      "WHERE k % 10 = 0")
-    val zeroed = spark.sql(
-      "SELECT count(*) FROM gas.db.t WHERE items[0].product_id = 0 AND k % 10 = 0")
-      .head().getLong(0)
-    assert(zeroed == 2)
-    assert(spark.sql("SELECT count(*) FROM gas.db.t").head().getLong(0) == 20)
   }
 
   // ---- r14: the SPAN-ANNOTATION shape — array<struct> elements (and
@@ -470,31 +470,31 @@ class SegmentArrayStructSpec extends SparkSpec {
     // the SQL DDL face: CREATE TABLE with deep types through the
     // catalog, INSERT with SQL constructors, read back through SQL
     val whD = tmp("graft-deep-cat")
-    spark.conf.set("spark.sql.catalog.gdeep", classOf[GraftCatalog].getName)
-    spark.conf.set("spark.sql.catalog.gdeep.warehouse", whD)
-    spark.sql("CREATE NAMESPACE IF NOT EXISTS gdeep.db")
-    spark.sql("CREATE TABLE gdeep.db.t (k BIGINT, " +
-      "grid ARRAY<ARRAY<INT>>, " +
-      "rec STRUCT<inner: STRUCT<x: INT, ys: ARRAY<STRING>>, w: DOUBLE>, " +
-      "keyed MAP<STRING, ARRAY<STRUCT<a: INT, zs: ARRAY<BIGINT>>>>)")
-    spark.sql("INSERT INTO gdeep.db.t SELECT id, " +
-      "array(array(CAST(id AS INT)), array(CAST(id AS INT), CAST(id + 1 AS INT))), " +
-      "named_struct('inner', named_struct('x', CAST(id * 2 AS INT), " +
-      "'ys', array(CAST(id AS STRING))), 'w', id * 0.5), " +
-      "map('g', array(named_struct('a', CAST(id AS INT), " +
-      "'zs', array(id, id + 10)))) FROM range(0, 30)")
-    val agg = spark.sql("SELECT sum(grid[1][1]) AS g, sum(rec.inner.x) AS x, " +
-      "sum(keyed['g'][0].zs[1]) AS z FROM gdeep.db.t").head()
-    assert(agg.getLong(0) == (1 to 30).sum && agg.getLong(1) == 2L * (0 until 30).sum
-      && agg.getLong(2) == (10 until 40).sum, agg.toString)
-    // still refused: variant below top level, non-atomic map keys
-    assert(!SegmentCodec.supported(ArrayType(
-      org.apache.spark.sql.types.VariantType)))
-    assert(!SegmentCodec.supported(StructType(Seq(
-      StructField("v", org.apache.spark.sql.types.VariantType)))))
-    assert(!SegmentCodec.supported(MapType(
-      StructType(Seq(StructField("x", IntegerType))), IntegerType)))
-    assert(!SegmentCodec.supported(MapType(ArrayType(IntegerType), IntegerType)))
+    GraftCatalog.withCatalog(spark, whD) { cat =>
+      spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.db")
+      spark.sql(s"CREATE TABLE $cat.db.t (k BIGINT, " +
+        "grid ARRAY<ARRAY<INT>>, " +
+        "rec STRUCT<inner: STRUCT<x: INT, ys: ARRAY<STRING>>, w: DOUBLE>, " +
+        "keyed MAP<STRING, ARRAY<STRUCT<a: INT, zs: ARRAY<BIGINT>>>>)")
+      spark.sql(s"INSERT INTO $cat.db.t SELECT id, " +
+        "array(array(CAST(id AS INT)), array(CAST(id AS INT), CAST(id + 1 AS INT))), " +
+        "named_struct('inner', named_struct('x', CAST(id * 2 AS INT), " +
+        "'ys', array(CAST(id AS STRING))), 'w', id * 0.5), " +
+        "map('g', array(named_struct('a', CAST(id AS INT), " +
+        "'zs', array(id, id + 10)))) FROM range(0, 30)")
+      val agg = spark.sql("SELECT sum(grid[1][1]) AS g, sum(rec.inner.x) AS x, " +
+        s"sum(keyed['g'][0].zs[1]) AS z FROM $cat.db.t").head()
+      assert(agg.getLong(0) == (1 to 30).sum && agg.getLong(1) == 2L * (0 until 30).sum
+        && agg.getLong(2) == (10 until 40).sum, agg.toString)
+      // still refused: variant below top level, non-atomic map keys
+      assert(!SegmentCodec.supported(ArrayType(
+        org.apache.spark.sql.types.VariantType)))
+      assert(!SegmentCodec.supported(StructType(Seq(
+        StructField("v", org.apache.spark.sql.types.VariantType)))))
+      assert(!SegmentCodec.supported(MapType(
+        StructType(Seq(StructField("x", IntegerType))), IntegerType)))
+      assert(!SegmentCodec.supported(MapType(ArrayType(IntegerType), IntegerType)))
+    }
   }
 
   test("span shape: deeper nesting, DEFAULT, widening, blooms and NDV all refuse or no-op soundly") {
@@ -510,38 +510,38 @@ class SegmentArrayStructSpec extends SparkSpec {
     // (atomic-only), whole-column widen refused, bloom/NDV
     // declarations refused (non-hashable) — each loudly
     val warehouse = tmp("graft-span-wh")
-    spark.conf.set("spark.sql.catalog.gspan", classOf[GraftCatalog].getName)
-    spark.conf.set("spark.sql.catalog.gspan.warehouse", warehouse)
-    spark.sql("CREATE NAMESPACE IF NOT EXISTS gspan.db")
-    spark.sql("CREATE TABLE gspan.db.t (k BIGINT, " +
-      "spans ARRAY<STRUCT<s: INT, e: INT, tokens: ARRAY<INT>>>)")
-    spark.sql("INSERT INTO gspan.db.t SELECT id, array(named_struct(" +
-      "'s', CAST(0 AS INT), 'e', CAST(id AS INT), " +
-      "'tokens', array(CAST(id AS INT)))) FROM range(0, 10)")
-    def msgs(t: Throwable): Seq[String] =
-      if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
-    val d = intercept[Exception] {
-      spark.sql("ALTER TABLE gspan.db.t ADD COLUMN s2 " +
-        "ARRAY<STRUCT<s: INT, tokens: ARRAY<INT>>> DEFAULT array()")
+    GraftCatalog.withCatalog(spark, warehouse) { cat =>
+      spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.db")
+      spark.sql(s"CREATE TABLE $cat.db.t (k BIGINT, " +
+        "spans ARRAY<STRUCT<s: INT, e: INT, tokens: ARRAY<INT>>>)")
+      spark.sql(s"INSERT INTO $cat.db.t SELECT id, array(named_struct(" +
+        "'s', CAST(0 AS INT), 'e', CAST(id AS INT), " +
+        "'tokens', array(CAST(id AS INT)))) FROM range(0, 10)")
+      def msgs(t: Throwable): Seq[String] =
+        if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
+      val d = intercept[Exception] {
+        spark.sql(s"ALTER TABLE $cat.db.t ADD COLUMN s2 " +
+          "ARRAY<STRUCT<s: INT, tokens: ARRAY<INT>>> DEFAULT array()")
+      }
+      assert(msgs(d).exists(m => m.contains("atomic column types") ||
+        m.contains("DEFAULT")), s"got: ${msgs(d)}")
+      val w = intercept[Exception] {
+        spark.sql(s"ALTER TABLE $cat.db.t ALTER COLUMN spans " +
+          "TYPE ARRAY<STRUCT<s: BIGINT, e: INT, tokens: ARRAY<INT>>>")
+      }
+      assert(w.getMessage != null)
+      val b = intercept[Exception] {
+        spark.sql(s"ALTER TABLE $cat.db.t SET TBLPROPERTIES ('ndvFor' = 'spans')")
+      }
+      assert(msgs(b).exists(_.contains("integer family")), s"got: ${msgs(b)}")
+      // CHECK over a derived scalar of the shape works (analyzes + enforces)
+      spark.sql(s"ALTER TABLE $cat.db.t SET TBLPROPERTIES " +
+        "('check.has_spans' = 'size(spans) > 0')")
+      val c = intercept[Exception] {
+        spark.sql(s"INSERT INTO $cat.db.t VALUES (99, array())")
+      }
+      assert(msgs(c).exists(_.contains("CHECK constraint has_spans")), s"got: ${msgs(c)}")
+      assert(spark.sql(s"SELECT count(*) FROM $cat.db.t").head().getLong(0) == 10)
     }
-    assert(msgs(d).exists(m => m.contains("atomic column types") ||
-      m.contains("DEFAULT")), s"got: ${msgs(d)}")
-    val w = intercept[Exception] {
-      spark.sql("ALTER TABLE gspan.db.t ALTER COLUMN spans " +
-        "TYPE ARRAY<STRUCT<s: BIGINT, e: INT, tokens: ARRAY<INT>>>")
-    }
-    assert(w.getMessage != null)
-    val b = intercept[Exception] {
-      spark.sql("ALTER TABLE gspan.db.t SET TBLPROPERTIES ('ndvFor' = 'spans')")
-    }
-    assert(msgs(b).exists(_.contains("integer family")), s"got: ${msgs(b)}")
-    // CHECK over a derived scalar of the shape works (analyzes + enforces)
-    spark.sql("ALTER TABLE gspan.db.t SET TBLPROPERTIES " +
-      "('check.has_spans' = 'size(spans) > 0')")
-    val c = intercept[Exception] {
-      spark.sql("INSERT INTO gspan.db.t VALUES (99, array())")
-    }
-    assert(msgs(c).exists(_.contains("CHECK constraint has_spans")), s"got: ${msgs(c)}")
-    assert(spark.sql("SELECT count(*) FROM gspan.db.t").head().getLong(0) == 10)
   }
 }

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
-import graft.sources.segment.{SegmentHistogram, SegmentLog}
+import graft.sources.segment.{GraftCatalog, SegmentHistogram, SegmentLog}
 
 /** The manifest-resident value-frequency histogram ([[SegmentHistogram]]):
   * exact bounded collection, associative merge, the equi-height
@@ -106,29 +106,27 @@ class SegmentHistogramSpec extends SparkSpec {
   }
 
   test("quantiles procedure: request validation is uniform, independent of table state") {
-    val cat = "ghistq"
     val wh = tmp("graft-hist-quant")
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.sources.segment.GraftCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-    spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.db")
-    // EMPTY table (no merged maps): a bad q must still refuse — an
-    // empty frame for q=1.7 would read as a plausible answer
-    spark.sql(s"CREATE TABLE $cat.db.t (k INT) TBLPROPERTIES ('histFor'='k')")
-    val bad = intercept[Exception](
-      spark.sql(s"CALL $cat.system.quantiles('db.t', '1.7')").collect())
-    assert(bad.getMessage.contains("[0,1]"), bad.getMessage)
-    val nan = intercept[Exception](
-      spark.sql(s"CALL $cat.system.quantiles('db.t', '0.5,abc')").collect())
-    assert(nan.getMessage.contains("quantiles"), nan.getMessage)
-    // valid q on the empty table: empty frame, no error
-    assert(spark.sql(s"CALL $cat.system.quantiles('db.t', '0.5')").collect().isEmpty)
-    // and the populated happy path serves the exact discrete rule
-    spark.sql(s"INSERT INTO $cat.db.t " +
-      "SELECT CAST(CASE WHEN id % 4 < 3 THEN 5 ELSE 9 END AS INT) FROM range(0, 100)")
-    val rows = spark.sql(s"CALL $cat.system.quantiles('db.t', '0.5,0.9')")
-      .collect().map(r => (r.getString(0), r.getDouble(1), r.getLong(2)))
-    assert(rows.toSet == Set(("k", 0.5, 5L), ("k", 0.9, 9L)), rows.mkString(","))
+    GraftCatalog.withCatalog(spark, wh) { cat =>
+      spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.db")
+      // EMPTY table (no merged maps): a bad q must still refuse — an
+      // empty frame for q=1.7 would read as a plausible answer
+      spark.sql(s"CREATE TABLE $cat.db.t (k INT) TBLPROPERTIES ('histFor'='k')")
+      val bad = intercept[Exception](
+        spark.sql(s"CALL $cat.system.quantiles('db.t', '1.7')").collect())
+      assert(bad.getMessage.contains("[0,1]"), bad.getMessage)
+      val nan = intercept[Exception](
+        spark.sql(s"CALL $cat.system.quantiles('db.t', '0.5,abc')").collect())
+      assert(nan.getMessage.contains("quantiles"), nan.getMessage)
+      // valid q on the empty table: empty frame, no error
+      assert(spark.sql(s"CALL $cat.system.quantiles('db.t', '0.5')").collect().isEmpty)
+      // and the populated happy path serves the exact discrete rule
+      spark.sql(s"INSERT INTO $cat.db.t " +
+        "SELECT CAST(CASE WHEN id % 4 < 3 THEN 5 ELSE 9 END AS INT) FROM range(0, 100)")
+      val rows = spark.sql(s"CALL $cat.system.quantiles('db.t', '0.5,0.9')")
+        .collect().map(r => (r.getString(0), r.getDouble(1), r.getLong(2)))
+      assert(rows.toSet == Set(("k", 0.5, 5L), ("k", 0.9, 9L)), rows.mkString(","))
+    }
   }
 
   test("declaration gate: unsupported types and unknown columns refuse loudly") {
@@ -212,173 +210,165 @@ class SegmentHistogramSpec extends SparkSpec {
   }
 
   test("CALL face under deletion vectors: exact=false with pre-delete mass, compaction restores both") {
-    val cat = "ghistdv"
     val wh = tmp("graft-hist-dv")
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.sources.segment.GraftCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-    spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.db")
-    spark.sql(s"CREATE TABLE $cat.db.t (k INT, tag STRING) " +
-      "TBLPROPERTIES ('histFor'='k,tag')")
-    spark.sql(s"INSERT INTO $cat.db.t SELECT CAST(id % 5 AS INT), " +
-      "concat('t', id % 3) FROM range(0, 300)")
-    def hist() = spark.sql(s"CALL $cat.system.histogram('db.t')").collect()
-      .map(r => (r.getString(0), Option(r.get(1)), Option(r.get(2)),
-        r.getLong(3), r.getBoolean(4)))
-    // dv-free: exact, post-insert truth
-    assert(hist().forall(_._5), "no dvs: exact = true")
-    assert(hist().filter(_._1 == "k").map(_._4).sum == 300L)
+    GraftCatalog.withCatalog(spark, wh) { cat =>
+      spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.db")
+      spark.sql(s"CREATE TABLE $cat.db.t (k INT, tag STRING) " +
+        "TBLPROPERTIES ('histFor'='k,tag')")
+      spark.sql(s"INSERT INTO $cat.db.t SELECT CAST(id % 5 AS INT), " +
+        "concat('t', id % 3) FROM range(0, 300)")
+      def hist() = spark.sql(s"CALL $cat.system.histogram('db.t')").collect()
+        .map(r => (r.getString(0), Option(r.get(1)), Option(r.get(2)),
+          r.getLong(3), r.getBoolean(4)))
+      // dv-free: exact, post-insert truth
+      assert(hist().forall(_._5), "no dvs: exact = true")
+      assert(hist().filter(_._1 == "k").map(_._4).sum == 300L)
 
-    spark.sql(s"CALL $cat.system.delete_mark('db.t', 'k = 0')").collect()
-    // the maps still hold the PRE-delete mass — annotated, not silent
-    val dv = hist()
-    assert(dv.forall(!_._5), "live dvs: exact = false on every row")
-    assert(dv.filter(_._1 == "k").map(_._4).sum == 300L, "pre-delete mass served")
-    // quantiles carries the same flag
-    assert(spark.sql(s"CALL $cat.system.quantiles('db.t', '0.5')")
-      .collect().forall(!_.getBoolean(4)))
+      spark.sql(s"CALL $cat.system.delete_mark('db.t', 'k = 0')").collect()
+      // the maps still hold the PRE-delete mass — annotated, not silent
+      val dv = hist()
+      assert(dv.forall(!_._5), "live dvs: exact = false on every row")
+      assert(dv.filter(_._1 == "k").map(_._4).sum == 300L, "pre-delete mass served")
+      // quantiles carries the same flag
+      assert(spark.sql(s"CALL $cat.system.quantiles('db.t', '0.5')")
+        .collect().forall(!_.getBoolean(4)))
 
-    // materializing the vectors rewrites the dv'd segments: collectors
-    // re-run on live rows, exact returns, counts are post-delete truth
-    spark.sql(s"CALL $cat.system.compact_deletes('db.t')").collect()
-    val after = hist()
-    assert(after.forall(_._5), "post-compaction: exact = true")
-    assert(after.filter(_._1 == "k").map(_._4).sum == 240L,
-      "counts now reflect the delete")
-    assert(!after.exists(t => t._1 == "k" && t._2.contains(0L)),
-      "the deleted value is gone from the map")
+      // materializing the vectors rewrites the dv'd segments: collectors
+      // re-run on live rows, exact returns, counts are post-delete truth
+      spark.sql(s"CALL $cat.system.compact_deletes('db.t')").collect()
+      val after = hist()
+      assert(after.forall(_._5), "post-compaction: exact = true")
+      assert(after.filter(_._1 == "k").map(_._4).sum == 240L,
+        "counts now reflect the delete")
+      assert(!after.exists(t => t._1 == "k" && t._2.contains(0L)),
+        "the deleted value is gone from the map")
+    }
   }
 
   test("CALL graft.system.salts: derived fan-out from either map arm, fallback annotated") {
-    val cat = "ghsalts"
     val wh = tmp("graft-hist-salts")
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.sources.segment.GraftCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-    spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.db")
-    spark.sql(s"CREATE TABLE $cat.db.t (k BIGINT, tag STRING, u BIGINT) " +
-      "TBLPROPERTIES ('histFor'='k,tag')")
-    // k: 900 hot by the modulo + id=7 itself lands in the else-branch
-    // as another 7 → 901; tag: 1080 hot
-    spark.sql(s"INSERT INTO $cat.db.t SELECT " +
-      "CASE WHEN id % 4 < 3 THEN 7 ELSE id END, " + // long arm, 901 hot
-      "CASE WHEN id % 10 < 9 THEN 'hot' ELSE concat('c', id) END, " + // 1080 hot
-      "id FROM range(0, 1200)")
-    def salts(c: String, target: Long) =
-      spark.sql(s"CALL $cat.system.salts('db.t', '$c', $target)")
-        .collect()(0) match { case r => (r.getInt(0), r.getBoolean(1)) }
-    assert(salts("k", 100L) == (10, true)) // ceil(901/100)
-    assert(salts("tag", 100L) == (11, true)) // ceil(1080/100) — string arm
-    assert(salts("u", 100L) == (8, false), "undeclared: fallback, annotated")
-    // explicit fallback/max_salts ride the trailing defaults
-    val r = spark.sql(s"CALL $cat.system.salts('db.t', 'u', 100, 3)")
-      .collect()(0)
-    assert(r.getInt(0) == 3 && !r.getBoolean(1))
-    val clamped = spark.sql(s"CALL $cat.system.salts('db.t', 'k', 1, 8, 16)")
-      .collect()(0)
-    assert(clamped.getInt(0) == 16 && clamped.getBoolean(1), "max_salts clamps")
+    GraftCatalog.withCatalog(spark, wh) { cat =>
+      spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.db")
+      spark.sql(s"CREATE TABLE $cat.db.t (k BIGINT, tag STRING, u BIGINT) " +
+        "TBLPROPERTIES ('histFor'='k,tag')")
+      // k: 900 hot by the modulo + id=7 itself lands in the else-branch
+      // as another 7 → 901; tag: 1080 hot
+      spark.sql(s"INSERT INTO $cat.db.t SELECT " +
+        "CASE WHEN id % 4 < 3 THEN 7 ELSE id END, " + // long arm, 901 hot
+        "CASE WHEN id % 10 < 9 THEN 'hot' ELSE concat('c', id) END, " + // 1080 hot
+        "id FROM range(0, 1200)")
+      def salts(c: String, target: Long) =
+        spark.sql(s"CALL $cat.system.salts('db.t', '$c', $target)")
+          .collect()(0) match { case r => (r.getInt(0), r.getBoolean(1)) }
+      assert(salts("k", 100L) == (10, true)) // ceil(901/100)
+      assert(salts("tag", 100L) == (11, true)) // ceil(1080/100) — string arm
+      assert(salts("u", 100L) == (8, false), "undeclared: fallback, annotated")
+      // explicit fallback/max_salts ride the trailing defaults
+      val r = spark.sql(s"CALL $cat.system.salts('db.t', 'u', 100, 3)")
+        .collect()(0)
+      assert(r.getInt(0) == 3 && !r.getBoolean(1))
+      val clamped = spark.sql(s"CALL $cat.system.salts('db.t', 'k', 1, 8, 16)")
+        .collect()(0)
+      assert(clamped.getInt(0) == 16 && clamped.getBoolean(1), "max_salts clamps")
 
-    // request validation BEFORE table state (the quantiles doctrine):
-    // a zero fan-out would make the salted join silently empty
-    for (bad <- Seq(s"CALL $cat.system.salts('db.t', 'k', 0)",
-        s"CALL $cat.system.salts('db.t', 'k', 100, 0)",
-        s"CALL $cat.system.salts('db.t', 'k', 100, 8, 0)")) {
-      val e = intercept[Exception](spark.sql(bad).collect())
-      assert(e.getMessage.contains("must be"), s"$bad: ${e.getMessage}")
+      // request validation BEFORE table state (the quantiles doctrine):
+      // a zero fan-out would make the salted join silently empty
+      for (bad <- Seq(s"CALL $cat.system.salts('db.t', 'k', 0)",
+          s"CALL $cat.system.salts('db.t', 'k', 100, 0)",
+          s"CALL $cat.system.salts('db.t', 'k', 100, 8, 0)")) {
+        val e = intercept[Exception](spark.sql(bad).collect())
+        assert(e.getMessage.contains("must be"), s"$bad: ${e.getMessage}")
+      }
+      // dv honesty: derived mass is PRE-delete until compaction — exact
+      // flips false, like histogram/quantiles
+      assert(spark.sql(s"CALL $cat.system.salts('db.t', 'k', 100)")
+        .collect()(0).getBoolean(2), "dv-free: exact")
+      spark.sql(s"CALL $cat.system.delete_mark('db.t', 'k = 7')").collect()
+      val dv = spark.sql(s"CALL $cat.system.salts('db.t', 'k', 100)").collect()(0)
+      assert(dv.getInt(0) == 10 && !dv.getBoolean(2),
+        "pre-delete mass served, annotated")
     }
-    // dv honesty: derived mass is PRE-delete until compaction — exact
-    // flips false, like histogram/quantiles
-    assert(spark.sql(s"CALL $cat.system.salts('db.t', 'k', 100)")
-      .collect()(0).getBoolean(2), "dv-free: exact")
-    spark.sql(s"CALL $cat.system.delete_mark('db.t', 'k = 7')").collect()
-    val dv = spark.sql(s"CALL $cat.system.salts('db.t', 'k', 100)").collect()(0)
-    assert(dv.getInt(0) == 10 && !dv.getBoolean(2),
-      "pre-delete mass served, annotated")
   }
 
   test("CALL graft.system.join_estimate: exact zero-scan join counts, honesty paths") {
-    val cat = "ghjest"
     val wh = tmp("graft-hist-jest")
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.sources.segment.GraftCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-    spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.db")
-    spark.sql(s"CREATE TABLE $cat.db.a (k BIGINT, tag STRING, u BIGINT) " +
-      "TBLPROPERTIES ('histFor'='k,tag')")
-    spark.sql(s"CREATE TABLE $cat.db.b (k BIGINT, tag STRING, u BIGINT) " +
-      "TBLPROPERTIES ('histFor'='k,tag')")
-    spark.sql(s"INSERT INTO $cat.db.a SELECT " +
-      "CASE WHEN id % 4 < 3 THEN 7 ELSE id % 11 END, " +
-      "concat('c', id % 5), id FROM range(0, 1200)")
-    spark.sql(s"INSERT INTO $cat.db.b SELECT id % 13, " +
-      "concat('c', id % 8), id FROM range(0, 400)")
-    def est(ca: String, cb: String) =
-      spark.sql(s"CALL $cat.system.join_estimate('db.a','$ca','db.b','$cb')")
-        .collect()(0)
-    // the metadata count IS the actual inner-join count, both arms
-    val actualK = spark.sql(
-      s"SELECT count(*) FROM $cat.db.a a JOIN $cat.db.b b ON a.k = b.k")
-      .collect()(0).getLong(0)
-    val rK = est("k", "k")
-    assert(rK.getLong(0) == actualK && rK.getBoolean(1) && rK.getBoolean(2))
-    val actualT = spark.sql(
-      s"SELECT count(*) FROM $cat.db.a a JOIN $cat.db.b b ON a.tag = b.tag")
-      .collect()(0).getLong(0)
-    val rT = est("tag", "tag")
-    assert(rT.getLong(0) == actualT && rT.getBoolean(1))
-    // honesty: undeclared on either side -> NULL, never a guess;
-    // a cross-arm request (long vs string) has no joinable map pair
-    assert(est("u", "k").isNullAt(0) && !est("u", "k").getBoolean(1))
-    assert(est("k", "u").isNullAt(0) && !est("k", "u").getBoolean(1))
-    assert(est("k", "tag").isNullAt(0) && !est("k", "tag").getBoolean(1),
-      "cross-arm: no sane equi-join to size")
-    // dv honesty: pre-delete mass until compaction, annotated
-    spark.sql(s"CALL $cat.system.delete_mark('db.b', 'k = 7')").collect()
-    val dv = est("k", "k")
-    assert(dv.getLong(0) == actualK && !dv.getBoolean(2),
-      "pre-delete mass served, exact=false")
+    GraftCatalog.withCatalog(spark, wh) { cat =>
+      spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.db")
+      spark.sql(s"CREATE TABLE $cat.db.a (k BIGINT, tag STRING, u BIGINT) " +
+        "TBLPROPERTIES ('histFor'='k,tag')")
+      spark.sql(s"CREATE TABLE $cat.db.b (k BIGINT, tag STRING, u BIGINT) " +
+        "TBLPROPERTIES ('histFor'='k,tag')")
+      spark.sql(s"INSERT INTO $cat.db.a SELECT " +
+        "CASE WHEN id % 4 < 3 THEN 7 ELSE id % 11 END, " +
+        "concat('c', id % 5), id FROM range(0, 1200)")
+      spark.sql(s"INSERT INTO $cat.db.b SELECT id % 13, " +
+        "concat('c', id % 8), id FROM range(0, 400)")
+      def est(ca: String, cb: String) =
+        spark.sql(s"CALL $cat.system.join_estimate('db.a','$ca','db.b','$cb')")
+          .collect()(0)
+      // the metadata count IS the actual inner-join count, both arms
+      val actualK = spark.sql(
+        s"SELECT count(*) FROM $cat.db.a a JOIN $cat.db.b b ON a.k = b.k")
+        .collect()(0).getLong(0)
+      val rK = est("k", "k")
+      assert(rK.getLong(0) == actualK && rK.getBoolean(1) && rK.getBoolean(2))
+      val actualT = spark.sql(
+        s"SELECT count(*) FROM $cat.db.a a JOIN $cat.db.b b ON a.tag = b.tag")
+        .collect()(0).getLong(0)
+      val rT = est("tag", "tag")
+      assert(rT.getLong(0) == actualT && rT.getBoolean(1))
+      // honesty: undeclared on either side -> NULL, never a guess;
+      // a cross-arm request (long vs string) has no joinable map pair
+      assert(est("u", "k").isNullAt(0) && !est("u", "k").getBoolean(1))
+      assert(est("k", "u").isNullAt(0) && !est("k", "u").getBoolean(1))
+      assert(est("k", "tag").isNullAt(0) && !est("k", "tag").getBoolean(1),
+        "cross-arm: no sane equi-join to size")
+      // dv honesty: pre-delete mass until compaction, annotated
+      spark.sql(s"CALL $cat.system.delete_mark('db.b', 'k = 7')").collect()
+      val dv = est("k", "k")
+      assert(dv.getLong(0) == actualK && !dv.getBoolean(2),
+        "pre-delete mass served, exact=false")
+    }
   }
 
   test("CALL graft.system.mixture_rates: temperature rates off either arm, honesty paths") {
-    val cat = "ghmixr"
     val wh = tmp("graft-hist-mixr")
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.sources.segment.GraftCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-    spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.db")
-    spark.sql(s"CREATE TABLE $cat.db.t (k BIGINT, tag STRING, u BIGINT) " +
-      "TBLPROPERTIES ('histFor'='k,tag')")
-    // tag: 900 'hot', 100 spread over c0..c2 (ids ending in 9 are odd,
-    // so a mod-4 tail would never hit even residues — mod 3 covers)
-    spark.sql(s"INSERT INTO $cat.db.t SELECT id, " +
-      "CASE WHEN id % 10 < 9 THEN 'hot' ELSE concat('c', id % 3) END, " +
-      "id FROM range(0, 1000)")
-    def rates(c: String, alpha: Double) =
-      spark.sql(s"CALL $cat.system.mixture_rates('db.t', '$c', $alpha)")
-        .collect().map(r => r.getString(0) -> (r.getLong(1), r.getDouble(2))).toMap
-    val half = rates("tag", 0.5)
-    val nMin = half.values.map(_._1).min
-    assert(half.find(_._2._1 == nMin).get._2._2 == 1.0,
-      "the smallest source is never downsampled")
-    assert(math.abs(half("hot")._2 - math.sqrt(nMin.toDouble / 900)) < 1e-12,
-      "alpha=0.5: the closed form sqrt(n_min/n)")
-    assert(rates("tag", 1.0).values.forall(_._2 == 1.0),
-      "alpha=1: natural proportions, the mixture is a no-op")
-    // the long arm serves too (values rendered as strings); uniform
-    // distinct ids -> every rate 1.0 at any alpha
-    assert(rates("k", 0.0).values.forall(v => v._1 == 1L && v._2 == 1.0))
-    // honesty: alpha validated BEFORE table state; undeclared fails
-    // diagnosably (no honest fallback rate exists)
-    for (bad <- Seq(s"CALL $cat.system.mixture_rates('db.t', 'tag', 1.5)",
-        s"CALL $cat.system.mixture_rates('db.t', 'u', 0.5)")) {
-      intercept[Exception](spark.sql(bad).collect())
+    GraftCatalog.withCatalog(spark, wh) { cat =>
+      spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.db")
+      spark.sql(s"CREATE TABLE $cat.db.t (k BIGINT, tag STRING, u BIGINT) " +
+        "TBLPROPERTIES ('histFor'='k,tag')")
+      // tag: 900 'hot', 100 spread over c0..c2 (ids ending in 9 are odd,
+      // so a mod-4 tail would never hit even residues — mod 3 covers)
+      spark.sql(s"INSERT INTO $cat.db.t SELECT id, " +
+        "CASE WHEN id % 10 < 9 THEN 'hot' ELSE concat('c', id % 3) END, " +
+        "id FROM range(0, 1000)")
+      def rates(c: String, alpha: Double) =
+        spark.sql(s"CALL $cat.system.mixture_rates('db.t', '$c', $alpha)")
+          .collect().map(r => r.getString(0) -> (r.getLong(1), r.getDouble(2))).toMap
+      val half = rates("tag", 0.5)
+      val nMin = half.values.map(_._1).min
+      assert(half.find(_._2._1 == nMin).get._2._2 == 1.0,
+        "the smallest source is never downsampled")
+      assert(math.abs(half("hot")._2 - math.sqrt(nMin.toDouble / 900)) < 1e-12,
+        "alpha=0.5: the closed form sqrt(n_min/n)")
+      assert(rates("tag", 1.0).values.forall(_._2 == 1.0),
+        "alpha=1: natural proportions, the mixture is a no-op")
+      // the long arm serves too (values rendered as strings); uniform
+      // distinct ids -> every rate 1.0 at any alpha
+      assert(rates("k", 0.0).values.forall(v => v._1 == 1L && v._2 == 1.0))
+      // honesty: alpha validated BEFORE table state; undeclared fails
+      // diagnosably (no honest fallback rate exists)
+      for (bad <- Seq(s"CALL $cat.system.mixture_rates('db.t', 'tag', 1.5)",
+          s"CALL $cat.system.mixture_rates('db.t', 'u', 0.5)")) {
+        intercept[Exception](spark.sql(bad).collect())
+      }
+      // dv honesty: pre-delete mass until compaction, annotated
+      assert(spark.sql(s"CALL $cat.system.mixture_rates('db.t', 'tag', 0.5)")
+        .collect().forall(_.getBoolean(3)))
+      spark.sql(s"CALL $cat.system.delete_mark('db.t', 'k = 7')").collect()
+      assert(spark.sql(s"CALL $cat.system.mixture_rates('db.t', 'tag', 0.5)")
+        .collect().forall(!_.getBoolean(3)), "exact flips under a live dv")
     }
-    // dv honesty: pre-delete mass until compaction, annotated
-    assert(spark.sql(s"CALL $cat.system.mixture_rates('db.t', 'tag', 0.5)")
-      .collect().forall(_.getBoolean(3)))
-    spark.sql(s"CALL $cat.system.delete_mark('db.t', 'k = 7')").collect()
-    assert(spark.sql(s"CALL $cat.system.mixture_rates('db.t', 'tag', 0.5)")
-      .collect().forall(!_.getBoolean(3)), "exact flips under a live dv")
   }
 
   test("string maps reach struct fields: dotted histFor on a nested string") {
@@ -489,35 +479,33 @@ class SegmentHistogramSpec extends SparkSpec {
   }
 
   test("widening out of the supported family retires the declaration") {
-    val cat = "ghistw"
     val wh = tmp("graft-hist-widen")
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.sources.segment.GraftCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-    spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.db")
-    spark.sql(s"CREATE TABLE $cat.db.t (k INT, n INT, money DECIMAL(12,2)) " +
-      "TBLPROPERTIES ('histFor' = 'k,n,money')")
-    spark.sql(s"INSERT INTO $cat.db.t " +
-      "SELECT CAST(id % 5 AS INT), CAST(id % 9 AS INT), " +
-      "CAST(id % 7 AS DECIMAL(12,2)) FROM range(0, 200)")
-    val f = SegmentLog.fs(s"$wh/db/t", spark.sessionState.newHadoopConf())
-    def m() = SegmentLog.read(f, s"$wh/db/t").get
-    assert(m().histMerged.keySet == Set("k", "n", "money"))
-    // int->long keeps (long canonical is value-invariant)
-    spark.sql(s"ALTER TABLE $cat.db.t ALTER COLUMN k TYPE BIGINT")
-    assert(m().props("histFor").split(",").toSet == Set("k", "n", "money"))
-    // decimal precision growth at unchanged scale keeps too (the
-    // unscaled long is invariant)...
-    spark.sql(s"ALTER TABLE $cat.db.t ALTER COLUMN money TYPE DECIMAL(16,2)")
-    assert(m().props("histFor").split(",").toSet == Set("k", "n", "money"))
-    // ...but growth PAST 18 digits loses the exact long canonical
-    spark.sql(s"ALTER TABLE $cat.db.t ALTER COLUMN money TYPE DECIMAL(22,2)")
-    assert(m().props("histFor").split(",").toSet == Set("k", "n"),
-      s"widen past 18 digits must drop money, got ${m().props.get("histFor")}")
-    // int->double: no supported canonical — the widen retires it
-    spark.sql(s"ALTER TABLE $cat.db.t ALTER COLUMN n TYPE DOUBLE")
-    assert(m().props("histFor").split(",").toSet == Set("k"),
-      s"widen must drop n from histFor, got ${m().props.get("histFor")}")
+    GraftCatalog.withCatalog(spark, wh) { cat =>
+      spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.db")
+      spark.sql(s"CREATE TABLE $cat.db.t (k INT, n INT, money DECIMAL(12,2)) " +
+        "TBLPROPERTIES ('histFor' = 'k,n,money')")
+      spark.sql(s"INSERT INTO $cat.db.t " +
+        "SELECT CAST(id % 5 AS INT), CAST(id % 9 AS INT), " +
+        "CAST(id % 7 AS DECIMAL(12,2)) FROM range(0, 200)")
+      val f = SegmentLog.fs(s"$wh/db/t", spark.sessionState.newHadoopConf())
+      def m() = SegmentLog.read(f, s"$wh/db/t").get
+      assert(m().histMerged.keySet == Set("k", "n", "money"))
+      // int->long keeps (long canonical is value-invariant)
+      spark.sql(s"ALTER TABLE $cat.db.t ALTER COLUMN k TYPE BIGINT")
+      assert(m().props("histFor").split(",").toSet == Set("k", "n", "money"))
+      // decimal precision growth at unchanged scale keeps too (the
+      // unscaled long is invariant)...
+      spark.sql(s"ALTER TABLE $cat.db.t ALTER COLUMN money TYPE DECIMAL(16,2)")
+      assert(m().props("histFor").split(",").toSet == Set("k", "n", "money"))
+      // ...but growth PAST 18 digits loses the exact long canonical
+      spark.sql(s"ALTER TABLE $cat.db.t ALTER COLUMN money TYPE DECIMAL(22,2)")
+      assert(m().props("histFor").split(",").toSet == Set("k", "n"),
+        s"widen past 18 digits must drop money, got ${m().props.get("histFor")}")
+      // int->double: no supported canonical — the widen retires it
+      spark.sql(s"ALTER TABLE $cat.db.t ALTER COLUMN n TYPE DOUBLE")
+      assert(m().props("histFor").split(",").toSet == Set("k"),
+        s"widen must drop n from histFor, got ${m().props.get("histFor")}")
+    }
   }
 
   test("a high-cardinality column overflows honestly: absent, never approximate") {

@@ -7,7 +7,7 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.sources.segment.{GraftSegmentSource, SegmentLog}
+import graft.sources.segment.{GraftCatalog, GraftSegmentSource, SegmentLog}
 
 /** The graft-segment DataSource V2 connector: round-trip fidelity,
   * zone-map segment skipping, column pruning, reported-statistics
@@ -442,30 +442,29 @@ class SegmentSourceSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("SQL DELETE through the catalog takes the metadata-only path") {
     val warehouse = tmp("graft-seg-delwh")
-    spark.conf.set("spark.sql.catalog.graft_del",
-      classOf[graft.sources.segment.GraftCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_del.warehouse", warehouse)
-    spark.sql("CREATE NAMESPACE IF NOT EXISTS graft_del.db")
-    // RANGE layout (declared via table properties): segments cover
-    // non-overlapping sorted k ranges, so a boundary-aligned range
-    // predicate decides every segment — the metadata-only DELETE shape
-    spark.sql("CREATE TABLE graft_del.db.t (k BIGINT, v BIGINT) " +
-      "TBLPROPERTIES ('clusterBy'='k', 'numPartitions'='4')")
-    spark.sql("INSERT INTO graft_del.db.t SELECT id AS k, id * 10 FROM range(0, 400)")
-    val fs = SegmentLog.fs(warehouse, spark.sessionState.newHadoopConf())
-    val m = SegmentLog.read(fs, s"$warehouse/db/t").get
-    assert(m.bucketing.exists(b => b.mode == "range" && b.cols == Seq("k")))
-    assert(m.segments.size >= 3)
-    // pick a real segment boundary: the minimum k of some middle segment
-    val boundary = m.segments.map(_.stats("k").bounds.get._1.toLong).sorted.apply(2)
-    spark.sql(s"DELETE FROM graft_del.db.t WHERE k >= $boundary")
-    val after = SegmentLog.read(fs, s"$warehouse/db/t").get
-    assert(after.segments.size < m.segments.size, "whole segments dropped from the manifest")
-    assert(spark.sql("SELECT count(*) FROM graft_del.db.t").head().getLong(0) == boundary)
-    assert(spark.sql(s"SELECT count(*) FROM graft_del.db.t WHERE k >= $boundary")
-      .head().getLong(0) == 0)
-    spark.sql("TRUNCATE TABLE graft_del.db.t")
-    assert(spark.sql("SELECT count(*) FROM graft_del.db.t").head().getLong(0) == 0)
+    GraftCatalog.withCatalog(spark, warehouse) { cat =>
+      spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.db")
+      // RANGE layout (declared via table properties): segments cover
+      // non-overlapping sorted k ranges, so a boundary-aligned range
+      // predicate decides every segment — the metadata-only DELETE shape
+      spark.sql(s"CREATE TABLE $cat.db.t (k BIGINT, v BIGINT) " +
+        "TBLPROPERTIES ('clusterBy'='k', 'numPartitions'='4')")
+      spark.sql(s"INSERT INTO $cat.db.t SELECT id AS k, id * 10 FROM range(0, 400)")
+      val fs = SegmentLog.fs(warehouse, spark.sessionState.newHadoopConf())
+      val m = SegmentLog.read(fs, s"$warehouse/db/t").get
+      assert(m.bucketing.exists(b => b.mode == "range" && b.cols == Seq("k")))
+      assert(m.segments.size >= 3)
+      // pick a real segment boundary: the minimum k of some middle segment
+      val boundary = m.segments.map(_.stats("k").bounds.get._1.toLong).sorted.apply(2)
+      spark.sql(s"DELETE FROM $cat.db.t WHERE k >= $boundary")
+      val after = SegmentLog.read(fs, s"$warehouse/db/t").get
+      assert(after.segments.size < m.segments.size, "whole segments dropped from the manifest")
+      assert(spark.sql(s"SELECT count(*) FROM $cat.db.t").head().getLong(0) == boundary)
+      assert(spark.sql(s"SELECT count(*) FROM $cat.db.t WHERE k >= $boundary")
+        .head().getLong(0) == 0)
+      spark.sql(s"TRUNCATE TABLE $cat.db.t")
+      assert(spark.sql(s"SELECT count(*) FROM $cat.db.t").head().getLong(0) == 0)
+    }
   }
 
   test("compaction rewrites fragments in place; expiry + vacuum reclaim history") {
@@ -988,27 +987,25 @@ class SegmentSourceSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("ALTER TABLE RENAME/DROP/ADD COLUMN through the SQL catalog") {
     val wh = tmp("graft-colmap-wh")
-    val cat = s"graft_ddl_${System.nanoTime()}"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.sources.segment.GraftCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-    spark.sql(s"CREATE NAMESPACE $cat.db")
-    spark.sql(s"CREATE TABLE $cat.db.t (k BIGINT, cents BIGINT) " +
-      "TBLPROPERTIES ('clusterBy'='k', 'numPartitions'='2')")
-    spark.sql(s"INSERT INTO $cat.db.t VALUES (1, 100), (2, 200)")
-    spark.sql(s"ALTER TABLE $cat.db.t RENAME COLUMN cents TO price_cents")
-    spark.sql(s"ALTER TABLE $cat.db.t ADD COLUMN note STRING")
-    spark.sql(s"INSERT INTO $cat.db.t VALUES (3, 300, 'n3')")
-    val got = spark.sql(s"SELECT k, price_cents, note FROM $cat.db.t ORDER BY k")
-      .collect().map(r => (r.getLong(0), r.getLong(1), Option(r.getString(2)))).toSeq
-    assert(got == Seq((1L, 100L, None), (2L, 200L, None), (3L, 300L, Some("n3"))))
-    spark.sql(s"ALTER TABLE $cat.db.t DROP COLUMN note")
-    assert(spark.sql(s"SELECT * FROM $cat.db.t").schema.fieldNames.toSeq ==
-      Seq("k", "price_cents"))
-    val e = intercept[Exception] {
-      spark.sql(s"ALTER TABLE $cat.db.t ALTER COLUMN price_cents TYPE INT")
+    GraftCatalog.withCatalog(spark, wh) { cat =>
+      spark.sql(s"CREATE NAMESPACE $cat.db")
+      spark.sql(s"CREATE TABLE $cat.db.t (k BIGINT, cents BIGINT) " +
+        "TBLPROPERTIES ('clusterBy'='k', 'numPartitions'='2')")
+      spark.sql(s"INSERT INTO $cat.db.t VALUES (1, 100), (2, 200)")
+      spark.sql(s"ALTER TABLE $cat.db.t RENAME COLUMN cents TO price_cents")
+      spark.sql(s"ALTER TABLE $cat.db.t ADD COLUMN note STRING")
+      spark.sql(s"INSERT INTO $cat.db.t VALUES (3, 300, 'n3')")
+      val got = spark.sql(s"SELECT k, price_cents, note FROM $cat.db.t ORDER BY k")
+        .collect().map(r => (r.getLong(0), r.getLong(1), Option(r.getString(2)))).toSeq
+      assert(got == Seq((1L, 100L, None), (2L, 200L, None), (3L, 300L, Some("n3"))))
+      spark.sql(s"ALTER TABLE $cat.db.t DROP COLUMN note")
+      assert(spark.sql(s"SELECT * FROM $cat.db.t").schema.fieldNames.toSeq ==
+        Seq("k", "price_cents"))
+      val e = intercept[Exception] {
+        spark.sql(s"ALTER TABLE $cat.db.t ALTER COLUMN price_cents TYPE INT")
+      }
+      assert(e.getMessage.contains("RENAME/DROP/ADD") || e.getMessage != null)
     }
-    assert(e.getMessage.contains("RENAME/DROP/ADD") || e.getMessage != null)
   }
 
   test("per-segment blooms prune point lookups on unclustered columns; hash contract holds per type") {
@@ -1095,111 +1092,107 @@ class SegmentSourceSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   test("compact derives the output count from the manifest when num_partitions is omitted") {
     import graft.sources.segment.GraftMaintenance
     val wh = tmp("graft-autoparts-wh")
-    val cat = s"graft_autoparts_${System.nanoTime()}"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.sources.segment.GraftCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-    spark.sql(s"CREATE NAMESPACE $cat.db")
-    spark.sql(s"CREATE TABLE $cat.db.t (k BIGINT, x BIGINT, y BIGINT)")
-    (0 until 4).foreach(i => spark.sql(
-      s"INSERT INTO $cat.db.t SELECT id, id % 100, (id * 37) % 100 " +
-        s"FROM range(${i * 2000}, ${i * 2000 + 2000})"))
-    val dir = s"$wh/db/t"
-    def manifest = SegmentLog.read(
-      SegmentLog.fs(dir, spark.sessionState.newHadoopConf()), dir).get
+    GraftCatalog.withCatalog(spark, wh) { cat =>
+      spark.sql(s"CREATE NAMESPACE $cat.db")
+      spark.sql(s"CREATE TABLE $cat.db.t (k BIGINT, x BIGINT, y BIGINT)")
+      (0 until 4).foreach(i => spark.sql(
+        s"INSERT INTO $cat.db.t SELECT id, id % 100, (id * 37) % 100 " +
+          s"FROM range(${i * 2000}, ${i * 2000 + 2000})"))
+      val dir = s"$wh/db/t"
+      def manifest = SegmentLog.read(
+        SegmentLog.fs(dir, spark.sessionState.newHadoopConf()), dir).get
 
-    // the derivation arithmetic: ceil(Σ live bytes / target), floor 1
-    val m = manifest
-    val total = m.segments.map(_.bytes).sum
-    assert(GraftMaintenance.deriveNumPartitions(m, total + 1) == 1)
-    val third = GraftMaintenance.deriveNumPartitions(m, math.max(1L, total / 3))
-    assert(third == 3 || third == 4, s"ceil(B/(B/3)) ∈ {3,4}, got $third")
+      // the derivation arithmetic: ceil(Σ live bytes / target), floor 1
+      val m = manifest
+      val total = m.segments.map(_.bytes).sum
+      assert(GraftMaintenance.deriveNumPartitions(m, total + 1) == 1)
+      val third = GraftMaintenance.deriveNumPartitions(m, math.max(1L, total / 3))
+      assert(third == 3 || third == 4, s"ceil(B/(B/3)) ∈ {3,4}, got $third")
 
-    // deletion vectors scale to the LIVE fraction: compaction
-    // materializes the vectors, so the output holds live rows only
-    spark.sql(s"CALL $cat.system.delete_mark('db.t', 'k % 2 = 0')").collect()
-    val m2 = manifest
-    assert(m2.segments.map(_.dvRows).sum > 0, "dvs in place")
-    val t8 = math.max(1L, total / 8)
-    assert(GraftMaintenance.deriveNumPartitions(m2, t8) <=
-      GraftMaintenance.deriveNumPartitions(m, t8) / 2 + 1,
-      "half the live rows must derive about half the partitions")
+      // deletion vectors scale to the LIVE fraction: compaction
+      // materializes the vectors, so the output holds live rows only
+      spark.sql(s"CALL $cat.system.delete_mark('db.t', 'k % 2 = 0')").collect()
+      val m2 = manifest
+      assert(m2.segments.map(_.dvRows).sum > 0, "dvs in place")
+      val t8 = math.max(1L, total / 8)
+      assert(GraftMaintenance.deriveNumPartitions(m2, t8) <=
+        GraftMaintenance.deriveNumPartitions(m, t8) / 2 + 1,
+        "half the live rows must derive about half the partitions")
 
-    // the SQL face: num_partitions omitted → derived (a small table
-    // lands on 1 segment at the 128 MiB default); zorder shares it
-    val c = spark.sql(s"CALL $cat.system.compact('db.t', 'k')").collect()(0)
-    assert(c.getInt(1) == 1, s"derived compact output, got ${c.getInt(1)}")
-    val z = spark.sql(s"CALL $cat.system.zorder('db.t', 'x,y')").collect()(0)
-    assert(z.getInt(1) == 1, s"derived zorder output, got ${z.getInt(1)}")
-    // the rewrite is still the same data
-    assert(spark.sql(s"SELECT count(*) FROM $cat.db.t").collect()(0).getLong(0) == 4000L)
+      // the SQL face: num_partitions omitted → derived (a small table
+      // lands on 1 segment at the 128 MiB default); zorder shares it
+      val c = spark.sql(s"CALL $cat.system.compact('db.t', 'k')").collect()(0)
+      assert(c.getInt(1) == 1, s"derived compact output, got ${c.getInt(1)}")
+      val z = spark.sql(s"CALL $cat.system.zorder('db.t', 'x,y')").collect()(0)
+      assert(z.getInt(1) == 1, s"derived zorder output, got ${z.getInt(1)}")
+      // the rewrite is still the same data
+      assert(spark.sql(s"SELECT count(*) FROM $cat.db.t").collect()(0).getLong(0) == 4000L)
+    }
   }
 
   test("CALL procedures: the whole maintenance lifecycle without leaving SQL") {
     val wh = tmp("graft-proc-wh")
-    val cat = s"graft_proc_${System.nanoTime()}"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.sources.segment.GraftCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-    spark.sql(s"CREATE NAMESPACE $cat.db")
-    spark.sql(s"CREATE TABLE $cat.db.t (k BIGINT, x BIGINT, y BIGINT)")
-    (0 until 4).foreach(i => spark.sql(
-      s"INSERT INTO $cat.db.t SELECT id, id % 100, (id * 37) % 100 " +
-        s"FROM range(${i * 1000}, ${i * 1000 + 1000})"))
+    GraftCatalog.withCatalog(spark, wh) { cat =>
+      spark.sql(s"CREATE NAMESPACE $cat.db")
+      spark.sql(s"CREATE TABLE $cat.db.t (k BIGINT, x BIGINT, y BIGINT)")
+      (0 until 4).foreach(i => spark.sql(
+        s"INSERT INTO $cat.db.t SELECT id, id % 100, (id * 37) % 100 " +
+          s"FROM range(${i * 1000}, ${i * 1000 + 1000})"))
 
-    val c = spark.sql(s"CALL $cat.system.compact('db.t', 'k', 2)").collect()(0)
-    assert(c.getInt(0) >= 4 && c.getInt(1) <= 2, s"compact ${c.getInt(0)} → ${c.getInt(1)}")
+      val c = spark.sql(s"CALL $cat.system.compact('db.t', 'k', 2)").collect()(0)
+      assert(c.getInt(0) >= 4 && c.getInt(1) <= 2, s"compact ${c.getInt(0)} → ${c.getInt(1)}")
 
-    val z = spark.sql(s"CALL $cat.system.zorder('db.t', 'x,y', 4)").collect()(0)
-    assert(z.getInt(0) <= 2 && z.getInt(1) >= 2)
+      val z = spark.sql(s"CALL $cat.system.zorder('db.t', 'x,y', 4)").collect()(0)
+      assert(z.getInt(0) <= 2 && z.getInt(1) >= 2)
 
-    val h = spark.sql(s"CALL $cat.system.history('db.t')")
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
-    assert(h.map(_._2) == Seq("create", "append", "append", "append", "append",
-      "compact", "compact"), s"got $h")
+      val h = spark.sql(s"CALL $cat.system.history('db.t')")
+        .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+      assert(h.map(_._2) == Seq("create", "append", "append", "append", "append",
+        "compact", "compact"), s"got $h")
 
-    val e = spark.sql(s"CALL $cat.system.expire('db.t', 1)").collect()(0)
-    assert(e.getInt(0) == 6, s"6 old versions expired, got ${e.getInt(0)}")
-    val v = spark.sql(s"CALL $cat.system.vacuum('db.t', 0L)").collect()(0)
-    assert(v.getInt(0) > 0, "pre-rewrite files reclaimed")
-    assert(spark.sql(s"SELECT count(*) FROM $cat.db.t").head().getLong(0) == 4000)
+      val e = spark.sql(s"CALL $cat.system.expire('db.t', 1)").collect()(0)
+      assert(e.getInt(0) == 6, s"6 old versions expired, got ${e.getInt(0)}")
+      val v = spark.sql(s"CALL $cat.system.vacuum('db.t', 0L)").collect()(0)
+      assert(v.getInt(0) > 0, "pre-rewrite files reclaimed")
+      assert(spark.sql(s"SELECT count(*) FROM $cat.db.t").head().getLong(0) == 4000)
 
-    intercept[Exception] { spark.sql(s"CALL $cat.system.nonsense('db.t')") }
+      intercept[Exception] { spark.sql(s"CALL $cat.system.nonsense('db.t')") }
 
-    // rewrite-path DELETE through CALL, and late bloom declaration
-    // through SET TBLPROPERTIES
-    val del = spark.sql(s"CALL $cat.system.delete_where('db.t', 'k % 2 = 0')").collect()(0)
-    assert(del.getLong(0) == 2000)
-    assert(spark.sql(s"SELECT count(*) FROM $cat.db.t").head().getLong(0) == 2000)
-    // deletion-vector DELETE through CALL: rows marked, files untouched
-    val dvDel = spark.sql(s"CALL $cat.system.delete_mark('db.t', 'k % 3 = 0')").collect()(0)
-    assert(dvDel.getLong(0) > 0)
-    assert(spark.sql(s"SELECT count(*) FROM $cat.db.t").head().getLong(0) ==
-      2000 - dvDel.getLong(0))
-    // DESCRIBE DETAIL through CALL shows the dv state and live totals
-    val det = spark.sql(s"CALL $cat.system.detail('db.t')").collect()(0)
-    assert(det.getAs[Long]("n_rows") == 2000 - dvDel.getLong(0))
-    assert(det.getAs[Long]("n_dv_rows") == dvDel.getLong(0))
-    // materialize the vectors through CALL, detail goes clean again
-    val cd = spark.sql(s"CALL $cat.system.compact_deletes('db.t')").collect()(0)
-    assert(cd.getAs[Long]("dv_rows_dropped") == dvDel.getLong(0))
-    val det2 = spark.sql(s"CALL $cat.system.detail('db.t')").collect()(0)
-    assert(det2.getAs[Long]("n_dv_segments") == 0L)
-    assert(det2.getAs[Long]("n_rows") == 2000 - dvDel.getLong(0))
-    spark.sql(s"ALTER TABLE $cat.db.t SET TBLPROPERTIES ('bloomFor'='y')")
-    spark.sql(s"INSERT INTO $cat.db.t VALUES (9999, 1, 2)")
-    val fsp = SegmentLog.fs(wh, spark.sessionState.newHadoopConf())
-    val mp = SegmentLog.read(fsp, s"$wh/db/t").get
-    assert(mp.props("bloomFor") == "y")
-    assert(mp.segments.maxBy(_.id).stats("y").bloom.isDefined,
-      "the post-declaration INSERT must build the bloom")
-    spark.sql(s"ALTER TABLE $cat.db.t UNSET TBLPROPERTIES ('bloomFor')")
-    assert(!SegmentLog.read(fsp, s"$wh/db/t").get.props.contains("bloomFor"))
-    intercept[Exception] {
-      spark.sql(s"ALTER TABLE $cat.db.t SET TBLPROPERTIES ('bloomFor'='nope')")
-    }
-    intercept[Exception] {
-      spark.sql(s"ALTER TABLE $cat.db.t SET TBLPROPERTIES ('whatever'='x')")
+      // rewrite-path DELETE through CALL, and late bloom declaration
+      // through SET TBLPROPERTIES
+      val del = spark.sql(s"CALL $cat.system.delete_where('db.t', 'k % 2 = 0')").collect()(0)
+      assert(del.getLong(0) == 2000)
+      assert(spark.sql(s"SELECT count(*) FROM $cat.db.t").head().getLong(0) == 2000)
+      // deletion-vector DELETE through CALL: rows marked, files untouched
+      val dvDel = spark.sql(s"CALL $cat.system.delete_mark('db.t', 'k % 3 = 0')").collect()(0)
+      assert(dvDel.getLong(0) > 0)
+      assert(spark.sql(s"SELECT count(*) FROM $cat.db.t").head().getLong(0) ==
+        2000 - dvDel.getLong(0))
+      // DESCRIBE DETAIL through CALL shows the dv state and live totals
+      val det = spark.sql(s"CALL $cat.system.detail('db.t')").collect()(0)
+      assert(det.getAs[Long]("n_rows") == 2000 - dvDel.getLong(0))
+      assert(det.getAs[Long]("n_dv_rows") == dvDel.getLong(0))
+      // materialize the vectors through CALL, detail goes clean again
+      val cd = spark.sql(s"CALL $cat.system.compact_deletes('db.t')").collect()(0)
+      assert(cd.getAs[Long]("dv_rows_dropped") == dvDel.getLong(0))
+      val det2 = spark.sql(s"CALL $cat.system.detail('db.t')").collect()(0)
+      assert(det2.getAs[Long]("n_dv_segments") == 0L)
+      assert(det2.getAs[Long]("n_rows") == 2000 - dvDel.getLong(0))
+      spark.sql(s"ALTER TABLE $cat.db.t SET TBLPROPERTIES ('bloomFor'='y')")
+      spark.sql(s"INSERT INTO $cat.db.t VALUES (9999, 1, 2)")
+      val fsp = SegmentLog.fs(wh, spark.sessionState.newHadoopConf())
+      val mp = SegmentLog.read(fsp, s"$wh/db/t").get
+      assert(mp.props("bloomFor") == "y")
+      assert(mp.segments.maxBy(_.id).stats("y").bloom.isDefined,
+        "the post-declaration INSERT must build the bloom")
+      spark.sql(s"ALTER TABLE $cat.db.t UNSET TBLPROPERTIES ('bloomFor')")
+      assert(!SegmentLog.read(fsp, s"$wh/db/t").get.props.contains("bloomFor"))
+      intercept[Exception] {
+        spark.sql(s"ALTER TABLE $cat.db.t SET TBLPROPERTIES ('bloomFor'='nope')")
+      }
+      intercept[Exception] {
+        spark.sql(s"ALTER TABLE $cat.db.t SET TBLPROPERTIES ('whatever'='x')")
+      }
     }
   }
 
@@ -1377,61 +1370,57 @@ class SegmentSourceSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("CALL rollback / rollback_to_timestamp: RESTORE without leaving SQL") {
     val wh = tmp("graft-rb-wh")
-    val cat = s"graft_rb_${System.nanoTime()}"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.sources.segment.GraftCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-    spark.sql(s"CREATE NAMESPACE $cat.db")
-    spark.sql(s"CREATE TABLE $cat.db.t (k BIGINT, v BIGINT)") // v0
-    spark.sql(s"INSERT INTO $cat.db.t SELECT id, id * 2 FROM range(0, 100)") // v1
-    val fs = SegmentLog.fs(wh, spark.sessionState.newHadoopConf())
-    val ts1 = SegmentLog.read(fs, s"$wh/db/t").get.ts
-    spark.sql(s"INSERT INTO $cat.db.t SELECT id, id * 2 FROM range(100, 150)") // v2
-    spark.sql(s"DELETE FROM $cat.db.t WHERE k < 100") // v3
-    assert(spark.sql(s"SELECT count(*) FROM $cat.db.t").head().getLong(0) == 50)
-    // RESTORE to the pre-delete version by number
-    val r = spark.sql(s"CALL $cat.system.rollback('db.t', 2)").collect()(0)
-    assert(r.getAs[Long]("restored_version") == 2L)
-    assert(r.getAs[Long]("new_version") == 4L)
-    assert(r.getAs[Long]("n_rows") == 150L)
-    assert(spark.sql(s"SELECT count(*) FROM $cat.db.t").head().getLong(0) == 150)
-    // then "undo everything since t": binds to v1's stamp and restores it
-    val rt = spark.sql(
-      s"CALL $cat.system.rollback_to_timestamp('db.t', ${ts1}L)").collect()(0)
-    assert(rt.getAs[Long]("restored_version") == 1L)
-    assert(rt.getAs[Long]("new_version") == 5L)
-    assert(spark.sql(s"SELECT count(*) FROM $cat.db.t").head().getLong(0) == 100)
-    // the lifecycle composes: history classifies the first restore
-    // (old segment id re-appears) as `restore`; the second only drops
-    // the v2 append, which is indistinguishable from a replace
-    val kinds = spark.sql(s"CALL $cat.system.history('db.t')")
-      .collect().map(_.getString(1)).toSeq
-    assert(kinds == Seq("create", "append", "append", "replace",
-      "restore", "replace"), s"got $kinds")
+    GraftCatalog.withCatalog(spark, wh) { cat =>
+      spark.sql(s"CREATE NAMESPACE $cat.db")
+      spark.sql(s"CREATE TABLE $cat.db.t (k BIGINT, v BIGINT)") // v0
+      spark.sql(s"INSERT INTO $cat.db.t SELECT id, id * 2 FROM range(0, 100)") // v1
+      val fs = SegmentLog.fs(wh, spark.sessionState.newHadoopConf())
+      val ts1 = SegmentLog.read(fs, s"$wh/db/t").get.ts
+      spark.sql(s"INSERT INTO $cat.db.t SELECT id, id * 2 FROM range(100, 150)") // v2
+      spark.sql(s"DELETE FROM $cat.db.t WHERE k < 100") // v3
+      assert(spark.sql(s"SELECT count(*) FROM $cat.db.t").head().getLong(0) == 50)
+      // RESTORE to the pre-delete version by number
+      val r = spark.sql(s"CALL $cat.system.rollback('db.t', 2)").collect()(0)
+      assert(r.getAs[Long]("restored_version") == 2L)
+      assert(r.getAs[Long]("new_version") == 4L)
+      assert(r.getAs[Long]("n_rows") == 150L)
+      assert(spark.sql(s"SELECT count(*) FROM $cat.db.t").head().getLong(0) == 150)
+      // then "undo everything since t": binds to v1's stamp and restores it
+      val rt = spark.sql(
+        s"CALL $cat.system.rollback_to_timestamp('db.t', ${ts1}L)").collect()(0)
+      assert(rt.getAs[Long]("restored_version") == 1L)
+      assert(rt.getAs[Long]("new_version") == 5L)
+      assert(spark.sql(s"SELECT count(*) FROM $cat.db.t").head().getLong(0) == 100)
+      // the lifecycle composes: history classifies the first restore
+      // (old segment id re-appears) as `restore`; the second only drops
+      // the v2 append, which is indistinguishable from a replace
+      val kinds = spark.sql(s"CALL $cat.system.history('db.t')")
+        .collect().map(_.getString(1)).toSeq
+      assert(kinds == Seq("create", "append", "append", "replace",
+        "restore", "replace"), s"got $kinds")
+    }
   }
 
   test("TBLPROPERTIES bloomFor: plain INSERTs build blooms without restating options") {
     val wh = tmp("graft-bloomprop-wh")
-    val cat = s"graft_bp_${System.nanoTime()}"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.sources.segment.GraftCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-    spark.sql(s"CREATE NAMESPACE $cat.db")
-    spark.sql(s"CREATE TABLE $cat.db.t (k BIGINT, v BIGINT) " +
-      "TBLPROPERTIES ('clusterBy'='k', 'numPartitions'='8', 'bloomFor'='v')")
-    spark.sql(s"INSERT INTO $cat.db.t " +
-      "SELECT id, (id * 7919) % 100000 FROM range(0, 2000)")
-    val fs = SegmentLog.fs(wh, spark.sessionState.newHadoopConf())
-    val m = SegmentLog.read(fs, s"$wh/db/t").get
-    assert(m.props.get("bloomFor").contains("v"))
-    assert(m.segments.forall(_.stats("v").bloom.isDefined),
-      "every INSERT's segments must carry the declared bloom")
-    // and the bloom engages: a point lookup on the unclustered column
-    GraftSegmentSource.lastScanEvent = None
-    assert(spark.sql(s"SELECT k FROM $cat.db.t WHERE v = ${513L * 7919 % 100000}")
-      .collect().map(_.getLong(0)).toSeq == Seq(513L))
-    val (p, t) = GraftSegmentSource.lastScanEvent.get
-    assert(p < t, s"declared bloom should prune: $p of $t")
+    GraftCatalog.withCatalog(spark, wh) { cat =>
+      spark.sql(s"CREATE NAMESPACE $cat.db")
+      spark.sql(s"CREATE TABLE $cat.db.t (k BIGINT, v BIGINT) " +
+        "TBLPROPERTIES ('clusterBy'='k', 'numPartitions'='8', 'bloomFor'='v')")
+      spark.sql(s"INSERT INTO $cat.db.t " +
+        "SELECT id, (id * 7919) % 100000 FROM range(0, 2000)")
+      val fs = SegmentLog.fs(wh, spark.sessionState.newHadoopConf())
+      val m = SegmentLog.read(fs, s"$wh/db/t").get
+      assert(m.props.get("bloomFor").contains("v"))
+      assert(m.segments.forall(_.stats("v").bloom.isDefined),
+        "every INSERT's segments must carry the declared bloom")
+      // and the bloom engages: a point lookup on the unclustered column
+      GraftSegmentSource.lastScanEvent = None
+      assert(spark.sql(s"SELECT k FROM $cat.db.t WHERE v = ${513L * 7919 % 100000}")
+        .collect().map(_.getLong(0)).toSeq == Seq(513L))
+      val (p, t) = GraftSegmentSource.lastScanEvent.get
+      assert(p < t, s"declared bloom should prune: $p of $t")
+    }
   }
 
   test("declared blooms follow renames and drops; explicit options override per write") {
@@ -1442,39 +1431,37 @@ class SegmentSourceSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // by the catalog path — here set the property directly through a
     // catalog-created table to exercise the full chain
     val wh = tmp("graft-seg-bloomren-wh")
-    val cat = s"graft_br_${System.nanoTime()}"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.sources.segment.GraftCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-    spark.sql(s"CREATE NAMESPACE $cat.db")
-    spark.sql(s"CREATE TABLE $cat.db.t (k BIGINT, v BIGINT) " +
-      "TBLPROPERTIES ('bloomFor'='v')")
-    val tdir = s"$wh/db/t"
-    val tfs = SegmentLog.fs(tdir, spark.sessionState.newHadoopConf())
-    spark.sql(s"INSERT INTO $cat.db.t VALUES (1, 10)")
-    // RENAME: the declared bloom column follows, and the next INSERT
-    // still builds blooms (under the frozen physical stats key)
-    spark.sql(s"ALTER TABLE $cat.db.t RENAME COLUMN v TO w")
-    assert(SegmentLog.read(tfs, tdir).get.props("bloomFor") == "w")
-    spark.sql(s"INSERT INTO $cat.db.t VALUES (2, 20)")
-    val m = SegmentLog.read(tfs, tdir).get
-    assert(m.segments.forall(s =>
-      s.stats.exists { case (n, cs) => cs.bloom.isDefined }),
-      "blooms must keep being built after the rename")
-    // DROP: the stale declaration is removed, never re-attaching to a
-    // later re-added column of the same name
-    spark.sql(s"ALTER TABLE $cat.db.t DROP COLUMN w")
-    assert(!SegmentLog.read(tfs, tdir).get.props.contains("bloomFor"))
+    GraftCatalog.withCatalog(spark, wh) { cat =>
+      spark.sql(s"CREATE NAMESPACE $cat.db")
+      spark.sql(s"CREATE TABLE $cat.db.t (k BIGINT, v BIGINT) " +
+        "TBLPROPERTIES ('bloomFor'='v')")
+      val tdir = s"$wh/db/t"
+      val tfs = SegmentLog.fs(tdir, spark.sessionState.newHadoopConf())
+      spark.sql(s"INSERT INTO $cat.db.t VALUES (1, 10)")
+      // RENAME: the declared bloom column follows, and the next INSERT
+      // still builds blooms (under the frozen physical stats key)
+      spark.sql(s"ALTER TABLE $cat.db.t RENAME COLUMN v TO w")
+      assert(SegmentLog.read(tfs, tdir).get.props("bloomFor") == "w")
+      spark.sql(s"INSERT INTO $cat.db.t VALUES (2, 20)")
+      val m = SegmentLog.read(tfs, tdir).get
+      assert(m.segments.forall(s =>
+        s.stats.exists { case (n, cs) => cs.bloom.isDefined }),
+        "blooms must keep being built after the rename")
+      // DROP: the stale declaration is removed, never re-attaching to a
+      // later re-added column of the same name
+      spark.sql(s"ALTER TABLE $cat.db.t DROP COLUMN w")
+      assert(!SegmentLog.read(tfs, tdir).get.props.contains("bloomFor"))
 
-    // explicit off-switch for one write: bloomFor="" beats the property
-    Seq((1L, 10L)).toDF("k", "v").write.format(Fmt)
-      .option("bloomFor", "v").mode("append").save(dir)
-    Seq((2L, 20L)).toDF("k", "v").write.format(Fmt)
-      .option("bloomFor", "").mode("append").save(dir)
-    val segs = SegmentLog.read(fs, dir).get.segments.sortBy(_.id)
-    assert(segs.head.stats("v").bloom.isDefined)
-    assert(segs.last.stats("v").bloom.isEmpty,
-      "an explicit empty bloomFor must disable blooms for that write")
+      // explicit off-switch for one write: bloomFor="" beats the property
+      Seq((1L, 10L)).toDF("k", "v").write.format(Fmt)
+        .option("bloomFor", "v").mode("append").save(dir)
+      Seq((2L, 20L)).toDF("k", "v").write.format(Fmt)
+        .option("bloomFor", "").mode("append").save(dir)
+      val segs = SegmentLog.read(fs, dir).get.segments.sortBy(_.id)
+      assert(segs.head.stats("v").bloom.isDefined)
+      assert(segs.last.stats("v").bloom.isEmpty,
+        "an explicit empty bloomFor must disable blooms for that write")
+    }
   }
 
   test("bloom hash contract: write-side row hashing equals literal-side hashing, per type") {
@@ -1658,19 +1645,17 @@ class SegmentSourceSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("a multi-change ALTER TABLE lands whole or not at all") {
     val wh = tmp("graft-atomicddl-wh")
-    val cat = s"graft_addl_${System.nanoTime()}"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.sources.segment.GraftCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-    spark.sql(s"CREATE NAMESPACE $cat.db")
-    spark.sql(s"CREATE TABLE $cat.db.t (k BIGINT, v BIGINT)")
-    // second column collides → the whole statement must abort with the
-    // first column NOT added (one manifest commit per statement)
-    intercept[Exception] {
-      spark.sql(s"ALTER TABLE $cat.db.t ADD COLUMNS (extra BIGINT, v BIGINT)")
+    GraftCatalog.withCatalog(spark, wh) { cat =>
+      spark.sql(s"CREATE NAMESPACE $cat.db")
+      spark.sql(s"CREATE TABLE $cat.db.t (k BIGINT, v BIGINT)")
+      // second column collides → the whole statement must abort with the
+      // first column NOT added (one manifest commit per statement)
+      intercept[Exception] {
+        spark.sql(s"ALTER TABLE $cat.db.t ADD COLUMNS (extra BIGINT, v BIGINT)")
+      }
+      assert(spark.sql(s"SELECT * FROM $cat.db.t").schema.fieldNames.toSeq ==
+        Seq("k", "v"), "failed multi-change DDL must leave the table untouched")
     }
-    assert(spark.sql(s"SELECT * FROM $cat.db.t").schema.fieldNames.toSeq ==
-      Seq("k", "v"), "failed multi-change DDL must leave the table untouched")
   }
 
   test("streaming change feed: version offsets resume exactly-once; compaction stays invisible") {
@@ -2533,90 +2518,88 @@ class SegmentSourceSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("rowLevelMode=mor: SQL DELETE/UPDATE/MERGE run merge-on-read through deletion vectors") {
     val wh = tmp("graft-mor-wh")
-    val cat = s"graft_mor_${System.nanoTime()}"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.sources.segment.GraftCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-    spark.sql(s"CREATE NAMESPACE $cat.db")
-    spark.sql(s"CREATE TABLE $cat.db.t (k BIGINT, v BIGINT) " +
-      "TBLPROPERTIES ('rowLevelMode'='mor', 'clusterBy'='k', 'numPartitions'='4')")
-    spark.sql(s"INSERT INTO $cat.db.t SELECT id, id * 10 FROM range(0, 400)")
-    val dir = s"$wh/db/t"
-    val fs = SegmentLog.fs(dir, spark.sessionState.newHadoopConf())
-    val filesBefore = SegmentLog.read(fs, dir).get.segments.map(_.path).toSet
-    assert(SegmentLog.read(fs, dir).get.bucketing.isDefined, "declared range layout")
+    GraftCatalog.withCatalog(spark, wh) { cat =>
+      spark.sql(s"CREATE NAMESPACE $cat.db")
+      spark.sql(s"CREATE TABLE $cat.db.t (k BIGINT, v BIGINT) " +
+        "TBLPROPERTIES ('rowLevelMode'='mor', 'clusterBy'='k', 'numPartitions'='4')")
+      spark.sql(s"INSERT INTO $cat.db.t SELECT id, id * 10 FROM range(0, 400)")
+      val dir = s"$wh/db/t"
+      val fs = SegmentLog.fs(dir, spark.sessionState.newHadoopConf())
+      val filesBefore = SegmentLog.read(fs, dir).get.segments.map(_.path).toSet
+      assert(SegmentLog.read(fs, dir).get.bucketing.isDefined, "declared range layout")
 
-    // DELETE with a predicate zone maps cannot decide: merge-on-read —
-    // no segment file rewritten, positions land in vectors, and the
-    // declared layout SURVIVES (no rows moved, nothing appended)
-    spark.sql(s"DELETE FROM $cat.db.t WHERE k % 10 = 3")
-    val m1 = SegmentLog.read(fs, dir).get
-    assert(m1.segments.map(_.path).toSet == filesBefore,
-      "MoR DELETE must not rewrite segment files")
-    assert(m1.segments.map(_.dvRows).sum == 40)
-    assert(m1.bucketing.isDefined, "a pure MoR DELETE preserves the declared layout")
-    assert(spark.sql(s"SELECT count(*) FROM $cat.db.t").head().getLong(0) == 360)
-    assert(spark.sql(s"SELECT count(*) FROM $cat.db.t WHERE k % 10 = 3")
-      .head().getLong(0) == 0)
+      // DELETE with a predicate zone maps cannot decide: merge-on-read —
+      // no segment file rewritten, positions land in vectors, and the
+      // declared layout SURVIVES (no rows moved, nothing appended)
+      spark.sql(s"DELETE FROM $cat.db.t WHERE k % 10 = 3")
+      val m1 = SegmentLog.read(fs, dir).get
+      assert(m1.segments.map(_.path).toSet == filesBefore,
+        "MoR DELETE must not rewrite segment files")
+      assert(m1.segments.map(_.dvRows).sum == 40)
+      assert(m1.bucketing.isDefined, "a pure MoR DELETE preserves the declared layout")
+      assert(spark.sql(s"SELECT count(*) FROM $cat.db.t").head().getLong(0) == 360)
+      assert(spark.sql(s"SELECT count(*) FROM $cat.db.t WHERE k % 10 = 3")
+        .head().getLong(0) == 0)
 
-    // UPDATE: old versions dv-marked, new versions appended — file set
-    // grows by the appended segments only
-    spark.sql(s"UPDATE $cat.db.t SET v = v + 1 WHERE k % 10 = 7")
-    val m2 = SegmentLog.read(fs, dir).get
-    assert(filesBefore.subsetOf(m2.segments.map(_.path).toSet),
-      "MoR UPDATE keeps the original files")
-    assert(m2.bucketing.isEmpty,
-      "the appended new versions carry no layout label — the layout drops honestly")
-    assert(spark.sql(s"SELECT count(*) FROM $cat.db.t").head().getLong(0) == 360)
-    assert(spark.sql(s"SELECT sum(v) FROM $cat.db.t WHERE k % 10 = 7")
-      .head().getLong(0) == (0 until 400).filter(_ % 10 == 7).map(_ * 10L + 1).sum)
+      // UPDATE: old versions dv-marked, new versions appended — file set
+      // grows by the appended segments only
+      spark.sql(s"UPDATE $cat.db.t SET v = v + 1 WHERE k % 10 = 7")
+      val m2 = SegmentLog.read(fs, dir).get
+      assert(filesBefore.subsetOf(m2.segments.map(_.path).toSet),
+        "MoR UPDATE keeps the original files")
+      assert(m2.bucketing.isEmpty,
+        "the appended new versions carry no layout label — the layout drops honestly")
+      assert(spark.sql(s"SELECT count(*) FROM $cat.db.t").head().getLong(0) == 360)
+      assert(spark.sql(s"SELECT sum(v) FROM $cat.db.t WHERE k % 10 = 7")
+        .head().getLong(0) == (0 until 400).filter(_ % 10 == 7).map(_ * 10L + 1).sum)
 
-    // MERGE: matched updates + unmatched inserts, all row-granular
-    spark.sql(s"CREATE TABLE $cat.db.src (k BIGINT, v BIGINT)")
-    spark.sql(s"INSERT INTO $cat.db.src SELECT id, -id FROM range(395, 405)")
-    spark.sql(
-      s"""MERGE INTO $cat.db.t t USING $cat.db.src s ON t.k = s.k
-         |WHEN MATCHED THEN UPDATE SET v = s.v
-         |WHEN NOT MATCHED THEN INSERT (k, v) VALUES (s.k, s.v)""".stripMargin)
-    assert(spark.sql(s"SELECT count(*) FROM $cat.db.t").head().getLong(0) == 365,
-      "360 live + 5 inserted (400..404)")
-    assert(spark.sql(s"SELECT sum(v) FROM $cat.db.t WHERE k >= 395").head().getLong(0) ==
-      (395 until 405).map(-_.toLong).sum,
-      "matched rows updated to -k; the dv-deleted 403 is NOT MATCHED and re-inserts")
+      // MERGE: matched updates + unmatched inserts, all row-granular
+      spark.sql(s"CREATE TABLE $cat.db.src (k BIGINT, v BIGINT)")
+      spark.sql(s"INSERT INTO $cat.db.src SELECT id, -id FROM range(395, 405)")
+      spark.sql(
+        s"""MERGE INTO $cat.db.t t USING $cat.db.src s ON t.k = s.k
+           |WHEN MATCHED THEN UPDATE SET v = s.v
+           |WHEN NOT MATCHED THEN INSERT (k, v) VALUES (s.k, s.v)""".stripMargin)
+      assert(spark.sql(s"SELECT count(*) FROM $cat.db.t").head().getLong(0) == 365,
+        "360 live + 5 inserted (400..404)")
+      assert(spark.sql(s"SELECT sum(v) FROM $cat.db.t WHERE k >= 395").head().getLong(0) ==
+        (395 until 405).map(-_.toLong).sum,
+        "matched rows updated to -k; the dv-deleted 403 is NOT MATCHED and re-inserts")
 
-    // final full-content check against the closed form
-    val got = spark.sql(s"SELECT k, v FROM $cat.db.t ORDER BY k, v").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val want = ((0 until 400).filterNot(_ % 10 == 3).map { k =>
-      (k.toLong,
-        if (k >= 395) -k.toLong
-        else if (k % 10 == 7) k * 10L + 1
-        else k * 10L)
-    } ++ (400 until 405).map(k => (k.toLong, -k.toLong))).sortBy(identity)
-    assert(got == want)
+      // final full-content check against the closed form
+      val got = spark.sql(s"SELECT k, v FROM $cat.db.t ORDER BY k, v").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq
+      val want = ((0 until 400).filterNot(_ % 10 == 3).map { k =>
+        (k.toLong,
+          if (k >= 395) -k.toLong
+          else if (k % 10 == 7) k * 10L + 1
+          else k * 10L)
+      } ++ (400 until 405).map(k => (k.toLong, -k.toLong))).sortBy(identity)
+      assert(got == want)
 
-    // DML matching NOTHING is a no-op commit-wise on every tier: a
-    // running stream must never die over rows that did not change
-    val vQuiet = SegmentLog.read(fs, dir).get.version
-    spark.sql(s"DELETE FROM $cat.db.t WHERE k > 99999")
-    spark.sql(s"UPDATE $cat.db.t SET v = 0 WHERE k > 99999")
-    assert(SegmentLog.read(fs, dir).get.version == vQuiet,
-      "no-match MoR DML must not commit")
-    spark.sql(s"ALTER TABLE $cat.db.t SET TBLPROPERTIES ('rowLevelMode'='cow')")
-    spark.sql(s"UPDATE $cat.db.t SET v = 0 WHERE k > 99999")
-    assert(SegmentLog.read(fs, dir).get.version == vQuiet + 1,
-      "no-match CoW DML must not commit past the property change")
-    spark.sql(s"ALTER TABLE $cat.db.t SET TBLPROPERTIES ('rowLevelMode'='mor')")
+      // DML matching NOTHING is a no-op commit-wise on every tier: a
+      // running stream must never die over rows that did not change
+      val vQuiet = SegmentLog.read(fs, dir).get.version
+      spark.sql(s"DELETE FROM $cat.db.t WHERE k > 99999")
+      spark.sql(s"UPDATE $cat.db.t SET v = 0 WHERE k > 99999")
+      assert(SegmentLog.read(fs, dir).get.version == vQuiet,
+        "no-match MoR DML must not commit")
+      spark.sql(s"ALTER TABLE $cat.db.t SET TBLPROPERTIES ('rowLevelMode'='cow')")
+      spark.sql(s"UPDATE $cat.db.t SET v = 0 WHERE k > 99999")
+      assert(SegmentLog.read(fs, dir).get.version == vQuiet + 1,
+        "no-match CoW DML must not commit past the property change")
+      spark.sql(s"ALTER TABLE $cat.db.t SET TBLPROPERTIES ('rowLevelMode'='mor')")
 
-    // property validation
-    intercept[Exception] {
-      spark.sql(s"ALTER TABLE $cat.db.t SET TBLPROPERTIES ('rowLevelMode'='nope')")
+      // property validation
+      intercept[Exception] {
+        spark.sql(s"ALTER TABLE $cat.db.t SET TBLPROPERTIES ('rowLevelMode'='nope')")
+      }
+      // flipping back to cow works and the next DELETE rewrites instead
+      spark.sql(s"ALTER TABLE $cat.db.t SET TBLPROPERTIES ('rowLevelMode'='cow')")
+      spark.sql(s"DELETE FROM $cat.db.t WHERE k % 10 = 9")
+      assert(spark.sql(s"SELECT count(*) FROM $cat.db.t").head().getLong(0) == 325,
+        "365 - 40 rows with k%10=9")
     }
-    // flipping back to cow works and the next DELETE rewrites instead
-    spark.sql(s"ALTER TABLE $cat.db.t SET TBLPROPERTIES ('rowLevelMode'='cow')")
-    spark.sql(s"DELETE FROM $cat.db.t WHERE k % 10 = 9")
-    assert(spark.sql(s"SELECT count(*) FROM $cat.db.t").head().getLong(0) == 325,
-      "365 - 40 rows with k%10=9")
   }
 
   test("admission-capped streams page through delete history one id at a time") {
@@ -2891,50 +2874,49 @@ class SegmentSourceSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // the SAME commit (segments untouched — presence alone would let
     // it squat); RENAME follows for dotted declarations
     val wh = tmp("graft-seg-ndv-nested-wh")
-    spark.conf.set("spark.sql.catalog.gndvn",
-      classOf[graft.sources.segment.GraftCatalog].getName)
-    spark.conf.set("spark.sql.catalog.gndvn.warehouse", wh)
-    spark.sql("CREATE NAMESPACE IF NOT EXISTS gndvn.db")
-    spark.sql("CREATE TABLE gndvn.db.t (k BIGINT, " +
-      "meta STRUCT<lang: STRING, b: INT>, ts TIMESTAMP) " +
-      "TBLPROPERTIES ('ndvFor' = 'k,meta.lang,ts')")
-    spark.sql("INSERT INTO gndvn.db.t SELECT id, " +
-      "named_struct('lang', CAST(id % 5 AS STRING), 'b', CAST(id % 9 AS INT)), " +
-      "timestamp_micros(id * 1000) FROM range(0, 200)")
-    val catDir = s"$wh/db/t"
-    def mc() = SegmentLog.logicalView(SegmentLog.read(
-      SegmentLog.fs(catDir, spark.sessionState.newHadoopConf()), catDir).get)
-    assert(mc().ndvMerged.keySet == Set("k", "meta.lang", "ts"))
-    // CALL graft.system.stats lists struct-FIELD rows beside top-level
-    // columns, with the dotted NDV estimate and typed bounds
-    val statRows = spark.sql("CALL gndvn.system.stats('db.t')")
-      .collect().map(r => r.getString(0) -> r).toMap
-    assert(statRows.keySet == Set("k", "meta", "meta.lang", "meta.b", "ts"),
-      s"got ${statRows.keySet}")
-    assert(statRows("meta.lang").getDouble(5) == 5.0, "dotted NDV (exact arm)")
-    assert(statRows("k").getString(3) == "0" && statRows("k").getString(4) == "199")
-    assert(statRows("meta").isNullAt(3), "struct carrier has no bounds")
-    assert(statRows("meta.b").getString(3) == "0" && statRows("meta.b").getString(4) == "8")
-    spark.sql("ALTER TABLE gndvn.db.t DROP COLUMN ts")
-    assert(mc().ndvMerged.keySet == Set("k", "meta.lang"),
-      "DROP COLUMN must shed the dropped column's table-level sketch immediately")
-    assert(mc().props("ndvFor").split(",").toSet == Set("k", "meta.lang"))
-    spark.sql("ALTER TABLE gndvn.db.t RENAME COLUMN meta TO info")
-    assert(mc().props("ndvFor").split(",").toSet == Set("k", "info.lang"),
-      "dotted declarations must follow a struct-column rename")
-    assert(mc().ndvMerged.keySet == Set("k", "info.lang"),
-      "the logical view translates the dotted sketch key's head")
-    // post-rename INSERTs keep extending the SAME physical key
-    spark.sql("INSERT INTO gndvn.db.t SELECT id, " +
-      "named_struct('lang', CAST(id % 5 + 5 AS STRING), 'b', CAST(id % 9 AS INT)) " +
-      "FROM range(200, 400)")
-    assert(math.round(SegmentNdv.estimateMerged(
-      SegmentNdv.decode(mc().ndvMerged("info.lang")))) == 10L,
-      "5 old + 5 new lang values merge under the renamed declaration")
-    // DROPPING the struct column sheds its dotted entries too
-    spark.sql("ALTER TABLE gndvn.db.t DROP COLUMN info")
-    assert(mc().ndvMerged.keySet == Set("k"))
-    assert(mc().props("ndvFor") == "k")
+    GraftCatalog.withCatalog(spark, wh) { cat =>
+      spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.db")
+      spark.sql(s"CREATE TABLE $cat.db.t (k BIGINT, " +
+        "meta STRUCT<lang: STRING, b: INT>, ts TIMESTAMP) " +
+        "TBLPROPERTIES ('ndvFor' = 'k,meta.lang,ts')")
+      spark.sql(s"INSERT INTO $cat.db.t SELECT id, " +
+        "named_struct('lang', CAST(id % 5 AS STRING), 'b', CAST(id % 9 AS INT)), " +
+        "timestamp_micros(id * 1000) FROM range(0, 200)")
+      val catDir = s"$wh/db/t"
+      def mc() = SegmentLog.logicalView(SegmentLog.read(
+        SegmentLog.fs(catDir, spark.sessionState.newHadoopConf()), catDir).get)
+      assert(mc().ndvMerged.keySet == Set("k", "meta.lang", "ts"))
+      // CALL graft.system.stats lists struct-FIELD rows beside top-level
+      // columns, with the dotted NDV estimate and typed bounds
+      val statRows = spark.sql(s"CALL $cat.system.stats('db.t')")
+        .collect().map(r => r.getString(0) -> r).toMap
+      assert(statRows.keySet == Set("k", "meta", "meta.lang", "meta.b", "ts"),
+        s"got ${statRows.keySet}")
+      assert(statRows("meta.lang").getDouble(5) == 5.0, "dotted NDV (exact arm)")
+      assert(statRows("k").getString(3) == "0" && statRows("k").getString(4) == "199")
+      assert(statRows("meta").isNullAt(3), "struct carrier has no bounds")
+      assert(statRows("meta.b").getString(3) == "0" && statRows("meta.b").getString(4) == "8")
+      spark.sql(s"ALTER TABLE $cat.db.t DROP COLUMN ts")
+      assert(mc().ndvMerged.keySet == Set("k", "meta.lang"),
+        "DROP COLUMN must shed the dropped column's table-level sketch immediately")
+      assert(mc().props("ndvFor").split(",").toSet == Set("k", "meta.lang"))
+      spark.sql(s"ALTER TABLE $cat.db.t RENAME COLUMN meta TO info")
+      assert(mc().props("ndvFor").split(",").toSet == Set("k", "info.lang"),
+        "dotted declarations must follow a struct-column rename")
+      assert(mc().ndvMerged.keySet == Set("k", "info.lang"),
+        "the logical view translates the dotted sketch key's head")
+      // post-rename INSERTs keep extending the SAME physical key
+      spark.sql(s"INSERT INTO $cat.db.t SELECT id, " +
+        "named_struct('lang', CAST(id % 5 + 5 AS STRING), 'b', CAST(id % 9 AS INT)) " +
+        "FROM range(200, 400)")
+      assert(math.round(SegmentNdv.estimateMerged(
+        SegmentNdv.decode(mc().ndvMerged("info.lang")))) == 10L,
+        "5 old + 5 new lang values merge under the renamed declaration")
+      // DROPPING the struct column sheds its dotted entries too
+      spark.sql(s"ALTER TABLE $cat.db.t DROP COLUMN info")
+      assert(mc().ndvMerged.keySet == Set("k"))
+      assert(mc().props("ndvFor") == "k")
+    }
   }
 
   test("NDV: the commit pre-merges the table-level sketch; planning reads it in O(k); DATE columns hash portably") {
@@ -2996,71 +2978,69 @@ class SegmentSourceSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // rewrite re-sketches (effectiveNdv reads the manifest), and the
     // recomputed table-level merge is VALUE-IDENTICAL — same rows,
     // same sketch, through a completely different segment list
-    val cat = "gndvm"
     val wh = tmp("graft-seg-ndvm-wh")
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.sources.segment.GraftCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-    spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.db")
-    spark.sql(s"CREATE TABLE $cat.db.t (id BIGINT, tag STRING) " +
-      "TBLPROPERTIES ('ndvFor' = 'id,tag')")
-    spark.sql(s"INSERT INTO $cat.db.t " +
-      "SELECT id, CAST(id % 7 AS STRING) FROM range(0, 1000)")
-    val catDir = s"$wh/db/t"
-    def mc() = graft.sources.segment.SegmentLog.read(fs(), catDir).get
-    val before = mc().ndvMerged
-    val beforePaths = mc().segments.map(_.path)
-    assert(before.keySet == Set("id", "tag"))
-    val preCompactVersion = mc().version
-    graft.sources.segment.GraftMaintenance.compact(spark, catDir, "tag", 2)
-    assert(mc().segments.map(_.path) != beforePaths, "live set must change")
-    for (c <- Seq("id", "tag")) {
-      assert(mc().ndvMerged(c) == before(c),
-        s"compaction must not change the table-level NDV sketch of $c (same rows)")
-      assert(mc().ndvMerged(c) == SegmentNdv.encode(SegmentNdv.merge(
-        mc().segments.map(s => SegmentNdv.decode(s.stats(c).kmv.get)))),
-        s"post-compaction sketch for $c diverges from per-segment merge")
+    GraftCatalog.withCatalog(spark, wh) { cat =>
+      spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.db")
+      spark.sql(s"CREATE TABLE $cat.db.t (id BIGINT, tag STRING) " +
+        "TBLPROPERTIES ('ndvFor' = 'id,tag')")
+      spark.sql(s"INSERT INTO $cat.db.t " +
+        "SELECT id, CAST(id % 7 AS STRING) FROM range(0, 1000)")
+      val catDir = s"$wh/db/t"
+      def mc() = graft.sources.segment.SegmentLog.read(fs(), catDir).get
+      val before = mc().ndvMerged
+      val beforePaths = mc().segments.map(_.path)
+      assert(before.keySet == Set("id", "tag"))
+      val preCompactVersion = mc().version
+      graft.sources.segment.GraftMaintenance.compact(spark, catDir, "tag", 2)
+      assert(mc().segments.map(_.path) != beforePaths, "live set must change")
+      for (c <- Seq("id", "tag")) {
+        assert(mc().ndvMerged(c) == before(c),
+          s"compaction must not change the table-level NDV sketch of $c (same rows)")
+        assert(mc().ndvMerged(c) == SegmentNdv.encode(SegmentNdv.merge(
+          mc().segments.map(s => SegmentNdv.decode(s.stats(c).kmv.get)))),
+          s"post-compaction sketch for $c diverges from per-segment merge")
+      }
+      // RESTORE (rollback) recomputes from the RESTORED live set — the
+      // alter-path maintenance, value-identical here (same rows again)
+      graft.sources.segment.SegmentLog.rollback(fs(), catDir, preCompactVersion)
+      for (c <- Seq("id", "tag")) {
+        assert(mc().ndvMerged(c) == before(c),
+          s"post-rollback sketch for $c must match the restored state")
+        assert(mc().ndvMerged(c) == SegmentNdv.encode(SegmentNdv.merge(
+          mc().segments.map(s => SegmentNdv.decode(s.stats(c).kmv.get)))),
+          s"post-rollback sketch for $c diverges from per-segment merge")
+      }
+      // the DuckDB-parity canonical for DATE: a stored day-count renders
+      // as ISO yyyy-MM-dd, byte-identical to CAST(d AS VARCHAR)
+      val row = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+        Array[Any](java.time.LocalDate.of(2020, 1, 5).toEpochDay.toInt))
+      assert(SegmentNdv.canonical(org.apache.spark.sql.types.DateType, row, 0)
+        == "2020-01-05")
+      // outside 4-digit CE years the ISO form diverges across engines
+      // (+10000-… vs 10000-…; signed BCE vs '(BC)') — the canonical is
+      // NULL and the collector POISONS the segment's sketch: the write
+      // SUCCEEDS and statistics degrade to absent (a stats declaration
+      // must never be a data-dependent write refusal)
+      for (bad <- Seq(java.time.LocalDate.of(10000, 1, 1),
+          java.time.LocalDate.of(0, 12, 31))) {
+        val r2 = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+          Array[Any](bad.toEpochDay.toInt))
+        assert(SegmentNdv.canonical(org.apache.spark.sql.types.DateType, r2, 0) == null)
+      }
+      val dirBad = tmp("graft-seg-ndv-badyear")
+      Seq(java.time.LocalDate.of(2020, 1, 5), java.time.LocalDate.of(10000, 1, 1))
+        .map(java.sql.Date.valueOf).toDF("d").coalesce(1)
+        .write.format(Fmt).option("ndvFor", "d").mode("append").save(dirBad)
+      val mBad = graft.sources.segment.SegmentLog.read(
+        graft.sources.segment.SegmentLog.fs(dirBad,
+          spark.sessionState.newHadoopConf()), dirBad).get
+      assert(mBad.segments.forall(_.stats("d").kmv.isEmpty),
+        "out-of-range DATE must poison the segment sketch, not abort the write")
+      assert(mBad.ndvMerged.isEmpty,
+        "no table-level entry behind the every-segment presence guard")
+      assert(spark.read.format(Fmt).load(dirBad).count() == 2,
+        "the write itself must succeed")
     }
-    // RESTORE (rollback) recomputes from the RESTORED live set — the
-    // alter-path maintenance, value-identical here (same rows again)
-    graft.sources.segment.SegmentLog.rollback(fs(), catDir, preCompactVersion)
-    for (c <- Seq("id", "tag")) {
-      assert(mc().ndvMerged(c) == before(c),
-        s"post-rollback sketch for $c must match the restored state")
-      assert(mc().ndvMerged(c) == SegmentNdv.encode(SegmentNdv.merge(
-        mc().segments.map(s => SegmentNdv.decode(s.stats(c).kmv.get)))),
-        s"post-rollback sketch for $c diverges from per-segment merge")
-    }
-    // the DuckDB-parity canonical for DATE: a stored day-count renders
-    // as ISO yyyy-MM-dd, byte-identical to CAST(d AS VARCHAR)
-    val row = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](java.time.LocalDate.of(2020, 1, 5).toEpochDay.toInt))
-    assert(SegmentNdv.canonical(org.apache.spark.sql.types.DateType, row, 0)
-      == "2020-01-05")
-    // outside 4-digit CE years the ISO form diverges across engines
-    // (+10000-… vs 10000-…; signed BCE vs '(BC)') — the canonical is
-    // NULL and the collector POISONS the segment's sketch: the write
-    // SUCCEEDS and statistics degrade to absent (a stats declaration
-    // must never be a data-dependent write refusal)
-    for (bad <- Seq(java.time.LocalDate.of(10000, 1, 1),
-        java.time.LocalDate.of(0, 12, 31))) {
-      val r2 = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-        Array[Any](bad.toEpochDay.toInt))
-      assert(SegmentNdv.canonical(org.apache.spark.sql.types.DateType, r2, 0) == null)
-    }
-    val dirBad = tmp("graft-seg-ndv-badyear")
-    Seq(java.time.LocalDate.of(2020, 1, 5), java.time.LocalDate.of(10000, 1, 1))
-      .map(java.sql.Date.valueOf).toDF("d").coalesce(1)
-      .write.format(Fmt).option("ndvFor", "d").mode("append").save(dirBad)
-    val mBad = graft.sources.segment.SegmentLog.read(
-      graft.sources.segment.SegmentLog.fs(dirBad,
-        spark.sessionState.newHadoopConf()), dirBad).get
-    assert(mBad.segments.forall(_.stats("d").kmv.isEmpty),
-      "out-of-range DATE must poison the segment sketch, not abort the write")
-    assert(mBad.ndvMerged.isEmpty,
-      "no table-level entry behind the every-segment presence guard")
-    assert(spark.read.format(Fmt).load(dirBad).count() == 2,
-      "the write itself must succeed")
   }
 
   test("a NaN anywhere in a double column poisons its zone-map bounds") {
@@ -3191,55 +3171,53 @@ class SegmentSourceSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   test("morRewriteThreshold: past-threshold row-level DML auto-rewrites the " +
       "segment (DV purged); below-threshold and threshold=1 keep vectors") {
     val wh = tmp("graft-mor-thr-wh")
-    val cat = s"graft_morthr_${System.nanoTime()}"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.sources.segment.GraftCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-    spark.sql(s"CREATE NAMESPACE $cat.db")
+    GraftCatalog.withCatalog(spark, wh) { cat =>
+      spark.sql(s"CREATE NAMESPACE $cat.db")
 
-    // threshold=1 disables the purge: a 70% delete keeps its vectors
-    spark.sql(s"CREATE TABLE $cat.db.keep (k BIGINT, v BIGINT) TBLPROPERTIES " +
-      "('rowLevelMode'='mor', 'clusterBy'='k', 'numPartitions'='4', " +
-      "'morRewriteThreshold'='1')")
-    spark.sql(s"INSERT INTO $cat.db.keep SELECT id, id * 10 FROM range(0, 400)")
-    spark.sql(s"DELETE FROM $cat.db.keep WHERE k % 10 < 7")
-    val fsK = SegmentLog.fs(s"$wh/db/keep", spark.sessionState.newHadoopConf())
-    val mKeep = SegmentLog.read(fsK, s"$wh/db/keep").get
-    assert(mKeep.segments.map(_.dvRows).sum == 280,
-      "threshold=1 must keep the deletion vectors")
-    assert(spark.sql(s"SELECT count(*) FROM $cat.db.keep").head().getLong(0) == 120)
+      // threshold=1 disables the purge: a 70% delete keeps its vectors
+      spark.sql(s"CREATE TABLE $cat.db.keep (k BIGINT, v BIGINT) TBLPROPERTIES " +
+        "('rowLevelMode'='mor', 'clusterBy'='k', 'numPartitions'='4', " +
+        "'morRewriteThreshold'='1')")
+      spark.sql(s"INSERT INTO $cat.db.keep SELECT id, id * 10 FROM range(0, 400)")
+      spark.sql(s"DELETE FROM $cat.db.keep WHERE k % 10 < 7")
+      val fsK = SegmentLog.fs(s"$wh/db/keep", spark.sessionState.newHadoopConf())
+      val mKeep = SegmentLog.read(fsK, s"$wh/db/keep").get
+      assert(mKeep.segments.map(_.dvRows).sum == 280,
+        "threshold=1 must keep the deletion vectors")
+      assert(spark.sql(s"SELECT count(*) FROM $cat.db.keep").head().getLong(0) == 120)
 
-    // default threshold (0.5): the same 70% delete triggers the purge —
-    // vectors are materialized away by an immediate rewrite
-    spark.sql(s"CREATE TABLE $cat.db.purge (k BIGINT, v BIGINT) TBLPROPERTIES " +
-      "('rowLevelMode'='mor', 'clusterBy'='k', 'numPartitions'='4')")
-    spark.sql(s"INSERT INTO $cat.db.purge SELECT id, id * 10 FROM range(0, 400)")
-    val fsP = SegmentLog.fs(s"$wh/db/purge", spark.sessionState.newHadoopConf())
-    val before = SegmentLog.read(fsP, s"$wh/db/purge").get.segments.map(_.path).toSet
-    spark.sql(s"DELETE FROM $cat.db.purge WHERE k % 10 < 7")
-    val mPurge = SegmentLog.read(fsP, s"$wh/db/purge").get
-    assert(mPurge.segments.forall(_.dv.isEmpty),
-      "past-threshold DML must rewrite the touched segments clean")
-    assert(mPurge.segments.map(_.path).toSet.intersect(before).isEmpty,
-      "the original segment files were replaced")
-    assert(spark.sql(s"SELECT count(*) FROM $cat.db.purge").head().getLong(0) == 120)
-    assert(spark.sql(s"SELECT sum(v) FROM $cat.db.purge").head().getLong(0) ==
-      (0 until 400).filter(_ % 10 >= 7).map(_ * 10L).sum)
+      // default threshold (0.5): the same 70% delete triggers the purge —
+      // vectors are materialized away by an immediate rewrite
+      spark.sql(s"CREATE TABLE $cat.db.purge (k BIGINT, v BIGINT) TBLPROPERTIES " +
+        "('rowLevelMode'='mor', 'clusterBy'='k', 'numPartitions'='4')")
+      spark.sql(s"INSERT INTO $cat.db.purge SELECT id, id * 10 FROM range(0, 400)")
+      val fsP = SegmentLog.fs(s"$wh/db/purge", spark.sessionState.newHadoopConf())
+      val before = SegmentLog.read(fsP, s"$wh/db/purge").get.segments.map(_.path).toSet
+      spark.sql(s"DELETE FROM $cat.db.purge WHERE k % 10 < 7")
+      val mPurge = SegmentLog.read(fsP, s"$wh/db/purge").get
+      assert(mPurge.segments.forall(_.dv.isEmpty),
+        "past-threshold DML must rewrite the touched segments clean")
+      assert(mPurge.segments.map(_.path).toSet.intersect(before).isEmpty,
+        "the original segment files were replaced")
+      assert(spark.sql(s"SELECT count(*) FROM $cat.db.purge").head().getLong(0) == 120)
+      assert(spark.sql(s"SELECT sum(v) FROM $cat.db.purge").head().getLong(0) ==
+        (0 until 400).filter(_ % 10 >= 7).map(_ * 10L).sum)
 
-    // below-threshold point DML on the SAME default table stays MoR
-    spark.sql(s"DELETE FROM $cat.db.purge WHERE k = 9")
-    val mPoint = SegmentLog.read(fsP, s"$wh/db/purge").get
-    assert(mPoint.segments.map(_.dvRows).sum == 1,
-      "a point delete below the threshold keeps merge-on-read vectors")
+      // below-threshold point DML on the SAME default table stays MoR
+      spark.sql(s"DELETE FROM $cat.db.purge WHERE k = 9")
+      val mPoint = SegmentLog.read(fsP, s"$wh/db/purge").get
+      assert(mPoint.segments.map(_.dvRows).sum == 1,
+        "a point delete below the threshold keeps merge-on-read vectors")
 
-    // property validation
-    intercept[Exception] {
-      spark.sql(s"ALTER TABLE $cat.db.purge SET TBLPROPERTIES " +
-        "('morRewriteThreshold'='1.5')")
-    }
-    intercept[Exception] {
-      spark.sql(s"ALTER TABLE $cat.db.purge SET TBLPROPERTIES " +
-        "('morRewriteThreshold'='nope')")
+      // property validation
+      intercept[Exception] {
+        spark.sql(s"ALTER TABLE $cat.db.purge SET TBLPROPERTIES " +
+          "('morRewriteThreshold'='1.5')")
+      }
+      intercept[Exception] {
+        spark.sql(s"ALTER TABLE $cat.db.purge SET TBLPROPERTIES " +
+          "('morRewriteThreshold'='nope')")
+      }
     }
   }
 
@@ -3406,30 +3384,28 @@ class SegmentSourceSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("metadata-only DELETE decided by a struct-field predicate") {
     val wh = tmp("graft-nestdel-wh")
-    val cat = s"graft_nestdel_${System.nanoTime()}"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.sources.segment.GraftCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-    spark.sql(s"CREATE NAMESPACE $cat.db")
-    spark.sql(s"CREATE TABLE $cat.db.t " +
-      "(id BIGINT, st STRUCT<a: BIGINT, b: STRING>) " +
-      "TBLPROPERTIES ('clusterBy'='id', 'numPartitions'='4')")
-    spark.sql(s"INSERT INTO $cat.db.t SELECT id, " +
-      "named_struct('a', id, 'b', concat('s', id)) FROM range(0, 400)")
-    val dir = s"$wh/db/t"
-    val fs = SegmentLog.fs(dir, spark.sessionState.newHadoopConf())
-    val m0 = SegmentLog.read(fs, dir).get
-    val files0 = m0.segments.map(_.path).toSet
-    // st.a aligns with the id clustering, so the nested zone maps
-    // DECIDE every segment: one manifest commit, no file read/written
-    spark.sql(s"DELETE FROM $cat.db.t WHERE st.a < 100")
-    val m1 = SegmentLog.read(fs, dir).get
-    assert(m1.segments.map(_.path).toSet.subsetOf(files0),
-      "metadata-only DELETE must not write files")
-    assert(m1.segments.size < m0.segments.size, "whole segments dropped")
-    assert(spark.sql(s"SELECT count(*), min(st.a) FROM $cat.db.t").head()
-      .getLong(0) == 300)
-    assert(spark.sql(s"SELECT min(st.a) FROM $cat.db.t").head().getLong(0) == 100)
+    GraftCatalog.withCatalog(spark, wh) { cat =>
+      spark.sql(s"CREATE NAMESPACE $cat.db")
+      spark.sql(s"CREATE TABLE $cat.db.t " +
+        "(id BIGINT, st STRUCT<a: BIGINT, b: STRING>) " +
+        "TBLPROPERTIES ('clusterBy'='id', 'numPartitions'='4')")
+      spark.sql(s"INSERT INTO $cat.db.t SELECT id, " +
+        "named_struct('a', id, 'b', concat('s', id)) FROM range(0, 400)")
+      val dir = s"$wh/db/t"
+      val fs = SegmentLog.fs(dir, spark.sessionState.newHadoopConf())
+      val m0 = SegmentLog.read(fs, dir).get
+      val files0 = m0.segments.map(_.path).toSet
+      // st.a aligns with the id clustering, so the nested zone maps
+      // DECIDE every segment: one manifest commit, no file read/written
+      spark.sql(s"DELETE FROM $cat.db.t WHERE st.a < 100")
+      val m1 = SegmentLog.read(fs, dir).get
+      assert(m1.segments.map(_.path).toSet.subsetOf(files0),
+        "metadata-only DELETE must not write files")
+      assert(m1.segments.size < m0.segments.size, "whole segments dropped")
+      assert(spark.sql(s"SELECT count(*), min(st.a) FROM $cat.db.t").head()
+        .getLong(0) == 300)
+      assert(spark.sql(s"SELECT min(st.a) FROM $cat.db.t").head().getLong(0) == 100)
+    }
   }
 
   test("exactFilters: zone-map-decided filters claim full pushdown — " +
@@ -3539,63 +3515,61 @@ class SegmentSourceSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   test("autoCompactSegments: declared small-file hygiene compacts after " +
       "appends and stream epochs; layout tables and undeclared skip") {
     val wh = tmp("graft-autocompact-wh")
-    val cat = s"graft_ac_${System.nanoTime()}"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.sources.segment.GraftCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-    spark.sql(s"CREATE NAMESPACE $cat.db")
-    spark.sql(s"CREATE TABLE $cat.db.t (k BIGINT) " +
-      "TBLPROPERTIES ('autoCompactSegments'='4')")
-    val dir = s"$wh/db/t"
-    val f = SegmentLog.fs(dir, spark.sessionState.newHadoopConf())
-    // 8 tiny single-partition appends: every time 4+ small segments
-    // accumulate, the post-commit hygiene folds them
-    (0 until 8).foreach(i =>
-      spark.sql(s"INSERT INTO $cat.db.t SELECT id FROM range(${i * 10}, ${i * 10 + 10})"))
-    val m = SegmentLog.read(f, dir).get
-    assert(m.segments.size < 4,
-      s"8 appends must stay folded below the threshold, got ${m.segments.size}")
-    assert(spark.sql(s"SELECT count(*), sum(k) FROM $cat.db.t").head()
-      .getLong(1) == (0L until 80L).sum)
-    // the folds are dataChange=false: a stream over the table sees
-    // every row exactly once
-    val q = spark.readStream.format(Fmt).load(dir)
-      .writeStream.trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", tmp("graft-ac-ckpt"))
-      .format("memory").queryName("ac_stream").start()
-    q.awaitTermination()
-    assert(spark.sql("SELECT count(*) FROM ac_stream").head().getLong(0) == 80)
+    GraftCatalog.withCatalog(spark, wh) { cat =>
+      spark.sql(s"CREATE NAMESPACE $cat.db")
+      spark.sql(s"CREATE TABLE $cat.db.t (k BIGINT) " +
+        "TBLPROPERTIES ('autoCompactSegments'='4')")
+      val dir = s"$wh/db/t"
+      val f = SegmentLog.fs(dir, spark.sessionState.newHadoopConf())
+      // 8 tiny single-partition appends: every time 4+ small segments
+      // accumulate, the post-commit hygiene folds them
+      (0 until 8).foreach(i =>
+        spark.sql(s"INSERT INTO $cat.db.t SELECT id FROM range(${i * 10}, ${i * 10 + 10})"))
+      val m = SegmentLog.read(f, dir).get
+      assert(m.segments.size < 4,
+        s"8 appends must stay folded below the threshold, got ${m.segments.size}")
+      assert(spark.sql(s"SELECT count(*), sum(k) FROM $cat.db.t").head()
+        .getLong(1) == (0L until 80L).sum)
+      // the folds are dataChange=false: a stream over the table sees
+      // every row exactly once
+      val q = spark.readStream.format(Fmt).load(dir)
+        .writeStream.trigger(Trigger.AvailableNow())
+        .option("checkpointLocation", tmp("graft-ac-ckpt"))
+        .format("memory").queryName("ac_stream").start()
+      q.awaitTermination()
+      assert(spark.sql("SELECT count(*) FROM ac_stream").head().getLong(0) == 80)
 
-    // the streaming SINK gets the same hygiene between epochs
-    val src = tmp("graft-ac-src")
-    import spark.implicits._
-    (0L until 12L).toDF("k").repartition(12).write.format(Fmt)
-      .mode("append").save(src)
-    spark.sql(s"CREATE TABLE $cat.db.sink (k BIGINT) " +
-      "TBLPROPERTIES ('autoCompactSegments'='4')")
-    val q2 = spark.readStream.format(Fmt)
-      .option("maxSegmentsPerTrigger", "2").load(src)
-      .writeStream.trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", tmp("graft-ac-ckpt2"))
-      .format(Fmt).option("path", s"$wh/db/sink").start()
-    q2.awaitTermination()
-    val mSink = SegmentLog.read(f, s"$wh/db/sink").get
-    assert(mSink.segments.size < 4,
-      s"epoch commits must stay folded, got ${mSink.segments.size}")
-    assert(spark.sql(s"SELECT sum(k) FROM $cat.db.sink").head().getLong(0) ==
-      (0L until 12L).sum)
+      // the streaming SINK gets the same hygiene between epochs
+      val src = tmp("graft-ac-src")
+      import spark.implicits._
+      (0L until 12L).toDF("k").repartition(12).write.format(Fmt)
+        .mode("append").save(src)
+      spark.sql(s"CREATE TABLE $cat.db.sink (k BIGINT) " +
+        "TBLPROPERTIES ('autoCompactSegments'='4')")
+      val q2 = spark.readStream.format(Fmt)
+        .option("maxSegmentsPerTrigger", "2").load(src)
+        .writeStream.trigger(Trigger.AvailableNow())
+        .option("checkpointLocation", tmp("graft-ac-ckpt2"))
+        .format(Fmt).option("path", s"$wh/db/sink").start()
+      q2.awaitTermination()
+      val mSink = SegmentLog.read(f, s"$wh/db/sink").get
+      assert(mSink.segments.size < 4,
+        s"epoch commits must stay folded, got ${mSink.segments.size}")
+      assert(spark.sql(s"SELECT sum(k) FROM $cat.db.sink").head().getLong(0) ==
+        (0L until 12L).sum)
 
-    // a declared-layout table skips (a partial rewrite cannot prove
-    // the range invariant) and an undeclared table is untouched
-    spark.sql(s"CREATE TABLE $cat.db.layout (k BIGINT) TBLPROPERTIES " +
-      "('clusterBy'='k', 'numPartitions'='2', 'autoCompactSegments'='2')")
-    (0 until 4).foreach(i =>
-      spark.sql(s"INSERT INTO $cat.db.layout SELECT id FROM range(${i * 5}, ${i * 5 + 5})"))
-    assert(SegmentLog.read(f, s"$wh/db/layout").get.segments.size >= 4,
-      "layout tables are never partially rewritten by hygiene")
-    // property validation
-    intercept[Exception] {
-      spark.sql(s"ALTER TABLE $cat.db.t SET TBLPROPERTIES ('autoCompactSegments'='1')")
+      // a declared-layout table skips (a partial rewrite cannot prove
+      // the range invariant) and an undeclared table is untouched
+      spark.sql(s"CREATE TABLE $cat.db.layout (k BIGINT) TBLPROPERTIES " +
+        "('clusterBy'='k', 'numPartitions'='2', 'autoCompactSegments'='2')")
+      (0 until 4).foreach(i =>
+        spark.sql(s"INSERT INTO $cat.db.layout SELECT id FROM range(${i * 5}, ${i * 5 + 5})"))
+      assert(SegmentLog.read(f, s"$wh/db/layout").get.segments.size >= 4,
+        "layout tables are never partially rewritten by hygiene")
+      // property validation
+      intercept[Exception] {
+        spark.sql(s"ALTER TABLE $cat.db.t SET TBLPROPERTIES ('autoCompactSegments'='1')")
+      }
     }
   }
 
@@ -3704,18 +3678,16 @@ class SegmentSourceSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
     // SQL face through the catalog
     val wh = tmp("graft-clone-wh")
-    val cat = s"graft_clone_${System.nanoTime()}"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.sources.segment.GraftCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-    spark.sql(s"CREATE NAMESPACE $cat.db")
-    spark.sql(s"CREATE TABLE $cat.db.a (k BIGINT) " +
-      "TBLPROPERTIES ('clusterBy'='k', 'numPartitions'='2')")
-    spark.sql(s"INSERT INTO $cat.db.a SELECT id FROM range(0, 100)")
-    val res = spark.sql(s"CALL $cat.system.clone('db.a', 'db.b', false)").head()
-    assert(res.getInt(0) == 2 && res.getLong(1) == 100L)
-    assert(spark.sql(s"SELECT sum(k) FROM $cat.db.b").head().getLong(0) ==
-      (0L until 100L).sum)
+    GraftCatalog.withCatalog(spark, wh) { cat =>
+      spark.sql(s"CREATE NAMESPACE $cat.db")
+      spark.sql(s"CREATE TABLE $cat.db.a (k BIGINT) " +
+        "TBLPROPERTIES ('clusterBy'='k', 'numPartitions'='2')")
+      spark.sql(s"INSERT INTO $cat.db.a SELECT id FROM range(0, 100)")
+      val res = spark.sql(s"CALL $cat.system.clone('db.a', 'db.b', false)").head()
+      assert(res.getInt(0) == 2 && res.getLong(1) == 100L)
+      assert(spark.sql(s"SELECT sum(k) FROM $cat.db.b").head().getLong(0) ==
+        (0L until 100L).sum)
+    }
   }
 
   test("z-order by struct fields: nested predicates prune the rewritten layout") {
@@ -3799,64 +3771,62 @@ class SegmentSourceSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // (raw then compressed generations) read seamlessly, and an
     // explicit compress=none write overrides for one bulk load
     val wh = tmp("graft-segcomp-wh")
-    val cat = s"graft_comp_${System.nanoTime()}"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.sources.segment.GraftCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-    spark.sql(s"CREATE NAMESPACE $cat.db")
-    spark.sql(s"CREATE TABLE $cat.db.t (k BIGINT, s STRING) " +
-      "TBLPROPERTIES ('clusterBy'='k', 'numPartitions'='2', 'compress'='deflate')")
-    spark.sql(s"INSERT INTO $cat.db.t SELECT id, repeat('abcdef ', 50) " +
-      "FROM range(0, 1000)")
-    val dir = s"$wh/db/t"
-    val f = SegmentLog.fs(dir, spark.sessionState.newHadoopConf())
-    val perRow = tableBytes(dir).toDouble / 1000
-    assert(perRow < 60, s"deflate rows should be far under the ~360 B raw: $perRow")
-    assert(spark.sql(s"SELECT count(*), sum(k) FROM $cat.db.t").head()
-      .getLong(1) == (0L until 1000L).sum)
-    // compaction output inherits the declaration
-    graft.sources.segment.GraftMaintenance.compact(spark, dir, "k", 1)
-    assert(tableBytes(dir).toDouble / 1000 < 60, "compacted segments stay deflate")
-    assert(spark.sql(s"SELECT sum(k) FROM $cat.db.t").head()
-      .getLong(0) == (0L until 1000L).sum)
-    // merge-on-read DELETE over compressed segments: dv filtering
-    // consumes dead rows through the inflater exactly
-    graft.sources.segment.GraftMaintenance.deleteMark(spark, dir,
-      col("k") % 10 === 0)
-    assert(spark.sql(s"SELECT count(*) FROM $cat.db.t").head().getLong(0) == 900)
+    GraftCatalog.withCatalog(spark, wh) { cat =>
+      spark.sql(s"CREATE NAMESPACE $cat.db")
+      spark.sql(s"CREATE TABLE $cat.db.t (k BIGINT, s STRING) " +
+        "TBLPROPERTIES ('clusterBy'='k', 'numPartitions'='2', 'compress'='deflate')")
+      spark.sql(s"INSERT INTO $cat.db.t SELECT id, repeat('abcdef ', 50) " +
+        "FROM range(0, 1000)")
+      val dir = s"$wh/db/t"
+      val f = SegmentLog.fs(dir, spark.sessionState.newHadoopConf())
+      val perRow = tableBytes(dir).toDouble / 1000
+      assert(perRow < 60, s"deflate rows should be far under the ~360 B raw: $perRow")
+      assert(spark.sql(s"SELECT count(*), sum(k) FROM $cat.db.t").head()
+        .getLong(1) == (0L until 1000L).sum)
+      // compaction output inherits the declaration
+      graft.sources.segment.GraftMaintenance.compact(spark, dir, "k", 1)
+      assert(tableBytes(dir).toDouble / 1000 < 60, "compacted segments stay deflate")
+      assert(spark.sql(s"SELECT sum(k) FROM $cat.db.t").head()
+        .getLong(0) == (0L until 1000L).sum)
+      // merge-on-read DELETE over compressed segments: dv filtering
+      // consumes dead rows through the inflater exactly
+      graft.sources.segment.GraftMaintenance.deleteMark(spark, dir,
+        col("k") % 10 === 0)
+      assert(spark.sql(s"SELECT count(*) FROM $cat.db.t").head().getLong(0) == 900)
 
-    // SQL MERGE on a compressed merge-on-read table: the delta
-    // writer's inserted versions inherit the declaration, dv-filtered
-    // reads stay exact through the inflater
-    spark.sql(s"ALTER TABLE $cat.db.t SET TBLPROPERTIES ('rowLevelMode'='mor')")
-    spark.sql(s"MERGE INTO $cat.db.t t USING " +
-      "(SELECT id AS k FROM range(0, 50)) s ON t.k = s.k " +
-      "WHEN MATCHED THEN UPDATE SET s = 'merged' " +
-      "WHEN NOT MATCHED THEN INSERT (k, s) VALUES (s.k, 'inserted')")
-    assert(spark.sql(s"SELECT count(*) FROM $cat.db.t WHERE s = 'merged'")
-      .head().getLong(0) == 45, "50 keys minus the 5 dv-deleted multiples of 10... " +
-      "45 live matched rows updated")
-    assert(spark.sql(s"SELECT count(*) FROM $cat.db.t WHERE s = 'inserted'")
-      .head().getLong(0) == 5, "dv-deleted keys are NOT MATCHED and re-insert")
+      // SQL MERGE on a compressed merge-on-read table: the delta
+      // writer's inserted versions inherit the declaration, dv-filtered
+      // reads stay exact through the inflater
+      spark.sql(s"ALTER TABLE $cat.db.t SET TBLPROPERTIES ('rowLevelMode'='mor')")
+      spark.sql(s"MERGE INTO $cat.db.t t USING " +
+        "(SELECT id AS k FROM range(0, 50)) s ON t.k = s.k " +
+        "WHEN MATCHED THEN UPDATE SET s = 'merged' " +
+        "WHEN NOT MATCHED THEN INSERT (k, s) VALUES (s.k, 'inserted')")
+      assert(spark.sql(s"SELECT count(*) FROM $cat.db.t WHERE s = 'merged'")
+        .head().getLong(0) == 45, "50 keys minus the 5 dv-deleted multiples of 10... " +
+        "45 live matched rows updated")
+      assert(spark.sql(s"SELECT count(*) FROM $cat.db.t WHERE s = 'inserted'")
+        .head().getLong(0) == 5, "dv-deleted keys are NOT MATCHED and re-insert")
 
-    // the STREAMING source reads deflate segments through the same
-    // factory: one AvailableNow pass over the dv'd, merged table
-    val qs = spark.readStream.format(Fmt).load(dir)
-      .writeStream.trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", tmp("graft-segcomp-ckpt"))
-      .format("memory").queryName("comp_stream").start()
-    qs.awaitTermination()
-    assert(spark.sql("SELECT count(*) FROM comp_stream").head().getLong(0) ==
-      spark.sql(s"SELECT count(*) FROM $cat.db.t").head().getLong(0))
+      // the STREAMING source reads deflate segments through the same
+      // factory: one AvailableNow pass over the dv'd, merged table
+      val qs = spark.readStream.format(Fmt).load(dir)
+        .writeStream.trigger(Trigger.AvailableNow())
+        .option("checkpointLocation", tmp("graft-segcomp-ckpt"))
+        .format("memory").queryName("comp_stream").start()
+      qs.awaitTermination()
+      assert(spark.sql("SELECT count(*) FROM comp_stream").head().getLong(0) ==
+        spark.sql(s"SELECT count(*) FROM $cat.db.t").head().getLong(0))
 
-    // property validation + off-switch
-    intercept[Exception] {
-      spark.sql(s"ALTER TABLE $cat.db.t SET TBLPROPERTIES ('compress'='zstd')")
+      // property validation + off-switch
+      intercept[Exception] {
+        spark.sql(s"ALTER TABLE $cat.db.t SET TBLPROPERTIES ('compress'='zstd')")
+      }
+      spark.sql(s"ALTER TABLE $cat.db.t SET TBLPROPERTIES ('compress'='none')")
+      spark.sql(s"INSERT INTO $cat.db.t SELECT id, 'x' FROM range(5000, 5010)")
+      assert(spark.sql(s"SELECT count(*) FROM $cat.db.t").head().getLong(0) == 915,
+        "900 live + 5 merge-inserted + 10 raw-appended")
     }
-    spark.sql(s"ALTER TABLE $cat.db.t SET TBLPROPERTIES ('compress'='none')")
-    spark.sql(s"INSERT INTO $cat.db.t SELECT id, 'x' FROM range(5000, 5010)")
-    assert(spark.sql(s"SELECT count(*) FROM $cat.db.t").head().getLong(0) == 915,
-      "900 live + 5 merge-inserted + 10 raw-appended")
   }
 
   test("DESCRIBE HISTORY exposes the manifest commit wall-clock as commit_ts") {

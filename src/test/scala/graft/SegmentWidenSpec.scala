@@ -71,35 +71,35 @@ class SegmentWidenSpec extends SparkSpec {
 
   test("SQL ALTER COLUMN TYPE through the catalog; lossy and hash-cluster widens refused") {
     val warehouse = Files.createTempDirectory("graft-widen-wh").toString
-    spark.conf.set("spark.sql.catalog.gw", classOf[GraftCatalog].getName)
-    spark.conf.set("spark.sql.catalog.gw.warehouse", warehouse)
-    spark.sql("CREATE NAMESPACE IF NOT EXISTS gw.db")
-    spark.sql("CREATE TABLE gw.db.w (k BIGINT, n INT, x FLOAT) PARTITIONED BY (bucket(4, k))")
-    spark.sql("INSERT INTO gw.db.w SELECT id, CAST(id AS INT), CAST(id AS FLOAT) FROM range(0, 50)")
-    spark.sql("ALTER TABLE gw.db.w ALTER COLUMN n TYPE BIGINT")
-    val back = spark.sql("SELECT k, n FROM gw.db.w ORDER BY k").collect()
-    assert(back.length == 50 && back(7).getLong(1) == 7L)
-    assert(spark.table("gw.db.w").schema("n").dataType == LongType)
-    // outright lossy retype: Spark's own analyzer refuses upstream
-    val lossy = intercept[Exception] {
-      spark.sql("ALTER TABLE gw.db.w ALTER COLUMN x TYPE INT")
+    GraftCatalog.withCatalog(spark, warehouse) { cat =>
+      spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.db")
+      spark.sql(s"CREATE TABLE $cat.db.w (k BIGINT, n INT, x FLOAT) PARTITIONED BY (bucket(4, k))")
+      spark.sql(s"INSERT INTO $cat.db.w SELECT id, CAST(id AS INT), CAST(id AS FLOAT) FROM range(0, 50)")
+      spark.sql(s"ALTER TABLE $cat.db.w ALTER COLUMN n TYPE BIGINT")
+      val back = spark.sql(s"SELECT k, n FROM $cat.db.w ORDER BY k").collect()
+      assert(back.length == 50 && back(7).getLong(1) == 7L)
+      assert(spark.table(s"$cat.db.w").schema("n").dataType == LongType)
+      // outright lossy retype: Spark's own analyzer refuses upstream
+      val lossy = intercept[Exception] {
+        spark.sql(s"ALTER TABLE $cat.db.w ALTER COLUMN x TYPE INT")
+      }
+      assert(lossy.getMessage.contains("NOT_SUPPORTED_CHANGE_COLUMN"), lossy.getMessage)
+      // an upcast Spark's analyzer ALLOWS (bigint→double is a legal
+      // Cast.canUpCast) but that is NOT value-lossless (longs past 2^53
+      // round): our lattice refuses with the rewrite recipe
+      val notMeta = intercept[Exception] {
+        spark.sql(s"ALTER TABLE $cat.db.w ALTER COLUMN n TYPE DOUBLE")
+      }
+      assert(notMeta.getMessage.contains("lossless widenings"), notMeta.getMessage)
+      // hash-clustering column: frozen bucket labels hash the OLD type —
+      // murmur3(int) != murmur3(long) — refuse until re-clustered
+      spark.sql(s"CREATE TABLE $cat.db.h (k INT, v STRING) PARTITIONED BY (bucket(4, k))")
+      spark.sql(s"INSERT INTO $cat.db.h SELECT CAST(id AS INT), concat('v', id) FROM range(0, 10)")
+      val hashed = intercept[Exception] {
+        spark.sql(s"ALTER TABLE $cat.db.h ALTER COLUMN k TYPE BIGINT")
+      }
+      assert(hashed.getMessage.contains("re-cluster"), hashed.getMessage)
     }
-    assert(lossy.getMessage.contains("NOT_SUPPORTED_CHANGE_COLUMN"), lossy.getMessage)
-    // an upcast Spark's analyzer ALLOWS (bigint→double is a legal
-    // Cast.canUpCast) but that is NOT value-lossless (longs past 2^53
-    // round): our lattice refuses with the rewrite recipe
-    val notMeta = intercept[Exception] {
-      spark.sql("ALTER TABLE gw.db.w ALTER COLUMN n TYPE DOUBLE")
-    }
-    assert(notMeta.getMessage.contains("lossless widenings"), notMeta.getMessage)
-    // hash-clustering column: frozen bucket labels hash the OLD type —
-    // murmur3(int) != murmur3(long) — refuse until re-clustered
-    spark.sql("CREATE TABLE gw.db.h (k INT, v STRING) PARTITIONED BY (bucket(4, k))")
-    spark.sql("INSERT INTO gw.db.h SELECT CAST(id AS INT), concat('v', id) FROM range(0, 10)")
-    val hashed = intercept[Exception] {
-      spark.sql("ALTER TABLE gw.db.h ALTER COLUMN k TYPE BIGINT")
-    }
-    assert(hashed.getMessage.contains("re-cluster"), hashed.getMessage)
   }
 
   test("zone maps and blooms on a widened column keep pruning with long-typed literals") {
@@ -356,73 +356,71 @@ class SegmentWidenSpec extends SparkSpec {
     }
     // SQL face through the catalog
     val wh = tmp("graft-widen-newpairs-wh")
-    spark.conf.set("spark.sql.catalog.gwn", classOf[GraftCatalog].getName)
-    spark.conf.set("spark.sql.catalog.gwn.warehouse", wh)
-    spark.sql("CREATE NAMESPACE IF NOT EXISTS gwn.db")
-    spark.sql("CREATE TABLE gwn.db.t (k BIGINT, n INT, m DECIMAL(10,2))")
-    spark.sql("INSERT INTO gwn.db.t SELECT id, CAST(id AS INT), " +
-      "CAST(id AS DECIMAL(10,2)) FROM range(0, 20)")
-    spark.sql("ALTER TABLE gwn.db.t ALTER COLUMN n TYPE DOUBLE")
-    spark.sql("ALTER TABLE gwn.db.t ALTER COLUMN m TYPE DECIMAL(24,2)")
-    val r = spark.sql("SELECT sum(n) AS sn, sum(m) AS sm FROM gwn.db.t").head()
-    assert(r.getDouble(0) == 190.0)
-    assert(r.getDecimal(1) == new java.math.BigDecimal("190.00"))
+    GraftCatalog.withCatalog(spark, wh) { cat =>
+      spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.db")
+      spark.sql(s"CREATE TABLE $cat.db.t (k BIGINT, n INT, m DECIMAL(10,2))")
+      spark.sql(s"INSERT INTO $cat.db.t SELECT id, CAST(id AS INT), " +
+        "CAST(id AS DECIMAL(10,2)) FROM range(0, 20)")
+      spark.sql(s"ALTER TABLE $cat.db.t ALTER COLUMN n TYPE DOUBLE")
+      spark.sql(s"ALTER TABLE $cat.db.t ALTER COLUMN m TYPE DECIMAL(24,2)")
+      val r = spark.sql(s"SELECT sum(n) AS sn, sum(m) AS sm FROM $cat.db.t").head()
+      assert(r.getDouble(0) == 190.0)
+      assert(r.getDecimal(1) == new java.math.BigDecimal("190.00"))
+    }
   }
 
   test("widening an NDV column out of the hashable family retires the declaration; int→long keeps it") {
-    val cat = "gwndv"
     val wh = tmp("graft-widen-ndv")
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[GraftCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-    spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.db")
-    spark.sql(s"CREATE TABLE $cat.db.t (k INT, n INT, s STRING) " +
-      "TBLPROPERTIES ('ndvFor' = 'k,n,s')")
-    spark.sql(s"INSERT INTO $cat.db.t " +
-      "SELECT CAST(id % 40 AS INT), CAST(id AS INT), CAST(id % 5 AS STRING) " +
-      "FROM range(0, 500)")
-    val f = fs(s"$wh/db/t")
-    def m() = SegmentLog.read(f, s"$wh/db/t").get
-    assert(m().props("ndvFor").split(",").toSet == Set("k", "n", "s"))
-    assert(m().ndvMerged.keySet == Set("k", "n", "s"))
-    // int→long: the canonical string (decimal digits) is type-invariant,
-    // so old sketches stay exact — the declaration survives
-    spark.sql(s"ALTER TABLE $cat.db.t ALTER COLUMN k TYPE BIGINT")
-    assert(m().props("ndvFor").split(",").toSet == Set("k", "n", "s"))
-    // int→double: unhashable — silently dead sketch collection is the
-    // failure mode, so the widen RETIRES the declaration (and the
-    // pre-merged entry follows at the next data commit)
-    spark.sql(s"ALTER TABLE $cat.db.t ALTER COLUMN n TYPE DOUBLE")
-    assert(m().props("ndvFor").split(",").toSet == Set("k", "s"),
-      s"widen must drop n from ndvFor, got ${m().props.get("ndvFor")}")
-    // post-widen writes keep sketching the surviving declarations and
-    // the table still serves their distinctCount
-    spark.sql(s"INSERT INTO $cat.db.t " +
-      "SELECT CAST(id % 40 AS BIGINT), CAST(id AS DOUBLE), " +
-      "CAST(id % 5 AS STRING) FROM range(500, 600)")
-    val schema = spark.read.format(Fmt).load(s"$wh/db/t").schema
-    val stats = new graft.sources.segment.GraftScanBuilder(s"$wh/db/t", schema,
-      new org.apache.spark.sql.util.CaseInsensitiveStringMap(java.util.Collections.emptyMap()))
-      .build().asInstanceOf[org.apache.spark.sql.connector.read.SupportsReportStatistics]
-      .estimateStatistics()
-    def ndvOf(c: String) = stats.columnStats()
-      .get(org.apache.spark.sql.connector.expressions.Expressions.column(c))
-      .distinctCount()
-    assert(ndvOf("k").getAsLong == 40L, "int→long keeps exact NDV across the widen")
-    assert(ndvOf("s").getAsLong == 5L)
-    assert(!ndvOf("n").isPresent, "the retired column reports no distinctCount")
-    // the SQL face: CALL graft.system.ndv reads the same table-level
-    // sketches — estimates + the exact/estimator arm flag, zero scans
-    val nd = spark.sql(s"CALL $cat.system.ndv('db.t')").collect()
-      .map(r => (r.getString(0), r.getDouble(1), r.getBoolean(2))).toSeq
-    assert(nd.map(_._1) == Seq("k", "s"), s"got $nd")
-    assert(nd == Seq(("k", 40.0, true), ("s", 5.0, true)), s"got $nd")
-    // dropping the LAST declared column removes the property entirely
-    spark.sql(s"CREATE TABLE $cat.db.one (a INT, b STRING) " +
-      "TBLPROPERTIES ('ndvFor' = 'a')")
-    spark.sql(s"INSERT INTO $cat.db.one VALUES (1, 'x')")
-    spark.sql(s"ALTER TABLE $cat.db.one ALTER COLUMN a TYPE DOUBLE")
-    assert(!SegmentLog.read(fs(s"$wh/db/one"), s"$wh/db/one").get
-      .props.contains("ndvFor"))
+    GraftCatalog.withCatalog(spark, wh) { cat =>
+      spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.db")
+      spark.sql(s"CREATE TABLE $cat.db.t (k INT, n INT, s STRING) " +
+        "TBLPROPERTIES ('ndvFor' = 'k,n,s')")
+      spark.sql(s"INSERT INTO $cat.db.t " +
+        "SELECT CAST(id % 40 AS INT), CAST(id AS INT), CAST(id % 5 AS STRING) " +
+        "FROM range(0, 500)")
+      val f = fs(s"$wh/db/t")
+      def m() = SegmentLog.read(f, s"$wh/db/t").get
+      assert(m().props("ndvFor").split(",").toSet == Set("k", "n", "s"))
+      assert(m().ndvMerged.keySet == Set("k", "n", "s"))
+      // int→long: the canonical string (decimal digits) is type-invariant,
+      // so old sketches stay exact — the declaration survives
+      spark.sql(s"ALTER TABLE $cat.db.t ALTER COLUMN k TYPE BIGINT")
+      assert(m().props("ndvFor").split(",").toSet == Set("k", "n", "s"))
+      // int→double: unhashable — silently dead sketch collection is the
+      // failure mode, so the widen RETIRES the declaration (and the
+      // pre-merged entry follows at the next data commit)
+      spark.sql(s"ALTER TABLE $cat.db.t ALTER COLUMN n TYPE DOUBLE")
+      assert(m().props("ndvFor").split(",").toSet == Set("k", "s"),
+        s"widen must drop n from ndvFor, got ${m().props.get("ndvFor")}")
+      // post-widen writes keep sketching the surviving declarations and
+      // the table still serves their distinctCount
+      spark.sql(s"INSERT INTO $cat.db.t " +
+        "SELECT CAST(id % 40 AS BIGINT), CAST(id AS DOUBLE), " +
+        "CAST(id % 5 AS STRING) FROM range(500, 600)")
+      val schema = spark.read.format(Fmt).load(s"$wh/db/t").schema
+      val stats = new graft.sources.segment.GraftScanBuilder(s"$wh/db/t", schema,
+        new org.apache.spark.sql.util.CaseInsensitiveStringMap(java.util.Collections.emptyMap()))
+        .build().asInstanceOf[org.apache.spark.sql.connector.read.SupportsReportStatistics]
+        .estimateStatistics()
+      def ndvOf(c: String) = stats.columnStats()
+        .get(org.apache.spark.sql.connector.expressions.Expressions.column(c))
+        .distinctCount()
+      assert(ndvOf("k").getAsLong == 40L, "int→long keeps exact NDV across the widen")
+      assert(ndvOf("s").getAsLong == 5L)
+      assert(!ndvOf("n").isPresent, "the retired column reports no distinctCount")
+      // the SQL face: CALL graft.system.ndv reads the same table-level
+      // sketches — estimates + the exact/estimator arm flag, zero scans
+      val nd = spark.sql(s"CALL $cat.system.ndv('db.t')").collect()
+        .map(r => (r.getString(0), r.getDouble(1), r.getBoolean(2))).toSeq
+      assert(nd.map(_._1) == Seq("k", "s"), s"got $nd")
+      assert(nd == Seq(("k", 40.0, true), ("s", 5.0, true)), s"got $nd")
+      // dropping the LAST declared column removes the property entirely
+      spark.sql(s"CREATE TABLE $cat.db.one (a INT, b STRING) " +
+        "TBLPROPERTIES ('ndvFor' = 'a')")
+      spark.sql(s"INSERT INTO $cat.db.one VALUES (1, 'x')")
+      spark.sql(s"ALTER TABLE $cat.db.one ALTER COLUMN a TYPE DOUBLE")
+      assert(!SegmentLog.read(fs(s"$wh/db/one"), s"$wh/db/one").get
+        .props.contains("ndvFor"))
+    }
   }
 }

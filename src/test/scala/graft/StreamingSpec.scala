@@ -8,7 +8,7 @@ import org.apache.spark.sql.streaming.Trigger
 
 import graft.ingest.Ingest
 import graft.model.Model
-import graft.streaming.{CheckoutStream, Sinks}
+import graft.streaming.CheckoutStream
 
 /** Structured Streaming semantics (M3 / ST1-ST7): micro-batch delivery,
   * watermarked dedup, transactional inventory via foreachBatch, DLQ. */
@@ -554,14 +554,6 @@ class StreamingSpec extends SparkSpec {
       .parquet(s"$base/dlq")
       .select($"key", $"attempts").collect().map(r => r.getString(0) -> r.getInt(1)).toMap
     assert(dead === Map("poison" -> 1))
-  }
-
-  test("ST2: dead-letter split diverts keys at maxAttempts, keeps the rest") {
-    val batch = Seq(("k1", "payload1"), ("k2", "payload2")).toDF("key", "payload")
-    val attempts = Seq(("k1", 3)).toDF("key", "n_failures")
-    val (ok, dead) = Sinks.deadLetterSplit(batch, attempts, "key", maxAttempts = 3)
-    assert(ok.collect().map(_.getString(0)).toSeq === Seq("k2"))
-    assert(dead.collect().map(_.getString(0)).toSeq === Seq("k1"))
   }
 
   test("ST7: maxFilesPerTrigger paces delivery into multiple micro-batches") {
