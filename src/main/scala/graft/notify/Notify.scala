@@ -9,8 +9,9 @@ import graft.model.Model
   * reference src/notification_sender/app.py:7-28.
   *
   * Stateless narrow operators; at scale this is a pure map stage over the
-  * processed stream with no shuffle. The at-most-once error-swallowing
-  * branch (ST3) lives in the streaming sink (graft.streaming.Sinks).
+  * processed stream with no shuffle. The reference's at-most-once
+  * error-swallowing branch (ST3) has no counterpart: no sink here
+  * swallows an error, so a failing notification fails its job.
   */
 object Notify {
 

@@ -80,10 +80,10 @@ object AnnIndex {
   def removeVectors(spark: SparkSession, dir: String, ids: DataFrame): Unit = {
     val gone = ids.select(col("vec_id"))
     Seq("assignments", "codes").foreach { sub =>
-      val kept = spark.read.parquet(s"$dir/$sub")
-        .join(gone, Seq("vec_id"), "left_anti").localCheckpoint()
+      val kept = Lineage.cut(spark.read.parquet(s"$dir/$sub")
+        .join(gone, Seq("vec_id"), "left_anti"))
       kept.write.mode("overwrite").parquet(s"$dir/$sub")
-      org.apache.spark.sql.graftbridge.RddBridge.freeCheckpoint(kept)
+      Lineage.free(kept)
     }
   }
 

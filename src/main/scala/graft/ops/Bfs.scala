@@ -24,9 +24,8 @@ import org.apache.spark.sql.functions._
   * Scale: per round one shuffle join frontier⋈edges + one anti-join
   * against visited (both on the node id — at 1000 executors both
   * co-partition on the same key, and AQE handles the shrinking
-  * frontier). [[Lineage]] discipline cuts each round's plan;
-  * `checkpointDir` picks the cluster-safe reliable variant exactly as
-  * in connectedComponents. The DuckDB oracle replays the traversal as
+  * frontier). [[Lineage]] discipline cuts each round's plan, as in
+  * connectedComponents. The DuckDB oracle replays the traversal as
   * a RECURSIVE CTE with a hop cap and min-hop collapse — an
   * independent BFS formulation certifying layer membership.
   */
@@ -38,11 +37,8 @@ object Bfs {
   def hopDistances(
       edges: DataFrame,
       seeds: DataFrame,
-      maxHops: Int,
-      checkpointDir: Option[String] = None): DataFrame = {
+      maxHops: Int): DataFrame = {
     require(maxHops >= 0, "maxHops must be non-negative")
-    Lineage.prepare(edges, checkpointDir)
-    val reliable = checkpointDir.isDefined
     // materialize the edge frame ONCE when more than one hop will scan
     // it — the caller's edge derivation can be arbitrarily expensive (a
     // co-occurrence self-join in rel_part_blast_radius), and without a
@@ -51,10 +47,9 @@ object Bfs {
     // measured on rel_part_blast_radius: 50→34 jobs, 546→315 tasks,
     // 88.7→45.8 MB shuffled, input records 703k→235k)
     val e0 = edges.select(col("src"), col("dst"))
-    val e = if (maxHops > 1) Lineage.cut(e0, reliable) else e0
+    val e = if (maxHops > 1) Lineage.cut(e0) else e0
     var dist = Lineage.cut(
-      seeds.select(col("id")).distinct().select(col("id"), lit(0).as("hop")),
-      reliable)
+      seeds.select(col("id")).distinct().select(col("id"), lit(0).as("hop")))
     var frontier = dist
     var h = 1
     var live = true
@@ -63,12 +58,11 @@ object Bfs {
         frontier.join(e, frontier("id") === e("src"))
           .select(col("dst").as("id")).distinct()
           .join(dist.select(col("id")), Seq("id"), "left_anti")
-          .select(col("id"), lit(h).as("hop")),
-        reliable)
+          .select(col("id"), lit(h).as("hop")))
       live = next.limit(1).count() > 0 // O(1) liveness probe per round
       if (live) {
         val prev = dist
-        dist = Lineage.cut(dist.unionByName(next), reliable)
+        dist = Lineage.cut(dist.unionByName(next))
         Lineage.free(prev)
         Lineage.free(frontier)
         frontier = next
@@ -99,19 +93,15 @@ object Bfs {
   def hopDistancesVia(
       memberships: DataFrame,
       seeds: DataFrame,
-      maxHops: Int,
-      checkpointDir: Option[String] = None): DataFrame = {
+      maxHops: Int): DataFrame = {
     require(maxHops >= 0, "maxHops must be non-negative")
-    Lineage.prepare(memberships, checkpointDir)
-    val reliable = checkpointDir.isDefined
     // one materialization: both joins of every hop scan the membership
     // blocks (the caller's derivation — distinct, df-cap semi-join —
     // would otherwise re-run per join per hop)
     val m0 = memberships.select(col("grp"), col("id"))
-    val m = if (maxHops >= 1) Lineage.cut(m0, reliable) else m0
+    val m = if (maxHops >= 1) Lineage.cut(m0) else m0
     var dist = Lineage.cut(
-      seeds.select(col("id")).distinct().select(col("id"), lit(0).as("hop")),
-      reliable)
+      seeds.select(col("id")).distinct().select(col("id"), lit(0).as("hop")))
     var frontier = dist
     var h = 1
     var live = true
@@ -122,12 +112,11 @@ object Bfs {
         m.join(grps, Seq("grp"))
           .select(col("id")).distinct()
           .join(dist.select(col("id")), Seq("id"), "left_anti")
-          .select(col("id"), lit(h).as("hop")),
-        reliable)
+          .select(col("id"), lit(h).as("hop")))
       live = next.limit(1).count() > 0 // O(1) liveness probe per round
       if (live) {
         val prev = dist
-        dist = Lineage.cut(dist.unionByName(next), reliable)
+        dist = Lineage.cut(dist.unionByName(next))
         Lineage.free(prev)
         Lineage.free(frontier)
         frontier = next

@@ -48,8 +48,8 @@ object Bm25 {
     // restriction and the doc-length join each re-run
     // tokenize+explode+aggregate over the corpus (for the chunk-level
     // RAG caller that is re-chunking the corpus per consumer)
-    val tf = tok.groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
-      .localCheckpoint(true)
+    val tf = Lineage.cut(
+      tok.groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf")))
     val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
     // two O(1) corpus scalars (the embBits-style exception): the doc
     // count and average length parameterize every score
@@ -135,10 +135,10 @@ object Bm25 {
     var posts: DataFrame = null
     var dl: DataFrame = null
     graft.streaming.Overlap.awaitAll(Seq(
-      () => posts = spark.read.parquet(s"$dir/postings")
-        .join(gone, Seq("doc_id"), "left_anti").localCheckpoint(),
-      () => dl = spark.read.parquet(s"$dir/doclens")
-        .join(gone, Seq("doc_id"), "left_anti").localCheckpoint()))
+      () => posts = Lineage.cut(spark.read.parquet(s"$dir/postings")
+        .join(gone, Seq("doc_id"), "left_anti")),
+      () => dl = Lineage.cut(spark.read.parquet(s"$dir/doclens")
+        .join(gone, Seq("doc_id"), "left_anti"))))
     import spark.implicits._
     graft.streaming.Overlap.awaitAll(Seq(
       () => posts.write.mode("overwrite").parquet(s"$dir/postings"),

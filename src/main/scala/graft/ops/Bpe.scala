@@ -75,13 +75,11 @@ object Bpe {
   /** Train `nMerges` BPE merges over the corpus's words. Returns the
     * merge table (merge_rank, sym_a, sym_b, merged, cnt) in training
     * order — the artifact a tokenizer applies at encode time. */
-  def merges(docs: DataFrame, nMerges: Int, checkpointDir: Option[String] = None): DataFrame = {
+  def merges(docs: DataFrame, nMerges: Int): DataFrame = {
     require(nMerges > 0, "nMerges must be positive")
-    // per-round lineage cuts, cluster-safe when checkpointDir is set —
-    // same discipline as Dedup.connectedComponents (see Lineage)
-    Lineage.prepare(docs, checkpointDir)
-    val reliable = checkpointDir.isDefined
-    var words = Lineage.cut(vocab(docs), reliable)
+    // per-round lineage cuts — same discipline as
+    // Dedup.connectedComponents (see Lineage)
+    var words = Lineage.cut(vocab(docs))
     val winners = (1 to nMerges).map { k =>
       val win = Lineage.cut(
         pairCounts(words)
@@ -89,16 +87,14 @@ object Bpe {
           .limit(1)
           .select(lit(k).as("merge_rank"), col("a").as("sym_a"),
             col("b").as("sym_b"), concat(col("a"), col("b")).as("merged"),
-            col("cnt")),
-        reliable)
+            col("cnt")))
       words = Lineage.cut(
         words
           .crossJoin(broadcast(win))
           .withColumn("seq", applyMerge(col("seq"),
             concat(lit("|"), col("sym_a"), lit("|"), col("sym_b"), lit("|")),
             concat(lit("|"), col("merged"), lit("|"))))
-          .select(col("word"), col("freq"), col("seq")),
-        reliable)
+          .select(col("word"), col("freq"), col("seq")))
       win
     }
     winners.reduce(_ union _)

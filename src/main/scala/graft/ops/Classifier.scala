@@ -18,8 +18,7 @@ import org.apache.spark.sql.functions._
   * a heuristic bootstrap becomes a rankable quality score.
   *
   * Plan shape at 100 TB: the feature frame is ONE map-only projection
-  * of the corpus, lineage-cut once ([[Lineage]] — reliable under
-  * `checkpointDir` for cluster runs); each GD iteration is ONE
+  * of the corpus, lineage-cut once ([[Lineage]]); each GD iteration is ONE
   * aggregate over it (map-side combined, d+0 columns to the driver —
   * the O(dim) driver exception of Pca/Bloom/Bpe); scoring is map-only
   * with the weights riding along as literals. k iterations = k
@@ -61,16 +60,13 @@ object Classifier {
 
   /** The learned weight vector after `iters` full-batch GD steps from
     * w = 0. Each cell a float-valued double (the quantization
-    * contract). `checkpointDir` switches the one-time feature-frame
-    * materialization to a reliable checkpoint (see [[Lineage]]). */
-  def train(docs: DataFrame, iters: Int = 20, lr: Double = 10.0,
-            checkpointDir: Option[String] = None): Array[Double] = {
+    * contract). */
+  def train(docs: DataFrame, iters: Int = 20, lr: Double = 10.0): Array[Double] = {
     require(iters >= 1, "need at least one iteration")
     val raw = features(docs)
-    Lineage.prepare(raw, checkpointDir)
     // lazy cut: the count() is the materializing action (one job, see
     // Lineage.cutLazy); the 20 gradient jobs then read the blocks
-    val f = Lineage.cutLazy(raw, checkpointDir.isDefined)
+    val f = Lineage.cutLazy(raw)
     val n = f.count().toDouble
     val xs = Array("x0", "x1", "x2", "x3")
     var w = Array.fill(Dim)(0.0)

@@ -35,8 +35,7 @@ import org.apache.spark.sql.functions._
   * filter on `doc_id` or a 32-byte digest — document text never
   * crosses a shuffle after its shingle/digest projection. The only
   * iterative piece is the components loop, which materializes per
-  * round through [[Lineage]] (pass `checkpointDir` for the
-  * cluster-reliable cut). The benchmark n-gram set shuffles as an
+  * round through [[Lineage]]. The benchmark n-gram set shuffles as an
   * equi-join on the gram text (a web-scale benchmark set is itself
   * too large to broadcast; AQE broadcasts it when it is not).
   *
@@ -81,8 +80,7 @@ object Curation {
     * build). Callers that persist the outputs should free the cut
     * blocks afterwards ([[Lineage.free]] on
     * `quality`/`exact`/`near`/`components`). */
-  def stages(docs: DataFrame, p: Params = Params(),
-             checkpointDir: Option[String] = None): Stages = {
+  def stages(docs: DataFrame, p: Params = Params()): Stages = {
     val tagged = Sampling
       .trainEvalSplit(docs.select(col("doc_id")), col("doc_id"), p.trainFrac, p.salt)
     val train = docs.join(
@@ -100,11 +98,9 @@ object Curation {
     // the exact-dedup digest pass, the funnel counts AND the audit's
     // membership flags — profiled at sf0.1, those re-derivations were
     // ~3.5 s of the build's ~11 s (docs/BENCH_NOTES.md r15)
-    val reliable = checkpointDir.isDefined
-    Lineage.prepare(docs, checkpointDir)
     val quality = Lineage.cut(train.join(
       TextOps.qualityFilter(train, p.qualityFrac).select(col("doc_id")),
-      Seq("doc_id"), "left_semi"), reliable)
+      Seq("doc_id"), "left_semi"))
 
     // exact dedup: keeper = min doc_id per content digest; the shuffle
     // carries (32-byte digest, id), never text
@@ -113,11 +109,10 @@ object Curation {
         quality.groupBy(md5(col("text")).as("content_hash"))
           .agg(min(col("doc_id")).as("doc_id"))
           .select(col("doc_id")),
-        Seq("doc_id"), "left_semi"),
-      reliable)
+        Seq("doc_id"), "left_semi"))
 
-    val components = Dedup.dedupComponents(exact, p.bands, checkpointDir = checkpointDir)
-    val near = Lineage.cut(Dedup.deduplicate(exact, components), reliable)
+    val components = Dedup.dedupComponents(exact, p.bands)
+    val near = Lineage.cut(Dedup.deduplicate(exact, components))
 
     // decontamination: one shared n-gram is disqualifying. Survivors
     // too short to carry an n-gram cannot collide and pass through.
@@ -148,9 +143,8 @@ object Curation {
   }
 
   /** Convenience terminal form: the curated corpus itself. */
-  def curate(docs: DataFrame, p: Params = Params(),
-             checkpointDir: Option[String] = None): DataFrame =
-    stages(docs, p, checkpointDir).fin
+  def curate(docs: DataFrame, p: Params = Params()): DataFrame =
+    stages(docs, p).fin
 
   /** Per-document disposition — the explainability record behind the
     * funnel: every corpus doc labeled with where it ended up

@@ -78,7 +78,7 @@ object Dedup {
     * Jaccard division; ⌈t·|S|⌉ is the same IEEE product+ceil in both
     * engines. */
   def prefixFilteredPairs(docs: DataFrame, t: Double): DataFrame = {
-    val posts = shingleSets(docs).localCheckpoint(true)
+    val posts = Lineage.cut(shingleSets(docs))
     val df = posts.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
     val sizes = posts.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
     val w = Window.partitionBy(col("doc_id")).orderBy(col("df"), col("shingle"))
@@ -124,12 +124,12 @@ object Dedup {
     *    cluster-memory bomb at 100 TB).
     */
   def jaccardPairs(docs: DataFrame, topN: Int, maxDf: Int = 100): DataFrame = {
-    // materialize the postings ONCE (eager localCheckpoint — the repo's
+    // materialize the postings ONCE (eager Lineage.cut — the repo's
     // exchange-reuse discipline, see TextOps.shardAssignments): the
     // df-cap aggregate and the capped posting join both read the
     // materialized blocks instead of each re-running tokenize+explode,
     // which at 100 TB is this operator's dominant cost
-    val posts = shingleSets(docs).localCheckpoint(true)
+    val posts = Lineage.cut(shingleSets(docs))
     val rare = posts
       .groupBy(col("shingle"))
       .agg(count(lit(1)).as("df"))
@@ -169,7 +169,7 @@ object Dedup {
     * doc_id) total order — cross-engine deterministic with no
     * quantization. */
   def similarDocsTopK(docs: DataFrame, k: Int, maxDf: Int = 100): DataFrame = {
-    val posts = shingleSets(docs).localCheckpoint(true)
+    val posts = Lineage.cut(shingleSets(docs))
     val rare = posts
       .groupBy(col("shingle"))
       .agg(count(lit(1)).as("df"))
@@ -206,7 +206,7 @@ object Dedup {
     * costs one join, not two. */
   def containmentPairs(docs: DataFrame, minC: Double, maxDf: Int = 100): DataFrame = {
     // postings materialized once — same reasoning as [[jaccardPairs]]
-    val posts = shingleSets(docs).localCheckpoint(true)
+    val posts = Lineage.cut(shingleSets(docs))
     val rare = posts
       .groupBy(col("shingle"))
       .agg(count(lit(1)).as("df"))
@@ -302,7 +302,7 @@ object Dedup {
     // sides of the bucket self-join, sh feeds the size aggregate and
     // both sides of the verification join — without the cuts each
     // consumer re-runs tokenize(+md5) over the corpus
-    val sigs = minhashSignatures(docs, bands).localCheckpoint(true)
+    val sigs = Lineage.cut(minhashSignatures(docs, bands))
     val ok = sigs.groupBy(col("band"), col("signature"))
       .agg(count(lit(1)).as("n")).filter(col("n") <= maxBucket)
       .select(col("band"), col("signature"))
@@ -313,7 +313,7 @@ object Dedup {
       .filter(col("doc_a") < col("doc_b"))
       .select(col("doc_a"), col("doc_b"))
       .distinct()
-    val sh = shingleSets(docs).localCheckpoint(true)
+    val sh = Lineage.cut(shingleSets(docs))
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_shingles"))
     val common = cand
       .join(sh.select(col("doc_id").as("doc_a"), col("shingle")), Seq("doc_a"))
@@ -349,7 +349,7 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"))
     // one signature pass shared by the cap aggregate and both
     // self-join sides (the jaccardPairs discipline)
-    val sigs = minhashSignatures(docs, bands).localCheckpoint(true)
+    val sigs = Lineage.cut(minhashSignatures(docs, bands))
     val ok = sigs.groupBy(col("band"), col("signature"))
       .agg(count(lit(1)).as("n")).filter(col("n") <= maxBucket)
       .select(col("band"), col("signature"))
@@ -393,7 +393,7 @@ object Dedup {
     // bands the arm asks for, so the b-band signatures are exactly the
     // max-arm signatures filtered to band < b. The shingle+md5 posting
     // pass is the dominant cost and was previously paid once PER ARM
-    // (r16: ~2x on the certificate). persist, not localCheckpoint:
+    // (r16: ~2x on the certificate). persist, not a Lineage cut:
     // lineage survives executor loss (a lost block recomputes instead
     // of failing the job at cluster scale) and the plan stays
     // analyzable; blocks are n_docs x bands rows — a sliver of the
@@ -554,15 +554,14 @@ object Dedup {
   def dedupComponents(
       docs: DataFrame,
       bands: Int = 4,
-      maxRounds: Int = 20,
-      checkpointDir: Option[String] = None): DataFrame = {
+      maxRounds: Int = 20): DataFrame = {
     // hub per bucket as a tiny aggregate joined back onto the signatures
     // (NOT a window over the full signature list — the aggregate avoids
     // the bucket-wide sort and stays broadcast-able under AQE, the same
     // reasoning as jaccardPairs' DF cap)
     // one signature pass shared by the hub aggregate and the edge
     // join (the jaccardPairs discipline)
-    val sigs = minhashSignatures(docs, bands).localCheckpoint(true)
+    val sigs = Lineage.cut(minhashSignatures(docs, bands))
     val hubs = sigs.groupBy(col("band"), col("signature"))
       .agg(min(col("doc_id")).as("hub"))
     val edges = sigs.join(hubs, Seq("band", "signature"))
@@ -571,7 +570,7 @@ object Dedup {
       .distinct()
     docs.select(col("doc_id"))
       .join(
-        connectedComponents(edges, maxRounds, checkpointDir)
+        connectedComponents(edges, maxRounds)
           .withColumnRenamed("node", "doc_id"),
         Seq("doc_id"), "left")
       .select(
@@ -590,22 +589,17 @@ object Dedup {
     * probe per round. */
   def connectedComponents(
       edges: DataFrame,
-      maxRounds: Int = 20,
-      checkpointDir: Option[String] = None): DataFrame = {
+      maxRounds: Int = 20): DataFrame = {
     // Each round materializes its edge set AND cuts the logical plan,
     // so the next round plans over a flat scan instead of a lineage
     // that doubles per round (a persist-only formulation re-analyzes
     // the full history every round — measured minutes at 20 rounds even
-    // on 500 docs). `checkpointDir` picks the cluster-safe reliable
-    // checkpoint over executor-local blocks — see [[Lineage]]; blocks
-    // are freed per round below.
-    Lineage.prepare(edges, checkpointDir)
-    val reliable = checkpointDir.isDefined
+    // on 500 docs). Blocks are freed per round below.
     // lazy cuts: each round's count() is the materializing action, so
     // a round costs ONE job instead of cut+count's two — in a loop of
     // tiny frames the per-job scheduler round-trip IS the cost
     // (measured on rel_entity_resolution: 73→~55 jobs)
-    var stars = Lineage.cutLazy(edges.select(col("src"), col("dst")), reliable)
+    var stars = Lineage.cutLazy(edges.select(col("src"), col("dst")))
     var prevCnt = stars.count()
     var converged = false
     var round = 0
@@ -623,7 +617,7 @@ object Dedup {
       // to climb back. Certified by the union-find property test and
       // every CC consumer's oracle.
       val next = Lineage.cutLazy(
-        smallStar(largeStar(smallStar(largeStar(stars)))), reliable)
+        smallStar(largeStar(smallStar(largeStar(stars)))))
       val cnt = next.count()
       // fixpoint test: small∘large is deterministic, so an unchanged
       // edge set means every further round is a no-op — and the only

@@ -34,14 +34,14 @@ object Hamming {
       maxHamming: Int): DataFrame = {
     require(maxHamming <= 3,
       s"maxHamming=$maxHamming > 3 breaks the 4-chunk pigeonhole recall guarantee")
-    // materialize the signature frame ONCE (eager localCheckpoint —
+    // materialize the signature frame ONCE (eager Lineage.cut —
     // the jaccardPairs postings discipline): both sides of the banded
     // self-join otherwise re-run the caller's signature computation,
     // which for the multimodal callers is a full image/audio
     // decode+hash pass (measured on mm_phash_pairs/mm_audio_dup_pairs:
     // source records read 2×N → 1×N). The frame is (id, 64-bit sig) —
     // a few bytes per row at any scale
-    val sigc = sig.select(col(idCol), col(sigCol)).localCheckpoint(true)
+    val sigc = Lineage.cut(sig.select(col(idCol), col(sigCol)))
     val chunks = sigc.select(col(idCol), col(sigCol),
       explode(array((0 until 4).map(ci => struct(
         lit(ci).as("chunk_idx"),

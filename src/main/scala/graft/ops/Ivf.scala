@@ -79,8 +79,7 @@ object Ivf {
     * (updateCentroids casts the per-dim mean to float), which also pins
     * cross-engine reproducibility: a float has enough headroom over the
     * ~1-ulp double variance of aggregation order. */
-  def index(corpus: DataFrame, k: Int, iters: Int = 2,
-      checkpointDir: Option[String] = None): (DataFrame, DataFrame) = {
+  def index(corpus: DataFrame, k: Int, iters: Int = 2): (DataFrame, DataFrame) = {
     // per-iteration lineage cuts (the MLlib-kmeans caching discipline):
     // the lazy chain otherwise re-runs every earlier Lloyd step — and
     // re-scans the corpus — once per downstream consumer of the
@@ -91,16 +90,13 @@ object Ivf {
     // Contract: BOTH returned frames are already cut (callers must not
     // re-checkpoint). The k-row centroid frame is cut each round so the
     // superseded corpus-sized assignment has no lazy referents and is
-    // freed immediately (the Lineage.free discipline); `checkpointDir`
-    // upgrades every cut to the executor-loss-safe reliable form
-    Lineage.prepare(corpus, checkpointDir)
-    val reliable = checkpointDir.isDefined
-    var centroids = Lineage.cut(seedCentroids(corpus, k), reliable)
-    var assigned = Lineage.cut(assign(corpus, centroids), reliable)
+    // freed immediately (the Lineage.free discipline)
+    var centroids = Lineage.cut(seedCentroids(corpus, k))
+    var assigned = Lineage.cut(assign(corpus, centroids))
     for (_ <- 1 until math.max(1, iters)) {
-      centroids = Lineage.cut(updateCentroids(assigned), reliable)
+      centroids = Lineage.cut(updateCentroids(assigned))
       val prev = assigned
-      assigned = Lineage.cut(assign(corpus, centroids), reliable)
+      assigned = Lineage.cut(assign(corpus, centroids))
       Lineage.free(prev)
     }
     (assigned, centroids)
@@ -209,15 +205,11 @@ object Ivf {
       corpus: DataFrame,
       threshold: Double,
       k: Int,
-      iters: Int = 2,
-      checkpointDir: Option[String] = None): DataFrame = {
+      iters: Int = 2): DataFrame = {
     // the trainer's returned assignment is already materialized and
     // lineage-cut ([[index]]'s contract) — the pair join reads it as
-    // BOTH sides off the same frozen blocks, no re-cut; checkpointDir
-    // threads through so the Lloyd cuts and the CC loop all upgrade to
-    // reliable checkpoints (executor-loss-safe on a real cluster — see
-    // Lineage)
-    val assigned = index(corpus, k, iters, checkpointDir)._1
+    // BOTH sides off the same frozen blocks, no re-cut
+    val assigned = index(corpus, k, iters)._1
     val a = assigned.select(col("centroid_id"), col("vec_id").as("src"), col("embedding").as("ea"))
     val b = assigned.select(col("centroid_id"), col("vec_id").as("dst"), col("embedding").as("eb"))
     val edges = a.join(b, Seq("centroid_id"))
@@ -226,7 +218,7 @@ object Ivf {
       .select(col("src"), col("dst"))
     corpus.select(col("vec_id"))
       .join(
-        Dedup.connectedComponents(edges, checkpointDir = checkpointDir)
+        Dedup.connectedComponents(edges)
           .withColumnRenamed("node", "vec_id"),
         Seq("vec_id"), "left")
       .select(col("vec_id"),

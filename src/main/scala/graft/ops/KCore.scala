@@ -19,8 +19,8 @@ import org.apache.spark.sql.functions._
   *
   * Plan shape at 100 TB: each round is one endpoint-union aggregate
   * (map-side combined) + two semi-joins of the edge frame against the
-  * (shrinking) keeper set, Lineage-cut per round with the cluster-safe
-  * `checkpointDir` option; the fixpoint probe is an O(1) driver count
+  * (shrinking) keeper set, Lineage-cut per round; the fixpoint probe
+  * is an O(1) driver count
   * per round (the [[Dedup.connectedComponents]] discipline). Rounds
   * are bounded by the peel depth, not the node count — cascades
   * shorten, never lengthen, the loop.
@@ -95,18 +95,15 @@ object KCore {
 
   /** Peel to the τ-core fixpoint; returns surviving nodes with their
     * final (float-quantized) in-core weighted degree. */
-  def weightedCore(edges: DataFrame, tau: Double, maxRounds: Int = 100,
-                   checkpointDir: Option[String] = None): DataFrame = {
+  def weightedCore(edges: DataFrame, tau: Double, maxRounds: Int = 100): DataFrame = {
     def wdegrees(e: DataFrame): DataFrame =
       e.select(col("a").as("node"), col("w"))
         .unionAll(e.select(col("b").as("node"), col("w")))
         .groupBy(col("node"))
         .agg(sum(col("w")).cast("float").cast("double").as("wd"))
-    Lineage.prepare(edges, checkpointDir)
     // lazy cuts: the count() that follows is the materializing action,
     // one job per round instead of cut+count's two (see Lineage.cutLazy)
-    var cur = Lineage.cutLazy(edges.select(col("a"), col("b"), col("w")),
-      checkpointDir.isDefined)
+    var cur = Lineage.cutLazy(edges.select(col("a"), col("b"), col("w")))
     var n = cur.count()
     var prev = -1L
     var rounds = 0
@@ -116,7 +113,7 @@ object KCore {
       val nxt = cur
         .join(keep.withColumnRenamed("node", "a"), Seq("a"), "left_semi")
         .join(keep.withColumnRenamed("node", "b"), Seq("b"), "left_semi")
-      val cut = Lineage.cutLazy(nxt, checkpointDir.isDefined)
+      val cut = Lineage.cutLazy(nxt)
       n = cut.count()
       Lineage.free(cur)
       cur = cut

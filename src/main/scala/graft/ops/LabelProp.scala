@@ -28,17 +28,13 @@ object LabelProp {
 
   /** (node, community) after `rounds` synchronous updates over the
     * symmetrized `edges` (src, dst). */
-  def communities(
-      edges: DataFrame, rounds: Int,
-      checkpointDir: Option[String] = None): DataFrame = {
+  def communities(edges: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1, "rounds must be positive")
-    Lineage.prepare(edges, checkpointDir)
-    val reliable = checkpointDir.isDefined
     val sym = edges.select(col("src"), col("dst"))
       .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
     val nodes = sym.select(col("src").as("node")).distinct()
-    var labels = Lineage.cut(nodes.select(col("node"), col("node").as("label")), reliable)
+    var labels = Lineage.cut(nodes.select(col("node"), col("node").as("label")))
     val w = Window.partitionBy(col("src"))
       .orderBy(col("n").desc, col("nbr_label"))
     (1 to rounds).foreach { _ =>
@@ -49,7 +45,7 @@ object LabelProp {
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1)
         .select(col("src").as("node"), col("nbr_label").as("label"))
-      labels = Lineage.cut(adopted, reliable)
+      labels = Lineage.cut(adopted)
     }
     labels.select(col("node"), col("label").as("community"))
   }

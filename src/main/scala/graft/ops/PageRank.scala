@@ -34,9 +34,8 @@ import org.apache.spark.sql.functions._
   * would make the plan depth data-dependent.
   *
   * Iterative-loop hygiene matches connectedComponents: every round
-  * [[Lineage.cut]]s the new ranks frame (localCheckpoint on local[n],
-  * reliable `checkpoint(dir)` under `checkpointDir` on a cluster) and
-  * [[Lineage.free]]s the previous round's blocks.
+  * [[Lineage.cut]]s the new ranks frame and [[Lineage.free]]s the
+  * previous round's blocks.
   */
 object PageRank {
 
@@ -47,13 +46,10 @@ object PageRank {
   def ranks(
       edges: DataFrame,
       damping: Double = 0.85,
-      iters: Int = 5,
-      checkpointDir: Option[String] = None): DataFrame = {
+      iters: Int = 5): DataFrame = {
     require(damping > 0.0 && damping < 1.0, "damping must be in (0,1)")
     require(iters >= 1, "need at least one iteration")
-    Lineage.prepare(edges, checkpointDir)
-    val reliable = checkpointDir.isDefined
-    val (edgesDeg, nodes) = prepareGraph(edges, reliable)
+    val (edgesDeg, nodes) = prepareGraph(edges)
     // the ONE driver scalar: |V|, a bounded O(1) aggregate (the
     // documented exception class — same as Bloom's m/64 words)
     val n = nodes.count()
@@ -63,7 +59,7 @@ object PageRank {
       r0 = nodes.select(col("node"), lit(seed).as("rank")),
       baseExpr = lit(base),
       contribAgg = sum(col("rank") / col("outdeg")),
-      damping = damping, iters = iters, reliable = reliable)
+      damping = damping, iters = iters)
   }
 
   /** Similarity-WEIGHTED PageRank: the surfer follows out-edges in
@@ -79,19 +75,16 @@ object PageRank {
   def weightedRanks(
       edges: DataFrame,
       damping: Double = 0.85,
-      iters: Int = 5,
-      checkpointDir: Option[String] = None): DataFrame = {
+      iters: Int = 5): DataFrame = {
     require(damping > 0.0 && damping < 1.0, "damping must be in (0,1)")
     require(iters >= 1, "need at least one iteration")
-    Lineage.prepare(edges, checkpointDir)
-    val reliable = checkpointDir.isDefined
-    val e0 = Lineage.cut(edges, reliable)
+    val e0 = Lineage.cut(edges)
     val wsum = e0.groupBy(col("src"))
       .agg(sum(col("w")).cast("float").cast("double").as("wsum"))
-    val edgesW = Lineage.cut(e0.join(wsum, "src"), reliable)
+    val edgesW = Lineage.cut(e0.join(wsum, "src"))
     val nodes = Lineage.cut(
       e0.select(col("src").as("node"))
-        .union(e0.select(col("dst").as("node"))).distinct(), reliable)
+        .union(e0.select(col("dst").as("node"))).distinct())
     Lineage.free(e0)
     val n = nodes.count()
     val seed = (1.0 / n).toFloat.toDouble
@@ -100,7 +93,7 @@ object PageRank {
       r0 = nodes.select(col("node"), lit(seed).as("rank")),
       baseExpr = lit(base),
       contribAgg = sum(col("rank") * col("w") / col("wsum")),
-      damping = damping, iters = iters, reliable = reliable)
+      damping = damping, iters = iters)
   }
 
   /** Personalized PageRank: the damped walk restarts ONLY to `seeds`
@@ -116,21 +109,17 @@ object PageRank {
       edges: DataFrame,
       seeds: DataFrame,
       damping: Double = 0.85,
-      iters: Int = 5,
-      checkpointDir: Option[String] = None): DataFrame = {
+      iters: Int = 5): DataFrame = {
     require(damping > 0.0 && damping < 1.0, "damping must be in (0,1)")
     require(iters >= 1, "need at least one iteration")
-    Lineage.prepare(edges, checkpointDir)
-    val reliable = checkpointDir.isDefined
-    val (edgesDeg, graphNodes) = prepareGraph(edges, reliable)
+    val (edgesDeg, graphNodes) = prepareGraph(edges)
     val seedSet = seeds.select(col("node")).distinct()
     // seed membership rides WITH the node frame so the teleport term
     // stays a per-row expression, never a second join in the loop
     val nodes = Lineage.cut(
       graphNodes.union(seedSet).distinct()
         .join(seedSet.withColumn("is_seed", lit(true)), Seq("node"), "left")
-        .select(col("node"), coalesce(col("is_seed"), lit(false)).as("is_seed")),
-      reliable)
+        .select(col("node"), coalesce(col("is_seed"), lit(false)).as("is_seed")))
     val nSeeds = nodes.filter(col("is_seed")).count()
     require(nSeeds > 0, "need at least one seed node")
     val seedRank = (1.0 / nSeeds).toFloat.toDouble
@@ -140,7 +129,7 @@ object PageRank {
         when(col("is_seed"), lit(seedRank)).otherwise(lit(0.0)).as("rank")),
       baseExpr = when(col("is_seed"), lit(base)).otherwise(lit(0.0)),
       contribAgg = sum(col("rank") / col("outdeg")),
-      damping = damping, iters = iters, reliable = reliable)
+      damping = damping, iters = iters)
   }
 
   /** Materialize the edge frame ONCE (degree agg, degree join, and
@@ -148,13 +137,13 @@ object PageRank {
     * quadratic kNN build, an ANN candidate join — must not replay per
     * consumer; measured 12 s → 4 s warm on emb_pagerank), then derive
     * the degree-annotated edges and the node set. */
-  private def prepareGraph(edges: DataFrame, reliable: Boolean): (DataFrame, DataFrame) = {
-    val e0 = Lineage.cut(edges, reliable)
+  private def prepareGraph(edges: DataFrame): (DataFrame, DataFrame) = {
+    val e0 = Lineage.cut(edges)
     val outdeg = e0.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-    val edgesDeg = Lineage.cut(e0.join(outdeg, "src"), reliable)
+    val edgesDeg = Lineage.cut(e0.join(outdeg, "src"))
     val nodes = Lineage.cut(
       e0.select(col("src").as("node"))
-        .union(e0.select(col("dst").as("node"))).distinct(), reliable)
+        .union(e0.select(col("dst").as("node"))).distinct())
     Lineage.free(e0)
     (edgesDeg, nodes)
   }
@@ -168,9 +157,8 @@ object PageRank {
   private def loop(
       nodes: DataFrame, edgesDeg: DataFrame, r0: DataFrame,
       baseExpr: org.apache.spark.sql.Column,
-      contribAgg: org.apache.spark.sql.Column, damping: Double, iters: Int,
-      reliable: Boolean): DataFrame = {
-    var ranks = Lineage.cut(r0, reliable)
+      contribAgg: org.apache.spark.sql.Column, damping: Double, iters: Int): DataFrame = {
+    var ranks = Lineage.cut(r0)
     for (_ <- 1 to iters) {
       val contribs = edgesDeg
         .join(ranks, edgesDeg("src") === ranks("node"))
@@ -183,7 +171,7 @@ object PageRank {
           (baseExpr + lit(damping) * coalesce(col("contrib"), lit(0.0)))
             .cast("float").cast("double").as("rank"))
       val prev = ranks
-      ranks = Lineage.cut(next, reliable)
+      ranks = Lineage.cut(next)
       Lineage.free(prev)
     }
     ranks.select(col("node"), col("rank"))

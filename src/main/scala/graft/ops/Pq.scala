@@ -83,22 +83,19 @@ object Pq {
   /** Train codebooks (seed-assign + (iters-1) × update-assign, exactly
     * the Ivf schedule) and encode the corpus. Returns (codes, codebooks):
     * codes = (vec_id, m, code), the complete per-vector search state. */
-  def encode(corpus: DataFrame, nSub: Int, dsub: Int, k: Int, iters: Int = 2,
-      checkpointDir: Option[String] = None): (DataFrame, DataFrame) = {
+  def encode(corpus: DataFrame, nSub: Int, dsub: Int, k: Int,
+      iters: Int = 2): (DataFrame, DataFrame) = {
     // sub-vector explosion materialized once and per-iteration cuts —
     // the Ivf.index Lloyd discipline (see its scaladoc): both returned
     // frames are already cut, the tiny codebook frame is cut per round
-    // so the superseded assignment frame is freeable, and checkpointDir
-    // upgrades every cut to the reliable form
-    Lineage.prepare(corpus, checkpointDir)
-    val reliable = checkpointDir.isDefined
-    val subs = Lineage.cut(subVectors(corpus, nSub, dsub), reliable)
-    var books = Lineage.cut(seedCodebooks(subs, k), reliable)
-    var assigned = Lineage.cut(assignCodes(subs, books), reliable)
+    // so the superseded assignment frame is freeable
+    val subs = Lineage.cut(subVectors(corpus, nSub, dsub))
+    var books = Lineage.cut(seedCodebooks(subs, k))
+    var assigned = Lineage.cut(assignCodes(subs, books))
     for (_ <- 1 until math.max(1, iters)) {
-      books = Lineage.cut(updateCodebooks(assigned), reliable)
+      books = Lineage.cut(updateCodebooks(assigned))
       val prev = assigned
-      assigned = Lineage.cut(assignCodes(subs, books), reliable)
+      assigned = Lineage.cut(assignCodes(subs, books))
       Lineage.free(prev)
     }
     (assigned.select(col("vec_id"), col("m"), col("code")), books)

@@ -423,14 +423,11 @@ object TextOps {
     // re-planning) and the range partitioner's sampling is seeded per
     // RDD — two independent exchanges could disagree on bounds. The
     // checkpoint pins one materialized partitioning both branches
-    // read. (Cluster note: localCheckpoint stores on executors — on a
-    // multi-node deployment with dynamic allocation use checkpoint(dir)
-    // on reliable storage instead.)
-    val toks = withTokens(docs)
+    // read.
+    val toks = Lineage.cut(withTokens(docs)
       .select(col("doc_id"), size(col("words")).as("n_tokens"))
       .repartitionByRange(col("doc_id"))
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint()
+      .withColumn("pid", spark_partition_id()))
     val offsets = toks.groupBy(col("pid")).agg(sum(col("n_tokens")).as("ptotal"))
       // ≤(shuffle partitions) rows: the single-partition window is
       // deliberate; onePartitionKey silences the WindowExec WARN

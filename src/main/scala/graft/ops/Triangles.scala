@@ -42,7 +42,7 @@ object Triangles {
     * n_triangles, clustering), clustering = 2T/(d(d−1)) rounded to
     * 6 dp, 0 for degree < 2. */
   def perNode(edges: DataFrame): DataFrame = {
-    val und = undirect(edges).localCheckpoint(true)
+    val und = Lineage.cut(undirect(edges))
     val deg = und.select(col("a").as("node"))
       .union(und.select(col("b").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("degree"))
@@ -51,12 +51,11 @@ object Triangles {
     val withDeg = und
       .join(deg.select(col("node").as("a"), col("degree").as("da")), Seq("a"))
       .join(deg.select(col("node").as("b"), col("degree").as("db")), Seq("b"))
-    val oriented = withDeg.select(
+    val oriented = Lineage.cut(withDeg.select(
       when(col("da") < col("db") || (col("da") === col("db") && col("a") < col("b")),
         struct(col("a").as("u"), col("b").as("v")))
         .otherwise(struct(col("b").as("u"), col("a").as("v"))).as("e"))
-      .select(col("e.u").as("u"), col("e.v").as("v"))
-      .localCheckpoint(true)
+      .select(col("e.u").as("u"), col("e.v").as("v")))
     // wedges at the min-rank corner: two out-neighbors, id-ordered so
     // the closure probe is against the canonical (a < b) edge set
     val wedges = oriented.as("x")

@@ -153,15 +153,12 @@ object UnigramLm {
   /** Full train: seed → Viterbi → re-fit → Viterbi. Output one row
     * per vocabulary word: (word, freq, path, n_pieces). */
   def train(
-      docs: DataFrame, maxPieceLen: Int, topV: Int, maxWordLen: Int,
-      checkpointDir: Option[String] = None): DataFrame = {
-    Lineage.prepare(docs, checkpointDir)
-    val reliable = checkpointDir.isDefined
-    val words = Lineage.cut(wordCounts(docs, maxWordLen), reliable)
+      docs: DataFrame, maxPieceLen: Int, topV: Int, maxWordLen: Int): DataFrame = {
+    val words = Lineage.cut(wordCounts(docs, maxWordLen))
     val seg1 = viterbi(words,
       pieceCosts(seedPieces(words, maxPieceLen, topV)), maxPieceLen)
     val seg2 = viterbi(words,
-      pieceCosts(Lineage.cut(pathCounts(seg1), reliable)), maxPieceLen)
+      pieceCosts(Lineage.cut(pathCounts(seg1))), maxPieceLen)
     seg2.select(col("word"), col("freq"), col("path"),
       size(split(col("path"), "\\|")).as("n_pieces"))
   }

@@ -224,6 +224,9 @@ object CheckoutStream {
         verdicts
           .withColumn("processed_at", current_timestamp())
           .write.mode("overwrite").parquet(s"$verdictsPath/batch_id=$batchId")
-        ()
+        // the batch's writes have returned: free its checkpoint blocks
+        // now instead of leaving them pinned until the driver GCs them
+        org.apache.spark.sql.graftbridge.RddBridge.freeCheckpoint(verdicts)
+        org.apache.spark.sql.graftbridge.RddBridge.freeCheckpoint(lines)
       }
 }

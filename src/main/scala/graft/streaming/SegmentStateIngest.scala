@@ -53,10 +53,11 @@ object SegmentStateIngest {
         .map(_ => s.read.format("graft-segment").load(stateTable))
       val merged = merge(prior, batch)
       // one transactional overwrite per epoch: replayed ids no-op
-      merged.localCheckpoint(true) // pin BEFORE the truncating write
-        .write.format("graft-segment")
+      val pinned = merged.localCheckpoint(true) // pin BEFORE the truncating write
+      pinned.write.format("graft-segment")
         .option("txnAppId", appId).option("txnVersion", id.toString)
         .mode("overwrite").save(stateTable)
+      org.apache.spark.sql.graftbridge.RddBridge.freeCheckpoint(pinned)
     }
 
   /** The queryable view: simply the live table. */

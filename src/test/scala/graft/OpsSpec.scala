@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.CheckpointDirBridge.withCheckpointDir
 
 import graft.ops.{Dedup, Similarity, TextOps}
 import graft.plans.{BinnedRangeJoinRule, FuzzyJoinRule}
@@ -622,18 +623,21 @@ class OpsSpec extends SparkSpec {
   }
 
   test("connectedComponents with a reliable checkpoint dir: same labels, files written") {
-    // the cluster-safe path: per-round cuts go to a real checkpoint
-    // dir (survives executor loss) instead of executor-local blocks
+    // the cluster-safe path: with a checkpoint dir configured, the
+    // per-round cuts go to it (survives executor loss) instead of
+    // executor-local blocks
     val dir = java.nio.file.Files.createTempDirectory("graft-cc-ckpt").toString
     val edges = spark.range(1L, 60L).select(col("id").as("src"), (col("id") + 1).as("dst"))
-    val labels = Dedup.connectedComponents(edges, maxRounds = 12, Some(dir)).collect()
-      .map(r => r.getAs[Long]("node") -> r.getAs[Long]("component_id")).toMap
+    val labels = withCheckpointDir(spark, dir) {
+      Dedup.connectedComponents(edges, maxRounds = 12).collect()
+    }.map(r => r.getAs[Long]("node") -> r.getAs[Long]("component_id")).toMap
     assert(labels.size === 60)
     assert(labels.values.forall(_ === 1L))
     // the rounds really went through the reliable checkpoint
     val files = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
       .filter(java.nio.file.Files.isRegularFile(_)).count()
     assert(files > 0, s"no checkpoint files under $dir")
+    assert(spark.sparkContext.getCheckpointDir === None)
   }
 
   test("deduplicate applies precomputed components as a pure semi-join") {
@@ -1751,9 +1755,10 @@ class OpsSpec extends SparkSpec {
     val cycle = Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("src", "dst")
     val local = PageRank.ranks(cycle, iters = 3).collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val reliable = PageRank.ranks(cycle, iters = 3, checkpointDir = Some(dir))
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val reliable = withCheckpointDir(spark, dir) { PageRank.ranks(cycle, iters = 3).collect() }
+      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(local === reliable)
+    assert(spark.sparkContext.getCheckpointDir === None)
   }
 
   test("personalizedRanks restarts only to seeds; unreachable nodes get zero") {

@@ -658,6 +658,23 @@ class StreamingSpec extends SparkSpec {
     assert(stockOf(inv) === Map("prod-101" -> 48, "prod-105" -> 0))
   }
 
+  test("v1 checkout frees each micro-batch's checkpoint blocks once its writes return") {
+    val base = tmp("graft-v1-free")
+    val queue = s"$base/queue"
+    Files.createDirectories(java.nio.file.Paths.get(queue))
+    enqueue(queue, "f1.jsonl",
+      order("o-1", "prod-101", 2, "2026-02-13T10:00:00Z"),
+      order("o-2", "prod-105", 9, "2026-02-13T10:00:01Z"))
+    val inv = new CheckoutStream.InventoryTable(spark, s"$base/inv")
+    inv.initialize(Seq(("prod-101", 50), ("prod-105", 5)).toDF("product_id", "stock"))
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    drainV1(queue, inv, base)
+    // batch 0's lines and verdicts were checkpointed; none stays pinned
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty)
+    assert(statuses(s"$base/verdicts") ===
+      Seq("o-1" -> Model.StatusProcessed, "o-2" -> Model.StatusFailed))
+  }
+
   test("dropDuplicatesWithinWatermark evicts state; late re-duplicates re-admit") {
     // the bounded-state contract: dedup is KEY-ONLY within the horizon
     // (a redelivery with a different timestamp still drops — what
