@@ -211,37 +211,14 @@ class GraftCatalog extends TableCatalog with FunctionCatalog with SupportsNamesp
     bucketing.foreach(b => b.cols.foreach(c =>
       require(schema.fieldNames.contains(c), s"bucket column $c not in schema")))
     // persisted table properties: declared bloom columns apply to
-    // every future INSERT without the writer re-stating them;
+    // every future write without the writer re-stating them;
     // rowLevelMode picks the DML tier (cow | mor); check.<name> are
     // CHECK constraints enforced on every write (SegmentChecks)
-    val checkProps = properties.asScala.toMap
-      .filter { case (k, _) => k.startsWith(SegmentChecks.Prefix) }
-    val genProps = gens.map { case (c, sql) => SegmentGenerated.Prefix + c -> sql }
-    val props = Seq("bloomFor", "bloomBits", "rowLevelMode", "morRewriteThreshold",
-      "compress", "autoCompactSegments", "autoCompactBytes", "ndvFor", "histFor")
-      .flatMap(k => Option(properties.get(k)).map(k -> _)).toMap ++
-      checkProps ++ genProps
-    props.get("bloomFor").foreach(SegmentBloom.parseCols(_, Some(schema)))
-    props.get("ndvFor").foreach(SegmentNdv.parseCols(_, Some(schema)))
-    props.get("histFor").foreach(SegmentHistogram.parseCols(_, Some(schema)))
-    props.get("bloomBits").foreach(b => require(
-      scala.util.Try(b.toInt).toOption.exists(_ >= 64),
-      s"bloomBits must be an integer >= 64, got '$b'"))
-    props.get("rowLevelMode").foreach(v => require(Set("cow", "mor").contains(v),
-      s"rowLevelMode must be cow|mor, got '$v'"))
-    props.get("morRewriteThreshold").foreach(v => require(
-      scala.util.Try(v.toDouble).toOption.exists(t => t > 0.0 && t <= 1.0),
-      s"morRewriteThreshold must be a fraction in (0, 1], got '$v'"))
-    props.get("compress").foreach(v => require(Set("none", "deflate").contains(v),
-      s"compress must be none|deflate, got '$v'"))
-    props.get("autoCompactSegments").foreach(v => require(
-      scala.util.Try(v.toInt).toOption.exists(_ >= 2),
-      s"autoCompactSegments must be an integer >= 2, got '$v'"))
-    props.get("autoCompactBytes").foreach(v => require(
-      scala.util.Try(v.toLong).toOption.exists(_ > 0),
-      s"autoCompactBytes must be a positive byte count, got '$v'"))
-    SegmentChecks.declared(checkProps).foreach { case (n, sql) =>
-      SegmentChecks.requireAnalyzable(SparkSession.active, schema, n, sql) }
+    val declared = properties.asScala.toMap
+      .filter { case (k, _) => GraftCatalog.settable(k) }
+    declared.toSeq.sortBy(_._1).foreach { case (k, v) => GraftCatalog.validate(k, v, schema) }
+    val props = declared ++
+      gens.map { case (c, sql) => SegmentGenerated.Prefix + c -> sql }
     (schema, bucketing, props)
   }
 
@@ -376,14 +353,9 @@ class GraftCatalog extends TableCatalog with FunctionCatalog with SupportsNamesp
           s"generation expressions are fixed at CREATE TABLE — " +
             s"cannot SET ${sp.property()}; redefine the table (CREATE OR " +
             "REPLACE) to change how a column derives")
-        require(sp.property().startsWith(SegmentChecks.Prefix) ||
-            Set("bloomFor", "bloomBits", "rowLevelMode", "morRewriteThreshold",
-              "compress", "autoCompactSegments", "autoCompactBytes", "ndvFor",
-              "histFor")
-              .contains(sp.property()),
-          s"only bloomFor/bloomBits/rowLevelMode/morRewriteThreshold/" +
-            s"compress/autoCompactSegments/autoCompactBytes/ndvFor/histFor/" +
-            s"check.<name> are settable, got ${sp.property()}")
+        require(GraftCatalog.settable(sp.property()),
+          s"only ${(GraftCatalog.Settable :+ "check.<name>").mkString("/")} " +
+            s"are settable, got ${sp.property()}")
         if (sp.property().startsWith(SegmentChecks.Prefix)) {
           // ADD CONSTRAINT: the expression must analyze (checked first,
           // so a malformed declaration gets the constraint error, not a
@@ -391,40 +363,12 @@ class GraftCatalog extends TableCatalog with FunctionCatalog with SupportsNamesp
           // Delta contract) — both once here, outside the optimistic
           // commit loop
           val name = sp.property().substring(SegmentChecks.Prefix.length)
-          val liveSchema = SegmentLog.read(fs, path).get.schema
-          SegmentChecks.requireAnalyzable(SparkSession.active, liveSchema,
-            name, sp.value())
+          GraftCatalog.validate(sp.property(), sp.value(),
+            SegmentLog.read(fs, path).get.schema)
           SegmentChecks.requireClean(SparkSession.active, path, name, sp.value())
         }
         (m: Manifest) => {
-          sp.property() match {
-            case "bloomFor" => SegmentBloom.parseCols(sp.value(), Some(m.schema))
-            case "ndvFor" => SegmentNdv.parseCols(sp.value(), Some(m.schema))
-            case "histFor" => SegmentHistogram.parseCols(sp.value(), Some(m.schema))
-            case "bloomBits" =>
-              require(scala.util.Try(sp.value().toInt).toOption.exists(_ >= 64),
-                s"bloomBits must be an integer >= 64, got '${sp.value()}'")
-            case "rowLevelMode" =>
-              require(Set("cow", "mor").contains(sp.value()),
-                s"rowLevelMode must be cow|mor, got '${sp.value()}'")
-            case "morRewriteThreshold" =>
-              require(scala.util.Try(sp.value().toDouble).toOption
-                  .exists(t => t > 0.0 && t <= 1.0),
-                s"morRewriteThreshold must be a fraction in (0, 1], " +
-                  s"got '${sp.value()}'")
-            case "compress" =>
-              require(Set("none", "deflate").contains(sp.value()),
-                s"compress must be none|deflate, got '${sp.value()}'")
-            case "autoCompactSegments" =>
-              require(scala.util.Try(sp.value().toInt).toOption.exists(_ >= 2),
-                s"autoCompactSegments must be an integer >= 2, got '${sp.value()}'")
-            case "autoCompactBytes" =>
-              require(scala.util.Try(sp.value().toLong).toOption.exists(_ > 0),
-                s"autoCompactBytes must be a positive byte count, got '${sp.value()}'")
-            case check if check.startsWith(SegmentChecks.Prefix) =>
-              SegmentChecks.requireAnalyzable(SparkSession.active, m.schema,
-                check.substring(SegmentChecks.Prefix.length), sp.value())
-          }
+          GraftCatalog.validate(sp.property(), sp.value(), m.schema)
           m.copy(props = m.props + (sp.property() -> sp.value()))
         }
       case rp: TableChange.RemoveProperty =>
@@ -436,10 +380,8 @@ class GraftCatalog extends TableCatalog with FunctionCatalog with SupportsNamesp
       case other => throw new UnsupportedOperationException(
         s"graft-segment supports RENAME/DROP/ADD COLUMN, ALTER COLUMN " +
           s"TYPE (widening), ALTER COLUMN SET/DROP DEFAULT, and SET/UNSET " +
-          s"TBLPROPERTIES(bloomFor|bloomBits|rowLevelMode|" +
-          s"morRewriteThreshold|compress|autoCompactSegments|" +
-          s"autoCompactBytes|ndvFor|histFor|check.<name>) only, " +
-          s"got $other")
+          s"TBLPROPERTIES(${(GraftCatalog.Settable :+ "check.<name>").mkString("|")}) " +
+          s"only, got $other")
     }
     // every surviving CHECK constraint must still analyze against the
     // POST-statement schema: dropping or renaming a column a
@@ -566,6 +508,44 @@ class GraftCatalog extends TableCatalog with FunctionCatalog with SupportsNamesp
 object GraftCatalog {
   private val seq = new java.util.concurrent.atomic.AtomicInteger(0)
 
+  /** The table properties CREATE TABLE and SET TBLPROPERTIES accept,
+    * besides `check.<name>` constraints. */
+  private val Settable = Seq("bloomFor", "bloomBits", "rowLevelMode",
+    "morRewriteThreshold", "compress", "autoCompactSegments", "autoCompactBytes",
+    "ndvFor", "histFor")
+
+  private def settable(key: String): Boolean =
+    key.startsWith(SegmentChecks.Prefix) || Settable.contains(key)
+
+  /** Rejects a [[settable]] property value that cannot mean anything
+    * for a table of `schema`. */
+  private def validate(key: String, value: String, schema: StructType): Unit = {
+    def isInt(p: Int => Boolean) = scala.util.Try(value.toInt).toOption.exists(p)
+    key match {
+      case "bloomFor" => SegmentBloom.parseCols(value, Some(schema))
+      case "ndvFor" => SegmentNdv.parseCols(value, Some(schema))
+      case "histFor" => SegmentHistogram.parseCols(value, Some(schema))
+      case "bloomBits" =>
+        require(isInt(_ >= 64), s"bloomBits must be an integer >= 64, got '$value'")
+      case "rowLevelMode" =>
+        require(Set("cow", "mor").contains(value), s"rowLevelMode must be cow|mor, got '$value'")
+      case "morRewriteThreshold" =>
+        require(scala.util.Try(value.toDouble).toOption.exists(t => t > 0.0 && t <= 1.0),
+          s"morRewriteThreshold must be a fraction in (0, 1], got '$value'")
+      case "compress" =>
+        require(Set("none", "deflate").contains(value),
+          s"compress must be none|deflate, got '$value'")
+      case "autoCompactSegments" =>
+        require(isInt(_ >= 2), s"autoCompactSegments must be an integer >= 2, got '$value'")
+      case "autoCompactBytes" =>
+        require(scala.util.Try(value.toLong).toOption.exists(_ > 0),
+          s"autoCompactBytes must be a positive byte count, got '$value'")
+      case _ =>
+        SegmentChecks.declared(Map(key -> value)).foreach { case (name, sql) =>
+          SegmentChecks.requireAnalyzable(SparkSession.active, schema, name, sql) }
+    }
+  }
+
   /** Registers a [[GraftCatalog]] over `warehouse` under a fresh name
     * `graft_<n>`, runs `body` with that name, and unsets both catalog
     * confs however `body` exits, so the session is left as it was
@@ -659,57 +639,29 @@ private[segment] class GraftStagedTable(ident: Identifier, path: String,
       // the atomic exec may signal overwrite; staging IS the overwrite
       override def truncate(): org.apache.spark.sql.connector.write.WriteBuilder = this
       override def build(): org.apache.spark.sql.connector.write.Write =
-        new org.apache.spark.sql.connector.write.Write
-            with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
-          private def sortOrders = bucketing.toSeq.flatMap(_.cols).map(c =>
-            Expressions.sort(Expressions.column(c),
-              org.apache.spark.sql.connector.expressions.SortDirection.ASCENDING)).toArray
-          override def requiredDistribution(): org.apache.spark.sql.connector.distributions.Distribution =
-            bucketing match {
-              case None => org.apache.spark.sql.connector.distributions.Distributions.unspecified()
-              case Some(b) if b.mode == "hash" =>
-                org.apache.spark.sql.connector.distributions.Distributions.clustered(
-                  b.cols.map(c => Expressions.column(c): org.apache.spark.sql.connector.expressions.Expression).toArray)
-              case Some(_) =>
-                org.apache.spark.sql.connector.distributions.Distributions.ordered(sortOrders)
-            }
-          override def requiredOrdering(): Array[org.apache.spark.sql.connector.expressions.SortOrder] =
-            sortOrders
-          override def requiredNumPartitions(): Int = bucketing.map(_.n).getOrElse(0)
+        new ClusteredWrite {
+          protected val layout: WriteLayout =
+            bucketing.map(WriteLayout.of).getOrElse(WriteLayout(Nil, "range", None))
           override def toBatch: org.apache.spark.sql.connector.write.BatchWrite =
             new org.apache.spark.sql.connector.write.BatchWrite {
               private val conf = new SerializableHadoopConf(hconf)
+              // CTAS/RTAS with declared blooms, sketches, CHECK
+              // constraints, GENERATED columns or compression: the
+              // staged data itself must inherit and pass them — there
+              // is no manifest of this definition yet, so resolve
+              // against the staged one
               override def createBatchWriterFactory(
                   pinfo: org.apache.spark.sql.connector.write.PhysicalWriteInfo): org.apache.spark.sql.connector.write.DataWriterFactory =
-                new GraftWriterFactory(path, info.schema(), conf, Long.MaxValue,
-                  labelBuckets = bucketing.exists(_.mode == "hash"),
-                  physNames = SegmentLog.physicalNames(
-                    SegmentLog.read(SegmentLog.fs(path, conf.value), path), info.schema()),
-                  // CTAS/RTAS with declared CHECK constraints /
-                  // GENERATED columns / compression: the staged data
-                  // itself must pass, compute, and inherit them —
-                  // there is no manifest yet, so compile from the
-                  // staged definition
-                  checks = SegmentChecks.compileAll(SparkSession.active,
-                    props, tableSchema, info.schema()),
-                  generated = SegmentGenerated.compileAll(SparkSession.active,
-                    props, tableSchema, info.schema()),
-                  compress = props.get("compress").contains("deflate"),
-                  ndvFor = props.get("ndvFor")
-                    .map(SegmentNdv.parseCols(_)).getOrElse(Set.empty),
-                  histFor = props.get("histFor")
-                    .map(SegmentHistogram.parseCols(_)).getOrElse(Set.empty))
+                new GraftWriterFactory(path, info.schema(), conf,
+                  SegmentWriteSpec.resolve(SparkSession.active, props, tableSchema,
+                    SegmentLog.read(SegmentLog.fs(path, conf.value), path), info.schema(),
+                    SegmentWriteSpec.options(info)),
+                  labelBuckets = layout.labelsBuckets)
               override def commit(messages: Array[org.apache.spark.sql.connector.write.WriterCommitMessage]): Unit =
                 staged.set(messages.flatMap(
                   _.asInstanceOf[GraftCommitMessage].segments).toSeq)
-              override def abort(messages: Array[org.apache.spark.sql.connector.write.WriterCommitMessage]): Unit = {
-                val f = SegmentLog.fs(path, conf.value)
-                messages.filter(_ != null).foreach {
-                  case GraftCommitMessage(segs) =>
-                    segs.foreach(s => f.delete(new Path(s"$path/${s.path}"), false))
-                  case _ =>
-                }
-              }
+              override def abort(messages: Array[org.apache.spark.sql.connector.write.WriterCommitMessage]): Unit =
+                GraftDataWriter.deleteUncommitted(path, conf.value, messages)
             }
         }
     }

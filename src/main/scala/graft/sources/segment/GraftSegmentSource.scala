@@ -1860,52 +1860,6 @@ class GraftMicroBatchStream(root: String, stored: StructType, required: StructTy
   override def stop(): Unit = ()
 }
 
-object GraftWriteBuilder {
-  /** Bloom config for a write: an EXPLICIT option always wins —
-    * including `bloomFor=""`, the off-switch for one bulk write —
-    * otherwise the table's persisted `bloomFor`/`bloomBits`
-    * properties apply. Prop-declared columns absent from this write's
-    * schema are skipped (a mergeSchema partial append simply has
-    * nothing to index there). */
-  def effectiveBloom(m: Option[Manifest], optFor: Option[Set[String]],
-      optBits: Option[Int]): (Set[String], Int) = {
-    val props = m.map(_.props).getOrElse(Map.empty)
-    val bf = optFor.getOrElse(
-      props.get("bloomFor").map(SegmentBloom.parseCols(_)).getOrElse(Set.empty))
-    val bb = SegmentBloom.validateBits(optBits.getOrElse(
-      props.get("bloomBits").map(_.toInt).getOrElse(SegmentBloom.DefaultBits)))
-    (bf, bb)
-  }
-
-  /** Declared NDV-sketch columns ([[SegmentNdv]]): an explicit write
-    * option wins (incl. `ndvFor=""`, the one-write off-switch),
-    * otherwise the table's persisted `ndvFor` property. */
-  def effectiveNdv(m: Option[Manifest], optFor: Option[Set[String]]): Set[String] = {
-    optFor.getOrElse(m.map(_.props).getOrElse(Map.empty)
-      .get("ndvFor").map(SegmentNdv.parseCols(_)).getOrElse(Set.empty))
-  }
-
-  /** Declared frequency-histogram columns ([[SegmentHistogram]]): an
-    * explicit write option wins (incl. `histFor=""`, the one-write
-    * off-switch), otherwise the table's persisted `histFor` property. */
-  def effectiveHist(m: Option[Manifest], optFor: Option[Set[String]]): Set[String] = {
-    optFor.getOrElse(m.map(_.props).getOrElse(Map.empty)
-      .get("histFor").map(SegmentHistogram.parseCols(_)).getOrElse(Set.empty))
-  }
-
-  /** Body compression for a write: an explicit option wins (including
-    * `compress=none`, the off-switch for one write), otherwise the
-    * table's persisted `compress` property applies — every INSERT,
-    * stream epoch, CoW rewrite, MoR insert, and compaction output
-    * inherits the declaration. */
-  def effectiveCompress(m: Option[Manifest], opt: Option[String]): Boolean = {
-    val v = opt.orElse(m.flatMap(_.props.get("compress"))).getOrElse("none")
-    require(v == "none" || v == "deflate",
-      s"compress must be none|deflate, got '$v'")
-    v == "deflate"
-  }
-}
-
 class GraftWriteBuilder(root: String, info: LogicalWriteInfo,
     tableBucketing: Option[BucketSpec] = None)
     extends WriteBuilder with SupportsTruncate {
@@ -1915,20 +1869,28 @@ class GraftWriteBuilder(root: String, info: LogicalWriteInfo,
   override def build(): Write = {
     SegmentCodec.validateSchema(info.schema())
     val opts = info.options()
-    val optCluster = Option(opts.get("clusterBy"))
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+    val settings = SegmentWriteSpec.options(info)
+    // a malformed write setting rejects the request here, before any
+    // job runs; the write resolves again against the manifest it plans on
+    SegmentWriteSpec.resolve(SparkSession.active, None, info.schema(), settings)
+    // positivity checked HERE like the catalog's TBLPROPERTIES face
+    // (same knob, same doctrine) — a non-positive required partition
+    // count reads as "unspecified" to Spark's write distribution, so
+    // without the check the option is silently dropped
+    def numPartitions = Option(opts.get("numPartitions"))
+      .map(SegmentOpts.int("numPartitions", _)).map { n =>
+        require(n > 0, s"numPartitions must be positive, got $n"); n
+      }
     // a catalog table's declared bucket layout is the default: plain
     // INSERTs preserve it without the writer re-stating options
-    val (clusterBy, clusterMode, numPartitions) = optCluster match {
-      case Some(cols) => (cols, Option(opts.get("clusterMode")).getOrElse("range"),
-        Option(opts.get("numPartitions")).map(SegmentOpts.int("numPartitions", _)))
-      case None => tableBucketing match {
-        case Some(b) => (b.cols, b.mode, Some(b.n))
-        case None => (Nil, "range",
-          Option(opts.get("numPartitions")).map(SegmentOpts.int("numPartitions", _)))
-      }
+    val layout = Option(opts.get("clusterBy"))
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq) match {
+      case Some(cols) =>
+        WriteLayout(cols, Option(opts.get("clusterMode")).getOrElse("range"), numPartitions)
+      case None => tableBucketing.map(WriteLayout.of)
+        .getOrElse(WriteLayout(Nil, "range", numPartitions))
     }
-    clusterBy.foreach(c => require(info.schema().fieldNames.contains(c),
+    layout.clusterBy.foreach(c => require(info.schema().fieldNames.contains(c),
       s"clusterBy column $c not in write schema"))
     // batch-write idempotency ledger (the Delta txnAppId/txnVersion
     // pattern): a foreachBatch writer passes its (appId, batchId) and a
@@ -1940,44 +1902,14 @@ class GraftWriteBuilder(root: String, info: LogicalWriteInfo,
       case _ => throw new IllegalArgumentException(
         "txnAppId and txnVersion must be set together")
     }
-    val bloomFor = Option(opts.get("bloomFor"))
-      .map(SegmentBloom.parseCols(_, Some(info.schema())))
-    val ndvForOpt = Option(opts.get("ndvFor"))
-      .map(SegmentNdv.parseCols(_, Some(info.schema())))
-    val histForOpt = Option(opts.get("histFor"))
-      .map(SegmentHistogram.parseCols(_, Some(info.schema())))
-    val compressOpt = Option(opts.get("compress"))
-    new GraftWrite(root, info.schema(), truncateFirst, clusterBy,
-      clusterMode,
-      // positivity checked HERE like the catalog's TBLPROPERTIES face
-      // (same knob, same doctrine) — a non-positive required partition
-      // count reads as "unspecified" to Spark's write distribution, so
-      // without the check the option is silently dropped
-      numPartitions.map { n =>
-        require(n > 0, s"numPartitions must be positive, got $n"); n
-      },
-      Option(opts.get("maxRowsPerSegment"))
-        .map(SegmentOpts.long("maxRowsPerSegment", _)).map { n =>
-          // 0 would roll a new segment after every row — a one-row-
-          // per-file table layout produced far from the option
-          require(n > 0, s"maxRowsPerSegment must be positive, got $n"); n
-        },
-      info.queryId(),
-      maxBytesSeg = Option(opts.get("maxBytesPerSegment"))
-        .map(SegmentOpts.long("maxBytesPerSegment", _)).map { n =>
-          require(n > 0, s"maxBytesPerSegment must be positive, got $n"); n
-        },
-      Option(opts.get("mergeSchema")).exists(SegmentOpts.bool("mergeSchema", _)),
-      txn,
+    new GraftWrite(root, info.schema(), truncateFirst, layout, info.queryId(), settings,
+      mergeSchema = Option(opts.get("mergeSchema")).exists(SegmentOpts.bool("mergeSchema", _)),
+      txn = txn,
       // dataChange=false (maintenance rewrites only): the commit's
       // segments carry rows already committed under earlier ids, so
       // streams skip them — Delta's OPTIMIZE contract
       dataChange = !Option(opts.get("dataChange"))
         .exists(!SegmentOpts.bool("dataChange", _)),
-      bloomFor = bloomFor,
-      bloomBits = Option(opts.get("bloomBits")).map(SegmentOpts.int("bloomBits", _)),
-      ndvForOpt = ndvForOpt,
-      histForOpt = histForOpt,
       // PARTIAL replace (incremental compaction): the commit swaps
       // exactly these root-relative segment paths for the write's
       // output; everything else carries over by reference
@@ -2004,28 +1936,33 @@ class GraftWriteBuilder(root: String, info: LogicalWriteInfo,
           val f = e.split("\\|", -1)
           require(f.length == 3, s"malformed expectVisibility entry: $e")
           f(0) -> ((Option(f(1)).filter(_.nonEmpty), f(2).toLong))
-        }.toMap),
-      compressOpt = compressOpt)
+        }.toMap))
   }
 }
 
-class GraftWrite(root: String, schema: StructType, truncateFirst: Boolean,
-    clusterBy: Seq[String], clusterMode: String, numPartitions: Option[Int],
-    maxRows: Option[Long], queryId: String,
-    maxBytesSeg: Option[Long] = None, mergeSchema: Boolean = false,
-    txn: Option[(String, Long)] = None, dataChange: Boolean = true,
-    bloomFor: Option[Set[String]] = None,
-    bloomBits: Option[Int] = None,
-    ndvForOpt: Option[Set[String]] = None,
-    histForOpt: Option[Set[String]] = None,
-    replaceSegments: Option[Set[String]] = None,
-    applyDvs: Option[Map[String, (String, Long)]] = None,
-    expectVisibility: Option[Map[String, (Option[String], Long)]] = None,
-    compressOpt: Option[String] = None)
-    extends Write with RequiresDistributionAndOrdering {
+/** The layout a write asks Spark for: `clusterBy` columns in range
+  * (default) or hash mode, and an optional partition count. */
+case class WriteLayout(clusterBy: Seq[String], mode: String, numPartitions: Option[Int]) {
+  /** Hash mode: the shuffle partition index IS the bucket id
+    * (pmod(murmur3(keys), n)), recorded per segment. */
+  def labelsBuckets: Boolean = clusterBy.nonEmpty && mode == "hash"
 
-  private def sortOrders: Array[SortOrder] =
-    clusterBy.map(c => Expressions.sort(Expressions.column(c), SortDirection.ASCENDING)).toArray
+  /** The layout a commit of `n` written partitions persists. */
+  def bucketSpec(n: Int): Option[BucketSpec] =
+    if (clusterBy.isEmpty) None else Some(BucketSpec(clusterBy, n, mode))
+}
+
+object WriteLayout {
+  def of(b: BucketSpec): WriteLayout = WriteLayout(b.cols, b.mode, Some(b.n))
+}
+
+/** A write that demands its [[WriteLayout]] from Spark — plain writes
+  * ([[GraftWrite]]) and staged CTAS/RTAS alike. */
+trait ClusteredWrite extends Write with RequiresDistributionAndOrdering {
+  protected def layout: WriteLayout
+
+  private def sortOrders: Array[SortOrder] = layout.clusterBy
+    .map(c => Expressions.sort(Expressions.column(c), SortDirection.ASCENDING)).toArray
 
   // layout-aware write: with clusterBy, ASK Spark for the shuffle+sort
   // instead of hoping the upstream frame happens to be clustered.
@@ -2035,24 +1972,31 @@ class GraftWrite(root: String, schema: StructType, truncateFirst: Boolean,
   // `clusterMode=hash` keeps hash clustering for co-location-shaped
   // layouts (same key → same segment) where range order doesn't matter.
   override def requiredDistribution(): Distribution =
-    if (clusterBy.isEmpty) Distributions.unspecified()
-    else if (clusterMode == "hash")
-      Distributions.clustered(clusterBy.map(c => Expressions.column(c): org.apache.spark.sql.connector.expressions.Expression).toArray)
+    if (layout.clusterBy.isEmpty) Distributions.unspecified()
+    else if (layout.mode == "hash")
+      Distributions.clustered(layout.clusterBy.map(c => Expressions.column(c): org.apache.spark.sql.connector.expressions.Expression).toArray)
     else Distributions.ordered(sortOrders)
 
   override def requiredOrdering(): Array[SortOrder] = sortOrders
 
-  override def requiredNumPartitions(): Int = numPartitions.getOrElse(0)
+  override def requiredNumPartitions(): Int = layout.numPartitions.getOrElse(0)
+}
+
+/** `settings` are the write's explicit options, resolved by
+  * [[SegmentWriteSpec.resolve]] against the table each write plans on. */
+class GraftWrite(root: String, schema: StructType, truncateFirst: Boolean,
+    protected val layout: WriteLayout, queryId: String, settings: Map[String, String],
+    mergeSchema: Boolean, txn: Option[(String, Long)], dataChange: Boolean,
+    replaceSegments: Option[Set[String]],
+    applyDvs: Option[Map[String, (String, Long)]],
+    expectVisibility: Option[Map[String, (Option[String], Long)]])
+    extends ClusteredWrite {
 
   override def toBatch: BatchWrite = new GraftBatchWrite(root, schema, truncateFirst,
-    new SerializableHadoopConf(SparkSession.active.sessionState.newHadoopConf()), maxRows,
-    maxBytesSeg = maxBytesSeg,
-    clusterBy = clusterBy, clusterMode = clusterMode,
-    mergeSchema = mergeSchema, txn = txn, dataChange = dataChange,
-    bloomFor = bloomFor, bloomBits = bloomBits, ndvForOpt = ndvForOpt,
-    histForOpt = histForOpt,
+    new SerializableHadoopConf(SparkSession.active.sessionState.newHadoopConf()),
+    layout, settings, mergeSchema = mergeSchema, txn = txn, dataChange = dataChange,
     replaceSegments = replaceSegments, applyDvs = applyDvs,
-    expectVisibility = expectVisibility, compressOpt = compressOpt)
+    expectVisibility = expectVisibility)
 
   /** Micro-batch streaming sink: every epoch is one manifest commit
     * carrying a (queryId, epoch) transaction id, so a REPLAYED epoch —
@@ -2063,13 +2007,12 @@ class GraftWrite(root: String, schema: StructType, truncateFirst: Boolean,
     require(!truncateFirst, "graft-segment streaming sink is append-only")
     new GraftStreamingWrite(root, schema,
       new SerializableHadoopConf(SparkSession.active.sessionState.newHadoopConf()),
-      maxRows, queryId, maxBytesSeg = maxBytesSeg)
+      queryId, settings)
   }
 }
 
 class GraftStreamingWrite(root: String, schema: StructType,
-    conf: SerializableHadoopConf, maxRows: Option[Long], queryId: String,
-    maxBytesSeg: Option[Long] = None)
+    conf: SerializableHadoopConf, queryId: String, settings: Map[String, String])
     extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
 
   // whether the table declares autoCompactSegments, refreshed at each
@@ -2077,12 +2020,11 @@ class GraftStreamingWrite(root: String, schema: StructType,
   // read entirely for the common undeclared table
   @volatile private var autoCompactDeclared = false
 
-  // compiled-constraint cache across epochs: the factory is rebuilt
-  // per micro-batch, but each constraint's analyzer pass is driver
-  // work a sub-second-trigger stream should pay only when the
-  // declarations (or the schema they bind against) actually changed
-  @volatile private var checkCache
-      : (Map[String, String], StructType, Seq[SegmentChecks.CheckSpec]) = null
+  // resolved-spec cache across epochs: the factory is rebuilt per
+  // micro-batch, but compiling constraints and generated columns is
+  // driver work a sub-second-trigger stream should pay only when what
+  // the resolution reads from the manifest actually changed
+  @volatile private var specCache: (AnyRef, SegmentWriteSpec) = null
 
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory = {
@@ -2091,30 +2033,16 @@ class GraftStreamingWrite(root: String, schema: StructType,
     // reference to this (non-serializable) StreamingWrite
     val m = SegmentLog.read(SegmentLog.fs(root, conf.value), root)
     autoCompactDeclared = m.exists(_.props.contains("autoCompactSegments"))
-    val (ebf, ebb) = GraftWriteBuilder.effectiveBloom(m, None, None)
-    val checks = m.map { mf =>
-      val declaredNow = mf.props.filter(_._1.startsWith(SegmentChecks.Prefix))
-      val cached = checkCache
-      if (cached != null && cached._1 == declaredNow && cached._2 == mf.schema)
-        cached._3
+    val inputs = SegmentWriteSpec.inputsOf(m)
+    val cached = specCache
+    val spec =
+      if (cached != null && cached._1 == inputs) cached._2
       else {
-        val compiled =
-          SegmentChecks.compileAll(SparkSession.active, mf.props, mf.schema, schema)
-        checkCache = (declaredNow, mf.schema, compiled)
-        compiled
+        val resolved = SegmentWriteSpec.resolve(SparkSession.active, m, schema, settings)
+        specCache = (inputs, resolved)
+        resolved
       }
-    }.getOrElse(Nil)
-    val factory = new GraftWriterFactory(root, schema, conf,
-      maxRows.getOrElse(Long.MaxValue),
-      physNames = SegmentLog.physicalNames(m, schema),
-      bloomFor = ebf, bloomBits = ebb,
-      checks = checks,
-      compress = GraftWriteBuilder.effectiveCompress(m, None),
-      maxBytes = maxBytesSeg.getOrElse(Long.MaxValue),
-      generated = m.map(mf => SegmentGenerated.compileAll(SparkSession.active,
-        mf.props, mf.schema, schema)).getOrElse(Nil),
-      ndvFor = GraftWriteBuilder.effectiveNdv(m, None),
-      histFor = GraftWriteBuilder.effectiveHist(m, None))
+    val factory = new GraftWriterFactory(root, schema, conf, spec, labelBuckets = false)
     new org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
       override def createWriter(partitionId: Int, taskId: Long, epochId: Long): DataWriter[InternalRow] =
         factory.createWriter(partitionId, taskId)
@@ -2134,33 +2062,18 @@ class GraftStreamingWrite(root: String, schema: StructType,
       GraftMaintenance.autoCompact(SparkSession.active, root)
   }
 
-  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val fs = SegmentLog.fs(root, conf.value)
-    messages.filter(_ != null).foreach {
-      case GraftCommitMessage(segs) =>
-        segs.foreach(s => fs.delete(new Path(s"$root/${s.path}"), false))
-      case _ =>
-    }
-  }
+  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
+    GraftDataWriter.deleteUncommitted(root, conf.value, messages)
 }
 
 case class GraftCommitMessage(segments: Seq[SegmentMeta]) extends WriterCommitMessage
 
 class GraftBatchWrite(root: String, schema: StructType, truncateFirst: Boolean,
-    conf: SerializableHadoopConf, maxRows: Option[Long],
-    maxBytesSeg: Option[Long] = None,
-    clusterBy: Seq[String] = Nil, clusterMode: String = "range",
-    mergeSchema: Boolean = false,
-    txn: Option[(String, Long)] = None,
-    dataChange: Boolean = true,
-    bloomFor: Option[Set[String]] = None,
-    bloomBits: Option[Int] = None,
-    ndvForOpt: Option[Set[String]] = None,
-    histForOpt: Option[Set[String]] = None,
-    replaceSegments: Option[Set[String]] = None,
-    applyDvs: Option[Map[String, (String, Long)]] = None,
-    expectVisibility: Option[Map[String, (Option[String], Long)]] = None,
-    compressOpt: Option[String] = None)
+    conf: SerializableHadoopConf, layout: WriteLayout, settings: Map[String, String],
+    mergeSchema: Boolean, txn: Option[(String, Long)], dataChange: Boolean,
+    replaceSegments: Option[Set[String]],
+    applyDvs: Option[Map[String, (String, Long)]],
+    expectVisibility: Option[Map[String, (Option[String], Long)]])
     extends BatchWrite {
 
   // the declared layout is persisted with the commit. Hash mode: the
@@ -2182,27 +2095,12 @@ class GraftBatchWrite(root: String, schema: StructType, truncateFirst: Boolean,
   }
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    if (clusterBy.nonEmpty)
-      bucketSpec = Some(BucketSpec(clusterBy, info.numPartitions(), clusterMode))
+    bucketSpec = layout.bucketSpec(info.numPartitions())
     val m = SegmentLog.read(SegmentLog.fs(root, conf.value), root)
     planned = m
-    // a table's declared bloom columns (TBLPROPERTIES or the creating
-    // write) are the default for every later INSERT — the same
-    // declare-once shape as the bucket layout; an explicit option
-    // (including an empty one) overrides per write
-    val (ebf, ebb) = GraftWriteBuilder.effectiveBloom(m, bloomFor, bloomBits)
-    new GraftWriterFactory(root, schema, conf, maxRows.getOrElse(Long.MaxValue),
-      labelBuckets = clusterBy.nonEmpty && clusterMode == "hash",
-      physNames = SegmentLog.physicalNames(m, schema),
-      bloomFor = ebf, bloomBits = ebb,
-      checks = m.map(mf => SegmentChecks.compileAll(SparkSession.active,
-        mf.props, mf.schema, schema)).getOrElse(Nil),
-      compress = GraftWriteBuilder.effectiveCompress(m, compressOpt),
-      maxBytes = maxBytesSeg.getOrElse(Long.MaxValue),
-      generated = m.map(mf => SegmentGenerated.compileAll(SparkSession.active,
-        mf.props, mf.schema, schema)).getOrElse(Nil),
-      ndvFor = GraftWriteBuilder.effectiveNdv(m, ndvForOpt),
-      histFor = GraftWriteBuilder.effectiveHist(m, histForOpt))
+    new GraftWriterFactory(root, schema, conf,
+      SegmentWriteSpec.resolve(SparkSession.active, m, schema, settings),
+      labelBuckets = layout.labelsBuckets)
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
@@ -2287,65 +2185,38 @@ class GraftBatchWrite(root: String, schema: StructType, truncateFirst: Boolean,
     }
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = SegmentLog.fs(root, conf.value)
-    messages.filter(_ != null).foreach {
-      case GraftCommitMessage(segs) =>
-        segs.foreach(s => fs.delete(new Path(s"$root/${s.path}"), false))
-      case _ =>
-    }
-  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    GraftDataWriter.deleteUncommitted(root, conf.value, messages)
 }
 
 class GraftWriterFactory(root: String, schema: StructType,
-    conf: SerializableHadoopConf, maxRows: Long,
-    labelBuckets: Boolean = false,
-    physNames: Seq[String] = Nil,
-    bloomFor: Set[String] = Set.empty,
-    bloomBits: Int = SegmentBloom.DefaultBits,
-    checks: Seq[SegmentChecks.CheckSpec] = Nil,
-    compress: Boolean = false,
-    maxBytes: Long = Long.MaxValue,
-    generated: Seq[SegmentGenerated.GenSpec] = Nil,
-    ndvFor: Set[String] = Set.empty,
-    histFor: Set[String] = Set.empty) extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new GraftDataWriter(root, schema, conf.value, maxRows,
-      bucket = if (labelBuckets) Some(partitionId) else None,
-      physNames = if (physNames.nonEmpty) physNames else schema.fieldNames.toSeq,
-      bloomFor = bloomFor, bloomBits = bloomBits, checks = checks,
-      compress = compress, maxBytes = maxBytes, generated = generated,
-      ndvFor = ndvFor, histFor = histFor)
+    conf: SerializableHadoopConf, spec: SegmentWriteSpec,
+    labelBuckets: Boolean) extends DataWriterFactory {
+  override def createWriter(partitionId: Int, taskId: Long): GraftDataWriter =
+    new GraftDataWriter(root, schema, conf.value, spec,
+      if (labelBuckets) Some(partitionId) else None)
 }
 
 /** Per-task segment writer: streams rows into uuid-named files under
   * `data/` (invisible until a manifest references them), collecting
-  * zone-map stats as it goes; rolls to a new segment at `maxRows` so
-  * segment granularity — the unit of both parallelism and skipping —
-  * is a write-side knob, not an accident of input partitioning. */
+  * zone-map stats as it goes; rolls to a new segment at the spec's
+  * `maxRows`/`maxBytes` so segment granularity — the unit of both
+  * parallelism and skipping — is a write-side knob, not an accident of
+  * input partitioning. */
 class GraftDataWriter(root: String, schema: StructType, conf: Configuration,
-    maxRows: Long, bucket: Option[Int] = None,
-    physNames: Seq[String] = Nil,
-    bloomFor: Set[String] = Set.empty, bloomBits: Int = SegmentBloom.DefaultBits,
-    checks: Seq[SegmentChecks.CheckSpec] = Nil,
-    compress: Boolean = false,
-    maxBytes: Long = Long.MaxValue,
-    generated: Seq[SegmentGenerated.GenSpec] = Nil,
-    ndvFor: Set[String] = Set.empty,
-    histFor: Set[String] = Set.empty)
+    spec: SegmentWriteSpec, bucket: Option[Int])
     extends DataWriter[InternalRow] {
   // CHECK constraints: compiled on the driver, codegen'd here; null
   // when none are declared so the hot loop pays nothing
   private val enforcer: SegmentChecks.Enforcer =
-    if (checks.isEmpty) null else new SegmentChecks.Enforcer(checks, schema)
+    if (spec.checks.isEmpty) null else new SegmentChecks.Enforcer(spec.checks, schema)
   // GENERATED columns: null-slots compute, explicit values validate —
   // runs BEFORE checks so constraints see the final stored values
   private val generator: SegmentGenerated.Generator =
-    if (generated.isEmpty) null else new SegmentGenerated.Generator(generated, schema)
+    if (spec.generated.isEmpty) null else new SegmentGenerated.Generator(spec.generated, schema)
   // segments record PHYSICAL column names (frozen at a column's first
-  // commit — the column-mapping contract); identity when unset
-  private val colNames: Seq[String] =
-    if (physNames.nonEmpty) physNames else schema.fieldNames.toSeq
+  // commit — the column-mapping contract)
+  private val colNames = spec.physNames
   private val fs = SegmentLog.fs(root, conf)
   private val types = schema.fields.map(_.dataType)
   private val done = Seq.newBuilder[SegmentMeta]
@@ -2366,13 +2237,13 @@ class GraftDataWriter(root: String, schema: StructType, conf: Configuration,
     // (level 1 — the speed point; closing the chain finishes it)
     val raw = new BufferedOutputStream(fs.create(absPath, false), 1 << 16)
     val hdr = new DataOutputStream(raw)
-    SegmentCodec.writeHeader(hdr, schema.length, deflate = compress)
+    SegmentCodec.writeHeader(hdr, schema.length, deflate = spec.compress)
     // a user-supplied Deflater is NOT end()ed by the stream's close(),
     // so the writer owns its lifecycle (native zlib memory otherwise
     // lingers until GC on executors writing many segments)
-    deflater = if (compress) new java.util.zip.Deflater(1) else null
+    deflater = if (spec.compress) new java.util.zip.Deflater(1) else null
     val body: java.io.OutputStream =
-      if (compress) new BufferedOutputStream(
+      if (spec.compress) new BufferedOutputStream(
         new java.util.zip.DeflaterOutputStream(raw, deflater, 1 << 16), 1 << 16)
       else raw
     // logical-byte roll decisions need a Long counter: DataOutputStream
@@ -2392,15 +2263,15 @@ class GraftDataWriter(root: String, schema: StructType, conf: Configuration,
         case s if s.startsWith(f.name + ".") && !schema.fieldNames.contains(s) =>
           s.substring(f.name.length + 1)
       }
-      val nested = nestedOf(bloomFor)
-      val nestedNdv = nestedOf(ndvFor)
-      val nestedHist = nestedOf(histFor)
+      val nested = nestedOf(spec.bloomFor)
+      val nestedNdv = nestedOf(spec.ndvFor)
+      val nestedHist = nestedOf(spec.histFor)
       new SegmentCodec.StatsCollector(f.dataType,
-        if (bloomFor.contains(f.name) || nested.nonEmpty) bloomBits else 0,
+        if (spec.bloomFor.contains(f.name) || nested.nonEmpty) spec.bloomBits else 0,
         nestedBloomFor = nested,
-        collectNdv = ndvFor.contains(f.name),
+        collectNdv = spec.ndvFor.contains(f.name),
         nestedNdvFor = nestedNdv,
-        collectHist = histFor.contains(f.name),
+        collectHist = spec.histFor.contains(f.name),
         nestedHistFor = nestedHist)
     }
   }
@@ -2449,7 +2320,7 @@ class GraftDataWriter(root: String, schema: StructType, conf: Configuration,
     // rows, blob columns): segments are the unit of parallelism AND of
     // skipping, so their size should be declared, not an accident of
     // row width. size() counts logical (pre-compression) bytes.
-    if (rows >= maxRows || counter.count >= maxBytes) roll()
+    if (rows >= spec.maxRows || counter.count >= spec.maxBytes) roll()
   }
 
   override def commit(): WriterCommitMessage = {
@@ -2490,31 +2361,32 @@ private[segment] object GraftDataWriter {
     override def flush(): Unit = os.flush()
     override def close(): Unit = os.close()
   }
+
+  /** An aborted write's cleanup: deletes the segment files its task
+    * messages name (`null` for a task that never reported). No manifest
+    * references them yet, so no reader can see them. */
+  def deleteUncommitted(root: String, conf: Configuration,
+      messages: Array[WriterCommitMessage]): Unit = {
+    val fs = SegmentLog.fs(root, conf)
+    messages.foreach {
+      case GraftCommitMessage(segs) =>
+        segs.foreach(s => fs.delete(new Path(s"$root/${s.path}"), false))
+      case GraftDeltaCommitMessage(segs, _) =>
+        segs.foreach(s => fs.delete(new Path(s"$root/${s.path}"), false))
+      case _ =>
+    }
+  }
 }
 
-/** Group-based (copy-on-write) row-level operation: UPDATE / MERGE /
-  * rewrite-path DELETE. Spark plans `ReplaceData(scan, write)`: the
-  * scan — runtime-filtered down to segments holding matched rows via
-  * an IN subquery over `_segment` — streams the COMPLETE surviving
-  * content of exactly those segments through the rewrite expressions,
-  * and [[GraftReplaceBatchWrite.commit]] swaps replaced-for-rewritten
-  * in one manifest version. Untouched segments pass through by
-  * reference (the Scd2.merge discipline at file granularity).
-  *
-  * Degradation property: if the planner skips group filtering, the
-  * scan covers every segment and the commit is a full copy-on-write —
-  * strictly slower, never wrong. Like overwrite/delete, the replacing
-  * commit is last-writer-wins against concurrent appends.
-  */
-class GraftRowLevelOperation(root: String, tableSchema: StructType,
+/** A row-level operation that keeps its own scan: the commit
+  * fingerprints the segments it replaces or patches against what that
+  * scan planned. FIRST-build-wins: should Spark ever build a second
+  * scan from the operation (replanning), the commit must fingerprint
+  * from the scan the rewrite actually executed — the first one bound
+  * into the plan — not whichever happened to build last. */
+abstract class GraftScanningOperation(root: String, tableSchema: StructType,
     cmd: RowLevelOperation.Command) extends RowLevelOperation {
 
-  // the operation's own scan instance: its post-runtime-filter file
-  // set IS the replaced-group set the write commits against.
-  // FIRST-build-wins: should Spark ever build a second scan from this
-  // operation (replanning), the commit must fingerprint from the scan
-  // the rewrite actually executed — the first one bound into the plan —
-  // not whichever happened to build last
   @volatile private[segment] var opScan: GraftScan = _
 
   override def command(): RowLevelOperation.Command = cmd
@@ -2531,14 +2403,39 @@ class GraftRowLevelOperation(root: String, tableSchema: StructType,
       }
     }
 
+  /** The captured scan's build-time manifest (see
+    * [[GraftScan.plannedManifest]]); empty when no scan was built. */
+  protected def scanSnapshot(): Option[Manifest] = Option(opScan).flatMap(_.plannedManifest)
+
+  protected def hadoopConf(): SerializableHadoopConf =
+    new SerializableHadoopConf(SparkSession.active.sessionState.newHadoopConf())
+}
+
+/** Group-based (copy-on-write) row-level operation: UPDATE / MERGE /
+  * rewrite-path DELETE. Spark plans `ReplaceData(scan, write)`: the
+  * scan — runtime-filtered down to segments holding matched rows via
+  * an IN subquery over `_segment` — streams the COMPLETE surviving
+  * content of exactly those segments through the rewrite expressions,
+  * and [[GraftReplaceBatchWrite.commit]] swaps replaced-for-rewritten
+  * in one manifest version. Untouched segments pass through by
+  * reference (the Scd2.merge discipline at file granularity); the
+  * scan's post-runtime-filter file set IS the replaced-group set.
+  *
+  * Degradation property: if the planner skips group filtering, the
+  * scan covers every segment and the commit is a full copy-on-write —
+  * strictly slower, never wrong. Like overwrite/delete, the replacing
+  * commit is last-writer-wins against concurrent appends.
+  */
+class GraftRowLevelOperation(root: String, tableSchema: StructType,
+    cmd: RowLevelOperation.Command) extends GraftScanningOperation(root, tableSchema, cmd) {
+
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new WriteBuilder {
       override def build(): Write = new Write {
         override def toBatch: BatchWrite = new GraftReplaceBatchWrite(
-          root, info.schema(),
-          new SerializableHadoopConf(SparkSession.active.sessionState.newHadoopConf()),
+          root, info.schema(), hadoopConf(), SegmentWriteSpec.options(info),
           () => Option(opScan).map(_.plannedFiles).getOrElse(Nil),
-          () => Option(opScan).flatMap(_.plannedManifest))
+          () => scanSnapshot())
       }
     }
 
@@ -2563,32 +2460,11 @@ class GraftRowLevelOperation(root: String, tableSchema: StructType,
   * complement to [[GraftRowLevelOperation]]'s group rewrite (which
   * remains the right tier for bulk mutations: the driver unions
   * position bitmaps, so a mutation touching most of the table should
-  * rewrite instead). */
+  * rewrite instead). The scan's build-time manifest is the visibility
+  * every buffered coordinate was computed against. */
 class GraftDeltaRowLevelOperation(root: String, tableSchema: StructType,
-    cmd: RowLevelOperation.Command) extends RowLevelOperation
+    cmd: RowLevelOperation.Command) extends GraftScanningOperation(root, tableSchema, cmd)
     with org.apache.spark.sql.connector.write.SupportsDelta {
-
-  override def command(): RowLevelOperation.Command = cmd
-
-  // the operation's own scan instance: its build-time manifest snapshot
-  // is the visibility every buffered (_segment, _pos) coordinate was
-  // computed against — the commit fingerprints from IT (see
-  // GraftScan.plannedManifest). First-build-wins, as in
-  // [[GraftRowLevelOperation]]: the fingerprint must match the scan
-  // the plan executes, not a later re-build
-  @volatile private[segment] var opScan: GraftScan = _
-
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GraftScanBuilder(root, tableSchema, options) {
-      override def build(): Scan = {
-        val built = super.build()
-        built match {
-          case g: GraftScan => if (opScan == null) opScan = g
-          case _ =>
-        }
-        built
-      }
-    }
 
   override def newWriteBuilder(
       info: LogicalWriteInfo): org.apache.spark.sql.connector.write.DeltaWriteBuilder =
@@ -2596,10 +2472,8 @@ class GraftDeltaRowLevelOperation(root: String, tableSchema: StructType,
       override def build(): org.apache.spark.sql.connector.write.DeltaWrite =
         new org.apache.spark.sql.connector.write.DeltaWrite {
           override def toBatch: org.apache.spark.sql.connector.write.DeltaBatchWrite =
-            new GraftDeltaBatchWrite(root, info.schema(),
-              new SerializableHadoopConf(
-                SparkSession.active.sessionState.newHadoopConf()),
-              () => Option(opScan).flatMap(_.plannedManifest))
+            new GraftDeltaBatchWrite(root, info.schema(), hadoopConf(),
+              SegmentWriteSpec.options(info), () => scanSnapshot())
         }
     }
 
@@ -2623,20 +2497,12 @@ class GraftDeltaRowLevelOperation(root: String, tableSchema: StructType,
 case class GraftDeltaCommitMessage(segments: Seq[SegmentMeta],
     deletes: Map[String, Array[Byte]]) extends WriterCommitMessage
 
-class GraftDeltaWriterFactory(root: String, schema: StructType,
-    conf: SerializableHadoopConf, physNames: Seq[String],
-    checks: Seq[SegmentChecks.CheckSpec] = Nil,
-    compress: Boolean = false,
-    generated: Seq[SegmentGenerated.GenSpec] = Nil,
-    ndvFor: Set[String] = Set.empty,
-    histFor: Set[String] = Set.empty)
+/** The delta face of the one segment writer factory. */
+class GraftDeltaWriterFactory(inner: GraftWriterFactory)
     extends org.apache.spark.sql.connector.write.DeltaWriterFactory {
   override def createWriter(partitionId: Int,
       taskId: Long): org.apache.spark.sql.connector.write.DeltaWriter[InternalRow] =
-    new GraftDeltaWriter(new GraftDataWriter(root, schema, conf.value, Long.MaxValue,
-      physNames = if (physNames.nonEmpty) physNames else schema.fieldNames.toSeq,
-      checks = checks, compress = compress, generated = generated,
-      ndvFor = ndvFor, histFor = histFor))
+    new GraftDeltaWriter(inner.createWriter(partitionId, taskId))
 }
 
 /** Task-side delta writer: deletes and updated-away old versions fold
@@ -2670,10 +2536,12 @@ class GraftDeltaWriter(inner: GraftDataWriter)
   override def close(): Unit = inner.close()
 }
 
-class GraftDeltaBatchWrite(root: String, schema: StructType,
-    conf: SerializableHadoopConf,
-    scanSnapshot: () => Option[Manifest])
-    extends org.apache.spark.sql.connector.write.DeltaBatchWrite {
+/** What the copy-on-write and merge-on-read commits share: writers
+  * resolved against the manifest at factory time, the snapshot their
+  * targets are fingerprinted against, and the abort cleanup. */
+abstract class GraftRowLevelBatchWrite(root: String, schema: StructType,
+    conf: SerializableHadoopConf, settings: Map[String, String],
+    scanSnapshot: () => Option[Manifest]) extends BatchWrite {
 
   // factory-time manifest: the INTERMEDIATE fingerprint fallback when
   // the operation's scan was never captured (scanSnapshot empty) — an
@@ -2682,23 +2550,40 @@ class GraftDeltaBatchWrite(root: String, schema: StructType,
   // silently reopens to the full plan-to-commit TOCTOU
   @volatile private var factoryManifest: Option[Manifest] = None
 
-  override def createBatchWriterFactory(
-      info: PhysicalWriteInfo): org.apache.spark.sql.connector.write.DeltaWriterFactory = {
+  // rewritten survivors and UPDATEd/MERGEd row versions pass the
+  // declared CHECK constraints like any fresh insert; a pure MoR
+  // DELETE has an empty write schema and every constraint binds to
+  // NULL → passes
+  protected def writerFactory(): GraftWriterFactory = {
     val m = SegmentLog.read(SegmentLog.fs(root, conf.value), root)
     factoryManifest = m
-    // inserted row versions (UPDATE/MERGE) pass the declared CHECK
-    // constraints like any other write; a pure DELETE has an empty
-    // write schema and every constraint binds to NULL → passes
-    new GraftDeltaWriterFactory(root, schema, conf,
-      SegmentLog.physicalNames(m, schema),
-      checks = m.map(mf => SegmentChecks.compileAll(SparkSession.active,
-        mf.props, mf.schema, schema)).getOrElse(Nil),
-      compress = GraftWriteBuilder.effectiveCompress(m, None),
-      generated = m.map(mf => SegmentGenerated.compileAll(SparkSession.active,
-        mf.props, mf.schema, schema)).getOrElse(Nil),
-      ndvFor = GraftWriteBuilder.effectiveNdv(m, None),
-      histFor = GraftWriteBuilder.effectiveHist(m, None))
+    new GraftWriterFactory(root, schema, conf,
+      SegmentWriteSpec.resolve(SparkSession.active, m, schema, settings),
+      labelBuckets = false)
   }
+
+  /** The SCAN's snapshot, not a fresh read: the DML computed against
+    * the visibility the scan was built on, and a rival dv commit in the
+    * window since then must conflict instead of silently becoming the
+    * expectation. Fallback chain when no scan was captured: the
+    * factory-time manifest (still earlier than commit time), and only
+    * then a fresh read. */
+  protected def fingerprintBase(fs: org.apache.hadoop.fs.FileSystem): Option[Manifest] =
+    scanSnapshot().orElse(factoryManifest).orElse(SegmentLog.read(fs, root))
+
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    GraftDataWriter.deleteUncommitted(root, conf.value, messages)
+}
+
+class GraftDeltaBatchWrite(root: String, schema: StructType,
+    conf: SerializableHadoopConf, settings: Map[String, String],
+    scanSnapshot: () => Option[Manifest])
+    extends GraftRowLevelBatchWrite(root, schema, conf, settings, scanSnapshot)
+    with org.apache.spark.sql.connector.write.DeltaBatchWrite {
+
+  override def createBatchWriterFactory(
+      info: PhysicalWriteInfo): org.apache.spark.sql.connector.write.DeltaWriterFactory =
+    new GraftDeltaWriterFactory(writerFactory())
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val msgs = messages.map(_.asInstanceOf[GraftDeltaCommitMessage])
@@ -2707,15 +2592,7 @@ class GraftDeltaBatchWrite(root: String, schema: StructType,
     // committing one would fail running streams over unchanged rows
     if (newSegs.isEmpty && msgs.forall(_.deletes.isEmpty)) return
     val fs = SegmentLog.fs(root, conf.value)
-    // the SCAN's snapshot, not a fresh read: every buffered coordinate
-    // reflects the visibility the scan was built against, and a rival
-    // dv commit in the window since then must conflict below instead of
-    // silently becoming the expectation. Fallback chain when no scan
-    // was captured: the factory-time manifest (still earlier than
-    // commit time), and only then a fresh read
-    val base = scanSnapshot()
-      .orElse(factoryManifest)
-      .orElse(SegmentLog.read(fs, root))
+    val base = fingerprintBase(fs)
       .getOrElse(throw new IllegalStateException(s"no graft-segment table at $root"))
     // union every task's deleted-position BITMAP per segment (absolute
     // `_segment` values → root-relative paths). Inbound traffic and
@@ -2805,40 +2682,15 @@ class GraftDeltaBatchWrite(root: String, schema: StructType,
     }
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = SegmentLog.fs(root, conf.value)
-    messages.filter(_ != null).foreach {
-      case GraftDeltaCommitMessage(segs, _) =>
-        segs.foreach(s => fs.delete(new Path(s"$root/${s.path}"), false))
-      case _ =>
-    }
-  }
 }
 
 class GraftReplaceBatchWrite(root: String, schema: StructType,
-    conf: SerializableHadoopConf, replacedFiles: () => Seq[String],
-    scanSnapshot: () => Option[Manifest]) extends BatchWrite {
+    conf: SerializableHadoopConf, settings: Map[String, String],
+    replacedFiles: () => Seq[String], scanSnapshot: () => Option[Manifest])
+    extends GraftRowLevelBatchWrite(root, schema, conf, settings, scanSnapshot) {
 
-  // intermediate fingerprint fallback when the scan was never captured
-  // (see GraftDeltaBatchWrite.factoryManifest)
-  @volatile private var factoryManifest: Option[Manifest] = None
-
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    val m = SegmentLog.read(SegmentLog.fs(root, conf.value), root)
-    factoryManifest = m
-    // copy-on-write rewrites re-encode survivors (validated when their
-    // constraint was declared) and UPDATEd/MERGEd row versions, which
-    // must pass the declared CHECK constraints like any fresh insert
-    new GraftWriterFactory(root, schema, conf, Long.MaxValue,
-      physNames = SegmentLog.physicalNames(m, schema),
-      checks = m.map(mf => SegmentChecks.compileAll(SparkSession.active,
-        mf.props, mf.schema, schema)).getOrElse(Nil),
-      compress = GraftWriteBuilder.effectiveCompress(m, None),
-      generated = m.map(mf => SegmentGenerated.compileAll(SparkSession.active,
-        mf.props, mf.schema, schema)).getOrElse(Nil),
-      ndvFor = GraftWriteBuilder.effectiveNdv(m, None),
-      histFor = GraftWriteBuilder.effectiveHist(m, None))
-  }
+  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
+    writerFactory()
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val newSegs = messages.flatMap(_.asInstanceOf[GraftCommitMessage].segments).toSeq
@@ -2848,15 +2700,7 @@ class GraftReplaceBatchWrite(root: String, schema: StructType,
     if (replaced.isEmpty && newSegs.isEmpty) return
     val fs = SegmentLog.fs(root, conf.value)
     val relTargets = replaced.map(_.stripPrefix(s"$root/"))
-    // fingerprint from the SCAN's snapshot — the visibility the rewrite
-    // actually read — never from a fresh read that a rival commit may
-    // already have moved past (the TOCTOU window between scan build and
-    // write creation); factory-time manifest as the intermediate
-    // fallback when no scan was captured
-    val base = scanSnapshot()
-      .orElse(factoryManifest)
-      .orElse(SegmentLog.read(fs, root))
-      .map(_.segments).getOrElse(Nil)
+    val base = fingerprintBase(fs).map(_.segments).getOrElse(Nil)
     val expect = SegmentLog.visibilityOf(base, relTargets)
     val nullable = StructType(schema.fields.map(_.copy(nullable = true)))
     // truncate-style commit with kept ++ new: replaced segments drop
@@ -2872,15 +2716,6 @@ class GraftReplaceBatchWrite(root: String, schema: StructType,
         .filterNot(seg => relTargets.contains(seg.path))
       Some(SegmentLog.CommitPlan(mOpt.map(_.schema).getOrElse(nullable),
         kept ++ newSegs, truncate = true))
-    }
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = SegmentLog.fs(root, conf.value)
-    messages.filter(_ != null).foreach {
-      case GraftCommitMessage(segs) =>
-        segs.foreach(s => fs.delete(new Path(s"$root/${s.path}"), false))
-      case _ =>
     }
   }
 }

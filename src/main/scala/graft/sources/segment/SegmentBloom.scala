@@ -50,7 +50,7 @@ object SegmentBloom {
   }
 
   /** The ONE bloomBits guard, applied where the effective config
-    * resolves ([[GraftWriteBuilder.effectiveBloom]]) so write options
+    * resolves ([[SegmentWriteSpec.resolve]]) so write options
     * and table properties get the same validation as catalog DDL:
     * at least 64, rounded UP to a whole number of 64-bit words.
     * Unguarded, 1..63 allocates a ZERO-length filter (`bloomBits/64 ==

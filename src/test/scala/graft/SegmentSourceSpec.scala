@@ -2975,7 +2975,7 @@ class SegmentSourceSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(m().ndvMerged.isEmpty,
       "sketchless rewrite segments must drop the pre-merged entries")
     // compaction on a CATALOG table with the PERSISTED property: the
-    // rewrite re-sketches (effectiveNdv reads the manifest), and the
+    // rewrite re-sketches (the write resolves the declaration), and the
     // recomputed table-level merge is VALUE-IDENTICAL — same rows,
     // same sketch, through a completely different segment list
     val wh = tmp("graft-seg-ndvm-wh")
@@ -3143,7 +3143,8 @@ class SegmentSourceSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val dir = tmp("graft-seg-dmsg")
     val schema = StructType(Seq(StructField("k", LongType)))
     val writer = new GraftDeltaWriter(new GraftDataWriter(dir, schema,
-      spark.sessionState.newHadoopConf(), Long.MaxValue))
+      spark.sessionState.newHadoopConf(),
+      graft.sources.segment.SegmentWriteSpec.resolve(spark, None, schema, Map.empty), None))
     val seg = s"$dir/data/seg-test.bin"
     val matched = 100000
     var p = 0
