@@ -87,6 +87,21 @@ object DeletionVector {
     } finally out.close()
   }
 
+  /** Union `bits` with a segment's `prior` vector (a manifest-recorded
+    * path, None = no vector yet) and write the result as a fresh
+    * sidecar under the table's `data/` — copy-on-write, so older
+    * versions keep their vector. The file is unreferenced until a
+    * commit names it: an abort or lost race leaves vacuum fodder, never
+    * data. Returns (root-relative sidecar path, cumulative dead rows). */
+  def writeUnion(fs: FileSystem, root: String, prior: Option[String],
+      bits: Array[Long]): (String, Long) = {
+    val all = prior.map(p => union(read(fs, new Path(SegmentLog.abs(root, p))), bits))
+      .getOrElse(bits)
+    val rel = s"${SegmentLog.DataDir}/${java.util.UUID.randomUUID()}.dv"
+    DeletionVector.write(fs, new Path(s"$root/$rel"), all)
+    (rel, cardinality(all))
+  }
+
   // decoded-vector cache: every task reading a DV'd segment (and every
   // query over the same snapshot) probes the same bitmap — decode each
   // file once per JVM. LRU-bounded ([[DecodeCache]]): ~128 KB × 1k

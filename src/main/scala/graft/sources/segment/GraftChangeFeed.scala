@@ -228,8 +228,7 @@ class GraftChangeFeedTable(root: String, tableSchema: StructType)
         }
 
         override def planInputPartitions(): Array[InputPartition] = {
-          val cur = SegmentLog.read(fs, root).getOrElse(
-            throw new IllegalArgumentException(s"no graft-segment table at $root"))
+          val cur = SegmentLog.readExisting(fs, root)
           val from = startFrom().getOrElse(
             throw new IllegalArgumentException(
               "batch change-feed reads need startingVersion or startingTimestamp " +

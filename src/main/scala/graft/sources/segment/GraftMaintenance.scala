@@ -109,8 +109,7 @@ object GraftMaintenance {
     import org.apache.spark.sql.functions.{coalesce, col, floor, greatest, least, lit, max, min, shiftleft, shiftright}
     require(cols.size >= 2, "z-order needs at least 2 columns (use clusterBy for 1)")
     val fs = SegmentLog.fs(dir, spark.sessionState.newHadoopConf())
-    val m = SegmentLog.read(fs, dir).getOrElse(
-      throw new IllegalArgumentException(s"no graft-segment table at $dir"))
+    val m = SegmentLog.readExisting(fs, dir)
     val before = m.segments.size
     if (before == 0) return (0, 0) // nothing live to reorganize
     // <= 0 derives the output count from the manifest, like compact()
@@ -200,8 +199,7 @@ object GraftMaintenance {
     val targets = rawTargets.distinct
     if (targets.isEmpty) return (0, 0)
     val fs = SegmentLog.fs(dir, spark.sessionState.newHadoopConf())
-    val m = SegmentLog.read(fs, dir).getOrElse(
-      throw new IllegalArgumentException(s"no graft-segment table at $dir"))
+    val m = SegmentLog.readExisting(fs, dir)
     val before = m.segments.size
     // the planned snapshot, end to end: the scan PINS to m's version
     // (versionAsOf) and the commit verifies each target's visibility
@@ -248,8 +246,7 @@ object GraftMaintenance {
   def compactWhere(spark: SparkSession, dir: String,
       condition: org.apache.spark.sql.sources.Filter): (Int, Int) = {
     val fs = SegmentLog.fs(dir, spark.sessionState.newHadoopConf())
-    val m = SegmentLog.read(fs, dir).getOrElse(
-      throw new IllegalArgumentException(s"no graft-segment table at $dir"))
+    val m = SegmentLog.readExisting(fs, dir)
     val view = SegmentLog.logicalView(m)
     val targets = view.segments
       .filterNot(seg => SegmentPruning.prunes(condition, m.schema, seg))
@@ -265,8 +262,7 @@ object GraftMaintenance {
     * (segments materialized, dv rows dropped). */
   def compactDeletes(spark: SparkSession, dir: String): (Int, Long) = {
     val fs = SegmentLog.fs(dir, spark.sessionState.newHadoopConf())
-    val m = SegmentLog.read(fs, dir).getOrElse(
-      throw new IllegalArgumentException(s"no graft-segment table at $dir"))
+    val m = SegmentLog.readExisting(fs, dir)
     val targets = m.segments.filter(_.dv.isDefined)
     compactSegments(spark, dir, targets.map(_.path))
     (targets.size, targets.map(_.dvRows).sum)
@@ -288,9 +284,11 @@ object GraftMaintenance {
     *     so time travel and the change feed stay exact). Executor-side;
     *     the driver collects only (segment, dvPath, count) — O(touched
     *     segments);
-    *  3. one truncating manifest commit: touched segments get the new
-    *     dv (fully-deleted segments drop outright), untouched segments
-    *     carry over, the declared layout survives (no rows moved).
+    *  3. one [[SegmentLog.commitRewrite]]: touched segments get the
+    *     new dv (fully-deleted segments drop outright), untouched
+    *     segments carry over, the declared layout survives (no rows
+    *     moved). Unlike merge-on-read SQL DML, no threshold purges the
+    *     vectors afterwards: [[compactDeletes]] materializes them.
     *
     * The commit is DATA-CHANGING (running streams fail fast, the feed
     * emits the bitmap delta as deletes). 100 TB: cost ∝ matched rows +
@@ -303,8 +301,7 @@ object GraftMaintenance {
       dir: String, condition: org.apache.spark.sql.Column): Long = {
     import org.apache.spark.sql.functions.{coalesce, lit}
     val fs = SegmentLog.fs(dir, spark.sessionState.newHadoopConf())
-    val m = SegmentLog.read(fs, dir).getOrElse(
-      throw new IllegalArgumentException(s"no graft-segment table at $dir"))
+    val m = SegmentLog.readExisting(fs, dir)
     // scan pinned to `m`'s version: the matched positions, the prior-dv
     // unions AND the commit fingerprint below all reflect ONE snapshot —
     // no window for a rival commit to slip between them unnoticed
@@ -313,22 +310,10 @@ object GraftMaintenance {
       .filter(coalesce(condition, lit(false)))
     val entries = writeDvSidecars(spark, dir, m, matched)
     if (entries.isEmpty) return 0L
-    // the sidecars were unioned against `m`'s visibility — REBASE the
-    // commit so concurrent appends survive, and conflict loudly if a
-    // rival row-level change landed on a touched segment meanwhile
-    val expect = SegmentLog.visibilityOf(m.segments, entries.keySet)
-    SegmentLog.commitRebase(fs, dir) { mOpt =>
-      SegmentLog.requireTargetsUnchanged(mOpt, expect, "deleteMark")
-      val updated = mOpt.map(_.segments).getOrElse(Nil).flatMap { s =>
-        entries.get(s.path) match {
-          case Some((rel, n)) if n >= s.rows => None // every row dead: drop the segment
-          case Some((rel, n)) => Some(s.copy(dv = Some(rel), dvRows = n))
-          case None => Some(s)
-        }
-      }
-      Some(SegmentLog.CommitPlan(mOpt.map(_.schema).getOrElse(m.schema),
-        updated, truncate = true, bucketing = mOpt.flatMap(_.bucketing)))
-    }
+    // the sidecars were unioned against `m`'s visibility: concurrent
+    // appends survive, a rival row-level change to a touched segment
+    // conflicts loudly
+    SegmentLog.commitRewrite(fs, dir, Some(m), Set.empty, entries, Nil, "deleteMark")
     newlyMarked(m, entries)
   }
 
@@ -357,19 +342,13 @@ object GraftMaintenance {
       .groupBy("seg").agg(graft.functions.PosBitmap.posBitmap(col("pos")).as("bits"))
     // prior vectors, keyed by the absolute segment path the scan emits
     val priorDv: Map[String, String] =
-      m.segments.flatMap(s => s.dv.map(d =>
-        SegmentLog.abs(dir, s.path) -> SegmentLog.abs(dir, d))).toMap
+      m.segments.flatMap(s => s.dv.map(d => SegmentLog.abs(dir, s.path) -> d)).toMap
     val sconf = new SerializableHadoopConf(spark.sessionState.newHadoopConf())
     hits.as[(String, Array[Byte])]
       .map { case (seg, bytes) =>
-        val taskFs = new Path(seg).getFileSystem(sconf.value)
-        val prior = priorDv.get(seg)
-          .map(p => DeletionVector.read(taskFs, new Path(p)))
-          .getOrElse(Array.empty[Long])
-        val bits = DeletionVector.union(prior, graft.functions.PosBitmap.decode(bytes))
-        val rel = s"${SegmentLog.DataDir}/${java.util.UUID.randomUUID()}.dv"
-        DeletionVector.write(taskFs, new Path(s"$dir/$rel"), bits)
-        (seg, rel, DeletionVector.cardinality(bits))
+        val (rel, n) = DeletionVector.writeUnion(new Path(seg).getFileSystem(sconf.value),
+          dir, priorDv.get(seg), graft.functions.PosBitmap.decode(bytes))
+        (seg, rel, n)
       }.collect()
       .map { case (seg, rel, n) => seg.stripPrefix(s"$dir/") -> ((rel, n)) }.toMap
   }
@@ -405,8 +384,7 @@ object GraftMaintenance {
     import org.apache.spark.sql.functions.{coalesce, col, lit}
     require(assignments.nonEmpty, "updateMark needs at least one assignment")
     val fs = SegmentLog.fs(dir, spark.sessionState.newHadoopConf())
-    val m = SegmentLog.read(fs, dir).getOrElse(
-      throw new IllegalArgumentException(s"no graft-segment table at $dir"))
+    val m = SegmentLog.readExisting(fs, dir)
     assignments.keys.foreach(c => require(m.schema.fieldNames.contains(c),
       s"assignment column $c not in table schema"))
     // scan pinned to `m`'s version (see deleteMark): positions, prior-dv
@@ -467,8 +445,7 @@ object GraftMaintenance {
   def detail(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val fs = SegmentLog.fs(dir, spark.sessionState.newHadoopConf())
-    val m = SegmentLog.read(fs, dir).getOrElse(
-      throw new IllegalArgumentException(s"no graft-segment table at $dir"))
+    val m = SegmentLog.readExisting(fs, dir)
     val live = SegmentLog.liveVersions(fs, dir)
     Seq((m.version, m.segments.size.toLong, m.segments.map(_.liveRows).sum,
       m.segments.map(_.bytes).sum,
@@ -671,8 +648,7 @@ object GraftMaintenance {
       version: Option[Long] = None, deep: Boolean = true): (Int, Long) = {
     val conf = spark.sessionState.newHadoopConf()
     val sfs = SegmentLog.fs(src, conf)
-    val latest = SegmentLog.read(sfs, src).getOrElse(
-      throw new IllegalArgumentException(s"no graft-segment table at $src"))
+    val latest = SegmentLog.readExisting(sfs, src)
     val base = version.map(v => SegmentLog.readVersion(sfs, src, v)).getOrElse(latest)
     val dfs = SegmentLog.fs(dst, conf)
     require(SegmentLog.read(dfs, dst).isEmpty, s"clone target $dst already exists")

@@ -85,8 +85,7 @@ object GraftProcedures {
       arg: String): Manifest = {
     val dir = tableDir(warehouse, arg)
     val fs = SegmentLog.fs(dir, spark.sessionState.newHadoopConf())
-    SegmentLog.read(fs, dir).map(SegmentLog.logicalView).getOrElse(
-      throw new IllegalArgumentException(s"no graft-segment table at $dir"))
+    SegmentLog.logicalView(SegmentLog.readExisting(fs, dir))
   }
 
   /** The comma-list argument convention shared by zorder / quantiles /

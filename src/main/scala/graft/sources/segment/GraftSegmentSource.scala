@@ -101,8 +101,7 @@ class GraftSegmentSource extends TableProvider with DataSourceRegister {
     if (Option(opts.get("readChangeFeed")).exists(SegmentOpts.bool("readChangeFeed", _))) {
       // the CDF face: same table, rows + (_change_type, _commit_version)
       val conf = SparkSession.active.sessionState.newHadoopConf()
-      val m = SegmentLog.read(SegmentLog.fs(dir, conf), dir).getOrElse(
-        throw new IllegalArgumentException(s"no graft-segment table at $dir"))
+      val m = SegmentLog.readExisting(SegmentLog.fs(dir, conf), dir)
       new GraftChangeFeedTable(dir, m.schema)
     } else {
       SegmentCodec.validateSchema(schema)
@@ -322,8 +321,9 @@ class GraftSegmentTable(root: String, tableSchema: StructType,
   // The GDPR-shaped fast path when erasure keys align with the
   // clustered layout. Undecided segments → canDeleteWhere = false and
   // Spark reports the rewrite is required (GraftMaintenance.deleteRows
-  // is the rewrite fallback). Like overwrite, a concurrent append can
-  // be lost to the truncating commit: last-writer-wins, by design.
+  // is the rewrite fallback). The commit rebases: a lost race re-decides
+  // the predicate against the fresh manifest, so a concurrent append
+  // survives.
 
   private def fsAndManifest() = {
     val fs = SegmentLog.fs(root,
@@ -2074,7 +2074,7 @@ class GraftBatchWrite(root: String, schema: StructType, truncateFirst: Boolean,
     replaceSegments: Option[Set[String]],
     applyDvs: Option[Map[String, (String, Long)]],
     expectVisibility: Option[Map[String, (Option[String], Long)]])
-    extends BatchWrite {
+    extends GraftSegmentBatchWrite(root, schema, conf, settings, () => None) {
 
   // the declared layout is persisted with the commit. Hash mode: the
   // shuffle partition index IS the bucket id (pmod(murmur3(keys), n)) —
@@ -2083,110 +2083,39 @@ class GraftBatchWrite(root: String, schema: StructType, truncateFirst: Boolean,
   // segments cover non-overlapping sorted ranges, making zone maps
   // decide value predicates (selective reads, metadata-only DELETEs).
   @volatile private var bucketSpec: Option[BucketSpec] = None
-  // the manifest the write PLANNED against (factory creation precedes
-  // task execution): replace-style commits fingerprint their targets
-  // here and re-check at commit, so a concurrent row-level change to a
-  // rewritten segment conflicts loudly instead of being resurrected
-  @volatile private var planned: Option[Manifest] = null
-
-  private def plannedOrNow(fs: org.apache.hadoop.fs.FileSystem): Option[Manifest] = {
-    val p = planned
-    if (p != null) p else SegmentLog.read(fs, root)
-  }
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
     bucketSpec = layout.bucketSpec(info.numPartitions())
-    val m = SegmentLog.read(SegmentLog.fs(root, conf.value), root)
-    planned = m
-    new GraftWriterFactory(root, schema, conf,
-      SegmentWriteSpec.resolve(SparkSession.active, m, schema, settings),
-      labelBuckets = layout.labelsBuckets)
+    writerFactory(labelBuckets = layout.labelsBuckets)
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val segs = messages.flatMap(_.asInstanceOf[GraftCommitMessage].segments).toSeq
-    val nullable = StructType(schema.fields.map(_.copy(nullable = true)))
     val fs = SegmentLog.fs(root, conf.value)
     require(replaceSegments.isEmpty || applyDvs.isEmpty,
       "replaceSegments and applyDvs are exclusive")
-    (replaceSegments, applyDvs) match {
-      case (Some(targets), _) =>
-        // PARTIAL replace (incremental compaction): one truncate-style
-        // commit of (live minus targets) ++ output — untouched segments
-        // carry over by reference with their ids, dvs and stats.
-        // REBASED: the kept set derives from the manifest each commit
-        // attempt races against, so concurrent appends survive; a
-        // concurrent row-level change to a TARGET conflicts loudly
-        // (the rewrite's output no longer reflects its visible rows).
-        // The declared layout is dropped (a subset rewrite cannot
-        // prove the global range/bucket invariant).
-        // fingerprint preference: the caller's declared snapshot
-        // (expectVisibility — closes the plan-to-write TOCTOU window),
-        // else the manifest seen at write-factory creation
-        val expect = expectVisibility.getOrElse(
-          SegmentLog.visibilityOf(
-            plannedOrNow(fs).map(_.segments).getOrElse(Nil), targets))
-        require(expect.keySet == targets,
-          "replaceSegments targets and visibility fingerprints disagree — " +
-            "targets without a fingerprint (not live in the planned manifest, " +
-            "or absent from expectVisibility): " +
-            (targets -- expect.keySet).mkString(", ") +
-            "; fingerprinted paths that are not targets: " +
-            (expect.keySet -- targets).mkString(", "))
-        SegmentLog.commitRebase(fs, root, txn = txn, mergeSchema = mergeSchema) { mOpt =>
-          SegmentLog.requireTargetsUnchanged(mOpt, expect, "replaceSegments compaction")
-          val kept = mOpt.map(_.segments).getOrElse(Nil)
-            .filterNot(s => targets.contains(s.path))
-          Some(SegmentLog.CommitPlan(mOpt.map(_.schema).getOrElse(nullable),
-            kept ++ segs, truncate = true, dataChange = dataChange))
-        }
-      case (None, Some(patch)) =>
-        // merge-on-read UPDATE: patch the named segments' deletion
-        // vectors (old row versions disappear) while the write's
-        // output appends the new versions — ONE manifest version, no
-        // reader ever sees both. Fully-superseded segments drop.
-        // REBASED like the partial replace: appends survive, a rival
-        // dv on a patched segment conflicts (this write's vectors were
-        // unioned against the planned base, not the rival's).
-        val expect = expectVisibility.getOrElse(
-          SegmentLog.visibilityOf(
-            plannedOrNow(fs).map(_.segments).getOrElse(Nil), patch.keySet))
-        require(expect.keySet == patch.keySet,
-          "applyDvs targets and visibility fingerprints disagree — targets " +
-            "without a fingerprint (not live in the planned manifest, or " +
-            "absent from expectVisibility): " +
-            (patch.keySet -- expect.keySet).mkString(", ") +
-            "; fingerprinted paths that are not targets: " +
-            (expect.keySet -- patch.keySet).mkString(", "))
-        SegmentLog.commitRebase(fs, root, txn = txn, mergeSchema = mergeSchema) { mOpt =>
-          SegmentLog.requireTargetsUnchanged(mOpt, expect, "merge-on-read update")
-          val patched = mOpt.map(_.segments).getOrElse(Nil).flatMap { s =>
-            patch.get(s.path) match {
-              case Some((_, n)) if n >= s.rows => None
-              case Some((dvRel, n)) => Some(s.copy(dv = Some(dvRel), dvRows = n))
-              case None => Some(s)
-            }
-          }
-          Some(SegmentLog.CommitPlan(mOpt.map(_.schema).getOrElse(nullable),
-            patched ++ segs, truncate = true, dataChange = true))
-        }
-      case (None, None) =>
-        SegmentLog.commit(fs, root, nullable, segs,
-          truncateFirst, txn = txn, bucketing = bucketSpec, mergeSchema = mergeSchema,
-          dataChange = dataChange)
-        // declared small-file hygiene (autoCompactSegments): plain
-        // appends trigger it; the replace/applyDvs arms above ARE
-        // maintenance and never re-enter. Gated on the PLANNED
-        // manifest's props so the common undeclared table pays no
-        // extra log read per commit.
-        if (planned != null &&
-            planned.exists(_.props.contains("autoCompactSegments")))
-          GraftMaintenance.autoCompact(SparkSession.active, root)
+    if (replaceSegments.isDefined || applyDvs.isDefined)
+      // PARTIAL replace (incremental compaction: the output swaps in for
+      // the targets) or merge-on-read UPDATE (the targets' vectors hide
+      // the old versions while the output appends the new ones) — one
+      // rewrite commit, fingerprinted against the caller's declared
+      // snapshot (expectVisibility) when it gives one
+      SegmentLog.commitRewrite(fs, root, fingerprintBase(fs),
+        replaceSegments.getOrElse(Set.empty), applyDvs.getOrElse(Map.empty), segs,
+        if (replaceSegments.isDefined) "replaceSegments compaction" else "merge-on-read update",
+        pinned = expectVisibility, dataChange = dataChange, txn = txn)
+    else {
+      SegmentLog.commit(fs, root, StructType(schema.fields.map(_.copy(nullable = true))), segs,
+        truncateFirst, txn = txn, bucketing = bucketSpec, mergeSchema = mergeSchema,
+        dataChange = dataChange)
+      // declared small-file hygiene (autoCompactSegments): plain
+      // appends trigger it; rewrite commits ARE maintenance and never
+      // re-enter. Gated on the factory-time manifest's props so the
+      // common undeclared table pays no extra log read per commit.
+      if (factoryManifest.exists(_.props.contains("autoCompactSegments")))
+        GraftMaintenance.autoCompact(SparkSession.active, root)
     }
   }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit =
-    GraftDataWriter.deleteUncommitted(root, conf.value, messages)
 }
 
 class GraftWriterFactory(root: String, schema: StructType,
@@ -2423,8 +2352,9 @@ abstract class GraftScanningOperation(root: String, tableSchema: StructType,
   *
   * Degradation property: if the planner skips group filtering, the
   * scan covers every segment and the commit is a full copy-on-write —
-  * strictly slower, never wrong. Like overwrite/delete, the replacing
-  * commit is last-writer-wins against concurrent appends.
+  * strictly slower, never wrong. The replacing commit is one
+  * [[SegmentLog.commitRewrite]]: a concurrent append survives it, and a
+  * rival row-level change to a replaced segment conflicts loudly.
   */
 class GraftRowLevelOperation(root: String, tableSchema: StructType,
     cmd: RowLevelOperation.Command) extends GraftScanningOperation(root, tableSchema, cmd) {
@@ -2536,10 +2466,10 @@ class GraftDeltaWriter(inner: GraftDataWriter)
   override def close(): Unit = inner.close()
 }
 
-/** What the copy-on-write and merge-on-read commits share: writers
-  * resolved against the manifest at factory time, the snapshot their
-  * targets are fingerprinted against, and the abort cleanup. */
-abstract class GraftRowLevelBatchWrite(root: String, schema: StructType,
+/** What the segment batch writes share: writers resolved against the
+  * manifest at factory time, the snapshot their rewrite targets are
+  * fingerprinted against, and the abort cleanup. */
+abstract class GraftSegmentBatchWrite(root: String, schema: StructType,
     conf: SerializableHadoopConf, settings: Map[String, String],
     scanSnapshot: () => Option[Manifest]) extends BatchWrite {
 
@@ -2548,21 +2478,20 @@ abstract class GraftRowLevelBatchWrite(root: String, schema: StructType,
   // earlier read than a fresh one at commit time, so the conflict
   // window only ever SHRINKS relative to the scan snapshot, never
   // silently reopens to the full plan-to-commit TOCTOU
-  @volatile private var factoryManifest: Option[Manifest] = None
+  @volatile protected var factoryManifest: Option[Manifest] = None
 
   // rewritten survivors and UPDATEd/MERGEd row versions pass the
   // declared CHECK constraints like any fresh insert; a pure MoR
   // DELETE has an empty write schema and every constraint binds to
   // NULL → passes
-  protected def writerFactory(): GraftWriterFactory = {
+  protected def writerFactory(labelBuckets: Boolean = false): GraftWriterFactory = {
     val m = SegmentLog.read(SegmentLog.fs(root, conf.value), root)
     factoryManifest = m
     new GraftWriterFactory(root, schema, conf,
-      SegmentWriteSpec.resolve(SparkSession.active, m, schema, settings),
-      labelBuckets = false)
+      SegmentWriteSpec.resolve(SparkSession.active, m, schema, settings), labelBuckets)
   }
 
-  /** The SCAN's snapshot, not a fresh read: the DML computed against
+  /** The SCAN's snapshot, not a fresh read: the write computed against
     * the visibility the scan was built on, and a rival dv commit in the
     * window since then must conflict instead of silently becoming the
     * expectation. Fallback chain when no scan was captured: the
@@ -2578,7 +2507,7 @@ abstract class GraftRowLevelBatchWrite(root: String, schema: StructType,
 class GraftDeltaBatchWrite(root: String, schema: StructType,
     conf: SerializableHadoopConf, settings: Map[String, String],
     scanSnapshot: () => Option[Manifest])
-    extends GraftRowLevelBatchWrite(root, schema, conf, settings, scanSnapshot)
+    extends GraftSegmentBatchWrite(root, schema, conf, settings, scanSnapshot)
     with org.apache.spark.sql.connector.write.DeltaBatchWrite {
 
   override def createBatchWriterFactory(
@@ -2607,63 +2536,35 @@ class GraftDeltaBatchWrite(root: String, schema: StructType,
       val bits = graft.functions.PosBitmap.decode(bytes)
       bySeg(rel) = bySeg.get(rel).map(DeletionVector.union(_, bits)).getOrElse(bits)
     })
-    // the positions were computed against the PLANNED snapshot's
-    // visibility — a rival dv landing on a touched segment means the
-    // union below would build on rows the rival already changed, so
-    // the rebase conflicts instead (requireTargetsUnchanged inside).
-    val expect = SegmentLog.visibilityOf(base.segments, bySeg.keySet.toSet)
-    require(expect.size == bySeg.size,
-      "row-level DML touched segments not live in the planned manifest")
-    // commit under the TABLE's schema, not the write's: a pure DELETE
-    // plans with an EMPTY data schema (nothing to insert), and a
-    // truncate-style commit would otherwise install it as the table's.
-    // A pure DELETE also moves no rows and appends no segments, so a
-    // declared layout SURVIVES it (dv patches keep range disjointness
-    // and bucket labels); UPDATE/MERGE append unlabeled segments and
-    // drop it, like every other appending rewrite. REBASED: concurrent
-    // appends carry over from the manifest each attempt races against.
+    // one sidecar per touched segment, unioned with the PLANNED
+    // snapshot's vector and written before the commit: the rewrite
+    // commit's fingerprint check guarantees that vector is still the
+    // live one, and conflicts loudly if a rival dv landed meanwhile. A
+    // target not live in the snapshot is refused there too.
+    val planned = base.segments.map(s => s.path -> s).toMap
+    val vectors = bySeg.map { case (rel, bits) =>
+      rel -> DeletionVector.writeUnion(fs, root, planned.get(rel).flatMap(_.dv), bits)
+    }.toMap
     // past-threshold auto-rewrite (the Delta DV-purge shape): a
     // segment whose unioned vector now hides ≥ `morRewriteThreshold`
     // of its rows (default 0.5, declared per table, 1.0 disables —
-    // a FULLY dead segment already drops in the patch below) is
-    // queued for an immediate copy-on-write rewrite after this
-    // commit. This is what keeps the MoR tier honest about its
-    // point-DML intent by construction, not by comment: write cost
-    // stays ∝ matched rows, but read amplification (a bitmap probe
-    // over mostly-dead rows) can never accumulate past the declared
-    // fraction before the segment is materialized clean.
-    var pastThreshold: Seq[String] = Nil
-    SegmentLog.commitRebase(fs, root) { mOpt =>
-      SegmentLog.requireTargetsUnchanged(mOpt, expect, "row-level DML")
-      val thr = mOpt.map(_.props).getOrElse(base.props)
-        .getOrElse("morRewriteThreshold", "0.5").toDouble
-      val heavy = Seq.newBuilder[String]
-      val live = mOpt.map(_.segments).getOrElse(Nil)
-      val patched = live.flatMap { s =>
-        bySeg.get(s.path) match {
-          case Some(newBits) =>
-            val prior = s.dv
-              .map(d => DeletionVector.read(fs, new Path(SegmentLog.abs(root, d))))
-              .getOrElse(Array.empty[Long])
-            val bits = DeletionVector.union(prior, newBits)
-            val n = DeletionVector.cardinality(bits)
-            if (n >= s.rows) None // fully dead or fully superseded: drop
-            else {
-              if (n.toDouble >= thr * s.rows) heavy += s.path
-              // a retry leaves the prior attempt's sidecar as vacuum
-              // fodder — unreferenced files are never data
-              val rel = s"${SegmentLog.DataDir}/${UUID.randomUUID()}.dv"
-              DeletionVector.write(fs, new Path(s"$root/$rel"), bits)
-              Some(s.copy(dv = Some(rel), dvRows = n))
-            }
-          case None => Some(s)
-        }
-      }
-      pastThreshold = heavy.result()
-      Some(SegmentLog.CommitPlan(mOpt.map(_.schema).getOrElse(base.schema),
-        patched ++ newSegs, truncate = true,
-        bucketing = if (newSegs.isEmpty) mOpt.flatMap(_.bucketing) else None))
+    // a FULLY dead segment already drops in the commit) is queued for
+    // an immediate copy-on-write rewrite after this commit. This keeps
+    // the SQL merge-on-read tier honest about its point-DML intent:
+    // write cost stays ∝ matched rows, but read amplification (a
+    // bitmap probe over mostly-dead rows) cannot accumulate past the
+    // declared fraction before the segment is materialized clean.
+    val thr = base.props.getOrElse("morRewriteThreshold", "0.5").toDouble
+    val pastThreshold = base.segments.collect {
+      case s if vectors.get(s.path).exists { case (_, n) => n < s.rows && n >= thr * s.rows } =>
+        s.path
     }
+    // committed under the TABLE's schema, not the write's: a pure
+    // DELETE plans with an EMPTY data schema (nothing to insert). A pure
+    // DELETE appends nothing, so a declared layout SURVIVES it;
+    // UPDATE/MERGE append unlabeled segments and drop it.
+    SegmentLog.commitRewrite(fs, root, Some(base), Set.empty, vectors, newSegs,
+      "row-level DML")
     if (pastThreshold.nonEmpty) {
       // best-effort: the DML itself is committed; a rival commit
       // racing this rewrite merely postpones the purge to the next
@@ -2687,7 +2588,7 @@ class GraftDeltaBatchWrite(root: String, schema: StructType,
 class GraftReplaceBatchWrite(root: String, schema: StructType,
     conf: SerializableHadoopConf, settings: Map[String, String],
     replacedFiles: () => Seq[String], scanSnapshot: () => Option[Manifest])
-    extends GraftRowLevelBatchWrite(root, schema, conf, settings, scanSnapshot) {
+    extends GraftSegmentBatchWrite(root, schema, conf, settings, scanSnapshot) {
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
     writerFactory()
@@ -2699,23 +2600,12 @@ class GraftReplaceBatchWrite(root: String, schema: StructType,
     // nothing matched, nothing to replace — a no-op, not a truncate
     if (replaced.isEmpty && newSegs.isEmpty) return
     val fs = SegmentLog.fs(root, conf.value)
-    val relTargets = replaced.map(_.stripPrefix(s"$root/"))
-    val base = fingerprintBase(fs).map(_.segments).getOrElse(Nil)
-    val expect = SegmentLog.visibilityOf(base, relTargets)
-    val nullable = StructType(schema.fields.map(_.copy(nullable = true)))
-    // truncate-style commit with kept ++ new: replaced segments drop
-    // out of the manifest (their files remain for time travel until
-    // expiry); the declared layout is dropped — replacement segments
-    // carry no bucket labels. REBASED: concurrent appends survive; a
-    // rival row-level change to a rewritten segment conflicts (the
-    // rewrite's output reflects the planned visibility, not the
-    // rival's).
-    SegmentLog.commitRebase(fs, root) { mOpt =>
-      SegmentLog.requireTargetsUnchanged(mOpt, expect, "copy-on-write rewrite")
-      val kept = mOpt.map(_.segments).getOrElse(Nil)
-        .filterNot(seg => relTargets.contains(seg.path))
-      Some(SegmentLog.CommitPlan(mOpt.map(_.schema).getOrElse(nullable),
-        kept ++ newSegs, truncate = true))
-    }
+    // replaced segments drop out of the manifest (their files remain
+    // for time travel until expiry) and the declared layout drops —
+    // replacement segments carry no bucket labels. A rival row-level
+    // change to a rewritten segment conflicts: the output reflects the
+    // planned visibility, not the rival's.
+    SegmentLog.commitRewrite(fs, root, fingerprintBase(fs),
+      replaced.map(_.stripPrefix(s"$root/")), Map.empty, newSegs, "copy-on-write rewrite")
   }
 }

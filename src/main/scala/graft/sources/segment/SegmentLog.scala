@@ -171,15 +171,17 @@ case class Manifest(version: Long, schema: StructType, segments: Seq[SegmentMeta
   *     claim of the version slot on any store with exclusive create;
   *  3. on `FileAlreadyExistsException` a concurrent writer won the
   *     slot: re-read, re-apply, retry. Appends commute; replace-style
-  *     commits (compaction, merge-on-read patches, copy-on-write
-  *     rewrites, metadata DELETE) go through [[commitRebase]], which
-  *     re-derives their carried-over segment list from the fresh
-  *     manifest on every attempt — a concurrent append survives the
-  *     rewrite, and a conflicting row-level change to a planned target
-  *     fails the commit loudly ([[requireTargetsUnchanged]]) instead of
-  *     resurrecting deleted rows. Only an explicit user truncate
-  *     (INSERT OVERWRITE / TRUNCATE TABLE) stays last-writer-wins, by
-  *     definition of the operation.
+  *     commits go through [[commitRebase]], which re-derives their
+  *     carried-over segment list from the fresh manifest on every
+  *     attempt — a concurrent append survives the rewrite, and a
+  *     conflicting row-level change to a planned target fails the
+  *     commit loudly ([[requireTargetsUnchanged]]) instead of
+  *     resurrecting deleted rows. Every commit that replaces or
+  *     re-vectors live segments (compaction, delete/update marks,
+  *     copy-on-write and merge-on-read DML) is one [[commitRewrite]];
+  *     the metadata-only DELETE rebases its own re-decided predicate.
+  *     Only an explicit user truncate (INSERT OVERWRITE / TRUNCATE
+  *     TABLE) stays last-writer-wins, by definition of the operation.
   *
   * Readers resolve the max manifest version and see either N or N+1,
   * never a torn state — a reader never lists `data/` (uncommitted or
@@ -233,6 +235,11 @@ object SegmentLog {
     val v = latestVersion(fs, root)
     if (v < 0) None else Some(readVersion(fs, root, v))
   }
+
+  /** The live manifest of a table that must already exist. */
+  def readExisting(fs: FileSystem, root: String): Manifest =
+    read(fs, root).getOrElse(
+      throw new IllegalArgumentException(s"no graft-segment table at $root"))
 
   /** Manifest reads this JVM has performed — observability for specs
     * asserting read-amplification bounds (e.g. properties() caching). */
@@ -607,6 +614,59 @@ object SegmentLog {
           s"$op planned against segment $path, which a concurrent commit removed " +
             "or rewrote — re-run against the current snapshot")
       }
+    }
+  }
+
+  /** The one commit of an operation that replaces, re-vectors or drops
+    * live segments: partial compaction, delete/update marks, and SQL
+    * copy-on-write and merge-on-read DML.
+    *
+    * Every target (`replaced` paths and `vectors` keys) must be live in
+    * the fingerprint — `pinned` when the caller captured its own
+    * (the write path's `expectVisibility`), else `base`, the manifest
+    * the operation planned against. The commit REBASES: each attempt
+    * keeps everything else live in the manifest it races, so a
+    * concurrent append survives, while a rival row-level change to a
+    * target throws [[java.util.ConcurrentModificationException]]
+    * ([[requireTargetsUnchanged]]).
+    *
+    * `vectors` maps a target to the sidecar already written for it
+    * ([[DeletionVector.writeUnion]] over the base's vector, still
+    * current when the fingerprint holds) and its cumulative dead rows;
+    * a vector covering every row drops the segment. `appended` follow
+    * the kept segments. The commit installs the fresh manifest's
+    * schema, is data-changing whenever it patches a vector, and keeps
+    * the declared layout only when it replaces nothing and appends
+    * nothing (vectors and dropped segments move no surviving row). */
+  def commitRewrite(fs: FileSystem, root: String, base: Option[Manifest],
+      replaced: Set[String], vectors: Map[String, (String, Long)],
+      appended: Seq[SegmentMeta], op: String,
+      pinned: Option[Map[String, (Option[String], Long)]] = None,
+      dataChange: Boolean = true, txn: Option[(String, Long)] = None): Long = {
+    val targets = replaced ++ vectors.keySet
+    val expect = pinned.getOrElse(visibilityOf(base.map(_.segments).getOrElse(Nil), targets))
+    require(expect.keySet == targets,
+      s"$op targets and visibility fingerprints disagree — targets without a " +
+        "fingerprint (not live in the planned manifest, or absent from " +
+        "expectVisibility): " + (targets -- expect.keySet).mkString(", ") +
+        "; fingerprinted paths that are not targets: " +
+        (expect.keySet -- targets).mkString(", "))
+    commitRebase(fs, root, txn) { fresh =>
+      requireTargetsUnchanged(fresh, expect, op)
+      val schema = fresh.orElse(base).map(_.schema).getOrElse(
+        throw new IllegalStateException(s"no graft-segment table at $root"))
+      val kept = fresh.map(_.segments).getOrElse(Nil).flatMap { s =>
+        if (replaced.contains(s.path)) None
+        else vectors.get(s.path) match {
+          case Some((_, n)) if n >= s.rows => None // every row dead: drop the segment
+          case Some((dv, n)) => Some(s.copy(dv = Some(dv), dvRows = n))
+          case None => Some(s)
+        }
+      }
+      Some(CommitPlan(schema, kept ++ appended, truncate = true,
+        bucketing =
+          if (replaced.isEmpty && appended.isEmpty) fresh.flatMap(_.bucketing) else None,
+        dataChange = dataChange || vectors.nonEmpty))
     }
   }
 
@@ -1267,8 +1327,7 @@ object SegmentLog {
       fs.getConf)
     var attempt = 0
     while (true) {
-      val current = read(fs, root).getOrElse(
-        throw new IllegalArgumentException(s"no graft-segment table at $root"))
+      val current = readExisting(fs, root)
       // NDV-merged maintenance after the transform: rename leaves
       // physical keys valid (fast no-op), widen/drop hygiene retires
       // declarations and the recompute drops their entries, rollback
