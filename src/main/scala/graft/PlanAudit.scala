@@ -15,10 +15,12 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
   * those run — the final write, and the `localCheckpoint`s, counts and
   * writes inside the build — and the query's fingerprint counts the executed
   * physical nodes over all of them, subqueries included:
-  * `executions`, then one entry per node class
+  * `executions`, the query's work counters (`jobs`, `stages`, `tasks`,
+  * `input_records`, `batches`), then one entry per node class
   * (`ShuffleExchangeExec(HashPartitioning)` names its partitioning).
   * The file holds one line per query, so `git diff` names every query
-  * whose plan moved.
+  * whose plan or work moved. Shuffle bytes stay out: they drift by
+  * under 1% between two runs at one commit.
   *
   * AQE is off in this session: with it on, a query's final plan
   * depends on which of its shuffle stages finishes first (four queries
@@ -48,8 +50,11 @@ object PlanAudit extends AdaptiveSparkPlanHelper {
       }
       failed.foreach(e => System.err.println(s"[planaudit] $name failed: $e"))
       val counts = work.plans.flatMap(p => collectWithSubqueries(p) { case n => nodeName(n) })
-        .groupBy(identity).view.mapValues(_.size).toSeq.sorted
-      val fields = (("executions" -> work.plans.size) +: failed.map(_ => "failed" -> 1).toSeq) ++ counts
+        .groupBy(identity).view.mapValues(_.size.toLong).toSeq.sorted
+      val t = work.totals
+      val fields = Seq("executions" -> work.plans.size.toLong, "jobs" -> t.jobs,
+        "stages" -> t.stages, "tasks" -> t.tasks, "input_records" -> t.inputRecords,
+        "batches" -> t.batches) ++ failed.map(_ => "failed" -> 1L) ++ counts
       s"\"$name\": " + fields.map { case (k, v) => s"\"$k\": $v" }.mkString("{", ", ", "}")
     }
     Files.createDirectories(Paths.get(Out).getParent)

@@ -2540,7 +2540,7 @@ object StoreCerts {
 
   /** One-shot per-customer aggregate ground truth — shared by the
     * batch incremental-merge path (store_incr_agg) and the streaming
-    * snapshot chain (stream_incr_agg): both must land on exactly this
+    * state fold (stream_incr_agg): both must land on exactly this
     * view. */
   private[certs] val incrAggSql =
     "SELECT o_custkey, CAST(count(*) AS BIGINT) AS n_orders, " +

@@ -35,20 +35,20 @@ object StreamCerts {
       // (same order the former serial writes produced) — stageOrdered
       stageOrdered(Seq(0, 1, 2).map(i => s"$base/in/g$i" -> (() =>
         slim.filter(col("doc_id") % 3 === i).coalesce(1).write.parquet(s"$base/in/g$i"))))
-      graft.streaming.SnapshotIngest.run(s, slim.schema,
+      graft.streaming.SegmentStateIngest.run(s, slim.schema,
         s"$base/in", s"$base/state", s"$base/ckpt") { (prior, batch) =>
         val sk = graft.ops.Cms.sketch(batch, 4, 1024)
         prior.map(_.unionByName(sk).groupBy(col("row"), col("bucket"))
           .agg(sum(col("cnt")).as("cnt"))).getOrElse(sk)
       }
       graft.ops.Cms.estimate(
-        graft.streaming.SnapshotIngest.finalState(s, s"$base/state"),
+        graft.streaming.SegmentStateIngest.finalState(s, s"$base/state"),
         TextOps.termFrequency(docs, 20), 4, 1024)
     }.orderBy(col("freq").desc, col("word")),
       // micro-batch-summed counters are the one-shot sketch exactly
       cmsTopkSql),
     // the KMV sketch as STREAMING state: per-batch bottom-k frames fold
-    // into the snapshot chain by merge (union + re-min-k) — ≤ k rows
+    // into the state table by merge (union + re-min-k) — ≤ k rows
     // per group forever, and min-k associativity makes the final
     // estimate BIT-IDENTICAL to the one-shot sketch: text_kmv_vocab's
     // oracle unchanged
@@ -56,7 +56,7 @@ object StreamCerts {
       val docs = Tables.documents(s, d).select(col("doc_id"), col("lang"), col("text"))
       stageOrdered(Seq(0, 1, 2).map(i => s"$base/in/g$i" -> (() =>
         docs.filter(col("doc_id") % 3 === i).coalesce(1).write.parquet(s"$base/in/g$i"))))
-      graft.streaming.SnapshotIngest.run(s, docs.schema,
+      graft.streaming.SegmentStateIngest.run(s, docs.schema,
         s"$base/in", s"$base/state", s"$base/ckpt") { (prior, batch) =>
         val sk = graft.ops.Kmv.sketch(
           batch.select(col("lang"), explode(TextOps.tokens(col("text"))).as("word")),
@@ -64,12 +64,12 @@ object StreamCerts {
         prior.map(p => graft.ops.Kmv.merge(Seq(p, sk), Seq("lang"), 256)).getOrElse(sk)
       }
       graft.ops.Kmv.estimateDistinct(
-        graft.streaming.SnapshotIngest.finalState(s, s"$base/state"), Seq("lang"), 256)
+        graft.streaming.SegmentStateIngest.finalState(s, s"$base/state"), Seq("lang"), 256)
     }.orderBy(col("lang")),
-      // ... and the streaming snapshot-state fold is the same merge
+      // ... and the streaming state fold is the same merge
       kmvVocabSql),
     // the SAME sketch as streaming state: three micro-batches fold
-    // their register tables into the snapshot chain by max re-agg —
+    // their register tables into the state table by max re-agg —
     // sketch state is ~2^p rows per group forever, the 100 TB shape
     // for streaming cardinality (no key set ever stored), and the
     // final estimate must be BIT-IDENTICAL to the one-shot sketch
@@ -79,7 +79,7 @@ object StreamCerts {
       val docs = Tables.documents(s, d).select(col("doc_id"), col("lang"), col("text"))
       stageOrdered(Seq(0, 1, 2).map(i => s"$base/in/g$i" -> (() =>
         docs.filter(col("doc_id") % 3 === i).coalesce(1).write.parquet(s"$base/in/g$i"))))
-      graft.streaming.SnapshotIngest.run(s, docs.schema,
+      graft.streaming.SegmentStateIngest.run(s, docs.schema,
         s"$base/in", s"$base/state", s"$base/ckpt") { (prior, batch) =>
         val sk = graft.ops.Hll.sketch(
           batch.select(col("lang"), explode(TextOps.tokens(col("text"))).as("word")),
@@ -87,19 +87,19 @@ object StreamCerts {
         prior.map(p => graft.ops.Hll.merge(Seq(p, sk), Seq("lang"))).getOrElse(sk)
       }
       graft.ops.Hll.estimate(
-        graft.streaming.SnapshotIngest.finalState(s, s"$base/state"), Seq("lang"), 9)
+        graft.streaming.SegmentStateIngest.finalState(s, s"$base/state"), Seq("lang"), 9)
     }.orderBy(col("lang")),
       // micro-batch register folds must land on the identical estimate
       hllVocabSql),
     // the quantile sketch as STREAMING state: per-batch histograms
-    // fold into the snapshot chain by exact integer addition, so the
+    // fold into the state table by exact integer addition, so the
     // final estimates are bit-identical to the one-shot sketch (third
     // sketch streamed, beside stream_hll/stream_cms — same oracle row)
     Cert("stream_quantile_sketch", (s, d) => withTempDir("graft-qsk-stream") { base =>
       val docs = Tables.documents(s, d).select(col("doc_id"), col("lang"), col("n_chars"))
       stageOrdered(Seq(0, 1, 2).map(i => s"$base/in/g$i" -> (() =>
         docs.filter(col("doc_id") % 3 === i).coalesce(1).write.parquet(s"$base/in/g$i"))))
-      graft.streaming.SnapshotIngest.run(s, docs.schema,
+      graft.streaming.SegmentStateIngest.run(s, docs.schema,
         s"$base/in", s"$base/state", s"$base/ckpt") { (prior, batch) =>
         val sk = graft.ops.Quantiles.histogramSketch(
           batch, Seq("lang"), "n_chars", 0.0, 640.0, 64)
@@ -107,10 +107,10 @@ object StreamCerts {
           .agg(sum(col("cnt")).as("cnt"))).getOrElse(sk)
       }
       graft.ops.Quantiles.estimateFromSketch(
-        graft.streaming.SnapshotIngest.finalState(s, s"$base/state"),
+        graft.streaming.SegmentStateIngest.finalState(s, s"$base/state"),
         Seq("lang"), 0.0, 640.0, 64, Seq(0.5, 0.9, 0.99))
     }.orderBy(col("lang"), col("q")),
-      // ...and so must the micro-batch snapshot folds
+      // ...and so must the micro-batch state folds
       quantileSketchSql),
     // the SAME additions arriving as a stream: per-batch idempotent
     // increment staging against the frozen tables, one post-drain
@@ -325,10 +325,9 @@ object StreamCerts {
       // any micro-batch partition of the log converges to the same table
       cdcApplySql),
     // streaming incremental aggregate view: three micro-batches merge
-    // into snapshot state (retry-idempotent, predecessor kept until the
-    // checkpoint commits); the final snapshot must equal the one-shot
-    // GROUP BY over everything the stream saw (same oracle as the
-    // batch path store_incr_agg)
+    // into a state table (a replayed batch is a no-op); the
+    // final state must equal the one-shot GROUP BY over everything the
+    // stream saw (same oracle as the batch path store_incr_agg)
     // the graft-segment connector as a STREAMING source: three commits
     // append three manifest versions; the micro-batch stream's offset
     // is the committed-segment count, maxSegmentsPerTrigger=1 forces
@@ -628,13 +627,11 @@ object StreamCerts {
       ("SELECT event_type, count(*) AS n_events, " +
         "CAST(SUM(CAST(round(value * 100, 0) AS BIGINT)) AS BIGINT) AS sum_cents " +
         "FROM events GROUP BY event_type ORDER BY event_type")),
-    // the snapshot-state discipline REBUILT on the table format:
-    // SegmentStateIngest folds each micro-batch into a graft-segment
-    // state TABLE via one transactional overwrite per epoch under
-    // (txnAppId, batchId) — the manifest log replaces the hand-rolled
-    // state_N chains, the txn ledger replaces batchId-keyed write
-    // idempotence, and a replayed batch commits as a no-op. Must land
-    // on the same one-shot GROUP BY as stream_incr_agg (shared oracle)
+    // the state backend driven directly: SegmentStateIngest folds each
+    // micro-batch into a graft-segment state TABLE via one
+    // transactional overwrite per epoch under (query id, batchId), and
+    // a replayed batch is a no-op. Must land on the same
+    // one-shot GROUP BY as stream_incr_agg (shared oracle)
     Cert("stream_incr_agg_segment", (s, d) => withTempDir("graft-incr-seg") { base =>
       val orders = Tables.orders(s, d).select(col("o_custkey"),
         round(col("o_totalprice") * 100.0, 0).cast("long").as("cents"))
@@ -642,7 +639,7 @@ object StreamCerts {
         orders.filter(col("o_custkey") % 3 === i)
           .coalesce(1).write.parquet(s"$base/in/g$i"))))
       graft.streaming.SegmentStateIngest.run(s, orders.schema,
-        s"$base/in", s"$base/state_tbl", s"$base/ckpt", "incr-agg-seg") {
+        s"$base/in", s"$base/state_tbl", s"$base/ckpt") {
         case (None, batch) => graft.ops.IncrView.build(batch, Seq("o_custkey"), col("cents"))
         case (Some(prior), batch) =>
           graft.ops.IncrView.merge(prior, batch, Seq("o_custkey"), col("cents"))
@@ -669,7 +666,7 @@ object StreamCerts {
           col("max_v").as("max_cents"))
         .orderBy(col("o_custkey"))
     },
-      // the streaming snapshot chain lands on the identical view
+      // the streaming state fold lands on the identical view
       incrAggSql),
 
     // streaming observability (SURVEY "what's missing" #1):

@@ -24,9 +24,9 @@ import org.apache.spark.sql.functions._
   *    out small;
   *  - the physical delete should rewrite only the storage buckets the
   *    forget keys hash into (sources.Bucketing layout + the
-  *    bucket-targeted rewrite discipline of streaming
-  *    BucketedSnapshotIngest), not the whole table — the frames
-  *    returned here are the bucket-rewrite inputs.
+  *    bucket-targeted rewrite discipline of
+  *    streaming.SegmentStateIngest.runBucketed), not the whole table —
+  *    the frames returned here are the bucket-rewrite inputs.
   */
 object Forget {
 

@@ -92,14 +92,17 @@ object DeletionVector {
     * sidecar under the table's `data/` — copy-on-write, so older
     * versions keep their vector. The file is unreferenced until a
     * commit names it: an abort or lost race leaves vacuum fodder, never
-    * data. Returns (root-relative sidecar path, cumulative dead rows). */
+    * data. A union that kills all `rows` of the segment is not written:
+    * the commit drops that segment, so the returned path names no file.
+    * Returns (root-relative sidecar path, cumulative dead rows). */
   def writeUnion(fs: FileSystem, root: String, prior: Option[String],
-      bits: Array[Long]): (String, Long) = {
+      bits: Array[Long], rows: Long): (String, Long) = {
     val all = prior.map(p => union(read(fs, new Path(SegmentLog.abs(root, p))), bits))
       .getOrElse(bits)
     val rel = s"${SegmentLog.DataDir}/${java.util.UUID.randomUUID()}.dv"
-    DeletionVector.write(fs, new Path(s"$root/$rel"), all)
-    (rel, cardinality(all))
+    val n = cardinality(all)
+    if (n < rows) DeletionVector.write(fs, new Path(s"$root/$rel"), all)
+    (rel, n)
   }
 
   // decoded-vector cache: every task reading a DV'd segment (and every

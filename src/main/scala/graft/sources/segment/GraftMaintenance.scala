@@ -340,14 +340,15 @@ object GraftMaintenance {
       .select(col(GraftSegmentTable.SegmentCol).as("seg"),
         col(GraftSegmentTable.PosCol).as("pos"))
       .groupBy("seg").agg(graft.functions.PosBitmap.posBitmap(col("pos")).as("bits"))
-    // prior vectors, keyed by the absolute segment path the scan emits
-    val priorDv: Map[String, String] =
-      m.segments.flatMap(s => s.dv.map(d => SegmentLog.abs(dir, s.path) -> d)).toMap
+    // (prior vector, rows) keyed by the absolute segment path the scan emits
+    val live: Map[String, (Option[String], Long)] =
+      m.segments.map(s => SegmentLog.abs(dir, s.path) -> ((s.dv, s.rows))).toMap
     val sconf = new SerializableHadoopConf(spark.sessionState.newHadoopConf())
     hits.as[(String, Array[Byte])]
       .map { case (seg, bytes) =>
+        val (prior, rows) = live(seg)
         val (rel, n) = DeletionVector.writeUnion(new Path(seg).getFileSystem(sconf.value),
-          dir, priorDv.get(seg), graft.functions.PosBitmap.decode(bytes))
+          dir, prior, graft.functions.PosBitmap.decode(bytes), rows)
         (seg, rel, n)
       }.collect()
       .map { case (seg, rel, n) => seg.stripPrefix(s"$dir/") -> ((rel, n)) }.toMap

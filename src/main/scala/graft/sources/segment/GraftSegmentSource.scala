@@ -2543,7 +2543,9 @@ class GraftDeltaBatchWrite(root: String, schema: StructType,
     // target not live in the snapshot is refused there too.
     val planned = base.segments.map(s => s.path -> s).toMap
     val vectors = bySeg.map { case (rel, bits) =>
-      rel -> DeletionVector.writeUnion(fs, root, planned.get(rel).flatMap(_.dv), bits)
+      val seg = planned.get(rel)
+      rel -> DeletionVector.writeUnion(fs, root, seg.flatMap(_.dv), bits,
+        seg.fold(Long.MaxValue)(_.rows))
     }.toMap
     // past-threshold auto-rewrite (the Delta DV-purge shape): a
     // segment whose unioned vector now hides ≥ `morRewriteThreshold`

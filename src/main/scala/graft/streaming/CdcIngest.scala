@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 /** Streaming CDC consumer: a replication log (I/U/D ops with a
-  * monotone sequence number) maintained as a queryable table under the
-  * [[SnapshotIngest]] snapshot-state driver — the streaming form of
+  * monotone sequence number) maintained as a queryable graft-segment
+  * state table under [[SegmentStateIngest]] — the streaming form of
   * [[graft.ops.Cdc]].
   *
   * The state keeps ONE newest-seq row per key INCLUDING delete
@@ -45,16 +45,17 @@ object CdcIngest {
       keys: Seq[String],
       seqCol: String,
       opCol: String): Int =
-    SnapshotIngest.run(spark, schema, inDir, stateDir, checkpoint)(
+    SegmentStateIngest.run(spark, schema, inDir, stateDir, checkpoint)(
       newestSeqWins(keys, seqCol))
 
-  /** The scale path: state hash-bucketed by key under
-    * [[BucketedSnapshotIngest]], so a micro-batch rewrites only the
-    * buckets its keys touch instead of the whole table — per-batch
-    * write volume ∝ touched buckets, not table size. The merge is the
-    * same newest-seq-wins fold (a key lives in exactly one bucket, so
-    * per-bucket merging is per-key merging); the plain [[run]] remains
-    * for view-sized state where one dir is simpler to operate. */
+  /** The scale path: state hash-bucketed by key into one state table
+    * per bucket ([[SegmentStateIngest.runBucketed]]), so a micro-batch
+    * rewrites only the buckets its keys touch instead of the whole
+    * table — per-batch write volume ∝ touched buckets, not table size.
+    * The merge is the same newest-seq-wins fold (a key lives in exactly
+    * one bucket, so per-bucket merging is per-key merging); the plain
+    * [[run]] remains for view-sized state where one table is simpler to
+    * operate. */
   def runBucketed(
       spark: SparkSession,
       schema: StructType,
@@ -65,7 +66,7 @@ object CdcIngest {
       seqCol: String,
       opCol: String,
       nBuckets: Int): Int =
-    BucketedSnapshotIngest.run(spark, schema, inDir, stateDir, checkpoint, keys, nBuckets)(
+    SegmentStateIngest.runBucketed(spark, schema, inDir, stateDir, checkpoint, keys, nBuckets)(
       newestSeqWins(keys, seqCol))
 
   private def newestSeqWins(keys: Seq[String], seqCol: String)(
@@ -79,13 +80,13 @@ object CdcIngest {
 
   /** The applied table: newest ops minus delete tombstones. */
   def finalTable(spark: SparkSession, stateDir: String, opCol: String): DataFrame =
-    SnapshotIngest.finalState(spark, stateDir)
+    SegmentStateIngest.finalState(spark, stateDir)
       .filter(col(opCol) =!= "D")
       .drop(opCol)
 
   /** [[finalTable]] over a [[runBucketed]] state layout. */
   def finalTableBucketed(spark: SparkSession, stateDir: String, opCol: String): DataFrame =
-    BucketedSnapshotIngest.finalState(spark, stateDir)
+    SegmentStateIngest.finalStateBucketed(spark, stateDir)
       .filter(col(opCol) =!= "D")
       .drop(opCol)
 }

@@ -129,7 +129,7 @@ object CurationIngest {
       // state) are mutually independent once exactFresh and sigs are
       // materialized — each reads only checkpointed blocks and writes
       // its own batchId-keyed overwrite dir. Overlap them (guide
-      // §2.6, the BucketedSnapshotIngest discipline): serially each
+      // §2.6, as SegmentStateIngest.runBucketed does): serially each
       // write is its own scheduler round-trip per batch. The retry
       // contract is untouched — state reads are strictly-before-
       // batchId and the stream checkpoint commits only after ALL

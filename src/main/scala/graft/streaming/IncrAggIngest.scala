@@ -7,12 +7,12 @@ import org.apache.spark.sql.types.StructType
 import graft.ops.IncrView
 
 /** Streaming incremental aggregate view: [[graft.ops.IncrView]] under
-  * the [[SnapshotIngest]] snapshot-state driver. Each micro-batch
-  * reduces to its own tiny delta view and merges it with the prior
-  * snapshot — per-batch cost ∝ delta keys + state size, the full fact
-  * stream never re-aggregated. Retry/prune/read contracts are the
-  * driver's (see SnapshotIngest; the pre-planted failed-attempt case
-  * is spec-certified here).
+  * the [[SegmentStateIngest]] state backend. Each micro-batch reduces
+  * to its own tiny delta view and merges it with the prior state —
+  * per-batch cost ∝ delta keys + state size, the full fact stream
+  * never re-aggregated. The replay and read contracts are the
+  * backend's (a replayed batch is a no-op; `StreamingSpec`
+  * certifies it here).
   *
   * End-to-end contract (stream_incr_agg): after draining N batches,
   * [[finalState]] equals the one-shot [[IncrView.build]] over
@@ -31,12 +31,12 @@ object IncrAggIngest {
       checkpoint: String,
       keys: Seq[String],
       valueCol: String): Int =
-    SnapshotIngest.run(spark, schema, inDir, stateDir, checkpoint) {
+    SegmentStateIngest.run(spark, schema, inDir, stateDir, checkpoint) {
       case (None, batch) => IncrView.build(batch, keys, col(valueCol))
       case (Some(prior), batch) => IncrView.merge(prior, batch, keys, col(valueCol))
     }
 
-  /** The queryable view: the newest state snapshot. */
+  /** The queryable view: the live state table. */
   def finalState(spark: SparkSession, stateDir: String): DataFrame =
-    SnapshotIngest.finalState(spark, stateDir)
+    SegmentStateIngest.finalState(spark, stateDir)
 }

@@ -6,10 +6,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 /** Hadoop-FS state-directory discovery shared by the state-dir
-  * streaming drivers: the snapshot chains of [[SnapshotIngest]] (and,
-  * through its fold, [[BucketedSnapshotIngest]]), the digest and claim
-  * sets of [[DedupIngest]], [[NearDupIngest]] and [[CurationIngest]],
-  * and the staged increments of [[AnnIngest]].
+  * streaming drivers: the digest and claim sets of [[DedupIngest]],
+  * [[NearDupIngest]] and [[CurationIngest]], the staged increments of
+  * [[AnnIngest]], and the bucket tables of
+  * [[SegmentStateIngest.runBucketed]]. Fold state itself lives in
+  * graft-segment tables ([[SegmentStateIngest]]).
   *
   * These drivers' exactly-once merge contract hinges on each batch
   * SEEING the prior batches' state dirs ("strictly before my

@@ -39,7 +39,7 @@ class SegmentRewriteCommitSpec extends SparkSpec {
 
   private def vector(dir: String, rows: Long*): (String, Long) =
     DeletionVector.writeUnion(SegmentLog.fs(dir, hconf), dir, None,
-      DeletionVector.fromPositions(rows))
+      DeletionVector.fromPositions(rows), Long.MaxValue)
 
   test("commitRewrite over a stale base keeps a concurrent append in every shape") {
     case class Shape(name: String, replace: Boolean, vectors: Boolean, append: Boolean,
@@ -117,6 +117,19 @@ class SegmentRewriteCommitSpec extends SparkSpec {
     val m = SegmentLog.read(fs, dir).get
     assert(m.segments.map(_.id) == Seq(s1.id, rival.id))
     assert(spark.read.format(Fmt).load(dir).count() == s1.rows + rival.rows)
+  }
+
+  test("deleteMark of every row of a segment drops it and writes no sidecar") {
+    val dir = tmp("graft-rewrite-dead-mark")
+    Seq((0L, 100L), (100L, 200L)).foreach { case (lo, hi) =>
+      spark.range(lo, hi).coalesce(1).write.format(Fmt).mode("append").save(dir)
+    }
+    assert(GraftMaintenance.deleteMark(spark, dir, col("id") < 100L) == 100L)
+    val m = manifest(dir)
+    assert(m.segments.size == 1 && m.segments.forall(_.dv.isEmpty))
+    val dvs = new java.io.File(s"$dir/${SegmentLog.DataDir}").list().filter(_.endsWith(".dv"))
+    assert(dvs.isEmpty, s"unreferenced sidecars: ${dvs.mkString(", ")}")
+    assert(spark.read.format(Fmt).load(dir).count() == 100L)
   }
 
   /** `body(catalog, tableDir)` over a catalog table range-clustered on

@@ -2,13 +2,15 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.ingest.Ingest
 import graft.model.Model
-import graft.streaming.CheckoutStream
+import graft.sources.segment.SegmentLog
+import graft.streaming.{CheckoutStream, SegmentStateIngest}
 
 /** Structured Streaming semantics (M3 / ST1-ST7): micro-batch delivery,
   * watermarked dedup, transactional inventory via foreachBatch, DLQ. */
@@ -16,6 +18,31 @@ class StreamingSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmp(prefix: String) = Files.createTempDirectory(prefix).toString
+
+  /** What a fold write that died before its commit leaves behind:
+    * `rows`' segment files under `table`'s `data/`, named by no
+    * manifest. */
+  private def plantUnreferenced(rows: DataFrame, table: String): Unit = {
+    val dead = s"${tmp("graft-dead-write")}/t"
+    rows.write.format("graft-segment").mode("append").save(dead)
+    val data = new java.io.File(s"$table/${SegmentLog.DataDir}")
+    data.mkdirs()
+    new java.io.File(s"$dead/${SegmentLog.DataDir}").listFiles().filter(_.isFile)
+      .foreach(f => Files.copy(f.toPath, data.toPath.resolve(f.getName)))
+  }
+
+  /** Deletes the checkpoint's last `commits/N` and its `.crc`, as a
+    * crash after the fold's commit but before the checkpoint's does, so
+    * a rerun replays batch N. Returns N. */
+  private def dropLastCommit(ckpt: String): Long = {
+    val dir = new java.io.File(s"$ckpt/commits")
+    val n = dir.list().flatMap(f => scala.util.Try(f.toLong).toOption).max
+    Seq(s"$n", s".$n.crc").foreach(f => assert(new java.io.File(dir, f).delete(), f))
+    n
+  }
+
+  private def latestVersion(table: String): Long =
+    SegmentLog.latestVersion(SegmentLog.fs(table, spark.sessionState.newHadoopConf()), table)
 
   test("ST1/ST4: dropDuplicates over a memory stream dedups across micro-batches") {
     implicit val sq = spark.sqlContext
@@ -360,7 +387,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("upsertSink: batch rows replace same-key table rows; others pass through") {
-    import graft.streaming.{Sinks, SnapshotIngest}
+    import graft.streaming.Sinks
     val base = tmp("graft-upsert")
     // f0 inserts k1,k2; f1 updates k2 and inserts k3 — MERGE semantics
     val f0 = Seq((1L, "a", 10L), (2L, "b", 20L)).toDF("k", "status", "v")
@@ -379,13 +406,13 @@ class StreamingSpec extends SparkSpec {
       .foreachBatch(Sinks.upsertSink(s"$base/table", Seq("k")))
       .start()
     q.awaitTermination()
-    val table = SnapshotIngest.finalState(spark, s"$base/table")
+    val table = SegmentStateIngest.finalState(spark, s"$base/table")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
     assert(table === Set((1L, "a", 10L), (2L, "b2", 21L), (3L, "c", 30L)))
   }
 
   test("bucketed CDC state: a batch rewrites only touched buckets; equals batch apply") {
-    import graft.streaming.{BucketedSnapshotIngest, CdcIngest}
+    import graft.streaming.CdcIngest
     val base = tmp("graft-cdc-bucketed")
     def bucketOf(k: Long): Int = spark.range(1)
       .select(pmod(hash(lit(k)), lit(8)).as("b")).collect()(0).getInt(0)
@@ -395,8 +422,8 @@ class StreamingSpec extends SparkSpec {
     val bGap = bucketOf(kGap)
     // batch 0 inserts keys 0..15 (touches many buckets); batch 1
     // updates/deletes ONLY key 3 — with 8 buckets, exactly one bucket
-    // may advance to state_1; batch 2 updates only kGap, so bGap's
-    // chain jumps from state_0 to state_2
+    // table may commit it; batch 2 updates only kGap, so bGap's table
+    // goes from batch 0's commit straight to batch 2's
     val schema = Seq((0L, 1L, "I", 0L)).toDF("k", "seq", "op", "v").schema
     val now = System.currentTimeMillis()
     Seq((0L until 16L).map(k => (k, 1L, "I", k * 10)),
@@ -407,37 +434,43 @@ class StreamingSpec extends SparkSpec {
       new java.io.File(s"$base/in/g$i").listFiles()
         .foreach(_.setLastModified(now - 60000 + i * 10000))
     }
-    CdcIngest.runBucketed(spark, schema,
-      s"$base/in", s"$base/state", s"$base/ckpt", Seq("k"), "seq", "op", nBuckets = 8)
-    // write-set assertion: only key 3's bucket carries a state_1 chain
-    // head — every other bucket still serves its untouched state_0
-    val heads = BucketedSnapshotIngest.bucketHeads(spark, s"$base/state")
-    assert(heads.nonEmpty)
-    val advanced = heads.filter(_.endsWith("state_1"))
-    assert(advanced.size === 1,
-      s"batch 1 touched one key but rewrote ${advanced.size} buckets:\n${heads.mkString("\n")}")
-    // a chain with a gap keeps its predecessor: batch 2's prune in bGap
-    // must not treat state_1 (which bGap never had) as the predecessor
-    val gapDirs = new java.io.File(s"$base/state/bucket_$bGap").listFiles()
-      .filter(_.isDirectory).map(_.getName).sorted.toSeq
-    assert(gapDirs === Seq("state_0", "state_2"))
-    // semantics: final table == newest-seq-wins minus tombstones
-    val got = CdcIngest.finalTableBucketed(spark, s"$base/state", "op")
+    def run(state: String, ckpt: String): Int = CdcIngest.runBucketed(spark, schema,
+      s"$base/in", state, ckpt, Seq("k"), "seq", "op", nBuckets = 8)
+    def table(state: String): Map[Long, Long] = CdcIngest.finalTableBucketed(spark, state, "op")
       .select($"k", $"v").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(run(s"$base/state", s"$base/ckpt") === 3)
+    // write-set assertion on each bucket table's txn ledger: the batch
+    // ids its manifest versions committed under
+    def ledger(b: Int): Seq[Long] = {
+      val t = s"$base/state/bucket_$b"
+      val fs = SegmentLog.fs(t, spark.sessionState.newHadoopConf())
+      SegmentLog.liveVersions(fs, t).map(v => SegmentLog.readVersion(fs, t, v).txns.values.max)
+    }
+    val buckets = (0 until 8).filter(b => new java.io.File(s"$base/state/bucket_$b").exists)
+    assert(buckets.filter(b => ledger(b).contains(1L)) === Seq(b3),
+      "batch 1 touched one key but committed to other buckets")
+    assert(ledger(bGap) === Seq(0L, 2L))
+    // semantics: final table == newest-seq-wins minus tombstones
     val want = (0L until 16L).filterNot(_ == 3L).map(k => k -> k * 10).toMap +
       (kGap -> 777L)
-    assert(got === want) // key 3 deleted at seq 3, kGap updated at seq 4
-    // retry contract: a failed first attempt left a poisoned state_0 in
-    // key 3's bucket and died before the checkpoint committed; the
-    // replayed batch 0 reads newest STRICTLY before 0 (nothing) and
-    // must overwrite the poison, never merge with it
-    Seq((3L, 99L, "I", -1L)).toDF("k", "seq", "op", "v")
-      .write.parquet(s"$base/state2/bucket_$b3/state_0")
-    CdcIngest.runBucketed(spark, schema,
-      s"$base/in", s"$base/state2", s"$base/ckpt2", Seq("k"), "seq", "op", nBuckets = 8)
-    val again = CdcIngest.finalTableBucketed(spark, s"$base/state2", "op")
-      .select($"k", $"v").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(again === want) // the poisoned seq-99 row did not survive
+    assert(table(s"$base/state") === want) // key 3 deleted at seq 3, kGap updated at seq 4
+    // replay: the checkpoint lost batch 2's commit, so a rerun replays
+    // it; bGap's ledger already holds batch 2, so the fold is a no-op
+    assert(dropLastCommit(s"$base/ckpt") === 2L)
+    val gapVersion = latestVersion(s"$base/state/bucket_$bGap")
+    def gapFiles = new java.io.File(s"$base/state/bucket_$bGap/${SegmentLog.DataDir}").list().toSet
+    val gapFilesBefore = gapFiles
+    assert(run(s"$base/state", s"$base/ckpt") === 1)
+    assert(latestVersion(s"$base/state/bucket_$bGap") === gapVersion)
+    assert(gapFiles === gapFilesBefore, "the replay wrote segment files")
+    assert(ledger(bGap) === Seq(0L, 2L))
+    assert(table(s"$base/state") === want)
+    // a write that died before its commit left a poisoned segment in
+    // key 3's bucket; no manifest names it, so a fresh run never sees it
+    plantUnreferenced(Seq((3L, 99L, "I", -1L)).toDF("k", "seq", "op", "v"),
+      s"$base/state2/bucket_$b3")
+    assert(run(s"$base/state2", s"$base/ckpt2") === 3)
+    assert(table(s"$base/state2") === want) // the poisoned seq-99 row did not survive
   }
 
   test("streaming incremental aggregate: snapshots equal the full build; retry safe") {
@@ -448,28 +481,32 @@ class StreamingSpec extends SparkSpec {
     val g1 = Seq((2L, 5L), (3L, 7L)).toDF("k", "v")
     g0.coalesce(1).write.parquet(s"$base/in/g0")
     g1.coalesce(1).write.parquet(s"$base/in/g1")
-    val n = IncrAggIngest.run(spark, g0.schema,
+    def run(): Int = IncrAggIngest.run(spark, g0.schema,
       s"$base/in", s"$base/state", s"$base/ckpt", Seq("k"), "v")
-    assert(n === 2)
-    val got = IncrAggIngest.finalState(spark, s"$base/state")
-    val want = IncrView.build(g0.union(g1), Seq("k"), $"v")
-    assert(got.except(want).isEmpty && want.except(got).isEmpty)
-    // superseded snapshots pruned, predecessor retained for retry
-    val dirs = new java.io.File(s"$base/state").listFiles()
-      .filter(_.isDirectory).map(_.getName).sorted.toSeq
-    assert(dirs === Seq("state_0", "state_1"))
-    // retry simulation: a fresh stream whose first batch (id 0) finds a
-    // failed attempt's own state_0 — it must be ignored (strictly-before
-    // read), or history would double
-    val base2 = tmp("graft-incr-agg-retry")
-    g0.coalesce(1).write.parquet(s"$base2/in/g0")
-    IncrView.build(g0, Seq("k"), $"v")
-      .write.parquet(s"$base2/state/state_0")
-    IncrAggIngest.run(spark, g0.schema,
-      s"$base2/in", s"$base2/state", s"$base2/ckpt", Seq("k"), "v")
-    val got2 = IncrAggIngest.finalState(spark, s"$base2/state")
-    val want2 = IncrView.build(g0, Seq("k"), $"v")
-    assert(got2.except(want2).isEmpty && want2.except(got2).isEmpty)
+    def sameAsFullBuild(): Unit = {
+      val got = IncrAggIngest.finalState(spark, s"$base/state")
+      val want = IncrView.build(g0.union(g1), Seq("k"), $"v")
+      assert(got.except(want).isEmpty && want.except(got).isEmpty)
+    }
+    assert(run() === 2)
+    sameAsFullBuild()
+    // one state version per batch
+    assert(latestVersion(s"$base/state") === 1L)
+    // a write that died before its commit left a doubled history, and
+    // the checkpoint lost batch 1's commit: the replay commits as a
+    // no-op, and history does not double
+    plantUnreferenced(IncrView.build(g0.union(g1), Seq("k"), $"v"), s"$base/state")
+    assert(dropLastCommit(s"$base/ckpt") === 1L)
+    assert(run() === 1)
+    assert(latestVersion(s"$base/state") === 1L)
+    sameAsFullBuild()
+  }
+
+  test("segment state fold outside a streaming query fails and names why") {
+    val e = intercept[IllegalStateException](
+      SegmentStateIngest.foldBatch(s"${tmp("graft-seg-fold-batch")}/t")((_, b) => b)(
+        spark.range(3).toDF("k"), 0L))
+    assert(e.getMessage.contains("runs only inside a streaming query"), e.getMessage)
   }
 
   test("CDC ingest: tombstones survive batches; out-of-order insert cannot resurrect") {
